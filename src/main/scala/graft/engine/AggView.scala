@@ -46,7 +46,7 @@ final class AggView private[engine] (
     val name: String) extends Serializable {
 
   /** Current state snapshot: `emit_key, cnt, sum_value, min_value, max_value`. */
-  def state: DataFrame = spark.read.parquet(store.latestPath(name))
+  def state: DataFrame = store.readLatest(name)
 
   /** Read surface with derived aggregates (avg = exact sum / count). */
   def read: DataFrame =

@@ -113,7 +113,7 @@ final class MapIndex(val name: String, val mapPlan: DataFrame => DataFrame)
         // across the rebuild; localCheckpoint pins uids across the two
         // writes (see MaterializedView.refresh)
         val emis = emissions(source, (v + 1).toLong).localCheckpoint(true)
-        val prior = store.spark.read.parquet(store.latestPath(name))
+        val prior = store.readLatest(name)
         val delta = prior.withColumn("change_type", lit("delete"))
           .unionByName(emis.withColumn("change_type", lit("insert")))
         val out = store.write(this, emis, Some(delta))

@@ -7,11 +7,18 @@ import org.apache.spark.sql.functions._
  * A materialized [[MapIndex]] snapshot: the read + maintenance surface of
  * the reference engine, Spark-first.
  *
- * Read paths (reference `index.js:124-172`) are pruned parquet scans —
- * range/prefix/point predicates on the clustered `emit_key` column reach
+ * Read paths (reference `index.js:124-172`) are pruned parquet scans of
+ * the version `_LATEST` names, resolved once per version: [[df]] reads
+ * the pointer, then takes the version dir's relation from the store's
+ * memo ([[ViewStore.readDir]]), so a read lists no files and infers no
+ * schema — the analog of a LevelDB seek on an open snapshot. Range,
+ * prefix and point predicates on the clustered `emit_key` column reach
  * the scan as `PushedFilters`, so only the matching files/row-groups are
- * read (the LevelDB-seek analog). Maintenance (`index.js:173-249`) is an
- * anti-join + union upsert keyed on `src_key`.
+ * read. `get`/`scan` keep their order through [[ViewStore.ordered]]: a
+ * view that fits one advisory partition is sorted inside one task (one
+ * job, no exchange); a larger one keeps the parallel global sort.
+ * Maintenance (`index.js:173-249`) is an anti-join + union upsert keyed
+ * on `src_key`.
  */
 final class MaterializedView(
     val spark: SparkSession,
@@ -19,7 +26,7 @@ final class MaterializedView(
     val index: MapIndex) extends Serializable {
 
   /** Current snapshot of the emission relation. */
-  def df: DataFrame = spark.read.parquet(store.latestPath(index.name))
+  def df: DataFrame = store.readLatest(index.name)
 
   /** Snapshot (time-travel) read of a retained earlier version. */
   def asOf(version: Int): DataFrame = store.readVersion(index.name, version)
@@ -39,25 +46,31 @@ final class MaterializedView(
    * (`index.js:128` double-encodes `start` into the upper bound; SURVEY §2
    * O6) and we deliberately do not replicate that.
    */
-  def scan(start: Option[Any] = None, end: Option[Any] = None): DataFrame = {
-    val base = (start, end) match {
+  def scan(start: Option[Any] = None, end: Option[Any] = None): DataFrame =
+    ViewStore.ordered(range(start, end), Seq("emit_key", "uid"))
+
+  /** The `[start, end)` rows of the current snapshot, unordered. */
+  private def range(start: Option[Any], end: Option[Any]): DataFrame =
+    (start, end) match {
       case (Some(s), Some(e)) => df.filter(col("emit_key") >= lit(s) && col("emit_key") < lit(e))
       case (Some(s), None)    => df.filter(col("emit_key") >= lit(s))
       case (None, Some(e))    => df.filter(col("emit_key") < lit(e))
       case (None, None)       => df
     }
-    base.orderBy("emit_key", "uid")
-  }
 
   /** Point/prefix lookup (O8, `index.js:151-172`): all values for one key,
     * in emission order. */
   def get(key: Any): DataFrame =
-    df.filter(col("emit_key") === lit(key)).orderBy("uid").select("emit_value")
+    ViewStore.ordered(df.filter(col("emit_key") === lit(key)), Seq("uid")).select("emit_value")
 
   /** COUNT over a range — the reference declared but never implemented this
-    * (O16 stub, `index.js:148-150`). */
-  def countRange(start: Option[Any] = None, end: Option[Any] = None): Long =
-    scan(start, end).count()
+    * (O16 stub, `index.js:148-150`). Counts the filtered rows directly; a
+    * range that fits one advisory partition is counted in one task, so
+    * the count needs no exchange either. */
+  def countRange(start: Option[Any] = None, end: Option[Any] = None): Long = {
+    val rows = range(start, end)
+    (if (ViewStore.fitsOnePartition(rows)) rows.coalesce(1) else rows).count()
+  }
 
   /**
    * Incremental view maintenance (O3/O4/O5, `index.js:173-249`): for every

@@ -116,8 +116,7 @@ private[engine] final class SliceStore(
   }
 
   /** One slice's current state (owner-defined schema, no slice column). */
-  def sliceState(start: Long): DataFrame =
-    spark.read.parquet(slices.latestPath(sliceName(start)))
+  def sliceState(start: Long): DataFrame = slices.readLatest(sliceName(start))
 
   /** A slice's current version number (each refresh of a slice is a
     * versioned swap, so slice history is addressable per slice). */
@@ -140,22 +139,17 @@ private[engine] final class SliceStore(
    * happened at path selection, which is strictly stronger than any
    * in-plan filter). Paths have the shape `<root>/s<start>/v<N>/part-*`;
    * the extraction anchors on that `/s<digits>/v<digits>/` segment.
+   *
+   * The resolved relation comes from the slice store's memo, keyed by the
+   * VERSION paths ([[ViewStore.readDirs]]): a serve of k slices would
+   * otherwise pay k directory listings + a footer schema read per call,
+   * and a refresh/evict/coarsen that swaps a version directory changes
+   * the key, so a stale listing is never reused.
    */
-  /** Analyzed-plan memo keyed by the resolved VERSION paths: a serve of
-    * k slices pays k directory listings + a footer schema read on every
-    * `spark.read.parquet` call, and the layout only changes when a
-    * refresh/evict/coarsen swaps a version directory — which changes the
-    * key, so a stale plan is never reused. Version dirs are write-once
-    * (rename-published), so the captured file listing cannot go stale
-    * under its key. Plans only — every action still scans the parquet. */
-  private val readMemo =
-    scala.collection.concurrent.TrieMap.empty[Seq[String], DataFrame]
-
   def readSlices(starts: Seq[Long],
       preFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(starts.nonEmpty, "readSlices over an empty slice set")
-    val paths = starts.map(s0 => slices.latestPath(sliceName(s0)))
-    val base = readMemo.getOrElseUpdate(paths, spark.read.parquet(paths: _*))
+    val base = slices.readDirs(starts.map(s0 => slices.latestPath(sliceName(s0))))
     // predicates must land BEFORE the slice-identity projection:
     // input_file_name() is non-deterministic, so Catalyst will not push a
     // filter through it — applied here, the predicate reaches the scan

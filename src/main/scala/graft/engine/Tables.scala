@@ -15,13 +15,21 @@ object Tables {
   // plan only; every action still scans the parquet data, so results are
   // recomputed per query (no result caching). Keyed by session so test
   // suites with their own (stopped) sessions never leak a stale plan
-  // into a new one.
+  // into a new one; a new entry first drops those of stopped sessions,
+  // so a long-lived process holds plans of live sessions only.
   private val frames =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    frames.getOrElseUpdate((spark, s"$sfDir/$name.parquet"),
-      spark.read.parquet(s"$sfDir/$name.parquet"))
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val key = (spark, s"$sfDir/$name.parquet")
+    frames.getOrElse(key, {
+      frames.keys.filter(_._1.sparkContext.isStopped).foreach(frames.remove)
+      frames.getOrElseUpdate(key, spark.read.parquet(key._2))
+    })
+  }
+
+  /** Sessions that currently hold memoized plans (memo-bound checks). */
+  private[graft] def sessions: Set[SparkSession] = frames.keySet.map(_._1).toSet
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "orders")

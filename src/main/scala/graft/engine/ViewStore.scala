@@ -1,6 +1,7 @@
 package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,6 +16,11 @@ import org.apache.spark.sql.functions._
  * the same read-your-snapshot behavior a LevelDB iterator gives.
  *
  * Layout: `<base>/<indexName>/v<N>/part-*.parquet`, `<base>/<indexName>/_LATEST`.
+ *
+ * Reads of published directories go through one memo of resolved
+ * relations ([[readDir]]): a version dir is write-once, so its file
+ * listing and footer schema are resolved on the first read and reused
+ * until the dir is deleted.
  *
  * Scale note: on a real cluster `<base>` is an object-store prefix and the
  * pointer swap is the usual metadata-commit pattern (what table formats do
@@ -43,6 +49,49 @@ final class ViewStore(
     dir(name).resolve(s"v$v").toString
   }
 
+  /** The current snapshot of `name`: `_LATEST` resolved, then the memoized
+    * relation of that version dir ([[readDir]]). */
+  def readLatest(name: String): DataFrame = readDir(latestPath(name))
+
+  /** Resolved relations of published dirs, keyed by their path list. Each
+    * entry also records the dirs' identities (file key and modification
+    * time): a dir deleted by another store over the same base and then
+    * recreated under the same path — `dropView` then a re-materialize —
+    * has a new identity, so its stale listing is replaced, never served.
+    * Deletes through this store evict their entries ([[deleteTree]]), so
+    * the memo holds only live dirs. Transient: a deserialized store
+    * starts with an empty memo. */
+  @transient private lazy val resolved =
+    scala.collection.concurrent.TrieMap.empty[Seq[String], (Seq[(AnyRef, Long)], DataFrame)]
+
+  /**
+   * The relation of a published (write-once) directory: a version dir or
+   * a CDC sidecar. `spark.read.parquet` lists the dir and runs a footer
+   * schema-inference job on every call; this resolves it once per dir.
+   * The memo holds the analyzed relation only — every action still scans
+   * the parquet files, so no result is cached.
+   */
+  private[engine] def readDir(path: String): DataFrame = readDirs(Seq(path))
+
+  /** [[readDir]] over several dirs as ONE multi-path scan (the slice
+    * reads of [[SliceStore.readSlices]]). */
+  private[engine] def readDirs(paths: Seq[String]): DataFrame = {
+    val ids = paths.map { p =>
+      val a = Files.readAttributes(Paths.get(p), classOf[BasicFileAttributes])
+      (a.fileKey, a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS))
+    }
+    resolved.get(paths) match {
+      case Some((`ids`, df)) => df
+      case _ =>
+        val df = spark.read.parquet(paths: _*)
+        resolved.put(paths, (ids, df))
+        df
+    }
+  }
+
+  /** Path lists currently memoized by [[readDir]] (memo-bound checks). */
+  private[graft] def resolvedPaths: Iterable[Seq[String]] = resolved.keys
+
   /** Versions currently readable: the latest plus up to `graceVersions`
     * superseded snapshots the GC has not reclaimed. */
   def readableVersions(name: String): Seq[Int] = {
@@ -59,7 +108,7 @@ final class ViewStore(
     require(readableVersions(name).contains(version),
       s"view '$name' version $version not readable " +
         s"(retained: ${readableVersions(name).mkString(",")})")
-    spark.read.parquet(dir(name).resolve(s"v$version").toString)
+    readDir(dir(name).resolve(s"v$version").toString)
   }
 
   private def changesPath(name: String, version: Int): Path =
@@ -72,7 +121,7 @@ final class ViewStore(
     val p = changesPath(name, version)
     require(Files.exists(p),
       s"change sidecar v$version for view '$name' missing or past the GC horizon")
-    spark.read.parquet(p.toString)
+    readDir(p.toString)
   }
 
   /**
@@ -124,7 +173,7 @@ final class ViewStore(
         s"change sidecar v$v for view '$name' missing — either this version " +
           "was not written through MaterializedView.refresh/MapIndex.materialize, " +
           s"or the sidecar is past the graceVersions=$graceVersions GC horizon")
-      spark.read.parquet(p.toString)
+      readDir(p.toString)
     }.reduce(_.unionByName(_))
   }
 
@@ -253,7 +302,7 @@ final class ViewStore(
   /** Drop a whole view (every version, sidecars, markers) — the eviction
     * primitive ([[WindowedAggView.evictBefore]] drops expired slice
     * relations wholesale instead of rewriting surviving state). */
-  private[engine] def dropView(name: String): Unit = deleteTree(dir(name))
+  private[graft] def dropView(name: String): Unit = deleteTree(dir(name))
 
   /** Post-publish housekeeping shared by [[writeClustered]] and
     * [[adoptStaged]]: snapshot GC, sidecar sweep, claim-marker GC. */
@@ -332,11 +381,14 @@ final class ViewStore(
     } finally stream.close()
   }
 
+  /** Delete `p` recursively and evict every memoized relation that reads
+    * a dir under it. */
   private[engine] def deleteTree(p: Path): Unit = if (Files.exists(p)) {
     val stream = Files.walk(p) // close the stream: an unclosed walk leaks an fd
     try stream.sorted(java.util.Comparator.reverseOrder())
       .forEach(f => Files.deleteIfExists(f))
     finally stream.close()
+    resolved.keys.filter(_.exists(Paths.get(_).startsWith(p))).foreach(resolved.remove)
   }
 
   def load(index: MapIndex): MaterializedView =
@@ -353,22 +405,42 @@ object ViewStore {
    * Arrange a relation for a clustered write. `repartitionByRange` picks
    * its boundaries by SAMPLING the child plan — one extra execution of
    * the whole subtree per write (guide §1.2: remove passes before tuning
-   * inside them). When the optimizer's size estimate says the relation
-   * fits ONE advisory partition, a single sorted partition is the same
+   * inside them). When the relation fits ONE advisory partition
+   * ([[fitsOnePartition]]), a single sorted partition is the same
    * layout (one file, globally sorted ⇒ identical rows, identical
-   * row-group pruning) without the sampling pass. The cutover is
-   * SIZE-based, so it is scale-adaptive: a 100 TB view estimates far
-   * above the advisory size and keeps the range path with its sampling
-   * cost amortized; only genuinely small relations (delta-sized states,
-   * test-scale views) take the one-partition shortcut. Join-heavy plans
-   * that OVERestimate merely keep the conservative range path.
+   * row-group pruning) without the sampling pass. Join-heavy plans that
+   * OVERestimate merely keep the conservative range path.
    */
   private[engine] def clustered(df: DataFrame, clusterCols: Seq[String]): DataFrame = {
     val sortCols = clusterCols.map(col)
+    if (fitsOnePartition(df)) df.repartition(1).sortWithinPartitions(sortCols: _*)
+    else df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
+  }
+
+  /**
+   * A read in `orderCols` order. A global `orderBy` costs a range-boundary
+   * sampling job (one more scan of the input), a shuffle-map job and the
+   * result job. When the relation fits ONE advisory partition, gathering
+   * it into one task and sorting that partition gives the same rows in
+   * the same order with one job and no exchange — the serve path of a
+   * small `get`/`scan` over a stored view. Larger relations keep the
+   * parallel sort.
+   */
+  private[engine] def ordered(df: DataFrame, orderCols: Seq[String]): DataFrame = {
+    val sortCols = orderCols.map(col)
+    if (fitsOnePartition(df)) df.coalesce(1).sortWithinPartitions(sortCols: _*)
+    else df.orderBy(sortCols: _*)
+  }
+
+  /** The shared cutover of [[clustered]] and [[ordered]]: the optimizer's
+    * size estimate at or below the advisory partition size. It reads a
+    * property of the input, so it is scale-adaptive: a 100 TB view
+    * estimates far above the advisory size and keeps the parallel path;
+    * only genuinely small relations (delta-sized states, small views)
+    * take the one-partition shortcut. */
+  private[engine] def fitsOnePartition(df: DataFrame): Boolean = {
     val advisory = df.sparkSession.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= advisory) df.repartition(1).sortWithinPartitions(sortCols: _*)
-    else df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= advisory
   }
 }

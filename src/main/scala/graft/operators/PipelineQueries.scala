@@ -739,7 +739,7 @@ object PipelineQueries {
           store.writeClustered(PairViewName, ngramJaccardPairs(s, dir), Seq("i", "j"))
       })
     }
-    s.read.parquet(store.latestPath(PairViewName))
+    store.readLatest(PairViewName)
   }
 
   /** The pair graph MAINTAINED, not just stored ([[PairGraphIndex]]):

@@ -1689,7 +1689,7 @@ object SimilarityQueries {
           sc
       }
     })
-    (s.read.parquet(store.latestPath(SqViewName)), scale)
+    (store.readLatest(SqViewName), scale)
   }
 
   /** SQ8 ANN top-k `(probe_id, neighbor_id, cos, rank)`: candidates from

@@ -132,6 +132,54 @@ class MapIndexSpec extends AnyFunSuite with SparkSpec {
     assert(values(view.get("test")) === Seq(3))
   }
 
+  test("scan keeps key order through the global sort when the view exceeds one advisory partition") {
+    // every relation is "large" (the orderBy arm), and AQE keeps the
+    // range-clustered write's partitions apart, so the view spans files
+    val confs = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val store = ViewStore.temp(spark)
+      val idx = MapIndex.columns("bykey_large")(col("key"),
+        array(emit(col("test") % 37, col("test")), emit(col("test") % 11, col("test"))))
+      val view = idx.materialize(
+        (1 to 400).map(i => s"k$i" -> i).toDF("key", "test").repartition(4), store)
+      assert(view.df.inputFiles.length > 1, "the range-clustered write must split the view")
+      val df = view.scan(Some(3), Some(30))
+      val keys = df.select("emit_key").as[Int].collect().toSeq
+      val expected = (1 to 400).flatMap(i => Seq(i % 37, i % 11)).filter(k => k >= 3 && k < 30)
+      assert(keys === expected.sorted)
+      assert(df.queryExecution.executedPlan.toString.contains("rangepartitioning"),
+        "a view above the advisory size must keep the parallel global sort")
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("a view dropped and rebuilt through another store is re-resolved, not served stale") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-views-").toString
+    val (a, b) = (new ViewStore(spark, dir), new ViewStore(spark, dir))
+    val idx = primaryIndex("rebuilt")
+    val view = idx.materialize(entries("k1" -> 1, "k2" -> 2), a)
+    assert(values(view.get("test")).sorted === Seq(1, 2))
+    b.dropView("rebuilt")
+    idx.materialize(entries("k3" -> 30), b) // the same v0 path, a new dir
+    assert(values(view.get("test")) === Seq(30))
+    assert(a.resolvedPaths.size === 1, "the stale entry must be replaced, not kept")
+  }
+
+  test("the read memo holds at most graceVersions + 1 versions of a refreshed view") {
+    val store = ViewStore.temp(spark)
+    var view = primaryIndex("memo_bound").materialize(entries("k" -> 0), store)
+    for (i <- 1 to 5) {
+      view = view.refresh(entries("k" -> i))
+      assert(values(view.get("test")) === Seq(i))
+      assert(values(view.asOf(i - 1).select("emit_value")) === Seq(i - 1))
+    }
+    val held = store.resolvedPaths.count(_.exists(_.contains("/memo_bound/")))
+    assert(held >= 1 && held <= store.graceVersions + 1,
+      s"memo holds $held versions: ${store.resolvedPaths}")
+  }
+
   test("snapshot reads pin a retained version; the change feed replays the delta") {
     val store = ViewStore.temp(spark)
     val idx = MapIndex.columns("tt_view")(col("key"),

@@ -257,6 +257,60 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     assert(p.contains("EqualTo(emit_key"), s"emit_key lookup must push down:\n$p")
   }
 
+  /** Jobs, stages and shuffle records of one action, counted by a
+    * listener after the bus has delivered every event. */
+  private def counted[T](body: => T): (T, Int, Int, Long) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        shuffled.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (r, jobs.get, stages.get, shuffled.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("small stored-view reads: a repeated get, scan and countRange run one job each, no exchange") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.engine.{MapIndex, ViewStore}
+    val s = spark
+    import s.implicits._
+    val idx = MapIndex.columns("serve_small")(col("key"),
+      array(MapIndex.emit(col("test") % 50, col("test"))))
+    val view = idx.materialize((1 to 500).map(i => s"k$i" -> i).toDF("key", "test"),
+      ViewStore.temp(spark))
+    val reads = Seq[(String, () => Long)](
+      "get" -> (() => view.get(7).collect().length.toLong),
+      "scan" -> (() => view.scan(Some(3), Some(9)).collect().length.toLong),
+      "countRange" -> (() => view.countRange(Some(3), Some(9))))
+    for ((name, read) <- reads) {
+      val first = read() // the first read of a version resolves its dir
+      val (n, jobs, stages, shuffled) = counted(read())
+      assert(n === first && n === (if (name == "get") 10L else 60L), s"$name answer")
+      assert(jobs === 1 && stages === 1, s"$name ran $jobs jobs / $stages stages")
+      assert(shuffled === 0L, s"$name shuffled $shuffled records")
+    }
+    for (df <- Seq(view.get(7), view.scan(Some(3), Some(9)))) {
+      df.collect()
+      // the helper's collect also walks an adaptive plan's final stages
+      val exchanges = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(df.queryExecution.executedPlan) { case e: Exchange => e }
+      assert(exchanges.isEmpty, s"small reads need no exchange:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   test("mapindex_bucketed_get: one bucket read, key pushed into its scan") {
     val df = SparkEntry.queries("mapindex_bucketed_get")(spark, sf)
     df.collect()
