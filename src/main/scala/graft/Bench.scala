@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark harness: runs every registered query on SPARK_GRAFT_SF_DIR,
@@ -26,33 +25,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // A/B knobs (guide §2.2 / engine warmth), env-parameterised so the
-      // driver's bare run gets the measured default:
-      // parallelismFirst=false coalesces post-shuffle partitions to the
-      // advisory SIZE (scale-adaptive at any corpus size) instead of
-      // one-per-core slivers
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      // static conf: Spark's stock generated-code cache (100 entries)
-      // thrashes across this surface's ~800 codegen units per pass, so
-      // every plan re-runs janino compilation on every pass. 5000 entries
-      // holds the whole surface's generated classes (~tens of MB of
-      // driver memory — the driver compiles the same code at any cluster
-      // scale, so the saving transfers). Compiled-code reuse, NOT result
-      // caching: every pass still scans parquet and computes every row.
-      // Interleaved A/B/A/B, fresh JVM per side, full 281-query suite
-      // (r18): 100 -> 5000 cut the suite total 85.4 -> 55.8 s and
-      // 90.2 -> 72.1 s (faster on 277/281 and 205/281 queries; worst
-      // single-query loss +3 ms).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // Materialize the stored map views up front: the reference computes
     // views at WRITE time and serves queries from the stored index

@@ -23,6 +23,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * staleness-check pattern the IVF quantizer cache uses for its trained
  * centroids (SimilarityQueries.corpusFingerprint). Default stays temp:
  * the test/bench driver wants per-run isolation.
+ *
+ * Multi-step fixtures go through one primitive, [[Views.unit]]: it takes
+ * the per-key lock, keeps the per-JVM memo, reopens a unit whose
+ * `_UNIT_<unit>` marker exists or else builds it and then writes the
+ * marker, and memoizes only after success.
  */
 object Views {
   private val stores = TrieMap.empty[String, ViewStore]
@@ -36,8 +41,8 @@ object Views {
     * loudly, yet two full build UNITS stacked on one store dir would
     * publish extra versions and silently shift every version-addressed
     * consumer (changefeeds, asOf). Prewarm overlaps independent builds
-    * ([[graft.operators.Prewarm]]), so every build-memo lookup that can
-    * be reached from two steps takes this per-key lock first; nesting
+    * ([[graft.operators.Prewarm]]), so every build memo here ([[unit]],
+    * [[materialized]], [[cached]]) takes this per-key lock first; nesting
     * follows the build-dependency DAG (acyclic), so lock order cannot
     * cycle and `synchronized` reentrancy covers self-recursion. */
   private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]
@@ -73,24 +78,49 @@ object Views {
       })
     }
 
-  /** Completion marker for a multi-step BUILD UNIT — an engine-maintained
-    * index whose on-disk state is the product of several store calls (a
-    * pair graph's build + change batch, an ANN view's materialize +
-    * refresh). A reopening JVM over a durable, fingerprint-matching store
-    * must not serve a unit that crashed halfway (e.g. materialized but
-    * never refreshed): [[markUnitDone]] is written only after the whole
-    * unit completed, so [[unitDone]] = serve as-is, otherwise rebuild
-    * through the stores' ordinary rebuild (full-retraction CDC) path.
-    * The marker lives inside the store dir, so a corpus-fingerprint roll
-    * wipes it with the views it gates. */
+  /** Per-JVM memo of completed build units, keyed by (store dir, unit). */
+  private val units = TrieMap.empty[(String, String), Any]
+
+  /** One multi-step BUILD UNIT — an engine-maintained index whose on-disk
+    * state is the product of several store calls (a pair graph's build +
+    * change batch, an ANN view's materialize + refresh). The unit
+    * contract, in one place:
+    *  - lock: the whole lookup runs under the per-key lock ([[locked]]),
+    *    so two prewarm steps reaching the same unit never run its build
+    *    twice — by construction, whichever builders they share. Nested
+    *    units lock in build-dependency order (acyclic), as above.
+    *  - memo: a completed unit is served from the per-JVM memo.
+    *  - marker: otherwise, if the store dir holds the `_UNIT_<unit>`
+    *    marker, `reopen` attaches to the stored state; else `build` runs
+    *    every store call and the marker is written after it returns. A
+    *    reopening JVM over a durable, fingerprint-matching store therefore
+    *    never serves a unit that crashed halfway (e.g. materialized but
+    *    never refreshed) — it rebuilds through the stores' ordinary
+    *    rebuild (full-retraction CDC) path. The marker lives inside the
+    *    store dir, so a corpus-fingerprint roll wipes it with the views it
+    *    gates.
+    *  - memo only on success: a `build` that throws leaves neither marker
+    *    nor memo entry, so [[graft.operators.Prewarm]]'s sequential retry
+    *    rebuilds cleanly. */
+  def unit[T](storeDir: String, unit: String)(reopen: => T)(build: => T): T =
+    locked(s"unit#$storeDir#$unit") {
+      units.getOrElse((storeDir, unit), {
+        val v =
+          if (unitDone(storeDir, unit)) reopen
+          else {
+            val built = build
+            Files.createDirectories(Paths.get(storeDir))
+            Files.writeString(Paths.get(storeDir, s"_UNIT_$unit"), "done")
+            built
+          }
+        units.put((storeDir, unit), v)
+        v
+      }).asInstanceOf[T]
+    }
+
+  /** Has the unit's completion marker been written under `storeDir`? */
   def unitDone(storeDir: String, unit: String): Boolean =
     Files.exists(Paths.get(storeDir, s"_UNIT_$unit"))
-
-  def markUnitDone(storeDir: String, unit: String): Unit = {
-    Files.createDirectories(Paths.get(storeDir))
-    Files.writeString(Paths.get(storeDir, s"_UNIT_$unit"), "done")
-    ()
-  }
 
   /** Persist a small numeric model next to a store's views (IVF
     * centroids, SQ8 scale): a reopening JVM must probe with EXACTLY the
@@ -161,12 +191,14 @@ object Views {
       numBuckets = numBuckets, rangeBoundaries = rangeBoundaries)
   }
 
-  /** Drop the cached store handles for one corpus — lets a spec simulate
-    * a fresh process reopening the same durable root (the reuse decision
-    * itself is disk-gated, never cached). */
+  /** Drop the cached store handles of one corpus, and the unit memos of
+    * those stores — lets a spec simulate a fresh process reopening the
+    * same durable root (the reuse decision itself is disk-gated, never
+    * cached). */
   private[graft] def dropStoresForTest(sfDir: String): Unit = {
-    stores.remove(sfDir)
-    bstores.keySet.filter(_.startsWith(s"$sfDir#")).foreach(bstores.remove)
+    val dirs = stores.remove(sfDir).map(_.baseDir).toSet ++
+      bstores.keySet.filter(_.startsWith(s"$sfDir#")).flatMap(bstores.remove).map(_.baseDir)
+    units.keySet.filter(k => dirs(k._1)).foreach(units.remove)
     cache.keySet.filter(_._1 == sfDir).foreach(cache.remove)
     ()
   }

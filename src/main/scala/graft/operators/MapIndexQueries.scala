@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{MapIndex, Tables, Views}
+import scala.language.reflectiveCalls
+import graft.engine.{AsOfJoinView, BucketedViewStore, FilterJoinView, JoinAggView,
+  JoinGroupingView, JoinView, MapIndex, Measures, Tables, Views}
 import graft.engine.MapIndex.emit
 
 /**
@@ -15,14 +17,22 @@ import graft.engine.MapIndex.emit
  */
 object MapIndexQueries {
 
+  /** The lineitem source key: `(orderkey, lineno)` joined by '-'. */
+  private def lineitemKey = concat_ws("-", col("l_orderkey"), col("l_linenumber"))
+
+  /** The flagship map: lineitems indexed by return flag, emitting the
+    * extended price. Every maintained-layout twin below is this map under
+    * its own view name. */
+  private def flagIdx(name: String): MapIndex =
+    MapIndex.columns(name)(lineitemKey,
+      array(emit(col("l_returnflag"), col("l_extendedprice"))))
+
   /** O1: index definition. src_key = lineitem primary key (orderkey, lineno). */
-  private val byFlag = MapIndex.columns("lineitem_byflag")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val byFlag = flagIdx("lineitem_byflag")
 
   /** Two-stage cascade (O17): lineitem → (orderkey, revenue) → (orderkey%10, revenue). */
   private val byOrder = MapIndex.columns("lineitem_byorder")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
+    lineitemKey,
     array(emit(col("l_orderkey"),
       col("l_extendedprice") * (lit(1) - col("l_discount")))))
   // the downstream map consumes the full upstream emission array — the
@@ -66,9 +76,7 @@ object MapIndexQueries {
     * the flat and hash-bucketed fixtures — so staged writes, boundary
     * routing of the new 'X' key (≥ 'S' → the last bucket) and the CDC
     * sidecar are all graded against the identical from-scratch oracle. */
-  private val byFlagRangeM = MapIndex.columns("lineitem_byflag_range_m")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val byFlagRangeM = flagIdx("lineitem_byflag_range_m")
 
   private val rangeMaintStores =
     scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
@@ -89,9 +97,7 @@ object MapIndexQueries {
     * delta alone (the compaction sidecar is empty). `maxFilesPerBucket=0`
     * forces every live bucket through the rewrite, so the epoch bump is
     * deterministic regardless of how the refresh's files coalesced. */
-  private val byFlagCompact = MapIndex.columns("lineitem_byflag_compact")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val byFlagCompact = flagIdx("lineitem_byflag_compact")
 
   private val compactStores =
     scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
@@ -112,9 +118,7 @@ object MapIndexQueries {
     * other layouts. The feed gate replays ACROSS the split epoch — its
     * sidecar is empty, so the range (0, 2] equals the refresh delta
     * alone, exactly like a compaction crossing. */
-  private val byFlagSplit = MapIndex.columns("lineitem_byflag_split")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val byFlagSplit = flagIdx("lineitem_byflag_split")
 
   private val splitStores =
     scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
@@ -133,9 +137,7 @@ object MapIndexQueries {
     * buckets (the manifest diff), then serve every read from the REPLICA
     * handle — a stale or partial replica is a hash mismatch against the
     * modified-source oracle. */
-  private val byFlagShip = MapIndex.columns("lineitem_byflag_ship")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val byFlagShip = flagIdx("lineitem_byflag_ship")
 
   private val shipStores =
     scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
@@ -171,51 +173,28 @@ object MapIndexQueries {
   /** Incrementally-maintained aggregate (the completed "reduce" half —
     * engine/AggView.scala): its OWN index name and state, so the shared
     * `flagView` other queries read stays untouched by the refresh below. */
-  private val byFlagAgg = MapIndex.columns("lineitem_byflag_agg")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
-
-  private val aggViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.AggView]
-
-  /** Drop the changefeed fixtures' per-JVM memos — lets a spec simulate a
-    * fresh process reopening a durable views root (pair with
-    * [[graft.engine.Views.dropStoresForTest]]). */
-  private[graft] def resetChangefeedCachesForTest(): Unit = {
-    aggViews.clear(); cascadeCdcViews.clear()
-  }
+  private val byFlagAgg = flagIdx("lineitem_byflag_agg")
 
   /** Build base + aggregate state, then push ONE deterministic change
     * batch through the incremental path: lineitems of `%97` orders
     * re-flagged to 'X' (upsert), lineitems of `%89` orders tombstoned.
     * The returned state must equal a from-scratch recompute of the
     * modified source — which is exactly what the DuckDB oracle does. */
-  private def aggView(s: SparkSession, dir: String): graft.engine.AggView =
-    // reachable from two prewarm steps (itself and cascadeCdcView) — the
-    // per-key lock keeps an overlapped prewarm from running the build
-    // unit twice ([[Views.locked]])
-    Views.locked(s"build#mapindex#aggView#$dir") {
-    aggViews.getOrElseUpdate(dir, {
-      val store = Views.store(s, dir)
-      // unit-gated like every other multi-step build: a process reopening
-      // a durable store must ATTACH, not re-run the materialize+refresh —
-      // the re-run advanced versions per process until the early sidecars
-      // passed the GC horizon and every version-addressed consumer
-      // (changefeeds) crashed by the ~3rd reopen. Fresh stores (the
-      // driver contract) build exactly as before plus one marker file.
-      val unit = s"${byFlagAgg.name}_unit"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.AggView.attach(s, store, "lineitem_byflag_agg__state")
-      else {
-        val li = Tables.lineitem(s, dir)
-        val base = byFlagAgg.materialize(li, store)
-        val agg0 = graft.engine.AggView.build(base, "lineitem_byflag_agg__state")
-        val (_, agg) = agg0.refresh(base, reflaggedUpserts(li), Some(tombstoneKeys(li)))
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def aggView(s: SparkSession, dir: String): graft.engine.AggView = {
+    val store = Views.store(s, dir)
+    // unit-gated like every other multi-step build: a process reopening
+    // a durable store must ATTACH, not re-run the materialize+refresh —
+    // the re-run advanced versions per process until the early sidecars
+    // passed the GC horizon and every version-addressed consumer
+    // (changefeeds) crashed by the ~3rd reopen
+    Views.unit(store.baseDir, s"${byFlagAgg.name}_unit")(
+      graft.engine.AggView.attach(s, store, "lineitem_byflag_agg__state")) {
+      val li = Tables.lineitem(s, dir)
+      val base = byFlagAgg.materialize(li, store)
+      graft.engine.AggView.build(base, "lineitem_byflag_agg__state")
+        .refresh(base, reflaggedUpserts(li), Some(tombstoneKeys(li)))._2
     }
+  }
 
   /** Maintained per-group DISTINCT-value count — the classically
     * non-retractable aggregate (a deletion says nothing about whether
@@ -227,7 +206,7 @@ object MapIndexQueries {
     * state IS the distinct count. Serving reads state (vocabulary-
     * sized), never the corpus. */
   private val distinctIdx = MapIndex.columns("lineitem_flagprice")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
+    lineitemKey,
     array(emit(concat_ws("|", col("l_returnflag"), col("l_extendedprice")),
       lit(1L))))
 
@@ -248,7 +227,7 @@ object MapIndexQueries {
     * (group, value) keys — distinct-count maintenance I/O ∝ delta at
     * any corpus size. */
   private val distinctIdxB = MapIndex.columns("lineitem_flagprice_b")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
+    lineitemKey,
     array(emit(concat_ws("|", col("l_returnflag"), col("l_extendedprice")),
       lit(1L))))
 
@@ -276,7 +255,7 @@ object MapIndexQueries {
     * domains the same state over a rounded/bucketed value gives
     * bounded-error quantiles with the same O(delta) maintenance. */
   private val pctIdx = MapIndex.columns("lineitem_flagqty")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
+    lineitemKey,
     array(emit(concat_ws("|", col("l_returnflag"), col("l_quantity").cast("int")),
       lit(1L))))
 
@@ -304,7 +283,7 @@ object MapIndexQueries {
     * modified corpus, `exact ∈ [bucket_lo, bucket_lo + grid)`), both
     * recomputed independently by the DuckDB oracle. */
   private val pctContIdx = MapIndex.columns("lineitem_flaggrid")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
+    lineitemKey,
     array(emit(concat_ws("|", col("l_returnflag"),
       floor(col("l_extendedprice") / 100).cast("long")), lit(1L))))
 
@@ -325,7 +304,7 @@ object MapIndexQueries {
     * batch rewrites only the state buckets of touched (group, value)
     * keys — percentile maintenance I/O ∝ delta at any corpus size. */
   private val pctIdxB = MapIndex.columns("lineitem_flagqty_b")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
+    lineitemKey,
     array(emit(concat_ws("|", col("l_returnflag"), col("l_quantity").cast("int")),
       lit(1L))))
 
@@ -372,7 +351,7 @@ object MapIndexQueries {
     * same from-scratch `count(DISTINCT)` oracle as the flat and bucketed
     * twins grades the whole streamed history. */
   private val distinctIdxS = MapIndex.columns("lineitem_flagprice_s")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
+    lineitemKey,
     array(emit(concat_ws("|", col("l_returnflag"), col("l_extendedprice")),
       lit(1L))))
 
@@ -385,12 +364,7 @@ object MapIndexQueries {
         distinctIdxS, store, "lineitem_flagprice_s__state")
       val li = Tables.lineitem(s, dir)
       (0 to 2).foreach(r => smi.applyBatch(li.filter(col("l_orderkey") % 3 === r)))
-      val key = concat_ws("-", col("l_orderkey"), col("l_linenumber"))
-      val ups = reflaggedUpserts(li)
-        .withColumn("key", key).withColumn("deleted", lit(false))
-      val dels = tombstoneKeys(li).withColumnRenamed("src_key", "key")
-        .withColumn("deleted", lit(true))
-      smi.applyBatch(ups.unionByName(dels, allowMissingColumns = true))
+      smi.applyBatch(streamedChangeBatch(li))
       graft.engine.AggView.attach(s, store, "lineitem_flagprice_s__state")
     })
 
@@ -404,8 +378,16 @@ object MapIndexQueries {
       .withColumn("l_returnflag", lit("X"))
   private def tombstoneKeys(li: DataFrame): DataFrame =
     li.filter(col("l_orderkey") % 89 === 0)
-      .select(concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("src_key"))
+      .select(lineitemKey.as("src_key"))
       .distinct()
+
+  /** The shared batch as ONE streaming micro-batch: upserts + tombstones
+    * together, the streaming contract's `deleted` column splitting them
+    * (index.js:178,187-205). */
+  private def streamedChangeBatch(li: DataFrame): DataFrame =
+    reflaggedUpserts(li).withColumn("key", lineitemKey).withColumn("deleted", lit(false))
+      .unionByName(tombstoneKeys(li).withColumnRenamed("src_key", "key")
+        .withColumn("deleted", lit(true)), allowMissingColumns = true)
 
   /** Fixture for the NET change feed: its own view taken through TWO
     * refreshes with overlapping key sets, so netting genuinely differs
@@ -415,33 +397,30 @@ object MapIndexQueries {
     * from the net feed (its delete@v1 carries the ORIGINAL flag, its
     * insert@v2 carries 'Y'), and a `%97∧%83` key contributes its original
     * delete only. */
-  private val byFlagNet = MapIndex.columns("lineitem_byflag_net")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val byFlagNet = flagIdx("lineitem_byflag_net")
 
-  private def netFeedView(s: SparkSession, dir: String) =
-    Views.cached(dir, byFlagNet.name) {
-      val store = Views.store(s, dir)
-      // unit-gated for durable reopens, like aggView: re-running the
-      // two-refresh history per process advanced versions until the
-      // replay range GC'd out from under the net-changefeed gate
-      val unit = s"${byFlagNet.name}_unit"
-      if (Views.unitDone(store.baseDir, unit)) store.load(byFlagNet)
-      else {
-        val li = Tables.lineitem(s, dir)
-        val v1 = byFlagNet.materialize(li, store)
-          .refresh(reflaggedUpserts(li), Some(tombstoneKeys(li)))
-        val ups2 = li.filter(col("l_orderkey") % 97 === 0 &&
-            col("l_orderkey") % 89 =!= 0 && col("l_orderkey") % 83 =!= 0)
-          .withColumn("l_returnflag", lit("Y"))
-        val dels2 = li.filter(col("l_orderkey") % 83 === 0 && col("l_orderkey") % 89 =!= 0)
-          .select(concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("src_key"))
-          .distinct()
-        val v2 = v1.refresh(ups2, Some(dels2))
-        Views.markUnitDone(store.baseDir, unit)
-        v2
-      }
+  private def netFeedView(s: SparkSession, dir: String): graft.engine.MaterializedView = {
+    val store = Views.store(s, dir)
+    // unit-gated for durable reopens, like aggView: re-running the
+    // two-refresh history per process advanced versions until the
+    // replay range GC'd out from under the net-changefeed gate
+    Views.unit(store.baseDir, s"${byFlagNet.name}_unit")(store.load(byFlagNet)) {
+      val li = Tables.lineitem(s, dir)
+      val (ups2, dels2) = secondNetBatch(li)
+      byFlagNet.materialize(li, store)
+        .refresh(reflaggedUpserts(li), Some(tombstoneKeys(li)))
+        .refresh(ups2, Some(dels2))
     }
+  }
+
+  /** The net-feed fixtures' SECOND batch: the surviving `%97` keys
+    * re-flagged again to 'Y', `%83` tombstoned. */
+  private def secondNetBatch(li: DataFrame): (DataFrame, DataFrame) =
+    (li.filter(col("l_orderkey") % 97 === 0 &&
+        col("l_orderkey") % 89 =!= 0 && col("l_orderkey") % 83 =!= 0)
+       .withColumn("l_returnflag", lit("Y")),
+     li.filter(col("l_orderkey") % 83 === 0 && col("l_orderkey") % 89 =!= 0)
+       .select(lineitemKey.as("src_key")).distinct())
 
   /** The NET-feed fixture in the bucket-partitioned (100 TB) layout: the
     * SAME two-refresh overlapping-key history as [[netFeedView]], so the
@@ -450,31 +429,18 @@ object MapIndexQueries {
     * oracle ([[graft.engine.BucketedViewStore.changesNetBetween]] shares
     * the flat store's telescoping netting; this pins the sidecar
     * plumbing underneath it too). */
-  private val byFlagNetB = MapIndex.columns("lineitem_byflag_net_b")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
-
-  private val netFeedBBuilt =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
+  private val byFlagNetB = flagIdx("lineitem_byflag_net_b")
 
   private def netFeedBView(s: SparkSession, dir: String): graft.engine.BucketedViewStore = {
     val store = Views.bucketedStore(s, dir)
-    netFeedBBuilt.getOrElseUpdate(dir, {
-      if (!Views.unitDone(store.baseDir, byFlagNetB.name)) {
-        val li = Tables.lineitem(s, dir)
-        store.materialize(byFlagNetB, li)
-        store.refresh(byFlagNetB, reflaggedUpserts(li), Some(tombstoneKeys(li)))
-        val ups2 = li.filter(col("l_orderkey") % 97 === 0 &&
-            col("l_orderkey") % 89 =!= 0 && col("l_orderkey") % 83 =!= 0)
-          .withColumn("l_returnflag", lit("Y"))
-        val dels2 = li.filter(col("l_orderkey") % 83 === 0 && col("l_orderkey") % 89 =!= 0)
-          .select(concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("src_key"))
-          .distinct()
-        store.refresh(byFlagNetB, ups2, Some(dels2))
-        Views.markUnitDone(store.baseDir, byFlagNetB.name)
-      }
-    })
-    store
+    Views.unit(store.baseDir, byFlagNetB.name)(store) {
+      val li = Tables.lineitem(s, dir)
+      store.materialize(byFlagNetB, li)
+      store.refresh(byFlagNetB, reflaggedUpserts(li), Some(tombstoneKeys(li)))
+      val (ups2, dels2) = secondNetBatch(li)
+      store.refresh(byFlagNetB, ups2, Some(dels2))
+      store
+    }
   }
 
   /** The aggregate view in the bucket-partitioned (100 TB) layout —
@@ -482,9 +448,7 @@ object MapIndexQueries {
     * batch, state living as bucketed emissions. Its refresh also writes
     * the base view's CDC sidecar, which `mapindex_bucketed_changefeed`
     * reads back. */
-  private val byFlagAggB = MapIndex.columns("lineitem_byflag_agg_b")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val byFlagAggB = flagIdx("lineitem_byflag_agg_b")
 
   private val bucketedAggViews =
     scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedAggView]
@@ -504,9 +468,7 @@ object MapIndexQueries {
     * three insert batches partitioning lineitem, then the shared
     * upsert+tombstone batch — so the driver's hash gate grades the
     * streaming write path against the same batch-recompute oracle. */
-  private val byFlagStream = MapIndex.columns("lineitem_byflag_stream")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val byFlagStream = flagIdx("lineitem_byflag_stream")
 
   private val streamViews =
     scala.collection.concurrent.TrieMap.empty[String, graft.engine.MaterializedView]
@@ -519,14 +481,7 @@ object MapIndexQueries {
       // micro-batch 0..2: disjoint thirds of the source (bootstrap + two
       // incremental inserts through the refresh path)
       (0 to 2).foreach(r => smi.applyBatch(li.filter(col("l_orderkey") % 3 === r)))
-      // micro-batch 3: upserts + tombstones in one batch, the streaming
-      // contract's `deleted` column splitting them (index.js:178,187-205)
-      val key = concat_ws("-", col("l_orderkey"), col("l_linenumber"))
-      val ups = reflaggedUpserts(li)
-        .withColumn("key", key).withColumn("deleted", lit(false))
-      val dels = tombstoneKeys(li).withColumnRenamed("src_key", "key")
-        .withColumn("deleted", lit(true))
-      smi.applyBatch(ups.unionByName(dels, allowMissingColumns = true))
+      smi.applyBatch(streamedChangeBatch(li))
       store.load(byFlagStream)
     })
 
@@ -541,42 +496,33 @@ object MapIndexQueries {
     col("key"),
     transform(col("value"), e => emit(e("emit_key"), e("emit_value"))))
 
-  private val cascadeCdcViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.MaterializedView]
-
-  private def cascadeCdcView(s: SparkSession, dir: String): graft.engine.MaterializedView =
-    cascadeCdcViews.getOrElseUpdate(dir, {
+  private def cascadeCdcView(s: SparkSession, dir: String): graft.engine.MaterializedView = {
+    val store = Views.store(s, dir)
+    // reopen-safe: the asOf(0) seed + (0,1] replay only make sense in
+    // the JVM that just built byFlagAgg (a durable reopen finds it at
+    // a later version with v0 past the GC horizon); once the relay is
+    // marked complete, a reopening process serves the stored relay
+    Views.unit(store.baseDir, byFlagRelay.name)(store.load(byFlagRelay)) {
       aggView(s, dir) // byFlagAgg at v1 with v0 retained + the CDC sidecar
-      val store = Views.store(s, dir)
       val base = store.load(byFlagAgg)
-      // reopen-safe: the asOf(0) seed + (0,1] replay only make sense in
-      // the JVM that just built byFlagAgg (a durable reopen finds it at
-      // a later version with v0 past the GC horizon); once the relay is
-      // marked complete, a reopening process serves the stored relay
-      if (Views.unitDone(store.baseDir, byFlagRelay.name)) store.load(byFlagRelay)
-      else {
-        // version-RELATIVE seed/replay: aggView just left byFlagAgg at
-        // latest L via its deterministic materialize+refresh, so the
-        // pre-refresh snapshot is L-1 and the replayable delta (L-1, L]
-        // — identical to (0, 1] in a fresh store, and still correct in
-        // a reopened durable store where L has moved past 1
-        val l = store.latestVersion(byFlagAgg.name).getOrElse(
-          sys.error(s"${byFlagAgg.name} missing after aggView build"))
-        byFlagRelay.materialize(
-          graft.engine.MaterializedView.cascadeSourceOf(base.asOf(l - 1)), store)
-        val relay = base.cascadeChangesInto(byFlagRelay, l - 1, l)
-        Views.markUnitDone(store.baseDir, byFlagRelay.name)
-        relay
-      }
-    })
+      // version-RELATIVE seed/replay: aggView just left byFlagAgg at
+      // latest L via its deterministic materialize+refresh, so the
+      // pre-refresh snapshot is L-1 and the replayable delta (L-1, L]
+      // — identical to (0, 1] in a fresh store, and still correct in
+      // a reopened durable store where L has moved past 1
+      val l = store.latestVersion(byFlagAgg.name).getOrElse(
+        sys.error(s"${byFlagAgg.name} missing after aggView build"))
+      byFlagRelay.materialize(
+        graft.engine.MaterializedView.cascadeSourceOf(base.asOf(l - 1)), store)
+      base.cascadeChangesInto(byFlagRelay, l - 1, l)
+    }
+  }
 
   /** The same micro-batch sequence through the BUCKETED streaming path
     * ([[graft.streaming.BucketedStreamingMapIndex]]) — every batch's
     * delete-then-insert rewrites only the touched buckets, and the final
     * state must still hash-match the batch recompute. */
-  private val byFlagStreamB = MapIndex.columns("lineitem_byflag_stream_b")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val byFlagStreamB = flagIdx("lineitem_byflag_stream_b")
 
   private val bucketedStreamStores =
     scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
@@ -587,12 +533,7 @@ object MapIndexQueries {
       val smi = new graft.streaming.BucketedStreamingMapIndex(byFlagStreamB, store)
       val li = Tables.lineitem(s, dir)
       (0 to 2).foreach(r => smi.applyBatch(li.filter(col("l_orderkey") % 3 === r)))
-      val key = concat_ws("-", col("l_orderkey"), col("l_linenumber"))
-      val ups = reflaggedUpserts(li)
-        .withColumn("key", key).withColumn("deleted", lit(false))
-      val dels = tombstoneKeys(li).withColumnRenamed("src_key", "key")
-        .withColumn("deleted", lit(true))
-      smi.applyBatch(ups.unionByName(dels, allowMissingColumns = true))
+      smi.applyBatch(streamedChangeBatch(li))
       store
     })
 
@@ -630,6 +571,221 @@ object MapIndexQueries {
     Views.materialized(s, dir, byMixedKey)(Tables.events(s, dir))
   }
 
+  /** A view fed by two-sided change batches: the maintained-join family
+    * ([[graft.engine.JoinView]], [[graft.engine.FilterJoinView]],
+    * [[graft.engine.AsOfJoinView]]) shares this surface. */
+  private type TwoSided = {
+    def build(left: DataFrame, right: DataFrame): Unit
+    def refreshLeft(ups: DataFrame, dels: Option[DataFrame]): BucketedViewStore.RefreshStats
+    def refreshRight(ups: DataFrame, dels: Option[DataFrame]): BucketedViewStore.RefreshStats
+  }
+
+  /** A consumer folding a maintained relation's CDC: rollups, lattices
+    * and per-key sketches. */
+  private type Fold = {
+    def build(): Unit
+    def catchUp(): BucketedViewStore.RefreshStats
+  }
+
+  /** One two-sided fixture history: build `views` on `(l, r)`, then the
+    * left change batch, then the right one, each through the delta
+    * rules (every view takes each step, in order). With `slices =
+    * Some((lk, rk))` the build takes only the `%3 = 0` slices and the
+    * rest arrive first as INTERLEAVED micro-batches, the left always one
+    * slice ahead of the right — the streaming-ingest reality (an order
+    * can land BEFORE its customer, a click after the purchase it
+    * attributes), so a late right arrival must heal or steal pending
+    * rows through the ordinary refresh. `epoch(e)` runs after the build
+    * (e = 0) and after every refresh (e = refreshes so far): rollup
+    * catch-ups, cascades into the next level. */
+  private def twoSidedHistory(views: Seq[TwoSided], l: DataFrame, r: DataFrame,
+      lBatch: (DataFrame, Option[DataFrame]), rBatch: (DataFrame, Option[DataFrame]),
+      slices: Option[(String, String)] = None)(epoch: Int => Unit): Unit = {
+    var e = 0
+    def step(f: TwoSided => Any): Unit = { views.foreach(f); epoch(e); e += 1 }
+    slices match {
+      case Some((lk, rk)) =>
+        def lS(i: Int) = l.filter(col(lk) % 3 === i)
+        def rS(i: Int) = r.filter(col(rk) % 3 === i)
+        step(_.build(lS(0), rS(0)))
+        for (i <- 1 to 2) {
+          step(_.refreshLeft(lS(i), None))
+          step(_.refreshRight(rS(i), None))
+        }
+      case None => step(_.build(l, r))
+    }
+    step(_.refreshLeft(lBatch._1, lBatch._2))
+    step(_.refreshRight(rBatch._1, rBatch._2))
+  }
+
+  /** Epoch callback building every fold after the base build and
+    * catching all of them up after every refresh. */
+  private def folding(folds: Fold*): Int => Unit = {
+    case 0 => folds.foreach(_.build())
+    case _ => folds.foreach(_.catchUp())
+  }
+
+  /** Epoch callback for a two-level cascade: `below` builds the next
+    * level after the base build, and after every refresh `up`'s CDC
+    * since the previous one replays into `down` — no level ever
+    * re-reads its inputs. */
+  private def cascading(up: graft.engine.MaintainedRelation,
+      down: graft.engine.LeftKeyedConsumer)(below: => Unit): Int => Unit = {
+    var from = 0
+    e => if (e == 0) below else { up.cascadeInto(down, from, up.epoch); from = up.epoch }
+  }
+
+  /** One maintained view as a build unit named after the view: `open`
+    * constructs the handle (the reopen branch serves it as-is),
+    * `history` runs its store calls, and `compact` adds a no-change
+    * compaction epoch on top (`maxFilesPerBucket = 0`: every live bucket
+    * rewrites, so the epoch bump is deterministic). */
+  private def viewUnit[V](s: SparkSession, dir: String, unit: String,
+      open: (BucketedViewStore, String) => V, compact: Boolean = false)
+      (history: V => Unit): V = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, unit)(open(store, unit)) {
+      val v = open(store, unit)
+      history(v)
+      if (compact) store.compact(unit, maxFilesPerBucket = 0)
+      v
+    }
+  }
+
+  /** A maintained rollup (state `<unit>__rollup`) over the relation
+    * `open` constructs, as one build unit: `history` takes the relation
+    * and the rollup through their store calls; a reopen attaches. */
+  private def rollupUnit[R <: graft.engine.MaintainedRelation](s: SparkSession,
+      dir: String, unit: String, open: (BucketedViewStore, String) => R,
+      group: String, measures: Measures, trackValues: Boolean = false)
+      (history: (R, JoinAggView) => Unit): JoinAggView = {
+    val store = Views.bucketedStore(s, dir)
+    val state = s"${unit}__rollup"
+    Views.unit(store.baseDir, unit)(
+      JoinAggView.attach(open(store, unit), state, group, measures, trackValues)) {
+      val r = open(store, unit)
+      val agg = new JoinAggView(r, state, group, measures, trackValues)
+      history(r, agg)
+      agg
+    }
+  }
+
+  /** [[rollupUnit]]'s lattice twin: one grouping-sets state
+    * (`<unit>__roll`) over the relation `open` constructs. */
+  private def latticeUnit[R <: graft.engine.MaintainedRelation](s: SparkSession,
+      dir: String, unit: String, open: (BucketedViewStore, String) => R,
+      groupCols: Seq[String], measures: Measures, sets: Seq[Seq[String]],
+      trackValues: Boolean = false)(history: (R, JoinGroupingView) => Unit): JoinGroupingView = {
+    val store = Views.bucketedStore(s, dir)
+    val state = s"${unit}__roll"
+    Views.unit(store.baseDir, unit)(JoinGroupingView.attach(open(store, unit), state,
+      groupCols, measures, sets, trackValues)) {
+      val r = open(store, unit)
+      val gv = new JoinGroupingView(r, state, groupCols, measures, sets, trackValues)
+      history(r, gv)
+      gv
+    }
+  }
+
+  private val OrderCols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+    "o_orderdate", "o_orderpriority")
+  private val CustomerCols = Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
+  /** The narrow orders payload of the filter and priority-dim fixtures. */
+  private val PriorityOrderCols = Seq("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
+  /** The lattices' grouping columns. */
+  private val SegmentPriority = Seq("c_mktsegment", "o_orderpriority")
+
+  /** The shared orders⋈customer [[graft.engine.JoinView]]: orders joined
+    * to their customer, the eleven columns every orders⋈customer gate
+    * serves. */
+  private def ordersCustomer(store: BucketedViewStore, name: String,
+      joinType: String = "inner", saltBuckets: Int = 1): JoinView =
+    new JoinView(store, name, "o_orderkey", "o_custkey", OrderCols,
+      "c_custkey", "c_custkey", CustomerCols, saltBuckets = saltBuckets, joinType = joinType)
+
+  /** Orders filtered by customer membership ([[graft.engine.FilterJoinView]],
+    * `mode` semi or anti); the right relation is stored as KEYS ONLY. */
+  private def ordersByCustomer(store: BucketedViewStore, name: String, mode: String,
+      payload: String, saltBuckets: Int = 1): FilterJoinView =
+    new FilterJoinView(store, name, "o_orderkey", "o_custkey",
+      Seq("o_orderkey", "o_custkey", payload, "o_totalprice"),
+      "c_custkey", "c_custkey", mode, saltBuckets)
+
+  /** The shared orders change batch: `%37` orders repriced (+1000),
+    * `%41` tombstoned. `orphan` ALSO tombstones every order of the `%19`
+    * customers — orphaning them entirely so genuine RIGHT-pads exist at
+    * the full- and right-outer gates (the synthetic data gives every
+    * customer surviving orders under the `%41`-only delete, which would
+    * leave the rpad twin empty and the full join row-identical to the
+    * left join). `reprice = false` upserts the `%37` orders unchanged. */
+  private def ordersBatch(o: DataFrame, orphan: Boolean = false,
+      reprice: Boolean = true): (DataFrame, Option[DataFrame]) = {
+    val (kept, gone) =
+      if (orphan) (col("o_orderkey") % 41 =!= 0 && col("o_custkey") % 19 =!= 0,
+        col("o_orderkey") % 41 === 0 || col("o_custkey") % 19 === 0)
+      else (col("o_orderkey") % 41 =!= 0, col("o_orderkey") % 41 === 0)
+    val ups = o.filter(col("o_orderkey") % 37 === 0 && kept)
+    (if (reprice) ups.withColumn("o_totalprice", col("o_totalprice") + 1000) else ups,
+     Some(o.filter(gone).select(col("o_orderkey").cast("string")).distinct()))
+  }
+
+  /** The shared customers change batch: `%13` customers re-balanced
+    * (+100 acctbal), `%17` tombstoned. `rebalance = false` upserts them
+    * unchanged (the semi/anti views store right keys only). */
+  private def customersBatch(c: DataFrame,
+      rebalance: Boolean = true): (DataFrame, Option[DataFrame]) = {
+    val ups = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
+    (if (rebalance) ups.withColumn("c_acctbal", col("c_acctbal") + 100) else ups,
+     Some(c.filter(col("c_custkey") % 17 === 0)
+       .select(col("c_custkey").cast("string")).distinct()))
+  }
+
+  /** The shared orders⋈customer history: [[twoSidedHistory]] over the
+    * base orders and customers with [[ordersBatch]] on the left and
+    * [[customersBatch]] on the right — one deterministic history, so
+    * every gate over it is graded by the plain SQL over both modified
+    * tables. `streamed` interleaves the `%3` slices first. */
+  private def ordersCustomerHistory(s: SparkSession, dir: String, views: Seq[TwoSided],
+      orphan: Boolean = false, streamed: Boolean = false, rebalance: Boolean = true,
+      epoch: Int => Unit = _ => ()): Unit = {
+    val o = Tables.orders(s, dir)
+    val c = Tables.customer(s, dir)
+    twoSidedHistory(views, o, c, ordersBatch(o, orphan), customersBatch(c, rebalance),
+      if (streamed) Some(("o_orderkey", "c_custkey")) else None)(epoch)
+  }
+
+  /** Level 2 of the three-way chain: level 1's orders⋈customer rows
+    * joined to their nation. */
+  private def nationLevel(store: BucketedViewStore, name: String): JoinView =
+    new JoinView(store, name, "o_orderkey", "c_nationkey", OrderCols ++ CustomerCols,
+      "n_nationkey", "n_nationkey", Seq("n_nationkey", "n_name"))
+
+  /** Level 2's own right batch: nations `%5` renamed, `%7` tombstoned. */
+  private def nationBatch(n: DataFrame): (DataFrame, Option[DataFrame]) =
+    (n.filter(col("n_nationkey") % 5 === 0 && col("n_nationkey") % 7 =!= 0)
+       .withColumn("n_name", concat(col("n_name"), lit("_X"))),
+     Some(n.filter(col("n_nationkey") % 7 === 0)
+       .select(col("n_nationkey").cast("string")).distinct()))
+
+  /** Orders joined to the derived per-priority dim. */
+  private def ordersPriority(store: BucketedViewStore, name: String): JoinView =
+    new JoinView(store, name, "o_orderkey", "o_orderpriority", PriorityOrderCols,
+      "p_name", "p_name", Seq("p_name", "p_cnt"))
+
+  /** The per-priority dim: one row per priority with its order count,
+    * derived from the ORIGINAL orders (the oracles mirror this). */
+  private def priorityDim(o: DataFrame): DataFrame =
+    o.groupBy(col("o_orderpriority").as("p_name")).agg(count(lit(1)).as("p_cnt"))
+
+  private def priorityDigit = substring(col("p_name"), 1, 1).cast("int")
+
+  /** The priority dim's own batch: odd-digit priorities re-counted
+    * (+7), the '5-LOW' digit dropped. */
+  private def priorityDimBatch(dim: DataFrame): (DataFrame, Option[DataFrame]) =
+    (dim.filter(priorityDigit % 2 === 1 && priorityDigit % 5 =!= 0)
+       .withColumn("p_cnt", col("p_cnt") + 7),
+     Some(dim.filter(priorityDigit % 5 === 0).select(col("p_name")).distinct()))
+
   /** Build the stored views eagerly (write-time cost, SURVEY.md §4.1) so
     * bench timings measure the read path the reference architecture pays. */
   /** Maintained orders⋈customer equi-join view ([[graft.engine.JoinView]]
@@ -640,36 +796,9 @@ object MapIndexQueries {
     * plain SQL join of both modified tables, so any stale join row (a
     * repriced order still carrying its old total, a deleted customer's
     * orders not retracted) is a hash mismatch. */
-  private val joinViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.JoinView]
-  private def ordersCustomerView(s: SparkSession, dir: String): graft.engine.JoinView =
-    joinViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-      val unit = "orders_customer"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      jv
-    })
+  private def ordersCustomerView(s: SparkSession, dir: String): JoinView =
+    viewUnit(s, dir, "orders_customer", ordersCustomer(_, _))(
+      jv => ordersCustomerHistory(s, dir, Seq(jv)))
 
   /** The join view built through INTERLEAVED two-sided micro-batches —
     * the streaming-ingest reality delta-join IVM has to survive: orders
@@ -680,113 +809,27 @@ object MapIndexQueries {
     * equal the one-shot join; the same change batches as
     * [[ordersCustomerView]] then run on top, so the identical oracle
     * grades the whole history. */
-  private def streamedOrdersCustomerView(s: SparkSession, dir: String): graft.engine.JoinView =
-    joinViews.getOrElseUpdate(s"$dir#stream", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_s",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-      val unit = "orders_customer_s"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        def oB(r: Int) = o.filter(col("o_orderkey") % 3 === r)
-        def cB(r: Int) = c.filter(col("c_custkey") % 3 === r)
-        // bootstrap on the first slices, then interleave arrivals with
-        // the LEFT always one slice ahead of its customers
-        jv.build(oB(0), cB(0))
-        jv.refreshLeft(oB(1), None)   // some of these orders' customers
-        jv.refreshRight(cB(1), None)  // ...arrive only here: heal
-        jv.refreshLeft(oB(2), None)
-        jv.refreshRight(cB(2), None)
-        // the shared deterministic change batches on top
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      jv
-    })
+  private def streamedOrdersCustomerView(s: SparkSession, dir: String): JoinView =
+    viewUnit(s, dir, "orders_customer_s", ordersCustomer(_, _))(
+      jv => ordersCustomerHistory(s, dir, Seq(jv), streamed = true))
 
   /** The join view with a COMPACTION epoch on top — the delta-join twin
     * of the pair/ANN compaction gates: build → both change batches →
     * `compact` (a no-change epoch folding the two refreshes' bucket
     * fragments). Serving afterwards must equal [[ordersCustomerView]]'s
     * answer exactly. */
-  private def compactedOrdersCustomerView(s: SparkSession, dir: String): graft.engine.JoinView =
-    joinViews.getOrElseUpdate(s"$dir#compact", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_c",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-      val unit = "orders_customer_c"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        store.compact(unit, maxFilesPerBucket = 0)
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      jv
-    })
+  private def compactedOrdersCustomerView(s: SparkSession, dir: String): JoinView =
+    viewUnit(s, dir, "orders_customer_c", ordersCustomer(_, _), compact = true)(
+      jv => ordersCustomerHistory(s, dir, Seq(jv)))
 
   /** The join view under SALT-SHARDED emit keys (`saltBuckets = 4` — the
     * skew hardening: a hot join key's rows spread over 4 shard buckets,
     * so a delta's rewrite I/O stays ∝ delta under key skew). Same build
     * + two-sided change batches as [[ordersCustomerView]], same oracle:
     * the shard layout must be invisible to serving. */
-  private def saltedOrdersCustomerView(s: SparkSession, dir: String): graft.engine.JoinView =
-    joinViews.getOrElseUpdate(s"$dir#salt", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_sl",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
-        saltBuckets = 4)
-      val unit = "orders_customer_sl"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      jv
-    })
+  private def saltedOrdersCustomerView(s: SparkSession, dir: String): JoinView =
+    viewUnit(s, dir, "orders_customer_sl", ordersCustomer(_, _, saltBuckets = 4))(
+      jv => ordersCustomerHistory(s, dir, Seq(jv)))
 
   /** The LEFT-OUTER maintained join — outer-join IVM: an order whose
     * customer is missing (or tombstoned by the right-side batch) holds a
@@ -796,35 +839,9 @@ object MapIndexQueries {
     * as [[ordersCustomerView]]; the oracle is the from-scratch LEFT JOIN
     * of both modified tables — the %17-tombstoned customers' orders MUST
     * appear null-padded (the inner twin drops them). */
-  private def leftOuterOrdersCustomerView(s: SparkSession, dir: String): graft.engine.JoinView =
-    joinViews.getOrElseUpdate(s"$dir#louter", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_lo",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
-        joinType = "left_outer")
-      val unit = "orders_customer_lo"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      jv
-    })
+  private def leftOuterOrdersCustomerView(s: SparkSession, dir: String): JoinView =
+    viewUnit(s, dir, "orders_customer_lo", ordersCustomer(_, _, joinType = "left_outer"))(
+      jv => ordersCustomerHistory(s, dir, Seq(jv)))
 
   /** The FULL-OUTER maintained join — the remaining published outer-join
     * delta rule: unmatched rows on EITHER side hold null-padded rows
@@ -835,41 +852,9 @@ object MapIndexQueries {
     * of both modified tables — %41-tombstoned orders' surviving customers
     * must appear right-padded, %17-tombstoned customers' orders
     * left-padded. */
-  private def fullOuterOrdersCustomerView(s: SparkSession, dir: String): graft.engine.JoinView =
-    joinViews.getOrElseUpdate(s"$dir#fouter", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_fo",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
-        joinType = "full_outer")
-      val unit = "orders_customer_fo"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        // the left batch ALSO tombstones every order of the %19 customers
-        // — orphaning them entirely so genuine RIGHT-pads exist at the
-        // gate (the synthetic data gives every customer surviving orders
-        // under the shared %41-only delete, which would leave the rpad
-        // twin empty and the full join row-identical to the left join)
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0
-            && col("o_custkey") % 19 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0 || col("o_custkey") % 19 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      jv
-    })
+  private def fullOuterOrdersCustomerView(s: SparkSession, dir: String): JoinView =
+    viewUnit(s, dir, "orders_customer_fo", ordersCustomer(_, _, joinType = "full_outer"))(
+      jv => ordersCustomerHistory(s, dir, Seq(jv), orphan = true))
 
   /** The RIGHT-OUTER maintained join: the inner-owned relation (matched
     * rows only) plus the same `__rpad` twin as full_outer — customers
@@ -878,36 +863,9 @@ object MapIndexQueries {
     * [[fullOuterOrdersCustomerView]] (incl. the %19 orphaning that makes
     * genuine right-pads exist); the oracle is the from-scratch RIGHT
     * JOIN of both modified tables. */
-  private def rightOuterOrdersCustomerView(s: SparkSession, dir: String): graft.engine.JoinView =
-    joinViews.getOrElseUpdate(s"$dir#router", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_ro",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
-        joinType = "right_outer")
-      val unit = "orders_customer_ro"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0
-            && col("o_custkey") % 19 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0 || col("o_custkey") % 19 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      jv
-    })
+  private def rightOuterOrdersCustomerView(s: SparkSession, dir: String): JoinView =
+    viewUnit(s, dir, "orders_customer_ro", ordersCustomer(_, _, joinType = "right_outer"))(
+      jv => ordersCustomerHistory(s, dir, Seq(jv), orphan = true))
 
   /** Maintained AGGREGATE-OVER-JOIN ([[graft.engine.JoinAggView]]): a
     * revenue-by-priority rollup fed from the orders⋈customer join view's
@@ -917,44 +875,10 @@ object MapIndexQueries {
     * scratch, so a stale group (a repriced order's old total still in
     * its priority's sum, a deleted customer's orders not retracted from
     * the rollup) is a hash mismatch. */
-  private val joinAggViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.JoinAggView]
-  private def ordersCustomerAggView(s: SparkSession, dir: String): graft.engine.JoinAggView =
-    joinAggViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_g",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-      val unit = "orders_customer_g"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinAggView.attach(jv, "orders_customer_g__rollup",
-          "o_orderpriority", "o_totalprice")
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val agg = new graft.engine.JoinAggView(jv, "orders_customer_g__rollup",
-          "o_orderpriority", "o_totalprice")
-        agg.build()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        agg.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        agg.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def ordersCustomerAggView(s: SparkSession, dir: String): JoinAggView =
+    rollupUnit(s, dir, "orders_customer_g", ordersCustomer(_, _),
+        "o_orderpriority", "o_totalprice") { (jv, agg) =>
+      ordersCustomerHistory(s, dir, Seq(jv), epoch = folding(agg)) }
 
   /** The rollup with the VALUE-REFCOUNT companion state
     * (`trackValues = true`): alongside `(cnt, sum)` the engine maintains
@@ -963,42 +887,10 @@ object MapIndexQueries {
     * distinct-count, the aggregates a plain (cnt,sum) state cannot
     * retract. Same join history as [[ordersCustomerAggView]]; the
     * oracle recomputes all six aggregates from scratch. */
-  private def ordersCustomerAggMultiView(s: SparkSession, dir: String): graft.engine.JoinAggView =
-    joinAggViews.getOrElseUpdate(s"$dir#multi", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_gm",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-      val unit = "orders_customer_gm"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinAggView.attach(jv, "orders_customer_gm__rollup",
-          "o_orderpriority", "o_totalprice", trackValues = true)
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val agg = new graft.engine.JoinAggView(jv, "orders_customer_gm__rollup",
-          "o_orderpriority", "o_totalprice", trackValues = true)
-        agg.build()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        agg.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        agg.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def ordersCustomerAggMultiView(s: SparkSession, dir: String): JoinAggView =
+    rollupUnit(s, dir, "orders_customer_gm", ordersCustomer(_, _),
+        "o_orderpriority", "o_totalprice", trackValues = true) { (jv, agg) =>
+      ordersCustomerHistory(s, dir, Seq(jv), epoch = folding(agg)) }
 
   /** The rollup OVER A FULL-OUTER view — the composition the engine
     * refused before the twin-feed fold: revenue by market segment where
@@ -1007,44 +899,10 @@ object MapIndexQueries {
     * real segment with a null value. [[graft.engine.JoinAggView]] folds
     * BOTH CDC feeds (owned + `__rpad`) per catch-up; the oracle
     * recomputes FULL JOIN + GROUP BY from both modified tables. */
-  private def fullOuterOrdersCustomerAggView(s: SparkSession, dir: String): graft.engine.JoinAggView =
-    joinAggViews.getOrElseUpdate(s"$dir#fullagg", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_fog",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
-        joinType = "full_outer")
-      val unit = "orders_customer_fog"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinAggView.attach(jv, "orders_customer_fog__rollup",
-          "c_mktsegment", "o_totalprice")
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val agg = new graft.engine.JoinAggView(jv, "orders_customer_fog__rollup",
-          "c_mktsegment", "o_totalprice")
-        agg.build()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0
-            && col("o_custkey") % 19 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0 || col("o_custkey") % 19 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        agg.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        agg.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def fullOuterOrdersCustomerAggView(s: SparkSession, dir: String): JoinAggView =
+    rollupUnit(s, dir, "orders_customer_fog", ordersCustomer(_, _, joinType = "full_outer"),
+        "c_mktsegment", "o_totalprice") { (jv, agg) =>
+      ordersCustomerHistory(s, dir, Seq(jv), orphan = true, epoch = folding(agg)) }
 
   /** ROLLUP-OVER-CASCADE at depth 2: a JoinAggView fed by the level-2
     * view of the three-way chain — the full base → join → join → group
@@ -1053,51 +911,15 @@ object MapIndexQueries {
     * replay; the nation batch runs level 2's own right-side refresh; and
     * after EVERY level-2 epoch the revenue-by-nation rollup catches up
     * from level 2's CDC alone. No level ever re-reads its inputs. */
-  private def ordersCustomerNationAggView(s: SparkSession, dir: String): graft.engine.JoinAggView =
-    joinAggViews.getOrElseUpdate(s"$dir#threeway", {
-      val store = Views.bucketedStore(s, dir)
-      val oCols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      val cCols = Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      val jv1 = new graft.engine.JoinView(store, "oc3g",
-        "o_orderkey", "o_custkey", oCols, "c_custkey", "c_custkey", cCols)
-      val jv2 = new graft.engine.JoinView(store, "ocn3g",
-        "o_orderkey", "c_nationkey", oCols ++ cCols,
-        "n_nationkey", "n_nationkey", Seq("n_nationkey", "n_name"))
-      val unit = "ocn3g"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinAggView.attach(jv2, "ocn3g__rollup",
-          "n_name", "o_totalprice")
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        val n = Tables.nation(s, dir)
-        jv1.build(o, c)
-        jv2.build(jv1.df, n)
-        val agg = new graft.engine.JoinAggView(jv2, "ocn3g__rollup",
-          "n_name", "o_totalprice")
-        agg.build()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv1.refreshLeft(upsL, Some(delsL))
-        jv1.cascadeInto(jv2, 0, 1); agg.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv1.refreshRight(upsR, Some(delsR))
-        jv1.cascadeInto(jv2, 1, 2); agg.catchUp()
-        val upsN = n.filter(col("n_nationkey") % 5 === 0 && col("n_nationkey") % 7 =!= 0)
-          .withColumn("n_name", concat(col("n_name"), lit("_X")))
-        val delsN = n.filter(col("n_nationkey") % 7 === 0)
-          .select(col("n_nationkey").cast("string")).distinct()
-        jv2.refreshRight(upsN, Some(delsN)); agg.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def ordersCustomerNationAggView(s: SparkSession, dir: String): JoinAggView =
+    rollupUnit(s, dir, "ocn3g", nationLevel(_, _), "n_name", "o_totalprice") { (jv2, agg) =>
+      val jv1 = ordersCustomer(jv2.store, "oc3g")
+      val n = Tables.nation(s, dir)
+      val (cascade, fold) = (cascading(jv1, jv2)(jv2.build(jv1.df, n)), folding(agg))
+      ordersCustomerHistory(s, dir, Seq(jv1), epoch = e => { cascade(e); fold(e) })
+      val (ups, dels) = nationBatch(n)
+      jv2.refreshRight(ups, dels); agg.catchUp()
+    }
 
   /** The rollup maintained through the STREAMING join history: the same
     * interleaved out-of-order micro-batches as
@@ -1106,49 +928,10 @@ object MapIndexQueries {
     * HEALS pending join rows (the heal's join delta must flow into the
     * rollup like any other delta). Final state must equal the same
     * from-scratch join+group-by oracle as the batch-built rollup. */
-  private def streamedOrdersCustomerAggView(s: SparkSession, dir: String): graft.engine.JoinAggView =
-    joinAggViews.getOrElseUpdate(s"$dir#stream", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_gs",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-      val unit = "orders_customer_gs"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinAggView.attach(jv, "orders_customer_gs__rollup",
-          "o_orderpriority", "o_totalprice")
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        def oB(r: Int) = o.filter(col("o_orderkey") % 3 === r)
-        def cB(r: Int) = c.filter(col("c_custkey") % 3 === r)
-        jv.build(oB(0), cB(0))
-        val agg = new graft.engine.JoinAggView(jv, "orders_customer_gs__rollup",
-          "o_orderpriority", "o_totalprice")
-        agg.build()
-        // interleaved arrivals, left one slice ahead — each refresh's
-        // join delta folds into the rollup before the next batch lands
-        jv.refreshLeft(oB(1), None); agg.catchUp()
-        jv.refreshRight(cB(1), None); agg.catchUp() // heals pending joins
-        jv.refreshLeft(oB(2), None); agg.catchUp()
-        jv.refreshRight(cB(2), None); agg.catchUp()
-        // the shared deterministic change batches on top
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL)); agg.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR)); agg.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def streamedOrdersCustomerAggView(s: SparkSession, dir: String): JoinAggView =
+    rollupUnit(s, dir, "orders_customer_gs", ordersCustomer(_, _),
+        "o_orderpriority", "o_totalprice") { (jv, agg) =>
+      ordersCustomerHistory(s, dir, Seq(jv), streamed = true, epoch = folding(agg)) }
 
   /** THREE-WAY delta join — (orders⋈customer)⋈nation at depth 2
     * ([[graft.engine.JoinView.cascadeInto]]): level 2's left side is
@@ -1158,49 +941,14 @@ object MapIndexQueries {
     * then exercises level 2's own right-side refresh: deleting a nation
     * must retract every surviving order of that nation's customers from
     * the final relation. */
-  private def ordersCustomerNationView(s: SparkSession, dir: String): graft.engine.JoinView =
-    joinViews.getOrElseUpdate(s"$dir#threeway", {
-      val store = Views.bucketedStore(s, dir)
-      val oCols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      val cCols = Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      val jv1 = new graft.engine.JoinView(store, "oc3",
-        "o_orderkey", "o_custkey", oCols, "c_custkey", "c_custkey", cCols)
-      val jv2 = new graft.engine.JoinView(store, "ocn3",
-        "o_orderkey", "c_nationkey", oCols ++ cCols,
-        "n_nationkey", "n_nationkey", Seq("n_nationkey", "n_name"))
-      val unit = "ocn3"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        val n = Tables.nation(s, dir)
-        jv1.build(o, c)
-        jv2.build(jv1.df, n)
-        // level-1 left batch (the shared orders reprice/tombstone), then
-        // level 2 catches up off level 1's CDC alone
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv1.refreshLeft(upsL, Some(delsL))
-        jv1.cascadeInto(jv2, 0, 1)
-        // level-1 right batch (the shared customers batch), same replay
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv1.refreshRight(upsR, Some(delsR))
-        jv1.cascadeInto(jv2, 1, 2)
-        // level-2 right batch: nations %5 renamed, %7 tombstoned
-        val upsN = n.filter(col("n_nationkey") % 5 === 0 && col("n_nationkey") % 7 =!= 0)
-          .withColumn("n_name", concat(col("n_name"), lit("_X")))
-        val delsN = n.filter(col("n_nationkey") % 7 === 0)
-          .select(col("n_nationkey").cast("string")).distinct()
-        jv2.refreshRight(upsN, Some(delsN))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      jv2
-    })
+  private def ordersCustomerNationView(s: SparkSession, dir: String): JoinView =
+    viewUnit(s, dir, "ocn3", nationLevel(_, _)) { jv2 =>
+      val jv1 = ordersCustomer(jv2.store, "oc3")
+      val n = Tables.nation(s, dir)
+      ordersCustomerHistory(s, dir, Seq(jv1), epoch = cascading(jv1, jv2)(jv2.build(jv1.df, n)))
+      val (ups, dels) = nationBatch(n)
+      jv2.refreshRight(ups, dels)
+    }
 
   /** The maintained AS-OF join view ([[graft.engine.AsOfJoinView]]):
     * every purchase joined to the user's LAST click at-or-before it
@@ -1213,24 +961,35 @@ object MapIndexQueries {
     * purchases must fall back to the previous click or the null pad).
     * The oracle recomputes the as-of argmax per purchase from both
     * modified tables, so any stale pick is a hash mismatch. */
-  private val asofViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.AsOfJoinView]
-  private def purchaseClickView(s: SparkSession, dir: String): graft.engine.AsOfJoinView =
-    asofViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"))
-      val unit = "purchase_click_asof"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (p, c) = purchasesClicks(s, dir)
-        v.build(p, c)
-        v.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      v
-    })
+  private def purchaseClickView(s: SparkSession, dir: String): AsOfJoinView =
+    viewUnit(s, dir, "purchase_click_asof", purchaseClick(_, _))(
+      v => purchaseClickHistory(s, dir, Seq(v)))
+
+  private val PurchaseCols = Seq("a_id", "a_user", "a_ts", "a_value")
+  private val ClickCols = Seq("b_id", "b_user", "b_ts", "b_value")
+
+  /** The shared purchase→click [[graft.engine.AsOfJoinView]] spec. */
+  private def purchaseClick(store: BucketedViewStore, name: String,
+      direction: String = "backward",
+      tolerance: Option[(org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.Column] = None,
+      saltBuckets: Int = 1, rightKeyed: Boolean = false,
+      leftCols: Seq[String] = PurchaseCols): AsOfJoinView =
+    new AsOfJoinView(store, name, "a_id", "a_user", "a_ts", leftCols,
+      "b_id", "b_user", "b_ts", ClickCols, direction = direction, tolerance = tolerance,
+      saltBuckets = saltBuckets, rightKeyed = rightKeyed)
+
+  /** The shared purchase/click history: [[twoSidedHistory]] with the
+    * purchase batch on the left and the click batch on the right;
+    * `streamed` interleaves the `%3` slices first (late clicks steal
+    * matches). */
+  private def purchaseClickHistory(s: SparkSession, dir: String, views: Seq[TwoSided],
+      streamed: Boolean = false, epoch: Int => Unit = _ => ()): Unit = {
+    val (p, c) = purchasesClicks(s, dir)
+    twoSidedHistory(views, p, c, (purchaseUps(p), Some(purchaseDels(p))),
+      (clickUps(c), Some(clickDels(c))),
+      if (streamed) Some(("a_id", "b_id")) else None)(epoch)
+  }
 
   private def purchasesClicks(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ev = Tables.events(s, dir)
@@ -1261,71 +1020,24 @@ object MapIndexQueries {
     * own refresh — the as-of analog of the equi twin's heal. The shared
     * change batches land on top; the final state is graded by the SAME
     * from-scratch oracle as the batch-built view. */
-  private def purchaseClickStreamView(s: SparkSession, dir: String): graft.engine.AsOfJoinView =
-    asofViews.getOrElseUpdate(s"$dir#stream", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_s",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"))
-      val unit = "purchase_click_asof_s"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (p, c) = purchasesClicks(s, dir)
-        def pB(r: Int) = p.filter(col("a_id") % 3 === r)
-        def cB(r: Int) = c.filter(col("b_id") % 3 === r)
-        v.build(pB(0), cB(0))
-        v.refreshLeft(pB(1), None)
-        v.refreshRight(cB(1), None) // late clicks steal matches
-        v.refreshLeft(pB(2), None)
-        v.refreshRight(cB(2), None)
-        v.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      v
-    })
+  private def purchaseClickStreamView(s: SparkSession, dir: String): AsOfJoinView =
+    viewUnit(s, dir, "purchase_click_asof_s", purchaseClick(_, _))(
+      v => purchaseClickHistory(s, dir, Seq(v), streamed = true))
 
   /** The as-of view under SALT-SHARDED emit keys (`saltBuckets = 4` —
     * the hot-user hardening: one user's facts and clicks spread over 4
     * shard buckets so delta rewrites stay shard-local). Same history as
     * [[purchaseClickView]], same oracle: shards must be invisible. */
-  private def purchaseClickSaltedView(s: SparkSession, dir: String): graft.engine.AsOfJoinView =
-    asofViews.getOrElseUpdate(s"$dir#salt", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_sl",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"),
-        saltBuckets = 4)
-      val unit = "purchase_click_asof_sl"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (p, c) = purchasesClicks(s, dir)
-        v.build(p, c)
-        v.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      v
-    })
+  private def purchaseClickSaltedView(s: SparkSession, dir: String): AsOfJoinView =
+    viewUnit(s, dir, "purchase_click_asof_sl", purchaseClick(_, _, saltBuckets = 4))(
+      v => purchaseClickHistory(s, dir, Seq(v)))
 
   /** The as-of store COMPACTED after both change batches — bin-packing
     * the accreted bucket fragments of the joined relation must be
     * invisible to as-of serving (same oracle as the uncompacted twin). */
-  private def purchaseClickCompactView(s: SparkSession, dir: String): graft.engine.AsOfJoinView =
-    asofViews.getOrElseUpdate(s"$dir#compact", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_c",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"))
-      val unit = "purchase_click_asof_c"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (p, c) = purchasesClicks(s, dir)
-        v.build(p, c)
-        v.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        store.compact(unit, maxFilesPerBucket = 0)
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      v
-    })
+  private def purchaseClickCompactView(s: SparkSession, dir: String): AsOfJoinView =
+    viewUnit(s, dir, "purchase_click_asof_c", purchaseClick(_, _), compact = true)(
+      v => purchaseClickHistory(s, dir, Seq(v)))
 
   /** FORWARD and TOLERANCE variants of the maintained as-of view, each
     * under the SAME two-sided change-batch history: forward picks the
@@ -1333,42 +1045,14 @@ object MapIndexQueries {
     * id); tolerance bounds the backward pick to one hour. Both delta
     * rules re-pick under the variant semantics — a moved click must
     * steal/release forward matches and tolerance-expire stale ones. */
-  private def purchaseClickFwdView(s: SparkSession, dir: String): graft.engine.AsOfJoinView =
-    asofViews.getOrElseUpdate(s"$dir#fwd", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_f",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"),
-        direction = "forward")
-      val unit = "purchase_click_asof_f"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (p, c) = purchasesClicks(s, dir)
-        v.build(p, c)
-        v.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      v
-    })
+  private def purchaseClickFwdView(s: SparkSession, dir: String): AsOfJoinView =
+    viewUnit(s, dir, "purchase_click_asof_f", purchaseClick(_, _, direction = "forward"))(
+      v => purchaseClickHistory(s, dir, Seq(v)))
 
-  private def purchaseClickTolView(s: SparkSession, dir: String): graft.engine.AsOfJoinView =
-    asofViews.getOrElseUpdate(s"$dir#tol", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_t",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"),
-        tolerance = Some((lts, rts) =>
-          unix_micros(lts) - unix_micros(rts) <= lit(3600000000L))) // 1 h
-      val unit = "purchase_click_asof_t"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (p, c) = purchasesClicks(s, dir)
-        v.build(p, c)
-        v.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      v
-    })
+  private def purchaseClickTolView(s: SparkSession, dir: String): AsOfJoinView =
+    viewUnit(s, dir, "purchase_click_asof_t", purchaseClick(_, _, tolerance = Some((lts, rts) =>
+        unix_micros(lts) - unix_micros(rts) <= lit(3600000000L))))( // 1 h
+      v => purchaseClickHistory(s, dir, Seq(v)))
 
   /** A [[graft.engine.JoinAggView]] OVER the as-of view — the maintained
     * last-touch attribution rollup ("revenue credited to each click,
@@ -1377,30 +1061,9 @@ object MapIndexQueries {
     * [[graft.engine.MaintainedRelation]] contract, catching up after
     * every refresh. Same history as [[purchaseClickView]] on twin view
     * names; the oracle recomputes match + group-by from scratch. */
-  private def purchaseClickAttribution(s: SparkSession, dir: String): graft.engine.JoinAggView =
-    joinAggViews.getOrElseUpdate(s"$dir#asof", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_g",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"))
-      val unit = "purchase_click_asof_g"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinAggView.attach(v, "purchase_click_asof_g__rollup",
-          "b_id", "a_value")
-      else {
-        val (p, c) = purchasesClicks(s, dir)
-        v.build(p, c)
-        val agg = new graft.engine.JoinAggView(v, "purchase_click_asof_g__rollup",
-          "b_id", "a_value")
-        agg.build()
-        v.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        agg.catchUp()
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        agg.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def purchaseClickAttribution(s: SparkSession, dir: String): JoinAggView =
+    rollupUnit(s, dir, "purchase_click_asof_g", purchaseClick(_, _), "b_id", "a_value") {
+      (v, agg) => purchaseClickHistory(s, dir, Seq(v), epoch = folding(agg)) }
 
   /** Maintained GROUPING-SETS lattices ([[graft.engine.JoinGroupingView]]):
     * ONE join view ("orders_customer_l", the shared change-batch history)
@@ -1409,59 +1072,23 @@ object MapIndexQueries {
     * updating every grouping set at once. The oracles are DuckDB's own
     * `GROUP BY ROLLUP` / `GROUP BY CUBE` over both modified tables, with
     * the gid bitmask recomputed via GROUPING(). */
-  private val latticeViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.JoinGroupingView]
   private def ordersCustomerLattice(s: SparkSession, dir: String,
-      cube: Boolean): graft.engine.JoinGroupingView = {
-    val key = s"$dir#${if (cube) "cube" else "rollup"}"
-    latticeViews.getOrElse(key, this.synchronized {
-      latticeViews.getOrElse(key, {
-        val store = Views.bucketedStore(s, dir)
-        val jv = new graft.engine.JoinView(store, "orders_customer_l",
-          "o_orderkey", "o_custkey",
-          Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-            "o_orderdate", "o_orderpriority"),
-          "c_custkey", "c_custkey",
-          Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-        val gcols = Seq("c_mktsegment", "o_orderpriority")
-        val rSets = graft.engine.JoinGroupingView.rollupSets(gcols)
-        val cSets = graft.engine.JoinGroupingView.cubeSets(gcols)
-        val unit = "orders_customer_l"
-        val (r, c) =
-          if (Views.unitDone(store.baseDir, unit))
-            (graft.engine.JoinGroupingView.attach(jv, "orders_customer_l__roll",
-              gcols, "o_totalprice", rSets),
-             graft.engine.JoinGroupingView.attach(jv, "orders_customer_l__cube",
-              gcols, "o_totalprice", cSets))
-          else {
-            val o = Tables.orders(s, dir)
-            val cu = Tables.customer(s, dir)
-            jv.build(o, cu)
-            val r0 = new graft.engine.JoinGroupingView(jv,
-              "orders_customer_l__roll", gcols, "o_totalprice", rSets)
-            val c0 = new graft.engine.JoinGroupingView(jv,
-              "orders_customer_l__cube", gcols, "o_totalprice", cSets)
-            r0.build(); c0.build()
-            val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-              .withColumn("o_totalprice", col("o_totalprice") + 1000)
-            val delsL = o.filter(col("o_orderkey") % 41 === 0)
-              .select(col("o_orderkey").cast("string")).distinct()
-            jv.refreshLeft(upsL, Some(delsL))
-            r0.catchUp(); c0.catchUp()
-            val upsR = cu.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-              .withColumn("c_acctbal", col("c_acctbal") + 100)
-            val delsR = cu.filter(col("c_custkey") % 17 === 0)
-              .select(col("c_custkey").cast("string")).distinct()
-            jv.refreshRight(upsR, Some(delsR))
-            r0.catchUp(); c0.catchUp()
-            Views.markUnitDone(store.baseDir, unit)
-            (r0, c0)
-          }
-        latticeViews.put(s"$dir#rollup", r)
-        latticeViews.put(s"$dir#cube", c)
-        if (cube) c else r
-      })
-    })
+      cube: Boolean): JoinGroupingView = {
+    val store = Views.bucketedStore(s, dir)
+    val rSets = JoinGroupingView.rollupSets(SegmentPriority)
+    val cSets = JoinGroupingView.cubeSets(SegmentPriority)
+    def lattices(jv: JoinView, mk: (JoinView, String, Seq[Seq[String]]) => JoinGroupingView) =
+      (mk(jv, "orders_customer_l__roll", rSets), mk(jv, "orders_customer_l__cube", cSets))
+    val (r, c) = Views.unit(store.baseDir, "orders_customer_l")(
+      lattices(ordersCustomer(store, "orders_customer_l"),
+        JoinGroupingView.attach(_, _, SegmentPriority, "o_totalprice", _))) {
+      val jv = ordersCustomer(store, "orders_customer_l")
+      val (r0, c0) = lattices(jv,
+        new JoinGroupingView(_, _, SegmentPriority, "o_totalprice", _))
+      ordersCustomerHistory(s, dir, Seq(jv), epoch = folding(r0, c0))
+      (r0, c0)
+    }
+    if (cube) c else r
   }
 
   /** Maintained SEMI and ANTI join views ([[graft.engine.FilterJoinView]]
@@ -1472,119 +1099,36 @@ object MapIndexQueries {
     * customer `%17` tombstones guarantee genuine anti rows at the gate;
     * oracles are from-scratch EXISTS / NOT EXISTS over both modified
     * tables. */
-  private val filterViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.FilterJoinView]
   private def ordersCustomerFilterView(s: SparkSession, dir: String,
-      mode: String): graft.engine.FilterJoinView = {
-    val key = s"$dir#$mode"
-    filterViews.getOrElse(key, this.synchronized {
-      filterViews.getOrElse(key, {
-        val store = Views.bucketedStore(s, dir)
-        def mk(m: String) = new graft.engine.FilterJoinView(store,
-          s"orders_customer_$m",
-          "o_orderkey", "o_custkey",
-          Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"),
-          "c_custkey", "c_custkey", m)
-        val (semi, anti) = (mk("semi"), mk("anti"))
-        val unit = "orders_customer_semianti"
-        if (!Views.unitDone(store.baseDir, unit)) {
-          val o = Tables.orders(s, dir)
-          val c = Tables.customer(s, dir)
-          semi.build(o, c); anti.build(o, c)
-          val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-            .withColumn("o_totalprice", col("o_totalprice") + 1000)
-          val delsL = o.filter(col("o_orderkey") % 41 === 0)
-            .select(col("o_orderkey").cast("string")).distinct()
-          semi.refreshLeft(upsL, Some(delsL)); anti.refreshLeft(upsL, Some(delsL))
-          val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          val delsR = c.filter(col("c_custkey") % 17 === 0)
-            .select(col("c_custkey").cast("string")).distinct()
-          semi.refreshRight(upsR, Some(delsR)); anti.refreshRight(upsR, Some(delsR))
-          Views.markUnitDone(store.baseDir, unit)
-        }
-        filterViews.put(s"$dir#semi", semi)
-        filterViews.put(s"$dir#anti", anti)
-        if (mode == "semi") semi else anti
-      })
-    })
+      mode: String): FilterJoinView = {
+    val store = Views.bucketedStore(s, dir)
+    def both = (ordersByCustomer(store, "orders_customer_semi", "semi", "o_orderstatus"),
+      ordersByCustomer(store, "orders_customer_anti", "anti", "o_orderstatus"))
+    val (semi, anti) = Views.unit(store.baseDir, "orders_customer_semianti")(both) {
+      val (semi, anti) = both
+      ordersCustomerHistory(s, dir, Seq(semi, anti), rebalance = false)
+      (semi, anti)
+    }
+    if (mode == "semi") semi else anti
   }
 
   /** The SEMI view under SALT-SHARDED emit keys (`saltBuckets = 4`) —
     * a hot customer's orders spread over 4 shard buckets; membership
     * and serving must be shard-invisible. Same history and oracle as
     * [[ordersCustomerFilterView]]'s semi half. */
-  private def saltedSemiView(s: SparkSession, dir: String): graft.engine.FilterJoinView =
-    filterViews.getOrElseUpdate(s"$dir#semisalt", {
-      val store = Views.bucketedStore(s, dir)
-      val fv = new graft.engine.FilterJoinView(store, "orders_customer_semisl",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"),
-        "c_custkey", "c_custkey", "semi", saltBuckets = 4)
-      val unit = "orders_customer_semisl"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        fv.build(o, c)
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        fv.refreshLeft(upsL, Some(delsL))
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        fv.refreshRight(upsR, Some(delsR))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      fv
-    })
+  private def saltedSemiView(s: SparkSession, dir: String): FilterJoinView =
+    viewUnit(s, dir, "orders_customer_semisl",
+        ordersByCustomer(_, _, "semi", "o_orderstatus", saltBuckets = 4))(
+      fv => ordersCustomerHistory(s, dir, Seq(fv), rebalance = false))
 
   /** The ROLLUP lattice fed through the STREAMING join history: the
     * same interleaved out-of-order micro-batches as the streamed join
     * twin, with the whole lattice catching up from the CDC after EVERY
     * batch — heals included. Same oracle as the batch-built lattice. */
-  private def streamedOrdersCustomerLattice(s: SparkSession, dir: String): graft.engine.JoinGroupingView =
-    latticeViews.getOrElseUpdate(s"$dir#stream", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_ls",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-      val gcols = Seq("c_mktsegment", "o_orderpriority")
-      val rSets = graft.engine.JoinGroupingView.rollupSets(gcols)
-      val unit = "orders_customer_ls"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinGroupingView.attach(jv, "orders_customer_ls__roll",
-          gcols, "o_totalprice", rSets)
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        def oB(r: Int) = o.filter(col("o_orderkey") % 3 === r)
-        def cB(r: Int) = c.filter(col("c_custkey") % 3 === r)
-        jv.build(oB(0), cB(0))
-        val gv = new graft.engine.JoinGroupingView(jv,
-          "orders_customer_ls__roll", gcols, "o_totalprice", rSets)
-        gv.build()
-        jv.refreshLeft(oB(1), None); gv.catchUp()
-        jv.refreshRight(cB(1), None); gv.catchUp() // heals flow into every set
-        jv.refreshLeft(oB(2), None); gv.catchUp()
-        jv.refreshRight(cB(2), None); gv.catchUp()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL)); gv.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR)); gv.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        gv
-      }
-    })
+  private def streamedOrdersCustomerLattice(s: SparkSession, dir: String): JoinGroupingView =
+    latticeUnit(s, dir, "orders_customer_ls", ordersCustomer(_, _), SegmentPriority,
+        "o_totalprice", JoinGroupingView.rollupSets(SegmentPriority)) { (jv, gv) =>
+      ordersCustomerHistory(s, dir, Seq(jv), streamed = true, epoch = folding(gv)) }
 
   /** The ROLLUP lattice over a FULL-OUTER view ([[graft.engine
     * .JoinGroupingView]] folding BOTH CDC feeds — owned + right-pad
@@ -1592,74 +1136,20 @@ object MapIndexQueries {
     * a null priority with a sum-invisible null value, and every pad,
     * heal and re-pad flows into every grouping set. Same orphaning
     * history as [[fullOuterOrdersCustomerView]] on twin names. */
-  private def fullOuterOrdersCustomerLattice(s: SparkSession, dir: String): graft.engine.JoinGroupingView =
-    latticeViews.getOrElseUpdate(s"$dir#full", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_fol",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
-        joinType = "full_outer")
-      val gcols = Seq("c_mktsegment", "o_orderpriority")
-      val rSets = graft.engine.JoinGroupingView.rollupSets(gcols)
-      val unit = "orders_customer_fol"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinGroupingView.attach(jv, "orders_customer_fol__roll",
-          gcols, "o_totalprice", rSets)
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val gv = new graft.engine.JoinGroupingView(jv,
-          "orders_customer_fol__roll", gcols, "o_totalprice", rSets)
-        gv.build()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0
-            && col("o_custkey") % 19 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0 || col("o_custkey") % 19 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL)); gv.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR)); gv.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        gv
-      }
-    })
+  private def fullOuterOrdersCustomerLattice(s: SparkSession, dir: String): JoinGroupingView =
+    latticeUnit(s, dir, "orders_customer_fol", ordersCustomer(_, _, joinType = "full_outer"),
+        SegmentPriority, "o_totalprice", JoinGroupingView.rollupSets(SegmentPriority)) {
+      (jv, gv) => ordersCustomerHistory(s, dir, Seq(jv), orphan = true, epoch = folding(gv)) }
 
   /** The attribution rollup WITH the value-refcount companion
     * (`trackValues = true`): exact deletion-safe per-click min / max /
     * distinct-count of attributed revenue alongside (cnt, sum), all
     * maintained from the as-of view's CDC. Same history as
     * [[purchaseClickAttribution]] on twin names. */
-  private def purchaseClickAttributionMulti(s: SparkSession, dir: String): graft.engine.JoinAggView =
-    joinAggViews.getOrElseUpdate(s"$dir#asofmulti", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_gm",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"))
-      val unit = "purchase_click_asof_gm"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinAggView.attach(v, "purchase_click_asof_gm__rollup",
-          "b_id", "a_value", trackValues = true)
-      else {
-        val (p, c) = purchasesClicks(s, dir)
-        v.build(p, c)
-        val agg = new graft.engine.JoinAggView(v, "purchase_click_asof_gm__rollup",
-          "b_id", "a_value", trackValues = true)
-        agg.build()
-        v.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        agg.catchUp()
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        agg.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def purchaseClickAttributionMulti(s: SparkSession, dir: String): JoinAggView =
+    rollupUnit(s, dir, "purchase_click_asof_gm", purchaseClick(_, _), "b_id", "a_value",
+        trackValues = true) {
+      (v, agg) => purchaseClickHistory(s, dir, Seq(v), epoch = folding(agg)) }
 
   /** A rollup OVER the maintained SEMI view — "revenue of live
     * customers' orders by priority, always fresh": the aggregate folds
@@ -1667,37 +1157,10 @@ object MapIndexQueries {
     * .MaintainedRelation]] contract, so membership flips (a purged
     * customer's orders leaving the rollup, a late customer's orders
     * entering) arrive as ordinary ±1 deltas. */
-  private def semiOrdersAggView(s: SparkSession, dir: String): graft.engine.JoinAggView =
-    joinAggViews.getOrElseUpdate(s"$dir#semi", {
-      val store = Views.bucketedStore(s, dir)
-      val fv = new graft.engine.FilterJoinView(store, "orders_customer_semig",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"),
-        "c_custkey", "c_custkey", "semi")
-      val unit = "orders_customer_semig"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinAggView.attach(fv, "orders_customer_semig__rollup",
-          "o_orderpriority", "o_totalprice")
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        fv.build(o, c)
-        val agg = new graft.engine.JoinAggView(fv, "orders_customer_semig__rollup",
-          "o_orderpriority", "o_totalprice")
-        agg.build()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        fv.refreshLeft(upsL, Some(delsL)); agg.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        fv.refreshRight(upsR, Some(delsR)); agg.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def semiOrdersAggView(s: SparkSession, dir: String): JoinAggView =
+    rollupUnit(s, dir, "orders_customer_semig",
+        ordersByCustomer(_, _, "semi", "o_orderpriority"), "o_orderpriority", "o_totalprice") {
+      (fv, agg) => ordersCustomerHistory(s, dir, Seq(fv), rebalance = false, epoch = folding(agg)) }
 
 
   /** COMPOSITE-KEY maintained join ([[graft.engine.JoinKey]]): orders
@@ -1712,40 +1175,25 @@ object MapIndexQueries {
     * both modified relations in DuckDB. The salted twin (saltBuckets=4)
     * proves shard-invisibility on the same oracle. */
   private def compositeOrdersView(s: SparkSession, dir: String,
-      salted: Boolean): graft.engine.JoinView = {
-    val nm = if (salted) "orders_custstatus_sl" else "orders_custstatus"
-    joinViews.getOrElseUpdate(s"$dir#$nm", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, nm,
-        "o_orderkey", Seq("o_custkey", "o_orderstatus"),
+      salted: Boolean): JoinView =
+    viewUnit(s, dir, if (salted) "orders_custstatus_sl" else "orders_custstatus",
+      new JoinView(_, _, "o_orderkey", Seq("o_custkey", "o_orderstatus"),
         Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"),
         "d_pk", Seq("d_custkey", "d_status"),
         Seq("d_pk", "d_custkey", "d_status", "d_cnt"),
-        saltBuckets = if (salted) 4 else 1)
-      if (!Views.unitDone(store.baseDir, nm)) {
-        val o = Tables.orders(s, dir)
-        // the dim: one row per (custkey, status) with its order count —
-        // derived from the ORIGINAL orders (the oracle mirrors this)
-        val dim = o.groupBy(col("o_custkey").as("d_custkey"),
-            col("o_orderstatus").as("d_status"))
-          .agg(count(lit(1)).as("d_cnt"))
-          .withColumn("d_pk", concat_ws("-", col("d_custkey"), col("d_status")))
-        jv.build(o, dim)
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        val upsR = dim.filter(col("d_custkey") % 13 === 0 && col("d_custkey") % 17 =!= 0)
-          .withColumn("d_cnt", col("d_cnt") + 5)
-        val delsR = dim.filter(col("d_custkey") % 17 === 0)
-          .select(col("d_pk")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        Views.markUnitDone(store.baseDir, nm)
-      }
-      jv
-    })
-  }
+        saltBuckets = if (salted) 4 else 1)) { jv =>
+      val o = Tables.orders(s, dir)
+      // the dim: one row per (custkey, status) with its order count —
+      // derived from the ORIGINAL orders (the oracle mirrors this)
+      val dim = o.groupBy(col("o_custkey").as("d_custkey"),
+          col("o_orderstatus").as("d_status"))
+        .agg(count(lit(1)).as("d_cnt"))
+        .withColumn("d_pk", concat_ws("-", col("d_custkey"), col("d_status")))
+      val upsR = dim.filter(col("d_custkey") % 13 === 0 && col("d_custkey") % 17 =!= 0)
+        .withColumn("d_cnt", col("d_cnt") + 5)
+      val delsR = dim.filter(col("d_custkey") % 17 === 0).select(col("d_pk")).distinct()
+      twoSidedHistory(Seq(jv), o, dim, ordersBatch(o), (upsR, Some(delsR)))(_ => ())
+    }
 
   /** The ROLLUP lattice WITH the refcount value companion
     * ([[graft.engine.JoinGroupingView]] trackValues — the lattice analog
@@ -1754,43 +1202,10 @@ object MapIndexQueries {
     * folded from the SAME join CDC. Same shared change-batch history on
     * twin view names; the oracle recomputes `GROUP BY ROLLUP` with
     * min/max/count(DISTINCT) over both modified tables from scratch. */
-  private def latticeMultiView(s: SparkSession, dir: String): graft.engine.JoinGroupingView =
-    latticeViews.getOrElseUpdate(s"$dir#multi", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_lm",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-      val gcols = Seq("c_mktsegment", "o_orderpriority")
-      val rSets = graft.engine.JoinGroupingView.rollupSets(gcols)
-      val unit = "orders_customer_lm"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinGroupingView.attach(jv, "orders_customer_lm__roll",
-          gcols, "o_totalprice", rSets, trackValues = true)
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val gv = new graft.engine.JoinGroupingView(jv,
-          "orders_customer_lm__roll", gcols, "o_totalprice", rSets,
-          trackValues = true)
-        gv.build()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL)); gv.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR)); gv.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        gv
-      }
-    })
+  private def latticeMultiView(s: SparkSession, dir: String): JoinGroupingView =
+    latticeUnit(s, dir, "orders_customer_lm", ordersCustomer(_, _), SegmentPriority,
+        "o_totalprice", JoinGroupingView.rollupSets(SegmentPriority), trackValues = true) {
+      (jv, gv) => ordersCustomerHistory(s, dir, Seq(jv), epoch = folding(gv)) }
 
   /** A rollup OVER the maintained ANTI view — the purge-audit query
     * ("revenue of orders orphaned by the customer purge, by priority,
@@ -1798,37 +1213,10 @@ object MapIndexQueries {
     * to [[semiOrdersAggView]]. Anti membership flips flow into the
     * aggregate as ordinary CDC deltas; the oracle is the from-scratch
     * NOT EXISTS filter + GROUP BY over both modified tables. */
-  private def antiOrdersAggView(s: SparkSession, dir: String): graft.engine.JoinAggView =
-    joinAggViews.getOrElseUpdate(s"$dir#anti", {
-      val store = Views.bucketedStore(s, dir)
-      val fv = new graft.engine.FilterJoinView(store, "orders_customer_antig",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"),
-        "c_custkey", "c_custkey", "anti")
-      val unit = "orders_customer_antig"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinAggView.attach(fv, "orders_customer_antig__rollup",
-          "o_orderpriority", "o_totalprice")
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        fv.build(o, c)
-        val agg = new graft.engine.JoinAggView(fv, "orders_customer_antig__rollup",
-          "o_orderpriority", "o_totalprice")
-        agg.build()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        fv.refreshLeft(upsL, Some(delsL)); agg.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        fv.refreshRight(upsR, Some(delsR)); agg.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def antiOrdersAggView(s: SparkSession, dir: String): JoinAggView =
+    rollupUnit(s, dir, "orders_customer_antig",
+        ordersByCustomer(_, _, "anti", "o_orderpriority"), "o_orderpriority", "o_totalprice") {
+      (fv, agg) => ordersCustomerHistory(s, dir, Seq(fv), rebalance = false, epoch = folding(agg)) }
 
   /** NEAREST maintained as-of WITH tolerance ([[graft.engine
     * .AsOfJoinView]] direction="nearest" — pandas merge_asof's third
@@ -1837,25 +1225,11 @@ object MapIndexQueries {
     * keeping its own pk tie rule). Same two-sided change-batch history
     * as [[purchaseClickView]] on twin names; the oracle recomputes the
     * bounded argmin-|dt| per purchase with the same tie order. */
-  private def purchaseClickNearestView(s: SparkSession, dir: String): graft.engine.AsOfJoinView =
-    asofViews.getOrElseUpdate(s"$dir#nearest", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_n",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"),
-        direction = "nearest",
+  private def purchaseClickNearestView(s: SparkSession, dir: String): AsOfJoinView =
+    viewUnit(s, dir, "purchase_click_asof_n", purchaseClick(_, _, direction = "nearest",
         tolerance = Some((lts, rts) =>
-          abs(unix_micros(lts) - unix_micros(rts)) <= lit(3600000000L))) // 1 h
-      val unit = "purchase_click_asof_n"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (pq, cq) = purchasesClicks(s, dir)
-        v.build(pq, cq)
-        v.refreshLeft(purchaseUps(pq), Some(purchaseDels(pq)))
-        v.refreshRight(clickUps(cq), Some(clickDels(cq)))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      v
-    })
+          abs(unix_micros(lts) - unix_micros(rts)) <= lit(3600000000L))))( // 1 h
+      v => purchaseClickHistory(s, dir, Seq(v)))
 
 
   /** Maintained MERGEABLE-SKETCH quantiles ([[graft.engine
@@ -1870,50 +1244,34 @@ object MapIndexQueries {
     * actual bound ≈ 1.5 % at this k and n); the oracle recomputes the
     * anchors and emits literal `true`, so a bound violation is a hash
     * mismatch. */
-  private val sketchQIdx = MapIndex.columns("lineitem_flagsketchq")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val sketchQIdx = flagIdx("lineitem_flagsketchq")
 
-  private val sketchViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.SketchQuantileView]
   private def percentileSketchView(s: SparkSession, dir: String): graft.engine.SketchQuantileView =
-    sketchViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.SketchQuantileView(store, sketchQIdx,
-        "lineitem_flagsketchq__state")
-      if (!Views.unitDone(store.baseDir, "lineitem_flagsketchq")) {
-        val li = Tables.lineitem(s, dir)
-        v.build(li)
-        v.refresh(reflaggedUpserts(li), Some(tombstoneKeys(li)))
-        Views.markUnitDone(store.baseDir, "lineitem_flagsketchq")
-      }
-      v
-    })
+    viewUnit(s, dir, "lineitem_flagsketchq",
+        (st, _) => new graft.engine.SketchQuantileView(st, sketchQIdx,
+          "lineitem_flagsketchq__state")) { v =>
+      val li = Tables.lineitem(s, dir)
+      v.build(li)
+      v.refresh(reflaggedUpserts(li), Some(tombstoneKeys(li)))
+    }
 
   /** The sketch state built PURELY through insert micro-batches (three
     * corpus slices — each fold takes the O(delta) `qsketch_merge` path,
     * no group ever rebuilt) before the shared upsert+tombstone batch
     * exercises rebuild-on-delete: the streamed-history twin every
     * maintained family carries. Same oracle as the batch-built gate. */
-  private val sketchQSIdx = MapIndex.columns("lineitem_flagsketchs")(
-    concat_ws("-", col("l_orderkey"), col("l_linenumber")),
-    array(emit(col("l_returnflag"), col("l_extendedprice"))))
+  private val sketchQSIdx = flagIdx("lineitem_flagsketchs")
 
   private def percentileSketchSView(s: SparkSession, dir: String): graft.engine.SketchQuantileView =
-    sketchViews.getOrElseUpdate(s"$dir#stream", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.SketchQuantileView(store, sketchQSIdx,
-        "lineitem_flagsketchs__state")
-      if (!Views.unitDone(store.baseDir, "lineitem_flagsketchs")) {
-        val li = Tables.lineitem(s, dir)
-        v.build(li.filter(col("l_orderkey") % 3 === 0))
-        v.refresh(li.filter(col("l_orderkey") % 3 === 1), None)
-        v.refresh(li.filter(col("l_orderkey") % 3 === 2), None)
-        v.refresh(reflaggedUpserts(li), Some(tombstoneKeys(li)))
-        Views.markUnitDone(store.baseDir, "lineitem_flagsketchs")
-      }
-      v
-    })
+    viewUnit(s, dir, "lineitem_flagsketchs",
+        (st, _) => new graft.engine.SketchQuantileView(st, sketchQSIdx,
+          "lineitem_flagsketchs__state")) { v =>
+      val li = Tables.lineitem(s, dir)
+      v.build(li.filter(col("l_orderkey") % 3 === 0))
+      v.refresh(li.filter(col("l_orderkey") % 3 === 1), None)
+      v.refresh(li.filter(col("l_orderkey") % 3 === 2), None)
+      v.refresh(reflaggedUpserts(li), Some(tombstoneKeys(li)))
+    }
 
   /** Shared serve arm of the sketch-quantile gates: estimates from the
     * (possibly historical) state, exact anchors + true ranks of the
@@ -1973,53 +1331,20 @@ object MapIndexQueries {
     * EXISTS + two-key join from all three modified relations, where the
     * EXISTS genuinely prunes (the dim join is on priority, not custkey).
     */
-  private def semiCascadeView(s: SparkSession, dir: String): graft.engine.JoinView =
-    joinViews.getOrElseUpdate(s"$dir#semicascade", {
-      val store = Views.bucketedStore(s, dir)
-      val fv = new graft.engine.FilterJoinView(store, "orders_customer_semic",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"),
-        "c_custkey", "c_custkey", "semi")
-      val jv = new graft.engine.JoinView(store, "semi_orders_pr",
-        "o_orderkey", "o_orderpriority",
-        Seq("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"),
-        "p_name", "p_name", Seq("p_name", "p_cnt"))
-      val unit = "semi_orders_pr"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        val dim = o.groupBy(col("o_orderpriority").as("p_name"))
-          .agg(count(lit(1)).as("p_cnt"))
-        fv.build(o, c)
-        jv.build(fv.df, dim)
-        // level-1 LEFT batch (shared orders reprice/tombstone), replayed
-        // into level 2 off the semi view's CDC alone
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        fv.refreshLeft(upsL, Some(delsL))
-        fv.cascadeInto(jv, 0, fv.epoch)
-        // level-1 RIGHT batch: the customer purge flips memberships —
-        // those flips reach level 2 purely as CDC replay
-        var from = fv.epoch
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        fv.refreshRight(upsR, Some(delsR))
-        fv.cascadeInto(jv, from, fv.epoch)
-        // level-2's OWN right batch: odd-digit priorities re-counted,
-        // '5-LOW' dropped (its orders must leave the view)
-        val upsD = dim.filter(substring(col("p_name"), 1, 1).cast("int") % 2 === 1
-            && substring(col("p_name"), 1, 1).cast("int") % 5 =!= 0)
-          .withColumn("p_cnt", col("p_cnt") + 7)
-        val delsD = dim.filter(substring(col("p_name"), 1, 1).cast("int") % 5 === 0)
-          .select(col("p_name")).distinct()
-        jv.refreshRight(upsD, Some(delsD))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      jv
-    })
+  private def semiCascadeView(s: SparkSession, dir: String): JoinView =
+    viewUnit(s, dir, "semi_orders_pr", ordersPriority(_, _)) { jv =>
+      val fv = ordersByCustomer(jv.store, "orders_customer_semic", "semi", "o_orderpriority")
+      val dim = priorityDim(Tables.orders(s, dir))
+      // level 1's batches (the shared orders reprice/tombstone, then the
+      // customer purge flipping memberships) reach level 2 purely as CDC
+      // replay off the semi view
+      ordersCustomerHistory(s, dir, Seq(fv), rebalance = false,
+        epoch = cascading(fv, jv)(jv.build(fv.df, dim)))
+      // level-2's OWN right batch: odd-digit priorities re-counted,
+      // '5-LOW' dropped (its orders must leave the view)
+      val (ups, dels) = priorityDimBatch(dim)
+      jv.refreshRight(ups, dels)
+    }
 
 
   /** GENERIC CASCADE from the AS-OF family: the maintained last-touch
@@ -2029,37 +1354,29 @@ object MapIndexQueries {
     * then the dim takes its OWN right-side refresh. Completes the
     * producer × cascade matrix next to [[semiCascadeView]]; the oracle
     * recomputes the as-of argmax AND the user-dim join from scratch. */
-  private def asofCascadeView(s: SparkSession, dir: String): graft.engine.JoinView =
-    joinViews.getOrElseUpdate(s"$dir#asofcascade", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_cc",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"))
-      val jv = new graft.engine.JoinView(store, "asof_user_dim",
-        "a_id", "a_user",
-        Seq("a_id", "a_user", "a_ts", "a_value", "b_id", "b_user", "b_ts", "b_value"),
-        "u_id", "u_id", Seq("u_id", "u_events"))
-      val unit = "asof_user_dim"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (pq, cq) = purchasesClicks(s, dir)
-        val dim = Tables.events(s, dir)
-          .groupBy(col("user_id").as("u_id")).agg(count(lit(1)).as("u_events"))
-        v.build(pq, cq)
-        jv.build(v.df, dim)
-        v.refreshLeft(purchaseUps(pq), Some(purchaseDels(pq)))
-        v.cascadeInto(jv, 0, v.epoch)
-        val from = v.epoch
-        v.refreshRight(clickUps(cq), Some(clickDels(cq)))
-        v.cascadeInto(jv, from, v.epoch)
-        val upsD = dim.filter(col("u_id") % 13 === 0 && col("u_id") % 17 =!= 0)
-          .withColumn("u_events", col("u_events") + 50)
-        val delsD = dim.filter(col("u_id") % 17 === 0)
-          .select(col("u_id").cast("string")).distinct()
-        jv.refreshRight(upsD, Some(delsD))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      jv
-    })
+  private def asofCascadeView(s: SparkSession, dir: String): JoinView =
+    viewUnit(s, dir, "asof_user_dim", userDimJoin(_, _, PurchaseCols ++ ClickCols)) { jv =>
+      val v = purchaseClick(jv.store, "purchase_click_asof_cc")
+      val dim = userDim(s, dir)
+      purchaseClickHistory(s, dir, Seq(v), epoch = cascading(v, jv)(jv.build(v.df, dim)))
+      val (ups, dels) = userDimBatch(dim)
+      jv.refreshRight(ups, dels)
+    }
+
+  /** Purchase rows joined to the per-user activity dim. */
+  private def userDimJoin(store: BucketedViewStore, name: String,
+      leftCols: Seq[String]): JoinView =
+    new JoinView(store, name, "a_id", "a_user", leftCols, "u_id", "u_id", Seq("u_id", "u_events"))
+
+  /** The per-user activity dim: events per user. */
+  private def userDim(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir).groupBy(col("user_id").as("u_id")).agg(count(lit(1)).as("u_events"))
+
+  /** The user dim's batch: `%13` users re-valued (+50), `%17` purged. */
+  private def userDimBatch(dim: DataFrame): (DataFrame, Option[DataFrame]) =
+    (dim.filter(col("u_id") % 13 === 0 && col("u_id") % 17 =!= 0)
+       .withColumn("u_events", col("u_events") + 50),
+     Some(dim.filter(col("u_id") % 17 === 0).select(col("u_id").cast("string")).distinct()))
 
   /** MULTI-MEASURE maintained rollup ([[graft.engine.Measures]] — the
     * TPC-H-Q1 shape): ONE state row per segment carrying (cnt, vcnt,
@@ -2071,40 +1388,13 @@ object MapIndexQueries {
     * its acctbal sum must serve as SQL-NULL while its revenue is a
     * number. Oracle: from-scratch LEFT JOIN + GROUP BY of both modified
     * tables with both sums and both non-null counts. */
-  private def ordersCustomerAggMeasuresView(s: SparkSession, dir: String): graft.engine.JoinAggView =
-    joinAggViews.getOrElseUpdate(s"$dir#measures", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_msr",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_acctbal", "c_mktsegment"),
-        joinType = "left_outer")
-      val unit = "orders_customer_msr"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinAggView.attach(jv, "orders_customer_msr__rollup",
-          "c_mktsegment", Seq("o_totalprice", "c_acctbal"))
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val agg = new graft.engine.JoinAggView(jv, "orders_customer_msr__rollup",
-          "c_mktsegment", Seq("o_totalprice", "c_acctbal"))
-        agg.build()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL)); agg.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR)); agg.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        agg
-      }
-    })
+  private def ordersCustomerAggMeasuresView(s: SparkSession, dir: String): JoinAggView =
+    rollupUnit(s, dir, "orders_customer_msr",
+        new JoinView(_, _, "o_orderkey", "o_custkey", PriorityOrderCols,
+          "c_custkey", "c_custkey", Seq("c_custkey", "c_acctbal", "c_mktsegment"),
+          joinType = "left_outer"),
+        "c_mktsegment", Seq("o_totalprice", "c_acctbal")) {
+      (jv, agg) => ordersCustomerHistory(s, dir, Seq(jv), epoch = folding(agg)) }
 
   /** The MULTI-MEASURE lattice twin: the FULL-OUTER rollup lattice
     * ([[fullOuterOrdersCustomerLattice]]'s shape) folding BOTH measures
@@ -2112,46 +1402,11 @@ object MapIndexQueries {
     * revenue, right-pads revenue but no acctbal, so each (set, group)
     * row proves the per-measure NULL-sum rule independently across the
     * whole lattice. Same orphaning history on twin view names. */
-  private def fullOuterLatticeMeasuresView(s: SparkSession, dir: String): graft.engine.JoinGroupingView =
-    latticeViews.getOrElseUpdate(s"$dir#measures", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_folm",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
-        joinType = "full_outer")
-      val gcols = Seq("c_mktsegment", "o_orderpriority")
-      val rSets = graft.engine.JoinGroupingView.rollupSets(gcols)
-      val msrs = Seq("o_totalprice", "c_acctbal")
-      val unit = "orders_customer_folm"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinGroupingView.attach(jv, "orders_customer_folm__roll",
-          gcols, msrs, rSets, trackValues = true)
-      else {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val gv = new graft.engine.JoinGroupingView(jv,
-          "orders_customer_folm__roll", gcols, msrs, rSets,
-          trackValues = true)
-        gv.build()
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0
-            && col("o_custkey") % 19 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0 || col("o_custkey") % 19 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL)); gv.catchUp()
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR)); gv.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        gv
-      }
-    })
+  private def fullOuterLatticeMeasuresView(s: SparkSession, dir: String): JoinGroupingView =
+    latticeUnit(s, dir, "orders_customer_folm", ordersCustomer(_, _, joinType = "full_outer"),
+        SegmentPriority, Seq("o_totalprice", "c_acctbal"),
+        JoinGroupingView.rollupSets(SegmentPriority), trackValues = true) {
+      (jv, gv) => ordersCustomerHistory(s, dir, Seq(jv), orphan = true, epoch = folding(gv)) }
 
   /** SEMI-over-JOIN cascade ([[graft.engine.LeftKeyedConsumer]] — the
     * generalized cascade target): a maintained equi-join (orders ⋈
@@ -2163,121 +1418,76 @@ object MapIndexQueries {
     * then takes its OWN right batch (the '5-LOW'-digit priorities
     * dropped, flipping their rows out). Oracle: from-scratch join of
     * both modified tables filtered by the surviving-priority EXISTS. */
-  private def joinSemiCascadeView(s: SparkSession, dir: String): graft.engine.FilterJoinView =
-    filterViews.getOrElseUpdate(s"$dir#joinsemicascade", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_customer_jsc",
-        "o_orderkey", "o_custkey",
-        Seq("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"),
-        "c_custkey", "c_custkey",
-        Seq("c_custkey", "c_acctbal", "c_mktsegment"))
-      val fv = new graft.engine.FilterJoinView(store, "jsc_live_priority",
-        "o_orderkey", "o_orderpriority",
-        Seq("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice",
-          "c_custkey", "c_acctbal", "c_mktsegment"),
-        "p_name", "p_name", "semi")
-      val unit = "jsc_live_priority"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        val dim = o.select(col("o_orderpriority").as("p_name")).distinct()
-        jv.build(o, c)
-        fv.build(jv.df, dim)
-        // level-1 LEFT batch, replayed into the downstream SEMI view
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL))
-        jv.cascadeInto(fv, 0, jv.epoch)
-        // level-1 RIGHT batch: acctbal re-values + the customer purge —
-        // purged customers' joined rows reach level 2 as tombstones
-        val from = jv.epoch
-        val upsR = c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-          .withColumn("c_acctbal", col("c_acctbal") + 100)
-          .select("c_custkey", "c_acctbal", "c_mktsegment")
-        val delsR = c.filter(col("c_custkey") % 17 === 0)
-          .select(col("c_custkey").cast("string")).distinct()
-        jv.refreshRight(upsR, Some(delsR))
-        jv.cascadeInto(fv, from, jv.epoch)
-        // level-2's OWN right batch: '5-LOW'-digit priorities dropped —
-        // their enriched rows must flip out of the membership view
-        val delsD = dim.filter(substring(col("p_name"), 1, 1).cast("int") % 5 === 0)
-          .select(col("p_name")).distinct()
-        fv.refreshRight(
-          dim.filter(substring(col("p_name"), 1, 1).cast("int") % 5 =!= 0),
-          Some(delsD))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      fv
-    })
+  private def joinSemiCascadeView(s: SparkSession, dir: String): FilterJoinView =
+    viewUnit(s, dir, "jsc_live_priority",
+        new FilterJoinView(_, _, "o_orderkey", "o_orderpriority",
+          PriorityOrderCols ++ Seq("c_custkey", "c_acctbal", "c_mktsegment"),
+          "p_name", "p_name", "semi")) { fv =>
+      val jv = new JoinView(fv.store, "orders_customer_jsc", "o_orderkey", "o_custkey",
+        PriorityOrderCols, "c_custkey", "c_custkey", Seq("c_custkey", "c_acctbal", "c_mktsegment"))
+      val o = Tables.orders(s, dir)
+      val c = Tables.customer(s, dir)
+      val dim = o.select(col("o_orderpriority").as("p_name")).distinct()
+      // level 1's batches replay into the downstream SEMI view; the
+      // customer purge reaches it as tombstones of the purged customers'
+      // joined rows
+      val (upsR, delsR) = customersBatch(c)
+      twoSidedHistory(Seq(jv), o, c, ordersBatch(o),
+        (upsR.select("c_custkey", "c_acctbal", "c_mktsegment"), delsR))(
+        cascading(jv, fv)(fv.build(jv.df, dim)))
+      // level-2's OWN right batch: '5-LOW'-digit priorities dropped —
+      // their enriched rows must flip out of the membership view
+      fv.refreshRight(dim.filter(priorityDigit % 5 =!= 0),
+        Some(dim.filter(priorityDigit % 5 === 0).select(col("p_name")).distinct()))
+    }
 
   /** The right-keyed twin under SALT SHARDS (`saltBuckets = 4` AND
     * `rightKeyed = true`): a hot click's attributed facts spread over 4
     * twin shards; the point read fans out to the bounded S sub-keys and
     * must stay shard-invisible — same history and oracle as the
     * unsalted right-keyed gate. */
-  private def purchaseClickRightKeyedSaltedView(s: SparkSession, dir: String): graft.engine.AsOfJoinView =
-    asofViews.getOrElseUpdate(s"$dir#rightkeyedsl", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_rks",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"),
-        saltBuckets = 4, rightKeyed = true)
-      val unit = "purchase_click_asof_rks"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (p, c) = purchasesClicks(s, dir)
-        v.build(p, c)
-        v.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      v
-    })
+  private def purchaseClickRightKeyedSaltedView(s: SparkSession, dir: String): AsOfJoinView =
+    viewUnit(s, dir, "purchase_click_asof_rks",
+        purchaseClick(_, _, saltBuckets = 4, rightKeyed = true))(
+      v => purchaseClickHistory(s, dir, Seq(v)))
 
   /** The Q1 state built PURELY through insert micro-batches (three
     * corpus slices, a catch-up after each — every fold the O(delta)
     * multi-measure merge) before the shared reflag/tombstone batch and
     * the orders purge land on top: the streamed-history twin of
     * [[lineitemQ1View]], graded by the SAME oracle. */
-  private def lineitemQ1StreamedView(s: SparkSession, dir: String): graft.engine.JoinGroupingView =
-    latticeViews.getOrElseUpdate(s"$dir#q1s", {
-      val store = Views.bucketedStore(s, dir)
-      val liCols = Seq("l_uid", "l_orderkey", "l_linenumber", "l_returnflag",
-        "l_linestatus", "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val fv = new graft.engine.FilterJoinView(store, "lineitem_orders_q1s",
-        "l_uid", "l_orderkey", liCols, "o_orderkey", "o_orderkey", "semi")
-      val gcols = Seq("l_returnflag", "l_linestatus")
-      val msrs = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val unit = "lineitem_orders_q1s"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinGroupingView.attach(fv, "lineitem_orders_q1s__roll",
-          gcols, msrs, Seq(gcols))
-      else {
-        val li = Tables.lineitem(s, dir)
-        val liu = li.withColumn("l_uid",
-          concat_ws("-", col("l_orderkey"), col("l_linenumber")))
-          .select(liCols.map(col): _*)
-        val o = Tables.orders(s, dir)
-        fv.build(liu.filter(col("l_orderkey") % 3 === 0), o)
-        val gv = new graft.engine.JoinGroupingView(fv,
-          "lineitem_orders_q1s__roll", gcols, msrs, Seq(gcols))
-        gv.build()
-        fv.refreshLeft(liu.filter(col("l_orderkey") % 3 === 1), None)
-        gv.catchUp()
-        fv.refreshLeft(liu.filter(col("l_orderkey") % 3 === 2), None)
-        gv.catchUp()
-        fv.refreshLeft(reflaggedUpserts(liu), Some(tombstoneKeys(li)))
-        gv.catchUp()
-        val upsR = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-        val delsR = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        fv.refreshRight(upsR, Some(delsR))
-        gv.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        gv
-      }
-    })
+  private def lineitemQ1StreamedView(s: SparkSession, dir: String): JoinGroupingView =
+    latticeUnit(s, dir, "lineitem_orders_q1s", lineitemOrders(_, _), Q1Groups, Q1Measures,
+        Seq(Q1Groups)) { (fv, gv) =>
+      val li = Tables.lineitem(s, dir)
+      val liu = uidLineitem(li)
+      val o = Tables.orders(s, dir)
+      fv.build(liu.filter(col("l_orderkey") % 3 === 0), o)
+      gv.build()
+      fv.refreshLeft(liu.filter(col("l_orderkey") % 3 === 1), None)
+      gv.catchUp()
+      fv.refreshLeft(liu.filter(col("l_orderkey") % 3 === 2), None)
+      gv.catchUp()
+      fv.refreshLeft(reflaggedUpserts(liu), Some(tombstoneKeys(li)))
+      gv.catchUp()
+      val (ups, dels) = ordersBatch(o, reprice = false)
+      fv.refreshRight(ups, dels)
+      gv.catchUp()
+    }
+
+  private val Q1Cols = Seq("l_uid", "l_orderkey", "l_linenumber", "l_returnflag",
+    "l_linestatus", "l_quantity", "l_extendedprice", "l_discount", "l_tax")
+  private val Q1Groups = Seq("l_returnflag", "l_linestatus")
+  private val Q1Measures = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+
+  /** Lineitems of SURVIVING orders: a semi membership keyed by the
+    * lineitem uid. */
+  private def lineitemOrders(store: BucketedViewStore, name: String): FilterJoinView =
+    new FilterJoinView(store, name, "l_uid", "l_orderkey", Q1Cols,
+      "o_orderkey", "o_orderkey", "semi")
+
+  private def uidLineitem(li: DataFrame): DataFrame =
+    li.withColumn("l_uid", lineitemKey).select(Q1Cols.map(col): _*)
 
   /** The RIGHT-KEYED as-of twin (`rightKeyed = true`): the attribution
     * view additionally emitted under the CLICK id, so "all purchases
@@ -2286,23 +1496,9 @@ object MapIndexQueries {
     * the secondary-index economics a serving path needs at 100 TB.
     * Same two-sided change-batch history as [[purchaseClickView]] on
     * twin names; re-picks and match losses must keep the twin exact. */
-  private def purchaseClickRightKeyedView(s: SparkSession, dir: String): graft.engine.AsOfJoinView =
-    asofViews.getOrElseUpdate(s"$dir#rightkeyed", {
-      val store = Views.bucketedStore(s, dir)
-      val v = new graft.engine.AsOfJoinView(store, "purchase_click_asof_rk",
-        "a_id", "a_user", "a_ts", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"),
-        rightKeyed = true)
-      val unit = "purchase_click_asof_rk"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (p, c) = purchasesClicks(s, dir)
-        v.build(p, c)
-        v.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      v
-    })
+  private def purchaseClickRightKeyedView(s: SparkSession, dir: String): AsOfJoinView =
+    viewUnit(s, dir, "purchase_click_asof_rk", purchaseClick(_, _, rightKeyed = true))(
+      v => purchaseClickHistory(s, dir, Seq(v)))
 
   /** The TPC-H-Q1 SHAPE as a maintained view — the multi-measure
     * machinery's motivating workload: FOUR measures (quantity, base
@@ -2317,44 +1513,19 @@ object MapIndexQueries {
     * which the delete-then-insert ownership handles as long as batches
     * are keyed consistently (they are: both batch predicates key on
     * l_orderkey). */
-  private def lineitemQ1View(s: SparkSession, dir: String): graft.engine.JoinGroupingView =
-    latticeViews.getOrElseUpdate(s"$dir#q1", {
-      val store = Views.bucketedStore(s, dir)
-      val liCols = Seq("l_uid", "l_orderkey", "l_linenumber", "l_returnflag",
-        "l_linestatus", "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val fv = new graft.engine.FilterJoinView(store, "lineitem_orders_q1",
-        "l_uid", "l_orderkey", liCols, "o_orderkey", "o_orderkey", "semi")
-      val gcols = Seq("l_returnflag", "l_linestatus")
-      val msrs = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val unit = "lineitem_orders_q1"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinGroupingView.attach(fv, "lineitem_orders_q1__roll",
-          gcols, msrs, Seq(gcols))
-      else {
-        val li = Tables.lineitem(s, dir)
-        val liu = li.withColumn("l_uid",
-          concat_ws("-", col("l_orderkey"), col("l_linenumber")))
-          .select(liCols.map(col): _*)
-        val o = Tables.orders(s, dir)
-        fv.build(liu, o)
-        val gv = new graft.engine.JoinGroupingView(fv,
-          "lineitem_orders_q1__roll", gcols, msrs, Seq(gcols))
-        gv.build()
-        // the shared lineitem batch: %97 orders reflag to 'X', %89
-        // tombstone — each a ±fold of all four measures at once
-        fv.refreshLeft(reflaggedUpserts(liu), Some(tombstoneKeys(li)))
-        gv.catchUp()
-        // the orders purge: %41 orders die, their lineitems flip out of
-        // the membership (a reprice on survivors flips nothing)
-        val upsR = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-        val delsR = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        fv.refreshRight(upsR, Some(delsR))
-        gv.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        gv
-      }
-    })
+  private def lineitemQ1View(s: SparkSession, dir: String): JoinGroupingView =
+    latticeUnit(s, dir, "lineitem_orders_q1", lineitemOrders(_, _), Q1Groups, Q1Measures,
+        Seq(Q1Groups)) { (fv, gv) =>
+      val li = Tables.lineitem(s, dir)
+      val liu = uidLineitem(li)
+      val o = Tables.orders(s, dir)
+      // the shared lineitem batch (%97 orders reflag to 'X', %89
+      // tombstone — each a ±fold of all four measures at once), then the
+      // orders purge: %41 orders die, their lineitems flip out of the
+      // membership (a reprice on survivors flips nothing)
+      twoSidedHistory(Seq(fv), liu, o, (reflaggedUpserts(liu), Some(tombstoneKeys(li))),
+        ordersBatch(o, reprice = false))(folding(gv))
+    }
 
   /** SKETCH-over-JOIN ([[graft.engine.JoinSketchView]]): maintained
     * per-join-key quantile sketches OVER the maintained priority-dim
@@ -2365,47 +1536,22 @@ object MapIndexQueries {
     * the surviving per-key sketches from state alone. Gate = exact
     * oracle-recomputed anchors + rank-bound booleans at BOTH levels,
     * the sketch-family convention. */
-  private val joinSketchViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.JoinSketchView]
-  private def ordersPrioritySketchView(s: SparkSession, dir: String): graft.engine.JoinSketchView =
-    joinSketchViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "orders_pr_sk",
-        "o_orderkey", "o_orderpriority",
-        Seq("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"),
-        "p_name", "p_name", Seq("p_name", "p_cnt"))
-      val unit = "orders_pr_sk"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.JoinSketchView.attach(jv, "orders_pr_sk__state",
-          "o_totalprice")
-      else {
-        val o = Tables.orders(s, dir)
-        val dim = o.groupBy(col("o_orderpriority").as("p_name"))
-          .agg(count(lit(1)).as("p_cnt"))
-        jv.build(o, dim)
-        val sk = new graft.engine.JoinSketchView(jv, "orders_pr_sk__state",
-          "o_totalprice")
-        sk.build()
-        // left batch: the reprice RETRACTS each touched key's old values
-        // (rebuild path), the %41 tombstones drop rows
-        val upsL = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val delsL = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        jv.refreshLeft(upsL, Some(delsL)); sk.catchUp()
-        // right batch: odd-digit priorities re-count (payload rewrite →
-        // rebuild), '5-LOW'-digit priorities DROP — their sketch groups
-        // must vanish entirely
-        val upsD = dim.filter(substring(col("p_name"), 1, 1).cast("int") % 2 === 1
-            && substring(col("p_name"), 1, 1).cast("int") % 5 =!= 0)
-          .withColumn("p_cnt", col("p_cnt") + 7)
-        val delsD = dim.filter(substring(col("p_name"), 1, 1).cast("int") % 5 === 0)
-          .select(col("p_name")).distinct()
-        jv.refreshRight(upsD, Some(delsD)); sk.catchUp()
-        Views.markUnitDone(store.baseDir, unit)
-        sk
-      }
-    })
+  private def ordersPrioritySketchView(s: SparkSession, dir: String): graft.engine.JoinSketchView = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, "orders_pr_sk")(graft.engine.JoinSketchView.attach(
+        ordersPriority(store, "orders_pr_sk"), "orders_pr_sk__state", "o_totalprice")) {
+      val jv = ordersPriority(store, "orders_pr_sk")
+      val sk = new graft.engine.JoinSketchView(jv, "orders_pr_sk__state", "o_totalprice")
+      val o = Tables.orders(s, dir)
+      val dim = priorityDim(o)
+      // left batch: the reprice RETRACTS each touched key's old values
+      // (rebuild path), the %41 tombstones drop rows; right batch:
+      // odd-digit priorities re-count (payload rewrite → rebuild),
+      // '5-LOW'-digit priorities DROP — their sketch groups must vanish
+      twoSidedHistory(Seq(jv), o, dim, ordersBatch(o), priorityDimBatch(dim))(folding(sk))
+      sk
+    }
+  }
 
   /** AS-OF-over-JOIN cascade (the remaining cell of the producer ×
     * consumer matrix): purchases enriched by a per-user activity dim
@@ -2416,51 +1562,28 @@ object MapIndexQueries {
     * at the as-of view as ordinary left batches, then the CLICK side
     * takes its own refresh. Oracle: enrich-from-scratch + per-row argmax
     * over all three modified relations. */
-  private def joinAsofCascadeView(s: SparkSession, dir: String): graft.engine.AsOfJoinView =
-    asofViews.getOrElseUpdate(s"$dir#joincascade", {
-      val store = Views.bucketedStore(s, dir)
-      val jv = new graft.engine.JoinView(store, "purchase_user_jac",
-        "a_id", "a_user", Seq("a_id", "a_user", "a_ts", "a_value"),
-        "u_id", "u_id", Seq("u_id", "u_events"))
-      val v = new graft.engine.AsOfJoinView(store, "jac_purchase_click",
-        "a_id", "a_user", "a_ts",
-        Seq("a_id", "a_user", "a_ts", "a_value", "u_id", "u_events"),
-        "b_id", "b_user", "b_ts", Seq("b_id", "b_user", "b_ts", "b_value"))
-      val unit = "jac_purchase_click"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        val (p, c) = purchasesClicks(s, dir)
-        val dim = Tables.events(s, dir)
-          .groupBy(col("user_id").as("u_id")).agg(count(lit(1)).as("u_events"))
-        jv.build(p, dim)
-        v.build(jv.df, c)
-        // level-1 LEFT batch (re-timed/re-valued/tombstoned purchases):
-        // the re-pick happens downstream off the replayed CDC alone
-        jv.refreshLeft(purchaseUps(p), Some(purchaseDels(p)))
-        jv.cascadeInto(v, 0, jv.epoch)
-        // level-1 RIGHT batch: dim re-values + the %17 purge — orphaned
-        // purchases leave the inner join, so their attribution rows
-        // must tombstone downstream
-        val from = jv.epoch
-        val upsD = dim.filter(col("u_id") % 13 === 0 && col("u_id") % 17 =!= 0)
-          .withColumn("u_events", col("u_events") + 50)
-        val delsD = dim.filter(col("u_id") % 17 === 0)
-          .select(col("u_id").cast("string")).distinct()
-        jv.refreshRight(upsD, Some(delsD))
-        jv.cascadeInto(v, from, jv.epoch)
-        // the as-of view's OWN right batch: the shared click history
-        v.refreshRight(clickUps(c), Some(clickDels(c)))
-        Views.markUnitDone(store.baseDir, unit)
-      }
-      v
-    })
+  private def joinAsofCascadeView(s: SparkSession, dir: String): AsOfJoinView =
+    viewUnit(s, dir, "jac_purchase_click",
+        purchaseClick(_, _, leftCols = PurchaseCols ++ Seq("u_id", "u_events"))) { v =>
+      val jv = userDimJoin(v.store, "purchase_user_jac", PurchaseCols)
+      val (p, c) = purchasesClicks(s, dir)
+      val dim = userDim(s, dir)
+      // level-1 batches (re-timed/re-valued/tombstoned purchases, then
+      // dim re-values + the %17 purge orphaning purchases out of the
+      // inner join): the re-pick happens downstream off the replayed CDC
+      twoSidedHistory(Seq(jv), p, dim, (purchaseUps(p), Some(purchaseDels(p))),
+        userDimBatch(dim))(cascading(jv, v)(v.build(jv.df, c)))
+      // the as-of view's OWN right batch: the shared click history
+      v.refreshRight(clickUps(c), Some(clickDels(c)))
+    }
 
   def prewarm(s: SparkSession, dir: String): Unit =
     Prewarm.run(s, "mapindex", prewarmSteps(s, dir))
 
   /** Each step is one independent build unit ([[Prewarm.run]] may overlap
-    * them); steps sharing an underlying view serialize on the per-key
-    * build locks ([[graft.engine.Views.materialized]] / the builder
-    * memos), so overlap never double-builds or interleaves refreshes. */
+    * them); steps sharing an underlying view serialize on its per-key
+    * lock ([[graft.engine.Views.unit]] / [[graft.engine.Views.materialized]]),
+    * so overlap never double-builds or interleaves refreshes. */
   private[operators] def prewarmSteps(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq[(String, () => Unit)](
     ("ordersCustomerView", () => { ordersCustomerView(s, dir); () }),
     ("streamedOrdersCustomerView", () => { streamedOrdersCustomerView(s, dir); () }),
@@ -2548,9 +1671,6 @@ object MapIndexQueries {
 
   // ---- time-sliced windowed aggregates with watermark eviction ----
 
-  private val windowedViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.WindowedAggView]
-
   /** Whole-events windowed aggregate (1-day slices): group = event_type,
     * `emit_value = struct(ts, value)`. The shared events change batch
     * (`%37` → ts+1h & value+1000 — which MIGRATES those events across a
@@ -2560,55 +1680,57 @@ object MapIndexQueries {
     * from the modified table from scratch, so a stale slice, an unmigrated
     * event, or an under- or over-evicted slice is a hash mismatch. */
   private def eventsWindowedView(s: SparkSession, dir: String,
-      flavor: String): graft.engine.WindowedAggView =
-    windowedViews.getOrElseUpdate(s"$dir#$flavor", {
-      val store = Views.store(s, dir)
-      val name = s"events_windowed_$flavor"
-      val root = java.nio.file.Paths.get(store.baseDir, name).toString
-      val idx = MapIndex.columns(s"events_win_base_$flavor")(
-        col("event_id").cast("string"),
-        array(emit(col("event_type"),
-          struct(col("ts").as("ts"), col("value").as("v")))))
-      if (Views.unitDone(store.baseDir, name))
-        graft.engine.WindowedAggView.attach(s, root, 86400L)
-      else {
-        val ev = Tables.events(s, dir)
-        // the streamed flavor builds from the FIRST micro-batch only and
-        // folds the rest through ordinary refreshes — every batch spans
-        // all 30 days, so each fold is a genuinely multi-slice delta and
-        // arrives "late" relative to slices already holding newer events
-        val w =
-          if (flavor == "st") {
-            def b(r: Int) = ev.filter(col("event_id") % 3 === r)
-            val base = Views.materialized(s, dir, idx)(b(0))
-            val w0 = graft.engine.WindowedAggView.build(base, root, 86400L)
-            w0.refresh(base, b(1), None)
-            w0.refresh(base, b(2), None)
-            w0
-          } else {
-            val base = Views.materialized(s, dir, idx)(ev)
-            graft.engine.WindowedAggView.build(base, root, 86400L)
-          }
-        val base = Views.materialized(s, dir, idx)(ev)
-        val ups = ev.filter(col("event_id") % 37 === 0 && col("event_id") % 41 =!= 0)
-          .withColumn("ts", col("ts") + expr("INTERVAL 1 HOUR"))
-          .withColumn("value", col("value") + 1000)
-        val dels = ev.filter(col("event_id") % 41 === 0)
-          .select(col("event_id").cast("string")).distinct()
-        w.refresh(base, ups, Some(dels))
-        if (flavor == "ev") w.evictBefore(w.liveSlices.min + 3 * 86400L)
-        // rollup aging: everything up to ~3 weeks in coarsens to 7-day
-        // slices (boundary snapped DOWN to the 7-day epoch grid)
-        if (flavor == "co")
-          w.coarsen(Math.floorDiv(w.liveSlices.min + 21 * 86400L, 604800L) * 604800L,
-            604800L)
-        Views.markUnitDone(store.baseDir, name)
-        w
-      }
-    })
+      flavor: String): graft.engine.WindowedAggView = {
+    val store = Views.store(s, dir)
+    val name = s"events_windowed_$flavor"
+    val root = java.nio.file.Paths.get(store.baseDir, name).toString
+    Views.unit(store.baseDir, name)(graft.engine.WindowedAggView.attach(s, root, 86400L)) {
+      val idx = eventsWindowBase(s"events_win_base_$flavor", col("value"))
+      val ev = Tables.events(s, dir)
+      // the streamed flavor builds from the FIRST micro-batch only and
+      // folds the rest through ordinary refreshes — every batch spans
+      // all 30 days, so each fold is a genuinely multi-slice delta and
+      // arrives "late" relative to slices already holding newer events
+      val w =
+        if (flavor == "st") {
+          def b(r: Int) = ev.filter(col("event_id") % 3 === r)
+          val base = Views.materialized(s, dir, idx)(b(0))
+          val w0 = graft.engine.WindowedAggView.build(base, root, 86400L)
+          w0.refresh(base, b(1), None)
+          w0.refresh(base, b(2), None)
+          w0
+        } else {
+          val base = Views.materialized(s, dir, idx)(ev)
+          graft.engine.WindowedAggView.build(base, root, 86400L)
+        }
+      val (ups, dels) = eventsBatch(ev)
+      w.refresh(Views.materialized(s, dir, idx)(ev), ups, dels)
+      if (flavor == "ev") w.evictBefore(w.liveSlices.min + 3 * 86400L)
+      // rollup aging: everything up to ~3 weeks in coarsens to 7-day
+      // slices (boundary snapped DOWN to the 7-day epoch grid)
+      if (flavor == "co")
+        w.coarsen(Math.floorDiv(w.liveSlices.min + 21 * 86400L, 604800L) * 604800L,
+          604800L)
+      w
+    }
+  }
 
-  private val windowedSketchViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.WindowedSketchView]
+  /** The events windowed base: one emission per event keyed by type,
+    * carrying its timestamp and the windowed value `v`. */
+  private def eventsWindowBase(name: String, v: org.apache.spark.sql.Column): MapIndex =
+    MapIndex.columns(name)(
+      col("event_id").cast("string"),
+      array(emit(col("event_type"), struct(col("ts").as("ts"), v.as("v")))))
+
+  /** The shared events change batch: `%37` events re-timed (+1 h — which
+    * MIGRATES some across a day boundary) and re-valued (+1000), `%41`
+    * tombstoned. */
+  private def eventsBatch(ev: DataFrame): (DataFrame, Option[DataFrame]) =
+    (ev.filter(col("event_id") % 37 === 0 && col("event_id") % 41 =!= 0)
+       .withColumn("ts", col("ts") + expr("INTERVAL 1 HOUR"))
+       .withColumn("value", col("value") + 1000),
+     Some(ev.filter(col("event_id") % 41 === 0)
+       .select(col("event_id").cast("string")).distinct()))
 
   /** The windowed SKETCH twin over the same events contract: one
     * mergeable quantile sketch per (day, event_type), maintained through
@@ -2616,52 +1738,38 @@ object MapIndexQueries {
     * rest of the batch folds O(delta)); a trailing-window quantile is a
     * sketch MERGE across slices — the corpus is never re-read. */
   private def eventsWindowedSketchView(s: SparkSession, dir: String,
-      flavor: String = "main"): graft.engine.WindowedSketchView =
-    windowedSketchViews.getOrElseUpdate(s"$dir#$flavor", {
-      val store = Views.store(s, dir)
-      val name = if (flavor == "main") "events_windowed_sk" else s"events_windowed_sk_$flavor"
-      val root = java.nio.file.Paths.get(store.baseDir, name).toString
-      val idx = MapIndex.columns(s"events_win_base_${if (flavor == "main") "sk" else s"sk_$flavor"}")(
-        col("event_id").cast("string"),
-        array(emit(col("event_type"),
-          struct(col("ts").as("ts"), col("value").as("v")))))
-      if (Views.unitDone(store.baseDir, name))
-        graft.engine.WindowedSketchView.attach(s, root, 86400L)
-      else {
-        val ev = Tables.events(s, dir)
-        // the streamed flavor builds from the first micro-batch and folds
-        // the rest through refreshes — pure insert-only sketch MERGES
-        // (the O(delta) path), before the shared batch drives rebuilds
-        val w =
-          if (flavor == "st") {
-            def b(r: Int) = ev.filter(col("event_id") % 3 === r)
-            val base = Views.materialized(s, dir, idx)(b(0))
-            val w0 = graft.engine.WindowedSketchView.build(base, root, 86400L)
-            w0.refresh(base, b(1), None)
-            w0.refresh(base, b(2), None)
-            w0
-          } else {
-            val base = Views.materialized(s, dir, idx)(ev)
-            graft.engine.WindowedSketchView.build(base, root, 86400L)
-          }
-        val base = Views.materialized(s, dir, idx)(ev)
-        val ups = ev.filter(col("event_id") % 37 === 0 && col("event_id") % 41 =!= 0)
-          .withColumn("ts", col("ts") + expr("INTERVAL 1 HOUR"))
-          .withColumn("value", col("value") + 1000)
-        val dels = ev.filter(col("event_id") % 41 === 0)
-          .select(col("event_id").cast("string")).distinct()
-        w.refresh(base, ups, Some(dels))
-        // age the first ~3 weeks into 7-day sketch slices: the trailing-7
-        // gate stays in the fine region, the coarse gate spans both tiers
-        w.coarsen(Math.floorDiv(w.liveSlices.min + 21 * 86400L, 604800L) * 604800L,
-          604800L)
-        Views.markUnitDone(store.baseDir, name)
-        w
-      }
-    })
-
-  private val windowedDistinctViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.WindowedDistinctView]
+      flavor: String = "main"): graft.engine.WindowedSketchView = {
+    val store = Views.store(s, dir)
+    val name = if (flavor == "main") "events_windowed_sk" else s"events_windowed_sk_$flavor"
+    val root = java.nio.file.Paths.get(store.baseDir, name).toString
+    Views.unit(store.baseDir, name)(graft.engine.WindowedSketchView.attach(s, root, 86400L)) {
+      val idx = eventsWindowBase(
+        s"events_win_base_${if (flavor == "main") "sk" else s"sk_$flavor"}", col("value"))
+      val ev = Tables.events(s, dir)
+      // the streamed flavor builds from the first micro-batch and folds
+      // the rest through refreshes — pure insert-only sketch MERGES
+      // (the O(delta) path), before the shared batch drives rebuilds
+      val w =
+        if (flavor == "st") {
+          def b(r: Int) = ev.filter(col("event_id") % 3 === r)
+          val base = Views.materialized(s, dir, idx)(b(0))
+          val w0 = graft.engine.WindowedSketchView.build(base, root, 86400L)
+          w0.refresh(base, b(1), None)
+          w0.refresh(base, b(2), None)
+          w0
+        } else {
+          val base = Views.materialized(s, dir, idx)(ev)
+          graft.engine.WindowedSketchView.build(base, root, 86400L)
+        }
+      val (ups, dels) = eventsBatch(ev)
+      w.refresh(Views.materialized(s, dir, idx)(ev), ups, dels)
+      // age the first ~3 weeks into 7-day sketch slices: the trailing-7
+      // gate stays in the fine region, the coarse gate spans both tiers
+      w.coarsen(Math.floorDiv(w.liveSlices.min + 21 * 86400L, 604800L) * 604800L,
+        604800L)
+      w
+    }
+  }
 
   /** Windowed DISTINCT-USER counts per event type via per-(day, type) KMV
     * states — distinct is non-additive across days, so the windowed serve
@@ -2671,34 +1779,21 @@ object MapIndexQueries {
     * COUNT(DISTINCT)), the 32 flavor exercises the estimator with a
     * bound. */
   private def eventsWindowedDistinctView(s: SparkSession, dir: String,
-      k: Int): graft.engine.WindowedDistinctView =
-    windowedDistinctViews.getOrElseUpdate(s"$dir#$k", {
-      val store = Views.store(s, dir)
-      val name = s"events_windowed_du$k"
-      val root = java.nio.file.Paths.get(store.baseDir, name).toString
-      val idx = MapIndex.columns(s"events_win_base_du$k")(
-        col("event_id").cast("string"),
-        array(emit(col("event_type"),
-          struct(col("ts").as("ts"), col("user_id").cast("double").as("v")))))
-      if (Views.unitDone(store.baseDir, name))
-        graft.engine.WindowedDistinctView.attach(s, root, 86400L, k)
-      else {
-        val ev = Tables.events(s, dir)
-        val base = Views.materialized(s, dir, idx)(ev)
-        val w = graft.engine.WindowedDistinctView.build(base, root, 86400L, k)
-        val ups = ev.filter(col("event_id") % 37 === 0 && col("event_id") % 41 =!= 0)
-          .withColumn("ts", col("ts") + expr("INTERVAL 1 HOUR"))
-          .withColumn("value", col("value") + 1000)
-        val dels = ev.filter(col("event_id") % 41 === 0)
-          .select(col("event_id").cast("string")).distinct()
-        w.refresh(base, ups, Some(dels))
-        Views.markUnitDone(store.baseDir, name)
-        w
-      }
-    })
-
-  private val windowedTopFreqViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.WindowedTopFreqView]
+      k: Int): graft.engine.WindowedDistinctView = {
+    val store = Views.store(s, dir)
+    val name = s"events_windowed_du$k"
+    val root = java.nio.file.Paths.get(store.baseDir, name).toString
+    Views.unit(store.baseDir, name)(
+      graft.engine.WindowedDistinctView.attach(s, root, 86400L, k)) {
+      val ev = Tables.events(s, dir)
+      val base = Views.materialized(s, dir,
+        eventsWindowBase(s"events_win_base_du$k", col("user_id").cast("double")))(ev)
+      val w = graft.engine.WindowedDistinctView.build(base, root, 86400L, k)
+      val (ups, dels) = eventsBatch(ev)
+      w.refresh(base, ups, dels)
+      w
+    }
+  }
 
   /** Windowed FREQUENT value-buckets per type via per-(day, type)
     * Misra-Gries states (k=16, genuinely lossy — ~10 buckets live per
@@ -2706,66 +1801,46 @@ object MapIndexQueries {
     * window's frequent set is always inside the candidates; the gate
     * joins candidates back to exact counts (the heavy_hitters verify
     * pattern). */
-  private def eventsWindowedTopFreqView(s: SparkSession, dir: String): graft.engine.WindowedTopFreqView =
-    windowedTopFreqViews.getOrElseUpdate(dir, {
-      val store = Views.store(s, dir)
-      val name = "events_windowed_tf"
-      val root = java.nio.file.Paths.get(store.baseDir, name).toString
-      val idx = MapIndex.columns("events_win_base_tf")(
-        col("event_id").cast("string"),
-        array(emit(col("event_type"),
-          struct(col("ts").as("ts"), floor(col("value") / 50).as("v")))))
-      if (Views.unitDone(store.baseDir, name))
-        graft.engine.WindowedTopFreqView.attach(s, root, 86400L, 16)
-      else {
-        val ev = Tables.events(s, dir)
-        val base = Views.materialized(s, dir, idx)(ev)
-        val w = graft.engine.WindowedTopFreqView.build(base, root, 86400L, 16)
-        val ups = ev.filter(col("event_id") % 37 === 0 && col("event_id") % 41 =!= 0)
-          .withColumn("ts", col("ts") + expr("INTERVAL 1 HOUR"))
-          .withColumn("value", col("value") + 1000)
-        val dels = ev.filter(col("event_id") % 41 === 0)
-          .select(col("event_id").cast("string")).distinct()
-        w.refresh(base, ups, Some(dels))
-        Views.markUnitDone(store.baseDir, name)
-        w
-      }
-    })
+  private def eventsWindowedTopFreqView(s: SparkSession, dir: String): graft.engine.WindowedTopFreqView = {
+    val store = Views.store(s, dir)
+    val name = "events_windowed_tf"
+    val root = java.nio.file.Paths.get(store.baseDir, name).toString
+    Views.unit(store.baseDir, name)(
+      graft.engine.WindowedTopFreqView.attach(s, root, 86400L, 16)) {
+      val ev = Tables.events(s, dir)
+      val base = Views.materialized(s, dir,
+        eventsWindowBase("events_win_base_tf", floor(col("value") / 50)))(ev)
+      val w = graft.engine.WindowedTopFreqView.build(base, root, 86400L, 16)
+      val (ups, dels) = eventsBatch(ev)
+      w.refresh(base, ups, dels)
+      w
+    }
+  }
 
   /** The TPC-H-side windowed rollup: quarterly (90-day-grid) revenue per
     * priority over `orders`, maintained under the shared reprice/purge
     * batch, then ROLLUP-AGED — everything older than ~4.4 years coarsens
     * to 360-day tiers. Different table, slice width, and coarse ratio
     * than the events family; same layout invariants. */
-  private def ordersWindowedView(s: SparkSession, dir: String): graft.engine.WindowedAggView =
-    windowedViews.getOrElseUpdate(s"$dir#orders", {
-      val store = Views.store(s, dir)
-      val name = "orders_windowed"
-      val root = java.nio.file.Paths.get(store.baseDir, name).toString
+  private def ordersWindowedView(s: SparkSession, dir: String): graft.engine.WindowedAggView = {
+    val store = Views.store(s, dir)
+    val name = "orders_windowed"
+    val root = java.nio.file.Paths.get(store.baseDir, name).toString
+    Views.unit(store.baseDir, name)(graft.engine.WindowedAggView.attach(s, root, 7776000L)) {
       val idx = MapIndex.columns("orders_win_base")(
         col("o_orderkey").cast("string"),
         array(emit(col("o_orderpriority"),
           struct(col("o_orderdate").as("ts"), col("o_totalprice").as("v")))))
-      if (Views.unitDone(store.baseDir, name))
-        graft.engine.WindowedAggView.attach(s, root, 7776000L)
-      else {
-        val o = Tables.orders(s, dir)
-        val base = Views.materialized(s, dir, idx)(o)
-        val w = graft.engine.WindowedAggView.build(base, root, 7776000L)
-        val ups = o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        val dels = o.filter(col("o_orderkey") % 41 === 0)
-          .select(col("o_orderkey").cast("string")).distinct()
-        w.refresh(base, ups, Some(dels))
-        w.coarsen(Math.floorDiv(w.liveSlices.min + 1600 * 86400L, 31104000L) * 31104000L,
-          31104000L)
-        Views.markUnitDone(store.baseDir, name)
-        w
-      }
-    })
-
-  private val windowedFeedRollups =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.WindowedFeedRollup]
+      val o = Tables.orders(s, dir)
+      val base = Views.materialized(s, dir, idx)(o)
+      val w = graft.engine.WindowedAggView.build(base, root, 7776000L)
+      val (ups, dels) = ordersBatch(o)
+      w.refresh(base, ups, dels)
+      w.coarsen(Math.floorDiv(w.liveSlices.min + 1600 * 86400L, 31104000L) * 31104000L,
+        31104000L)
+      w
+    }
+  }
 
   /** WINDOWED × JOIN-IVM: quarterly revenue per CUSTOMER SEGMENT,
     * maintained PURELY from a dedicated orders⋈customer [[graft.engine
@@ -2773,43 +1848,33 @@ object MapIndexQueries {
     * build-time snapshot; both shared change batches (orders reprice/
     * purge, customers reprice/purge) arrive as delete+insert feed rows
     * carrying full old values, so retraction is feed-local. */
-  private def ordersSegmentWindowedRollup(s: SparkSession, dir: String): graft.engine.WindowedFeedRollup =
-    windowedFeedRollups.getOrElseUpdate(dir, {
-      val bstore = Views.bucketedStore(s, dir)
-      val flat = Views.store(s, dir)
-      val root = java.nio.file.Paths.get(flat.baseDir, "orders_segment_winroll").toString
-      val name = "orders_segment_winroll"
-      if (Views.unitDone(flat.baseDir, name))
-        graft.engine.WindowedFeedRollup.attach(s, root, 7776000L)
-      else {
-        val jv = new graft.engine.JoinView(bstore, "orders_customer_win",
-          "o_orderkey", "o_custkey",
-          Seq("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"),
-          "c_custkey", "c_custkey", Seq("c_custkey", "c_mktsegment"))
-        val o = Tables.orders(s, dir)
-        val c = Tables.customer(s, dir)
-        jv.build(o, c)
-        val e0 = jv.epoch
-        val wv = graft.engine.WindowedFeedRollup.build(jv.df,
-          col("o_orderdate"), col("c_mktsegment"), col("o_totalprice"),
-          s, root, 7776000L, e0)
-        jv.refreshLeft(
-          o.filter(col("o_orderkey") % 37 === 0 && col("o_orderkey") % 41 =!= 0)
-            .withColumn("o_totalprice", col("o_totalprice") + 1000),
-          Some(o.filter(col("o_orderkey") % 41 === 0)
-            .select(col("o_orderkey").cast("string")).distinct()))
-        jv.refreshRight(
-          c.filter(col("c_custkey") % 13 === 0 && col("c_custkey") % 17 =!= 0)
-            .withColumn("c_acctbal", col("c_acctbal") + 100),
-          Some(c.filter(col("c_custkey") % 17 === 0)
-            .select(col("c_custkey").cast("string")).distinct()))
-        wv.applyChanges(jv.changes(e0, jv.epoch), jv.epoch,
-          col("emit_value.o_orderdate"), col("emit_value.c_mktsegment"),
-          col("emit_value.o_totalprice"))
-        Views.markUnitDone(flat.baseDir, name)
-        wv
-      }
-    })
+  private def ordersSegmentWindowedRollup(s: SparkSession, dir: String): graft.engine.WindowedFeedRollup = {
+    val bstore = Views.bucketedStore(s, dir)
+    val flat = Views.store(s, dir)
+    val root = java.nio.file.Paths.get(flat.baseDir, "orders_segment_winroll").toString
+    Views.unit(flat.baseDir, "orders_segment_winroll")(
+      graft.engine.WindowedFeedRollup.attach(s, root, 7776000L)) {
+      val jv = new JoinView(bstore, "orders_customer_win",
+        "o_orderkey", "o_custkey",
+        Seq("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"),
+        "c_custkey", "c_custkey", Seq("c_custkey", "c_mktsegment"))
+      val o = Tables.orders(s, dir)
+      val c = Tables.customer(s, dir)
+      jv.build(o, c)
+      val e0 = jv.epoch
+      val wv = graft.engine.WindowedFeedRollup.build(jv.df,
+        col("o_orderdate"), col("c_mktsegment"), col("o_totalprice"),
+        s, root, 7776000L, e0)
+      val (upsL, delsL) = ordersBatch(o)
+      jv.refreshLeft(upsL, delsL)
+      val (upsR, delsR) = customersBatch(c)
+      jv.refreshRight(upsR, delsR)
+      wv.applyChanges(jv.changes(e0, jv.epoch), jv.epoch,
+        col("emit_value.o_orderdate"), col("emit_value.c_mktsegment"),
+        col("emit_value.o_totalprice"))
+      wv
+    }
+  }
 
   private def windowedServe(w: graft.engine.WindowedAggView): DataFrame =
     w.state.select(col("slice_start"), col("emit_key"), col("cnt"),
@@ -4334,7 +3399,7 @@ object MapIndexQueries {
         |       true AS p50_within_rank, true AS p95_within_rank
         |FROM exact ORDER BY flag""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  private val oracleBase: Map[String, String] = Map(
     // the from-scratch join of both MODIFIED base tables
     "mapindex_joinview" ->
       """WITH o AS (
@@ -4382,42 +3447,6 @@ object MapIndexQueries {
         |       'insert' AS change_type
         |FROM (SELECT * FROM after EXCEPT ALL SELECT * FROM before)
         |ORDER BY change_type, o_orderkey""".stripMargin,
-    // compaction is invisible to join-view serving: same oracle as the
-    // uncompacted twin
-    "mapindex_joinview_compacted" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_name,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, c_name,
-        |       round(o_totalprice, 2) AS o_totalprice,
-        |       round(c_acctbal, 2) AS c_acctbal
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    // out-of-order two-sided arrival must converge to the same final
-    // join as the one-shot build + batches
-    "mapindex_joinview_streamed" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_name,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, c_name,
-        |       round(o_totalprice, 2) AS o_totalprice,
-        |       round(c_acctbal, 2) AS c_acctbal
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
     // the from-scratch LEFT JOIN of both modified tables: %17-tombstoned
     // customers' surviving orders appear null-padded
     "mapindex_joinview_outer" ->
@@ -4491,23 +3520,6 @@ object MapIndexQueries {
         |FROM o FULL JOIN c ON o_custkey = c_custkey
         |GROUP BY c_mktsegment
         |ORDER BY c_mktsegment NULLS FIRST""".stripMargin,
-    // salt shards must be invisible: identical oracle to mapindex_joinview
-    "mapindex_joinview_salted" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_name,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, c_name,
-        |       round(o_totalprice, 2) AS o_totalprice,
-        |       round(c_acctbal, 2) AS c_acctbal
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
     // the maintained rollup must equal join-then-group-by on both
     // modified tables, recomputed from scratch
     "mapindex_joinview_agg" ->
@@ -4656,28 +3668,6 @@ object MapIndexQueries {
         |FROM o FULL JOIN c ON o_custkey = c_custkey
         |GROUP BY ROLLUP(c_mktsegment, o_orderpriority)
         |ORDER BY gid, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    // the Q1 shape: EXISTS + four-sum GROUP BY from scratch
-    "mapindex_q1_measures" ->
-      """WITH li AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X'
-        |              ELSE l_returnflag END AS l_returnflag,
-        |         l_linestatus, l_orderkey, l_quantity, l_extendedprice,
-        |         l_discount, l_tax
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0),
-        |o AS (SELECT o_orderkey FROM orders WHERE o_orderkey % 41 <> 0)
-        |SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-        |       round(CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS sum_qty,
-        |       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS sum_base,
-        |       round(CAST(sum(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS sum_disc,
-        |       round(CAST(sum(CAST(l_tax AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS sum_tax
-        |FROM li
-        |WHERE EXISTS (SELECT 1 FROM o WHERE o.o_orderkey = li.l_orderkey)
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
     // semi-over-join cascade: the from-scratch join of both modified
     // tables under the surviving-priority EXISTS
     "mapindex_joinview_semiview_cascade" ->
@@ -4717,19 +3707,6 @@ object MapIndexQueries {
         |FROM o JOIN c ON o_custkey = c_custkey
         |       JOIN n ON c_nationkey = n_nationkey
         |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    // the streamed rollup converges to the same final state
-    "mapindex_joinview_agg_streamed" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
     // rollup as-of the inter-batch epoch: modified orders ⋈ ORIGINAL
     // customers, grouped from scratch
     "mapindex_joinview_agg_asof" ->
@@ -4834,35 +3811,6 @@ object MapIndexQueries {
         |SELECT a_id, a_user, a_value, b_id, b_value
         |FROM m WHERE b_id IS NOT NULL AND b_id % 7 = 3
         |ORDER BY a_id""".stripMargin,
-    // right-keyed serving: the same per-purchase argmax, kept only where
-    // the PICKED click id falls in the probe subset (%7 == 3)
-    "mapindex_asofjoinview_byright" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0),
-        |m AS (
-        |  SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |    (SELECT b.b_id FROM c b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |    (SELECT round(b.b_value, 2) FROM c b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |  FROM p a)
-        |SELECT a_id, a_user, a_value, b_id, b_value
-        |FROM m WHERE b_id IS NOT NULL AND b_id % 7 = 3
-        |ORDER BY a_id""".stripMargin,
     // net as-of CDC = diff of the post-batch as-of join vs build-time
     "mapindex_asofjoinview_changefeed" ->
       """WITH p0 AS (
@@ -4909,54 +3857,6 @@ object MapIndexQueries {
         |SELECT a_id, a_user, a_value, b_id, b_value, 'insert' AS change_type
         |FROM (SELECT * FROM after EXCEPT ALL SELECT * FROM before)
         |ORDER BY change_type, a_id""".stripMargin,
-    // salt shards invisible: same oracle as mapindex_asofjoinview
-    "mapindex_asofjoinview_salted" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0)
-        |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |  (SELECT b.b_id FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |  (SELECT round(b.b_value, 2) FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |FROM p a ORDER BY a.a_id""".stripMargin,
-    // compaction invisible: same oracle as mapindex_asofjoinview
-    "mapindex_asofjoinview_compacted" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0)
-        |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |  (SELECT b.b_id FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |  (SELECT round(b.b_value, 2) FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |FROM p a ORDER BY a.a_id""".stripMargin,
     // forward maintained as-of: least ts >= purchase ts, ties to least id
     "mapindex_asofjoinview_fwd" ->
       """WITH p AS (
@@ -5036,30 +3936,6 @@ object MapIndexQueries {
         |       count(DISTINCT CAST(a_value AS DECIMAL(18,4))) AS n_distinct
         |FROM m GROUP BY 1
         |ORDER BY b_id NULLS FIRST""".stripMargin,
-    // the streamed twin converges to the identical final state
-    "mapindex_asofjoinview_streamed" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0)
-        |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |  (SELECT b.b_id FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |  (SELECT round(b.b_value, 2) FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |FROM p a ORDER BY a.a_id""".stripMargin,
     // lattice time travel: epoch 1 = modified orders x ORIGINAL customers
     "mapindex_lattice_asof" ->
       """WITH o AS (
@@ -5140,25 +4016,6 @@ object MapIndexQueries {
     // composite-key join: the from-scratch TWO-column-ON join of the
     // modified orders against the modified derived dim
     "mapindex_joinview_composite" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |d0 AS (
-        |  SELECT o_custkey AS d_custkey, o_orderstatus AS d_status,
-        |         count(*) AS d_cnt
-        |  FROM orders GROUP BY 1, 2),
-        |d AS (
-        |  SELECT d_custkey, d_status,
-        |         CASE WHEN d_custkey % 13 = 0 THEN d_cnt + 5 ELSE d_cnt END AS d_cnt
-        |  FROM d0 WHERE d_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, o_orderstatus,
-        |       round(o_totalprice, 2) AS o_totalprice, d_cnt
-        |FROM o JOIN d ON o_custkey = d_custkey AND o_orderstatus = d_status
-        |ORDER BY o_orderkey""".stripMargin,
-    // salt shards invisible: identical oracle to the unsalted composite
-    "mapindex_joinview_composite_salted" ->
       """WITH o AS (
         |  SELECT o_orderkey, o_custkey, o_orderstatus,
         |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
@@ -5336,17 +4193,6 @@ object MapIndexQueries {
         |SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
         |FROM o WHERE EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
         |ORDER BY o_orderkey""".stripMargin,
-    // salt shards invisible: same oracle as mapindex_semiview
-    "mapindex_semiview_salted" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
-        |FROM o WHERE EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
     "mapindex_antiview" ->
       """WITH o AS (
         |  SELECT o_orderkey, o_custkey,
@@ -5357,25 +4203,6 @@ object MapIndexQueries {
         |SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
         |FROM o WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
         |ORDER BY o_orderkey""".stripMargin,
-    // lattice IVM: DuckDB recomputes the whole ROLLUP from both modified
-    // tables; gid rebuilt from GROUPING() with the engine's bit layout
-    "mapindex_joinview_rollup_lattice" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT CAST(GROUPING(c_mktsegment) + 2 * GROUPING(o_orderpriority)
-        |            AS INTEGER) AS gid,
-        |       c_mktsegment, o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |GROUP BY ROLLUP(c_mktsegment, o_orderpriority)
-        |ORDER BY gid, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
     "mapindex_joinview_cube_lattice" ->
       """WITH o AS (
         |  SELECT o_orderkey, o_custkey, o_orderpriority,
@@ -5680,49 +4507,18 @@ object MapIndexQueries {
         |ORDER BY emit_key, emit_value""".stripMargin,
     "mapindex_count" ->
       "SELECT count(*) AS cnt FROM lineitem WHERE l_returnflag >= 'N'",
-    "mapindex_bucketed_group" ->
-      """SELECT l_returnflag AS emit_key, round(sum(l_extendedprice), 2) AS sum_value,
-        |       count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag ORDER BY emit_key""".stripMargin,
-    "mapindex_sql" ->
-      """SELECT l_returnflag AS emit_key, round(sum(l_extendedprice), 2) AS sum_value,
-        |       count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag ORDER BY emit_key""".stripMargin,
     "mapindex_json_values" ->
       """SELECT event_type AS emit_key, count(*) AS cnt,
         |       round(sum(value), 2) AS sum_value,
         |       count(DISTINCT user_id) AS users
         |FROM events GROUP BY event_type ORDER BY emit_key""".stripMargin,
-    "mapindex_bucketed_get" ->
-      """SELECT l_extendedprice AS emit_value FROM lineitem
-        |WHERE l_returnflag = 'R' ORDER BY emit_value""".stripMargin,
-    "mapindex_bucketed_scan" ->
-      """SELECT l_returnflag AS emit_key, l_extendedprice AS emit_value
-        |FROM lineitem WHERE l_returnflag >= 'A' AND l_returnflag < 'N'
-        |ORDER BY emit_key, emit_value""".stripMargin,
     "mapindex_prefix" ->
       """SELECT event_type AS emit_key, count(*) AS cnt
         |FROM events WHERE event_type LIKE 'p%'
         |GROUP BY 1 ORDER BY emit_key""".stripMargin,
-    "mapindex_rangebucketed_scan" ->
-      """SELECT l_returnflag AS emit_key, l_extendedprice AS emit_value
-        |FROM lineitem WHERE l_returnflag >= 'A' AND l_returnflag < 'N'
-        |ORDER BY emit_key, emit_value""".stripMargin,
-    "mapindex_rangebucketed_get" ->
-      """SELECT l_extendedprice AS emit_value FROM lineitem
-        |WHERE l_returnflag = 'R' ORDER BY emit_value""".stripMargin,
     // the refreshed range-layout view: the same modified-source recompute
     // the flat aggview and hash-bucketed reads are graded against
     "mapindex_rangebucketed_group" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS emit_key,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0)
-        |SELECT emit_key, round(sum(v), 2) AS sum_value, count(*) AS cnt
-        |FROM src GROUP BY 1 ORDER BY emit_key""".stripMargin,
-    // post-compaction reads recompute against the SAME modified-source
-    // SQL as the maintained views: compaction must not change a byte
-    "mapindex_compacted_group" ->
       """WITH src AS (
         |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS emit_key,
         |         l_extendedprice AS v
@@ -5745,15 +4541,6 @@ object MapIndexQueries {
         |       round(sum(v), 2) AS sum_value
         |FROM ins GROUP BY 2
         |ORDER BY change_type, emit_key""".stripMargin,
-    // post-split reads recompute against the same modified-source SQL as
-    // every other layout: the geometry doubling must not change a byte
-    "mapindex_split_group" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS emit_key,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0)
-        |SELECT emit_key, round(sum(v), 2) AS sum_value, count(*) AS cnt
-        |FROM src GROUP BY 1 ORDER BY emit_key""".stripMargin,
     "mapindex_split_get" ->
       """WITH src AS (
         |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS emit_key,
@@ -5761,68 +4548,6 @@ object MapIndexQueries {
         |  FROM lineitem WHERE l_orderkey % 89 <> 0)
         |SELECT v AS emit_value FROM src WHERE emit_key = 'R'
         |ORDER BY emit_value""".stripMargin,
-    // the feed across the split epoch equals the refresh delta alone
-    "mapindex_split_changefeed" ->
-      """WITH del AS (
-        |  SELECT l_returnflag AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 89 = 0 OR (l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)),
-        |ins AS (
-        |  SELECT 'X' AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)
-        |SELECT 'delete' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM del GROUP BY 2
-        |UNION ALL
-        |SELECT 'insert' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM ins GROUP BY 2
-        |ORDER BY change_type, emit_key""".stripMargin,
-    // the replica serves the same modified-source answer as the source —
-    // an unshipped (stale) or over-shipped bucket is a hash mismatch
-    "mapindex_shipped_group" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS emit_key,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0)
-        |SELECT emit_key, round(sum(v), 2) AS sum_value, count(*) AS cnt
-        |FROM src GROUP BY 1 ORDER BY emit_key""".stripMargin,
-    "mapindex_shipped_changefeed" ->
-      """WITH del AS (
-        |  SELECT l_returnflag AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 89 = 0 OR (l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)),
-        |ins AS (
-        |  SELECT 'X' AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)
-        |SELECT 'delete' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM del GROUP BY 2
-        |UNION ALL
-        |SELECT 'insert' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM ins GROUP BY 2
-        |ORDER BY change_type, emit_key""".stripMargin,
-    // the range layout's sidecar must carry the identical delta as the
-    // flat and hash-bucketed feeds
-    "mapindex_rangebucketed_changefeed" ->
-      """WITH del AS (
-        |  SELECT l_returnflag AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 89 = 0 OR (l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)),
-        |ins AS (
-        |  SELECT 'X' AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)
-        |SELECT 'delete' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM del GROUP BY 2
-        |UNION ALL
-        |SELECT 'insert' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM ins GROUP BY 2
-        |ORDER BY change_type, emit_key""".stripMargin,
-    // the pre-refresh snapshot: the unmodified source, grouped
-    "mapindex_bucketed_asof" ->
-      """SELECT l_returnflag AS emit_key, round(sum(l_extendedprice), 2) AS sum_value,
-        |       count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag ORDER BY emit_key""".stripMargin,
     // pre-refresh aggregate state recomputed from the unmodified source
     "mapindex_bucketed_agg_asof" ->
       """SELECT l_returnflag AS emit_key, count(*) AS cnt,
@@ -5838,24 +4563,6 @@ object MapIndexQueries {
     // same re-flag/%97 upsert and %89 tombstone batch applied as plain SQL
     // the bucketed layout must land the identical distinct counts
     "mapindex_bucketed_distinct_view" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0)
-        |SELECT flag, count(DISTINCT v) AS n_distinct
-        |FROM src GROUP BY flag ORDER BY flag""".stripMargin,
-    // distinct prices per (possibly re-flagged) group on the modified
-    // corpus; the engine serves this from refcount state, never the corpus
-    "mapindex_distinct_view" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0)
-        |SELECT flag, count(DISTINCT v) AS n_distinct
-        |FROM src GROUP BY flag ORDER BY flag""".stripMargin,
-    // the streamed refcount state must converge to the same distinct
-    // counts as the flat and bucketed twins
-    "mapindex_distinct_view_streamed" ->
       """WITH src AS (
         |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
         |         l_extendedprice AS v
@@ -6018,27 +4725,6 @@ object MapIndexQueries {
         |SELECT flag, n, round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
         |       true AS p50_within_rank, true AS p95_within_rank
         |FROM exact ORDER BY flag""".stripMargin,
-    // the streamed twin converges to the same final state: same oracle
-    "mapindex_percentile_sketch_streamed" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0),
-        |vcounts AS (
-        |  SELECT flag, v, count(*) AS cnt FROM src GROUP BY flag, v),
-        |vcum AS (
-        |  SELECT flag, v,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY v) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n2
-        |  FROM vcounts),
-        |exact AS (
-        |  SELECT flag, max(n2) AS n,
-        |         min(CASE WHEN cum >= ceil(n2 / 2.0) THEN v END) AS x50,
-        |         min(CASE WHEN cum >= ceil(n2 * 19 / 20.0) THEN v END) AS x95
-        |  FROM vcum GROUP BY flag)
-        |SELECT flag, n, round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
-        |       true AS p50_within_rank, true AS p95_within_rank
-        |FROM exact ORDER BY flag""".stripMargin,
     // top-3 most frequent quantities per (possibly re-flagged) group on
     // the modified corpus, ties to the smaller quantity — row_number
     // mirrored; ranks cast BIGINT both sides
@@ -6056,24 +4742,6 @@ object MapIndexQueries {
         |  FROM counts)
         |SELECT flag, rank, qty, cnt FROM ranked WHERE rank <= 3
         |ORDER BY flag, rank""".stripMargin,
-    // bucketed quantile state: identical oracle to the flat twin
-    "mapindex_bucketed_percentile_view" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
-        |         CAST(l_quantity AS INTEGER) AS qty
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0),
-        |counts AS (
-        |  SELECT flag, qty, count(*) AS cnt FROM src GROUP BY flag, qty),
-        |cum AS (
-        |  SELECT flag, qty,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY qty) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n
-        |  FROM counts)
-        |SELECT flag,
-        |       min(CASE WHEN cum >= ceil(n / 2.0) THEN qty END) AS p50,
-        |       min(CASE WHEN cum >= ceil(n * 19 / 20.0) THEN qty END) AS p95,
-        |       max(n) AS n
-        |FROM cum GROUP BY flag ORDER BY flag""".stripMargin,
     "mapindex_aggview" ->
       """WITH src AS (
         |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS k,
@@ -6084,38 +4752,6 @@ object MapIndexQueries {
         |       min(v) AS min_value, max(v) AS max_value,
         |       round(CAST(sum(CAST(v AS DECIMAL(18,4))) AS DOUBLE) / count(*), 4) AS avg_value
         |FROM src GROUP BY k ORDER BY emit_key""".stripMargin,
-    // the same delta recomputed from scratch: deletes = every old emission
-    // of a changed source key (re-flagged or tombstoned), inserts = the
-    // re-flagged keys' new emissions
-    // bucketed state after the same change batch = the same from-scratch
-    // recompute the flat aggview is graded against
-    "mapindex_bucketed_aggview" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS k,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0)
-        |SELECT k AS emit_key, count(*) AS cnt,
-        |       round(CAST(sum(CAST(v AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-        |       min(v) AS min_value, max(v) AS max_value,
-        |       round(CAST(sum(CAST(v AS DECIMAL(18,4))) AS DOUBLE) / count(*), 4) AS avg_value
-        |FROM src GROUP BY k ORDER BY emit_key""".stripMargin,
-    // the bucketed CDC sidecar must carry the exact same delta the flat
-    // feed (and this from-scratch SQL) computes
-    "mapindex_bucketed_changefeed" ->
-      """WITH del AS (
-        |  SELECT l_returnflag AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 89 = 0 OR (l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)),
-        |ins AS (
-        |  SELECT 'X' AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)
-        |SELECT 'delete' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM del GROUP BY 2
-        |UNION ALL
-        |SELECT 'insert' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM ins GROUP BY 2
-        |ORDER BY change_type, emit_key""".stripMargin,
     // aggregate-state CDC, recomputed from scratch: touched groups = groups
     // with at least one emission from a changed source key; deletes = their
     // pre-refresh aggregates, inserts = their post-refresh aggregates
@@ -6144,45 +4780,8 @@ object MapIndexQueries {
         |SELECT 'insert', k, cnt, sv, mn, mx
         |FROM newst WHERE k IN (SELECT k FROM touched)
         |ORDER BY change_type, emit_key""".stripMargin,
-    "mapindex_bucketed_agg_changefeed" ->
-      """WITH touched AS (
-        |  SELECT DISTINCT l_returnflag AS k FROM lineitem
-        |  WHERE l_orderkey % 97 = 0 OR l_orderkey % 89 = 0
-        |  UNION
-        |  SELECT DISTINCT 'X' AS k FROM lineitem
-        |  WHERE l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0),
-        |oldst AS (
-        |  SELECT l_returnflag AS k, count(*) AS cnt,
-        |         round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS sv,
-        |         min(l_extendedprice) AS mn, max(l_extendedprice) AS mx
-        |  FROM lineitem GROUP BY 1),
-        |newst AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS k,
-        |         count(*) AS cnt,
-        |         round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS sv,
-        |         min(l_extendedprice) AS mn, max(l_extendedprice) AS mx
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0 GROUP BY 1)
-        |SELECT 'delete' AS change_type, k AS emit_key, cnt, sv AS sum_value,
-        |       mn AS min_value, mx AS max_value
-        |FROM oldst WHERE k IN (SELECT k FROM touched)
-        |UNION ALL
-        |SELECT 'insert', k, cnt, sv, mn, mx
-        |FROM newst WHERE k IN (SELECT k FROM touched)
-        |ORDER BY change_type, emit_key""".stripMargin,
     // streaming-built view state = batch recompute of the modified source
     "mapindex_streaming_group" ->
-      """SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS emit_key,
-        |       round(sum(l_extendedprice), 2) AS sum_value, count(*) AS cnt
-        |FROM lineitem WHERE l_orderkey % 89 <> 0
-        |GROUP BY 1 ORDER BY emit_key""".stripMargin,
-    "mapindex_bucketed_streaming_group" ->
-      """SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS emit_key,
-        |       round(sum(l_extendedprice), 2) AS sum_value, count(*) AS cnt
-        |FROM lineitem WHERE l_orderkey % 89 <> 0
-        |GROUP BY 1 ORDER BY emit_key""".stripMargin,
-    // CDC-replayed cascade = the same modified-source recompute: the relay
-    // forwards emissions unchanged, so group sums must match exactly
-    "mapindex_cascade_cdc" ->
       """SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS emit_key,
         |       round(sum(l_extendedprice), 2) AS sum_value, count(*) AS cnt
         |FROM lineitem WHERE l_orderkey % 89 <> 0
@@ -6218,21 +4817,6 @@ object MapIndexQueries {
         |SELECT row_number() OVER (ORDER BY tord, nord, sord, aord) AS rank,
         |       key_type, key_repr, cnt
         |FROM grouped ORDER BY rank""".stripMargin,
-    "mapindex_changefeed" ->
-      """WITH del AS (
-        |  SELECT l_returnflag AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 89 = 0 OR (l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)),
-        |ins AS (
-        |  SELECT 'X' AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)
-        |SELECT 'delete' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM del GROUP BY 2
-        |UNION ALL
-        |SELECT 'insert' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM ins GROUP BY 2
-        |ORDER BY change_type, emit_key""".stripMargin,
     // net replay over (0, 2]: deletes are the ORIGINAL rows of every key
     // touched anywhere in the range (first-touch retraction); inserts are
     // only the final 'Y' rows — the intermediate 'X' generation appears
@@ -6258,22 +4842,88 @@ object MapIndexQueries {
         |       round(sum(v), 2) AS sum_value
         |FROM ins GROUP BY 2
         |ORDER BY change_type, emit_key""".stripMargin,
-    "mapindex_net_changefeed" ->
-      """WITH del AS (
-        |  SELECT l_returnflag AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 89 = 0
-        |     OR (l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0)
-        |     OR (l_orderkey % 83 = 0 AND l_orderkey % 89 <> 0)),
-        |ins AS (
-        |  SELECT 'Y' AS emit_key, l_extendedprice AS v FROM lineitem
-        |  WHERE l_orderkey % 97 = 0 AND l_orderkey % 89 <> 0 AND l_orderkey % 83 <> 0)
-        |SELECT 'delete' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM del GROUP BY 2
-        |UNION ALL
-        |SELECT 'insert' AS change_type, emit_key, count(*) AS cnt,
-        |       round(sum(v), 2) AS sum_value
-        |FROM ins GROUP BY 2
-        |ORDER BY change_type, emit_key""".stripMargin,
   )
+
+  /** Twin gates graded by another gate's oracle: a layout, salt,
+    * compaction, replica or streamed history must be invisible to
+    * serving, so the twin's expected answer is its base's. */
+  val oracle: Map[String, String] = oracleBase ++ Seq(
+    // compaction is invisible to join-view serving: same oracle as the
+    // uncompacted twin
+    "mapindex_joinview_compacted" -> "mapindex_joinview",
+    // out-of-order two-sided arrival must converge to the same final
+    // join as the one-shot build + batches
+    "mapindex_joinview_streamed" -> "mapindex_joinview",
+    // salt shards must be invisible: identical oracle to mapindex_joinview
+    "mapindex_joinview_salted" -> "mapindex_joinview",
+    // the Q1 shape: EXISTS + four-sum GROUP BY from scratch
+    "mapindex_q1_measures" -> "mapindex_q1_measures_streamed",
+    // the streamed rollup converges to the same final state
+    "mapindex_joinview_agg_streamed" -> "mapindex_joinview_agg",
+    // right-keyed serving: the same per-purchase argmax, kept only where
+    // the PICKED click id falls in the probe subset (%7 == 3)
+    "mapindex_asofjoinview_byright" -> "mapindex_asofjoinview_byright_salted",
+    // salt shards invisible: same oracle as mapindex_asofjoinview
+    "mapindex_asofjoinview_salted" -> "mapindex_asofjoinview",
+    // compaction invisible: same oracle as mapindex_asofjoinview
+    "mapindex_asofjoinview_compacted" -> "mapindex_asofjoinview",
+    // the streamed twin converges to the identical final state
+    "mapindex_asofjoinview_streamed" -> "mapindex_asofjoinview",
+    // salt shards invisible: identical oracle to the unsalted composite
+    "mapindex_joinview_composite_salted" -> "mapindex_joinview_composite",
+    // salt shards invisible: same oracle as mapindex_semiview
+    "mapindex_semiview_salted" -> "mapindex_semiview",
+    // lattice IVM: DuckDB recomputes the whole ROLLUP from both modified
+    // tables; gid rebuilt from GROUPING() with the engine's bit layout
+    "mapindex_joinview_rollup_lattice" -> "mapindex_lattice_streamed",
+    "mapindex_bucketed_group" -> "mapindex_group",
+    "mapindex_sql" -> "mapindex_group",
+    "mapindex_bucketed_get" -> "mapindex_get",
+    "mapindex_bucketed_scan" -> "mapindex_scan",
+    "mapindex_rangebucketed_scan" -> "mapindex_scan",
+    "mapindex_rangebucketed_get" -> "mapindex_get",
+    // post-compaction reads recompute against the SAME modified-source
+    // SQL as the maintained views: compaction must not change a byte
+    "mapindex_compacted_group" -> "mapindex_rangebucketed_group",
+    // post-split reads recompute against the same modified-source SQL as
+    // every other layout: the geometry doubling must not change a byte
+    "mapindex_split_group" -> "mapindex_rangebucketed_group",
+    // the feed across the split epoch equals the refresh delta alone
+    "mapindex_split_changefeed" -> "mapindex_compacted_changefeed",
+    // the replica serves the same modified-source answer as the source —
+    // an unshipped (stale) or over-shipped bucket is a hash mismatch
+    "mapindex_shipped_group" -> "mapindex_rangebucketed_group",
+    "mapindex_shipped_changefeed" -> "mapindex_compacted_changefeed",
+    // the range layout's sidecar must carry the identical delta as the
+    // flat and hash-bucketed feeds
+    "mapindex_rangebucketed_changefeed" -> "mapindex_compacted_changefeed",
+    // the pre-refresh snapshot: the unmodified source, grouped
+    "mapindex_bucketed_asof" -> "mapindex_group",
+    // distinct prices per (possibly re-flagged) group on the modified
+    // corpus; the engine serves this from refcount state, never the corpus
+    "mapindex_distinct_view" -> "mapindex_bucketed_distinct_view",
+    // the streamed refcount state must converge to the same distinct
+    // counts as the flat and bucketed twins
+    "mapindex_distinct_view_streamed" -> "mapindex_bucketed_distinct_view",
+    // the streamed twin converges to the same final state: same oracle
+    "mapindex_percentile_sketch_streamed" -> "mapindex_percentile_sketch",
+    // bucketed quantile state: identical oracle to the flat twin
+    "mapindex_bucketed_percentile_view" -> "mapindex_percentile_view",
+    // the same delta recomputed from scratch: deletes = every old emission
+    // of a changed source key (re-flagged or tombstoned), inserts = the
+    // re-flagged keys' new emissions
+    // bucketed state after the same change batch = the same from-scratch
+    // recompute the flat aggview is graded against
+    "mapindex_bucketed_aggview" -> "mapindex_aggview",
+    // the bucketed CDC sidecar must carry the exact same delta the flat
+    // feed (and this from-scratch SQL) computes
+    "mapindex_bucketed_changefeed" -> "mapindex_compacted_changefeed",
+    "mapindex_bucketed_agg_changefeed" -> "mapindex_agg_changefeed",
+    "mapindex_bucketed_streaming_group" -> "mapindex_streaming_group",
+    // CDC-replayed cascade = the same modified-source recompute: the relay
+    // forwards emissions unchanged, so group sums must match exactly
+    "mapindex_cascade_cdc" -> "mapindex_streaming_group",
+    "mapindex_changefeed" -> "mapindex_compacted_changefeed",
+    "mapindex_net_changefeed" -> "mapindex_bucketed_net_changefeed",
+  ).map { case (twin, base) => twin -> oracleBase(base) }
 }

@@ -117,14 +117,19 @@ object PipelineQueries {
       col("doc_id").cast("string"),
       tokenTfEmits("named_struct('doc_id', doc_id, 'tf', cast(ei - si + 1 as bigint))"))
 
+  /** The shared document change batch every maintained text fixture
+    * pushes: `%37` docs rewritten to one fixed text, `%41` tombstoned.
+    * Returns (upserts, tombstoned source keys). */
+  private def docChangeBatch(d: DataFrame): (DataFrame, DataFrame) =
+    (d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
+       .withColumn("text", lit("spark join spark stream")),
+     d.filter(col("doc_id") % 41 === 0)
+       .select(col("doc_id").cast("string").as("src_key")).distinct())
+
   private def incPostingsView(s: SparkSession, dir: String) =
     Views.cached(dir, postingsIncIdx.name) {
       val base = postingsIncIdx.materialize(docs(s, dir), Views.store(s, dir))
-      val ups = docs(s, dir)
-        .filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .withColumn("text", lit("spark join spark stream"))
-      val dels = docs(s, dir).filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("src_key")).distinct()
+      val (ups, dels) = docChangeBatch(docs(s, dir))
       base.refresh(ups, Some(dels))
     }
 
@@ -181,11 +186,7 @@ object PipelineQueries {
       val idx = docLenMapIndex("doc_lengths_inc")
       val base = idx.materialize(docs(s, dir), Views.store(s, dir))
       val agg0 = graft.engine.AggView.build(base, "doc_lengths_inc__state")
-      val ups = docs(s, dir)
-        .filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .withColumn("text", lit("spark join spark stream"))
-      val dels = docs(s, dir).filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("src_key")).distinct()
+      val (ups, dels) = docChangeBatch(docs(s, dir))
       val (_, agg) = agg0.refresh(base, ups, Some(dels))
       agg
     })
@@ -220,11 +221,7 @@ object PipelineQueries {
       val idx = unigramMapIndex("doc_unigrams_inc")
       val base = idx.materialize(docs(s, dir), Views.store(s, dir))
       val agg0 = graft.engine.AggView.build(base, "doc_unigrams_inc__state")
-      val ups = docs(s, dir)
-        .filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .withColumn("text", lit("spark join spark stream"))
-      val dels = docs(s, dir).filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("src_key")).distinct()
+      val (ups, dels) = docChangeBatch(docs(s, dir))
       val (_, agg) = agg0.refresh(base, ups, Some(dels))
       agg
     })
@@ -388,11 +385,7 @@ object PipelineQueries {
   private def incBm25View(s: SparkSession, dir: String) =
     Views.cached(dir, bm25IncIdx.name) {
       val base = bm25IncIdx.materialize(docs(s, dir), Views.store(s, dir))
-      val ups = docs(s, dir)
-        .filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .withColumn("text", lit("spark join spark stream"))
-      val dels = docs(s, dir).filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("src_key")).distinct()
+      val (ups, dels) = docChangeBatch(docs(s, dir))
       base.refresh(ups, Some(dels))
     }
 
@@ -527,11 +520,7 @@ object PipelineQueries {
   private def incSpanWinView(s: SparkSession, dir: String) =
     Views.cached(dir, spanWinIncIdx.name) {
       val base = spanWinIncIdx.materialize(docs(s, dir), Views.store(s, dir))
-      val ups = docs(s, dir)
-        .filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .withColumn("text", lit("spark join spark stream"))
-      val dels = docs(s, dir).filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("src_key")).distinct()
+      val (ups, dels) = docChangeBatch(docs(s, dir))
       base.refresh(ups, Some(dels))
     }
 
@@ -586,27 +575,18 @@ object PipelineQueries {
   }
 
   private val spanOccIdx = spanOccMapIndex("doc_spanocc")
-  private val spanAggViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedAggView]
 
-  private def spanAggView(s: SparkSession, dir: String): graft.engine.BucketedAggView =
-    spanAggViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "span_occ"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.BucketedAggView.attach(store, "span_occ_state")
-      else {
-        val d = docs(s, dir)
-        val v = graft.engine.BucketedAggView.build(store, spanOccIdx, d, "span_occ_state")
-        val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-          .withColumn("text", lit("spark join spark stream"))
-        val dels = d.filter(col("doc_id") % 41 === 0)
-          .select(col("doc_id").cast("string").as("src_key")).distinct()
-        v.refresh(spanOccIdx, ups, Some(dels))
-        Views.markUnitDone(store.baseDir, unit)
-        v
-      }
-    })
+  private def spanAggView(s: SparkSession, dir: String): graft.engine.BucketedAggView = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, "span_occ")(
+      graft.engine.BucketedAggView.attach(store, "span_occ_state")) {
+      val d = docs(s, dir)
+      val v = graft.engine.BucketedAggView.build(store, spanOccIdx, d, "span_occ_state")
+      val (ups, dels) = docChangeBatch(d)
+      v.refresh(spanOccIdx, ups, Some(dels))
+      v
+    }
+  }
 
   /** Span detection recomputed from the MODIFIED corpus — the shared
     * ground truth for both maintained-window-view spellings (batch
@@ -749,53 +729,39 @@ object PipelineQueries {
     * oracle re-derives every pair from the modified corpus from scratch,
     * so a stale pair, a missed retraction, or a wrong df-cap membership
     * after the batch is a hash mismatch. */
-  private val pairGraphs =
-    scala.collection.concurrent.TrieMap.empty[String, PairGraphIndex]
   private def incPairGraph(s: SparkSession, dir: String): PairGraphIndex =
-    // shared by three prewarm steps (itself, incComponentsIdx, keeperView)
-    Views.locked(s"build#pipeline#incPairGraph#$dir") {
-    pairGraphs.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val g = new PairGraphIndex(s, store,
-        "pairgraph_inc", MaxShingleDf, JaccardThreshold)
-      if (!Views.unitDone(store.baseDir, "pairgraph_inc")) {
-        val d = docs(s, dir)
-        g.build(d)
-        val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-          .withColumn("text", lit("spark join spark stream"))
-          .select("doc_id", "text")
-        val dels = d.filter(col("doc_id") % 41 === 0).select("doc_id")
-        g.refresh(ups, Some(dels))
-        Views.markUnitDone(store.baseDir, "pairgraph_inc")
-      }
+    pairGraphUnit(s, dir, "pairgraph_inc")(
+      new PairGraphIndex(s, _, "pairgraph_inc", MaxShingleDf, JaccardThreshold))
+
+  /** One pair graph as a build unit: built on the base corpus, then
+    * ONE incremental refresh through the shared document change batch;
+    * `compact` adds the store's no-change compaction epoch over the
+    * pair view on top. */
+  private def pairGraphUnit(s: SparkSession, dir: String, unit: String,
+      compact: Boolean = false)(open: graft.engine.BucketedViewStore => PairGraphIndex): PairGraphIndex = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, unit)(open(store)) {
+      val g = open(store)
+      val d = docs(s, dir)
+      g.build(d)
+      val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
+        .withColumn("text", lit("spark join spark stream"))
+        .select("doc_id", "text")
+      val dels = d.filter(col("doc_id") % 41 === 0).select("doc_id")
+      g.refresh(ups, Some(dels))
+      if (compact) store.compact(g.pairsName, maxFilesPerBucket = 0)
       g
-    })
     }
+  }
 
   /** The same incremental machinery instantiated for WINNOW fingerprints
     * (containment overlap instead of Jaccard) — one parameterization of
     * [[PairGraphIndex]], same change batch, graded against the exhaustive
     * substring-containment oracle over the modified corpus. */
-  private val winnowGraphs =
-    scala.collection.concurrent.TrieMap.empty[String, PairGraphIndex]
   private def incWinnowGraph(s: SparkSession, dir: String): PairGraphIndex =
-    winnowGraphs.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val g = new PairGraphIndex(s, store,
-        "winnowgraph_inc", MaxBandDf, JaccardThreshold,
-        keysExpr = "winnow_hashes(text)", containment = true, scoreCol = "overlap")
-      if (!Views.unitDone(store.baseDir, "winnowgraph_inc")) {
-        val d = docs(s, dir)
-        g.build(d)
-        val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-          .withColumn("text", lit("spark join spark stream"))
-          .select("doc_id", "text")
-        val dels = d.filter(col("doc_id") % 41 === 0).select("doc_id")
-        g.refresh(ups, Some(dels))
-        Views.markUnitDone(store.baseDir, "winnowgraph_inc")
-      }
-      g
-    })
+    pairGraphUnit(s, dir, "winnowgraph_inc")(
+      new PairGraphIndex(s, _, "winnowgraph_inc", MaxBandDf, JaccardThreshold,
+        keysExpr = "winnow_hashes(text)", containment = true, scoreCol = "overlap"))
 
   /** The pair graph COMPACTED mid-history: own instance + view names
     * ("pairgraph_compact") in the shared bucketed store, so the shared
@@ -809,43 +775,22 @@ object PipelineQueries {
     * alone — the compaction epoch participates in the feed but
     * contributes no rows (the empty-sidecar property, also asserted
     * directly in PipelineSpec). */
-  private val compactPairGraphs =
-    scala.collection.concurrent.TrieMap.empty[String, PairGraphIndex]
   private[graft] def compactedPairGraph(s: SparkSession, dir: String): PairGraphIndex =
-    compactPairGraphs.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val g = new PairGraphIndex(s, store,
-        "pairgraph_compact", MaxShingleDf, JaccardThreshold)
-      if (!Views.unitDone(store.baseDir, "pairgraph_compact")) {
-        val d = docs(s, dir)
-        g.build(d)
-        val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-          .withColumn("text", lit("spark join spark stream"))
-          .select("doc_id", "text")
-        val dels = d.filter(col("doc_id") % 41 === 0).select("doc_id")
-        g.refresh(ups, Some(dels))
-        store.compact(g.pairsName, maxFilesPerBucket = 0)
-        Views.markUnitDone(store.baseDir, "pairgraph_compact")
-      }
-      g
-    })
+    pairGraphUnit(s, dir, "pairgraph_compact", compact = true)(
+      new PairGraphIndex(s, _, "pairgraph_compact", MaxShingleDf, JaccardThreshold))
 
   /** The BASE corpus's cluster labeling materialized once
     * (compute-on-write): `pipeline_dedup_removal` and any other
     * keeper-set consumer read the stored `(doc_id, component)` relation
     * instead of re-resolving the pair graph per query. */
-  private val baseComps =
-    scala.collection.concurrent.TrieMap.empty[String, ComponentsIndex]
-  private[operators] def baseComponentsView(s: SparkSession, dir: String): ComponentsIndex =
-    baseComps.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
+  private[operators] def baseComponentsView(s: SparkSession, dir: String): ComponentsIndex = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, "comp_base")(new ComponentsIndex(s, store, "comp_base")) {
       val ci = new ComponentsIndex(s, store, "comp_base")
-      if (!Views.unitDone(store.baseDir, "comp_base")) {
-        ci.build(pairsView(s, dir).select("i", "j"))
-        Views.markUnitDone(store.baseDir, "comp_base")
-      }
+      ci.build(pairsView(s, dir).select("i", "j"))
       ci
-    })
+    }
+  }
 
   /** The components LABELING maintained one relation downstream of the
     * maintained pair graph ([[ComponentsIndex]]): built on the PRE-batch
@@ -854,26 +799,19 @@ object PipelineQueries {
     * change touches are re-resolved. The oracle recomputes the labeling
     * from the modified corpus from scratch (recursive CTE), so a stale
     * label, a missed merge, or an unsplit component is a hash mismatch. */
-  private val compGraphs =
-    scala.collection.concurrent.TrieMap.empty[String, ComponentsIndex]
-  private def incComponentsIdx(s: SparkSession, dir: String): ComponentsIndex =
-    // shared by two prewarm steps (itself and keeperView)
-    Views.locked(s"build#pipeline#incComponentsIdx#$dir") {
-    compGraphs.getOrElseUpdate(dir, {
+  private def incComponentsIdx(s: SparkSession, dir: String): ComponentsIndex = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, "compgraph_inc")(new ComponentsIndex(s, store, "compgraph_inc")) {
       val g = incPairGraph(s, dir) // built at epoch 0, refreshed to 1
-      val store = Views.bucketedStore(s, dir)
       val ci = new ComponentsIndex(s, store, "compgraph_inc")
-      if (!Views.unitDone(store.baseDir, "compgraph_inc")) {
-        val v = g.pairsVersion
-        ci.build(g.pairsAt(v - 1))
-        // dirty-region edges read bucket-pruned from the dual-keyed pair
-        // view — the labeling refresh never scans the pair relation
-        ci.refresh(g.pairsChanges(v - 1, v), g.incidentPairs _)
-        Views.markUnitDone(store.baseDir, "compgraph_inc")
-      }
+      val v = g.pairsVersion
+      ci.build(g.pairsAt(v - 1))
+      // dirty-region edges read bucket-pruned from the dual-keyed pair
+      // view — the labeling refresh never scans the pair relation
+      ci.refresh(g.pairsChanges(v - 1, v), g.incidentPairs _)
       ci
-    })
     }
+  }
 
   /** The KEEPER MAP maintained one relation further downstream of the
     * labeling: a [[graft.engine.BucketedAggView]] whose base map view
@@ -888,32 +826,26 @@ object PipelineQueries {
   private val keeperBaseIdx = MapIndex.columns("keeper_base")(
     col("doc_id").cast("string"),
     array(emit(col("component").cast("string"), col("doc_id"))))
-  private val keeperViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedAggView]
-  private def keeperView(s: SparkSession, dir: String): graft.engine.BucketedAggView =
-    keeperViews.getOrElseUpdate(dir, {
+  private def keeperView(s: SparkSession, dir: String): graft.engine.BucketedAggView = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, "keeper_inc")(
+      graft.engine.BucketedAggView.attach(store, "keeper_state")) {
       val ci = incComponentsIdx(s, dir) // labeling built at e0, refreshed to e1
-      val store = Views.bucketedStore(s, dir)
-      val unit = "keeper_inc"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.BucketedAggView.attach(store, "keeper_state")
-      else {
-        val e = ci.epoch
-        val v = graft.engine.BucketedAggView.build(
-          store, keeperBaseIdx, ci.componentsAt(e - 1), "keeper_state")
-        // catch up from the labeling's O(delta) CDC: inserts are the
-        // upserts, every touched doc is a delete key (the map-view
-        // delete-then-insert contract — tombstoned docs simply re-insert
-        // nothing)
-        val delta = ci.changes(e - 1, e)
-        val ups = delta.filter(col("change_type") === "insert")
-          .select("doc_id", "component")
-        val delKeys = delta.select(col("doc_id").cast("string").as("src_key")).distinct()
-        v.refresh(keeperBaseIdx, ups, Some(delKeys))
-        Views.markUnitDone(store.baseDir, unit)
-        v
-      }
-    })
+      val e = ci.epoch
+      val v = graft.engine.BucketedAggView.build(
+        store, keeperBaseIdx, ci.componentsAt(e - 1), "keeper_state")
+      // catch up from the labeling's O(delta) CDC: inserts are the
+      // upserts, every touched doc is a delete key (the map-view
+      // delete-then-insert contract — tombstoned docs simply re-insert
+      // nothing)
+      val delta = ci.changes(e - 1, e)
+      val ups = delta.filter(col("change_type") === "insert")
+        .select("doc_id", "component")
+      val delKeys = delta.select(col("doc_id").cast("string").as("src_key")).distinct()
+      v.refresh(keeperBaseIdx, ups, Some(delKeys))
+      v
+    }
+  }
 
   /** The components labeling built PURELY through streaming micro-batches
     * ([[graft.streaming.StreamingPairGraph]] with the labeling chained):
@@ -923,30 +855,27 @@ object PipelineQueries {
     * running per micro-batch, each stage off the previous stage's CDC.
     * The final labeling must hash-match the from-scratch resolution over
     * the modified corpus (same oracle as the batch-incremental path). */
-  private val streamedComps =
-    scala.collection.concurrent.TrieMap.empty[String, ComponentsIndex]
-  private def streamedComponentsIdx(s: SparkSession, dir: String): ComponentsIndex =
-    streamedComps.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
+  private def streamedComponentsIdx(s: SparkSession, dir: String): ComponentsIndex = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, "compgraph_stream")(
+      new ComponentsIndex(s, store, "compgraph_stream")) {
       val ci = new ComponentsIndex(s, store, "compgraph_stream")
-      if (!Views.unitDone(store.baseDir, "compgraph_stream")) {
-        val g = new PairGraphIndex(s, store,
-          "pairgraph_stream", MaxShingleDf, JaccardThreshold)
-        val spg = new graft.streaming.StreamingPairGraph(g, Some(ci))
-        val d = docs(s, dir)
-        (0 to 2).foreach(r =>
-          spg.applyBatch(d.filter(col("doc_id") % 3 === r)
-            .select("doc_id", "text")))
-        val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-          .select(col("doc_id"), lit("spark join spark stream").as("text"),
-            lit(false).as("deleted"))
-        val dels = d.filter(col("doc_id") % 41 === 0)
-          .select(col("doc_id"), lit("").as("text"), lit(true).as("deleted"))
-        spg.applyBatch(ups.unionByName(dels))
-        Views.markUnitDone(store.baseDir, "compgraph_stream")
-      }
+      val g = new PairGraphIndex(s, store,
+        "pairgraph_stream", MaxShingleDf, JaccardThreshold)
+      val spg = new graft.streaming.StreamingPairGraph(g, Some(ci))
+      val d = docs(s, dir)
+      (0 to 2).foreach(r =>
+        spg.applyBatch(d.filter(col("doc_id") % 3 === r)
+          .select("doc_id", "text")))
+      val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
+        .select(col("doc_id"), lit("spark join spark stream").as("text"),
+          lit(false).as("deleted"))
+      val dels = d.filter(col("doc_id") % 41 === 0)
+        .select(col("doc_id"), lit("").as("text"), lit(true).as("deleted"))
+      spg.applyBatch(ups.unionByName(dels))
       ci
-    })
+    }
+  }
 
   /** EXACT dedup as a MAINTAINED index: a [[graft.engine.BucketedAggView]]
     * over `content_hash → doc_id` emissions, whose state rows ARE the
@@ -960,27 +889,21 @@ object PipelineQueries {
   private val exactDedupIdx = MapIndex.columns("exact_dedup_base")(
     col("doc_id").cast("string"),
     array(emit(md5(col("text")), col("doc_id"))))
-  private val exactDedupViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedAggView]
-  private def exactDedupView(s: SparkSession, dir: String): graft.engine.BucketedAggView =
-    exactDedupViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "exact_dedup"
-      if (Views.unitDone(store.baseDir, unit))
-        graft.engine.BucketedAggView.attach(store, "exact_dedup_state")
-      else {
-        val d = docs(s, dir).select(col("doc_id").cast("long"), col("text"))
-        val v = graft.engine.BucketedAggView.build(
-          store, exactDedupIdx, d, "exact_dedup_state")
-        val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-          .withColumn("text", lit("spark join spark stream"))
-        val dels = d.filter(col("doc_id") % 41 === 0)
-          .select(col("doc_id").cast("string").as("src_key"))
-        v.refresh(exactDedupIdx, ups, Some(dels))
-        Views.markUnitDone(store.baseDir, unit)
-        v
-      }
-    })
+  private def exactDedupView(s: SparkSession, dir: String): graft.engine.BucketedAggView = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, "exact_dedup")(
+      graft.engine.BucketedAggView.attach(store, "exact_dedup_state")) {
+      val d = docs(s, dir).select(col("doc_id").cast("long"), col("text"))
+      val v = graft.engine.BucketedAggView.build(
+        store, exactDedupIdx, d, "exact_dedup_state")
+      val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
+        .withColumn("text", lit("spark join spark stream"))
+      val dels = d.filter(col("doc_id") % 41 === 0)
+        .select(col("doc_id").cast("string").as("src_key"))
+      v.refresh(exactDedupIdx, ups, Some(dels))
+      v
+    }
+  }
 
   /** Per-document mixture inputs as a MAINTAINED map view: one emission
     * per doc keyed by its source, carrying exactly what the
@@ -1001,16 +924,12 @@ object PipelineQueries {
     // the touched sources' buckets — the partition-scoped I/O contract
     // the store's own incremental thesis demands of corpus-sized state
     val store = Views.bucketedStore(s, dir)
-    val unit = "mixture"
-    if (!Views.unitDone(store.baseDir, unit)) {
+    Views.unit(store.baseDir, "mixture")(()) {
       val d = docs(s, dir)
       store.materialize(mixtureIdx, d)
-      val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .withColumn("text", lit("spark join spark stream"))
-      val dels = d.filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("src_key")).distinct()
+      val (ups, dels) = docChangeBatch(d)
       store.refresh(mixtureIdx, ups, Some(dels))
-      Views.markUnitDone(store.baseDir, unit)
+      ()
     }
     store.df(mixtureIdx.name)
   }
@@ -1163,12 +1082,8 @@ object PipelineQueries {
   /** Drop every per-JVM cache — lets a spec simulate a fresh process
     * against a durable store root (the reuse path is disk-gated). */
   private[graft] def resetCachesForTest(): Unit = {
-    pairGraphs.clear(); winnowGraphs.clear(); baseComps.clear()
-    compactPairGraphs.clear()
-    compGraphs.clear(); pairViewBuilt.clear()
-    keeperViews.clear(); streamedComps.clear(); exactDedupViews.clear()
-    lenAggs.clear(); unigramAggs.clear(); lmStreamViews.clear()
-    spanStreamViews.clear(); spanAggViews.clear()
+    pairViewBuilt.clear(); lenAggs.clear(); unigramAggs.clear()
+    lmStreamViews.clear(); spanStreamViews.clear()
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

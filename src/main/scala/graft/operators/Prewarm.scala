@@ -48,19 +48,14 @@ object Prewarm {
     }
   }
 
-  /** One pool over EVERY family's steps — cross-family overlap lets the
-    * cheap families back-fill the expensive ones' stragglers (guide
-    * §2.6) instead of five sequential pools each draining to a tail.
-    * Families share no builders (disjoint view names, per-key locks
-    * guard the few shared memos), so the combined pool is as safe as
-    * the per-family ones. */
   /** Measured sequential step seconds (fresh sf0.1 store, round-18
     * baseline — plans/r18/prewarm_baseline.log): longest-processing-time
     * ordering keeps the pool's tail short (a 5-minute step started last
     * IS the wall-clock tail). Unlisted steps keep declared order after
     * the heavies; staleness only costs packing efficiency, never
-    * correctness. */
-  private val measuredWeight: Map[String, Int] = Map(
+    * correctness — but every key must name a registered step
+    * (PrewarmSpec), or a renamed step silently loses its place. */
+  private[graft] val measuredWeight: Map[String, Int] = Map(
     "pipeline/streamedLmViews" -> 288,
     "mapindex/streamedOrdersCustomerView" -> 180,
     "mapindex/ordersCustomerView" -> 162,
@@ -81,19 +76,26 @@ object Prewarm {
     "pipeline/incBm25View" -> 71,
   )
 
-  def all(spark: SparkSession, dir: String): Unit = {
+  /** Every family's build steps, named `<family>/<step>`. */
+  private[graft] def steps(spark: SparkSession, dir: String): Seq[(String, () => Unit)] = {
     def tag(f: String, steps: Seq[(String, () => Unit)]) =
       steps.map { case (n, b) => (s"$f/$n", b) }
-    val steps =
-      tag("mapindex", MapIndexQueries.prewarmSteps(spark, dir)) ++
+    tag("mapindex", MapIndexQueries.prewarmSteps(spark, dir)) ++
       tag("similarity", SimilarityQueries.prewarmSteps(spark, dir)) ++
       tag("pipeline", PipelineQueries.prewarmSteps(spark, dir)) ++
       tag("relational", RelationalQueries.prewarmSteps(spark, dir)) ++
       tag("layout", LayoutQueries.prewarmSteps(spark, dir))
-    // stable sort: heavies first by measured weight, everything else in
-    // declared order behind them
-    run(spark, "all", steps.sortBy { case (n, _) => -measuredWeight.getOrElse(n, 0) })
   }
+
+  /** One pool over EVERY family's steps — cross-family overlap lets the
+    * cheap families back-fill the expensive ones' stragglers instead of
+    * five sequential pools each draining to a tail.
+    * Steps that reach the same build unit serialize on its lock
+    * ([[graft.engine.Views.unit]]), so overlap never builds a unit twice.
+    * Stable sort: heavies first by measured weight, everything else in
+    * declared order behind them. */
+  def all(spark: SparkSession, dir: String): Unit =
+    run(spark, "all", steps(spark, dir).sortBy { case (n, _) => -measuredWeight.getOrElse(n, 0) })
 
   def run(spark: SparkSession, family: String,
       steps: Seq[(String, () => Unit)]): Unit = {

@@ -345,11 +345,6 @@ object SimilarityQueries {
       "ivfpq_bulk" -> recall(ivfpqTopKBulk(s, dir), bruteMod))
   }
 
-  /** Per-JVM cache of the maintained IVF cell view and the centroids it
-    * is currently serving with (they diverge from [[ivfCentroidsFor]]'s
-    * train-time model only when a drift re-fit fired). */
-  private val ivfViews = TrieMap.empty[String, (BucketedViewStore, Array[Array[Double]])]
-
   /** Build the persisted cell view on the ORIGINAL corpus, then push the
     * deterministic change batch through it. Drift gate: if the batch
     * touches more than [[RefitDriftBound]] of the corpus the quantizer is
@@ -360,36 +355,47 @@ object SimilarityQueries {
     * durable under `graft.views.root`); a durable reopen over an
     * unchanged corpus serves the completed unit as-is, probing with the
     * PERSISTED centroid model the stored cells were assigned under. */
-  private def ivfCellsView(s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]]) =
-    ivfViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "emb_ivf_cells"
-      if (Views.unitDone(store.baseDir, unit)) {
-        val cents = Views.readModel(store.baseDir, unit).get.map(_.toArray).toArray
-        (store, cents)
-      } else {
-        val e = emb(s, dir)
-        val cents = ivfCentroidsFor(s, dir)
-        store.materialize(ivfIdx(cents), e)
-        val (ups, dels) = embChangeBatch(e)
-        // two count() actions over delta-sized frames — refresh-time cost,
-        // same order as the refresh itself
-        val changed = ups.count() + dels.count()
-        val served =
-          if (changed > e.count() * RefitDriftBound) {
-            val m = modifiedEmb(s, dir)
-            val refit = ivfCentroids(m)
-            store.materialize(ivfIdx(refit), m)
-            refit
-          } else {
-            store.refresh(ivfIdx(cents), ups, Some(dels))
-            cents
-          }
-        Views.writeModel(store.baseDir, unit, served.map(_.toSeq).toSeq)
-        Views.markUnitDone(store.baseDir, unit)
-        (store, served)
-      }
-    })
+  private def ivfCellsView(s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]]) = {
+    val store = Views.bucketedStore(s, dir)
+    val unit = "emb_ivf_cells"
+    Views.unit(store.baseDir, unit)((store, readCentroids(store, unit))) {
+      val e = emb(s, dir)
+      val cents = ivfCentroidsFor(s, dir)
+      store.materialize(ivfIdx(cents), e)
+      val (ups, dels) = embChangeBatch(e)
+      // two count() actions over delta-sized frames — refresh-time cost,
+      // same order as the refresh itself
+      val changed = ups.count() + dels.count()
+      val served =
+        if (changed > e.count() * RefitDriftBound) {
+          val m = modifiedEmb(s, dir)
+          val refit = ivfCentroids(m)
+          store.materialize(ivfIdx(refit), m)
+          refit
+        } else {
+          store.refresh(ivfIdx(cents), ups, Some(dels))
+          cents
+        }
+      Views.writeModel(store.baseDir, unit, served.map(_.toSeq).toSeq)
+      (store, served)
+    }
+  }
+
+  /** A unit's persisted centroid model (one row per centroid). */
+  private def readCentroids(store: BucketedViewStore, unit: String): Array[Array[Double]] =
+    Views.readModel(store.baseDir, unit).get.map(_.toArray).toArray
+
+  /** A unit's persisted (centroids, PQ codebooks) model: 64-dim centroid
+    * rows ++ 8-dim codebook rows (m-major, k-minor) — the row LENGTH
+    * separates the two families (a flat-PQ model has no centroid rows). */
+  private def readIvfpqModel(store: BucketedViewStore,
+      unit: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val rows = Views.readModel(store.baseDir, unit).get
+    val cents = rows.filter(_.length == 64).map(_.toArray).toArray
+    val flat = rows.filter(_.length == PqSubDim).map(_.toArray).toArray
+    val ks = flat.length / PqM
+    (cents, Array.tabulate(PqM)(m => Array.tabulate(ks)(k => flat(m * ks + k))))
+  }
 
   // ---------------------------------------------------------------------
   // Persisted, incrementally-maintained LSH band index
@@ -414,29 +420,22 @@ object SimilarityQueries {
              |    'emit_value', named_struct('vec_id', vec_id, 'v', v, 'norm', norm)))
              |""".stripMargin))
 
-  /** Per-JVM cache of the maintained LSH band view (the [[ivfViews]]
-    * pattern; no model element — the hyperplanes are deterministic). */
-  private val lshViews = TrieMap.empty[String, BucketedViewStore]
-
   /** Build the persisted band view on the ORIGINAL corpus, then push the
     * SAME deterministic change batch as the IVF index through its refresh
     * path — `%37` vectors re-banded at their reversal, `%41` retracted.
     * No model element (the hyperplanes are seeded-deterministic), so a
     * durable reopen needs only the completion marker to serve as-is. */
-  private def lshBandsView(s: SparkSession, dir: String): BucketedViewStore =
-    lshViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "emb_lsh_bands"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        VectorFunctions.register(s)
-        val e = emb(s, dir)
-        store.materialize(lshIdx, e)
-        val (ups, dels) = embChangeBatch(e)
-        store.refresh(lshIdx, ups, Some(dels))
-        Views.markUnitDone(store.baseDir, unit)
-      }
+  private def lshBandsView(s: SparkSession, dir: String): BucketedViewStore = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, "emb_lsh_bands")(store) {
+      VectorFunctions.register(s)
+      val e = emb(s, dir)
+      store.materialize(lshIdx, e)
+      val (ups, dels) = embChangeBatch(e)
+      store.refresh(lshIdx, ups, Some(dels))
       store
-    })
+    }
+  }
 
   /** LSH ANN top-k served from the PERSISTED, incrementally-maintained
     * band view (vs [[lshTopKPairs]]'s per-session banding). The probe
@@ -524,29 +523,28 @@ object SimilarityQueries {
              |    'emit_value', named_struct('vec_id', vec_id, 'v', v, 'norm', norm)))
              |""".stripMargin))
 
-  private val lshStreamViews = TrieMap.empty[String, BucketedViewStore]
-
-  private def lshStreamedView(s: SparkSession, dir: String): BucketedViewStore =
-    lshStreamViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "emb_lsh_stream"
-      if (!Views.unitDone(store.baseDir, unit)) {
-        VectorFunctions.register(s)
-        val smi = new graft.streaming.BucketedStreamingMapIndex(lshStreamIdx, store)
-        val e = emb(s, dir)
-        (0 to 2).foreach(r => smi.applyBatch(e.filter(col("vec_id") % 3 === r)))
-        val (ups, dels) = embChangeBatch(e)
-        val batch = ups
-          .withColumn("key", col("vec_id").cast("string"))
-          .withColumn("deleted", lit(false))
-          .unionByName(
-            dels.select(col("src_key").as("key")).withColumn("deleted", lit(true)),
-            allowMissingColumns = true)
-        smi.applyBatch(batch)
-        Views.markUnitDone(store.baseDir, unit)
-      }
+  private def lshStreamedView(s: SparkSession, dir: String): BucketedViewStore = {
+    val store = Views.bucketedStore(s, dir)
+    Views.unit(store.baseDir, "emb_lsh_stream")(store) {
+      VectorFunctions.register(s)
+      val smi = new graft.streaming.BucketedStreamingMapIndex(lshStreamIdx, store)
+      val e = emb(s, dir)
+      (0 to 2).foreach(r => smi.applyBatch(e.filter(col("vec_id") % 3 === r)))
+      smi.applyBatch(streamedEmbBatch(e))
       store
-    })
+    }
+  }
+
+  /** [[embChangeBatch]] as ONE streaming micro-batch: upserts and
+    * tombstones together, split by the `deleted` column. */
+  private def streamedEmbBatch(e: DataFrame): DataFrame = {
+    val (ups, dels) = embChangeBatch(e)
+    ups.withColumn("key", col("vec_id").cast("string"))
+      .withColumn("deleted", lit(false))
+      .unionByName(
+        dels.select(col("src_key").as("key")).withColumn("deleted", lit(true)),
+        allowMissingColumns = true)
+  }
 
   /** LSH ANN served from the STREAMING-built band view. */
   def lshTopKStreamed(s: SparkSession, dir: String): DataFrame = {
@@ -563,44 +561,33 @@ object SimilarityQueries {
     * frozen model through the bucketed streaming refresh. The trained
     * centroids persist with the view so a durable reopen probes with
     * exactly the model the stored cells were assigned under. */
-  private val ivfStreamViews =
-    TrieMap.empty[String, (BucketedViewStore, Array[Array[Double]])]
 
-  private def ivfStreamedView(s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]]) =
-    ivfStreamViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "emb_ivf_stream"
-      if (Views.unitDone(store.baseDir, unit)) {
-        VectorFunctions.register(s)
-        (store, Views.readModel(store.baseDir, unit).get.map(_.toArray).toArray)
-      } else {
-        VectorFunctions.register(s)
-        val e = emb(s, dir)
-        // the quantizer trains on the FIRST micro-batch ONLY — at stream
-        // start the rest of the corpus has not arrived, so training on it
-        // would be time travel; k-means on a uniform first sample is the
-        // standard streaming-ingest fit (cells ∝ √sample), and every later
-        // batch is assigned under that frozen model
-        val cents = ivfCentroids(e.filter(col("vec_id") % 3 === 0))
-        val idx = MapIndex.columns(unit)(
-          col("vec_id").cast("string"),
-          array(emit(assignExpr(cents).cast("string"),
-            struct(col("vec_id"), col("v"), col("norm")))))
-        val smi = new graft.streaming.BucketedStreamingMapIndex(idx, store)
-        (0 to 2).foreach(r => smi.applyBatch(e.filter(col("vec_id") % 3 === r)))
-        val (ups, dels) = embChangeBatch(e)
-        val batch = ups
-          .withColumn("key", col("vec_id").cast("string"))
-          .withColumn("deleted", lit(false))
-          .unionByName(
-            dels.select(col("src_key").as("key")).withColumn("deleted", lit(true)),
-            allowMissingColumns = true)
-        smi.applyBatch(batch)
-        Views.writeModel(store.baseDir, unit, cents.map(_.toSeq).toSeq)
-        Views.markUnitDone(store.baseDir, unit)
-        (store, cents)
-      }
-    })
+  private def ivfStreamedView(s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]]) = {
+    val store = Views.bucketedStore(s, dir)
+    val unit = "emb_ivf_stream"
+    Views.unit(store.baseDir, unit) {
+      VectorFunctions.register(s)
+      (store, readCentroids(store, unit))
+    } {
+      VectorFunctions.register(s)
+      val e = emb(s, dir)
+      // the quantizer trains on the FIRST micro-batch ONLY — at stream
+      // start the rest of the corpus has not arrived, so training on it
+      // would be time travel; k-means on a uniform first sample is the
+      // standard streaming-ingest fit (cells ∝ √sample), and every later
+      // batch is assigned under that frozen model
+      val cents = ivfCentroids(e.filter(col("vec_id") % 3 === 0))
+      val idx = MapIndex.columns(unit)(
+        col("vec_id").cast("string"),
+        array(emit(assignExpr(cents).cast("string"),
+          struct(col("vec_id"), col("v"), col("norm")))))
+      val smi = new graft.streaming.BucketedStreamingMapIndex(idx, store)
+      (0 to 2).foreach(r => smi.applyBatch(e.filter(col("vec_id") % 3 === r)))
+      smi.applyBatch(streamedEmbBatch(e))
+      Views.writeModel(store.baseDir, unit, cents.map(_.toSeq).toSeq)
+      (store, cents)
+    }
+  }
 
   /** IVF ANN served from the STREAMING-built cell view (the
     * [[ivfTopKFromView]] read path over the streamed store). */
@@ -638,10 +625,6 @@ object SimilarityQueries {
     e.agg(coalesce(max(expr(
       "aggregate(v, cast(0.0 as double), (m, x) -> greatest(m, abs(x)))")), lit(0.0)))
       .head().getDouble(0)
-
-  /** Per-JVM cache of the maintained SQ8 view and the scale it serves
-    * with (diverges from the build-time scale only after a re-fit). */
-  private val sqIncViews = TrieMap.empty[String, (BucketedViewStore, Double)]
 
   /** Build the SQ8 view over `corpus` at its own max-|component| scale;
     * returns that scale (the view's one model parameter). */
@@ -684,23 +667,21 @@ object SimilarityQueries {
     * own max |component| exceeds the stored scale; otherwise the
     * ordinary O(delta) refresh. (The fixture's reversal batch is
     * component-preserving, so it exercises the refresh arm.) */
-  private def sqIncView(s: SparkSession, dir: String): (BucketedViewStore, Double) =
-    sqIncViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "emb_sq8_inc"
-      if (Views.unitDone(store.baseDir, unit)) {
-        VectorFunctions.register(s)
-        (store, Views.readModel(store.baseDir, unit).get.head.head)
-      } else {
-        val e = emb(s, dir)
-        val scale = sqBuild(store, e)
-        val (ups, dels) = embChangeBatch(e)
-        val served = sqApplyBatch(store, scale, ups, Some(dels), modifiedEmb(s, dir))
-        Views.writeModel(store.baseDir, unit, Seq(Seq(served)))
-        Views.markUnitDone(store.baseDir, unit)
-        (store, served)
-      }
-    })
+  private def sqIncView(s: SparkSession, dir: String): (BucketedViewStore, Double) = {
+    val store = Views.bucketedStore(s, dir)
+    val unit = "emb_sq8_inc"
+    Views.unit(store.baseDir, unit) {
+      VectorFunctions.register(s)
+      (store, Views.readModel(store.baseDir, unit).get.head.head)
+    } {
+      val e = emb(s, dir)
+      val scale = sqBuild(store, e)
+      val (ups, dels) = embChangeBatch(e)
+      val served = sqApplyBatch(store, scale, ups, Some(dels), modifiedEmb(s, dir))
+      Views.writeModel(store.baseDir, unit, Seq(Seq(served)))
+      (store, served)
+    }
+  }
 
   /** SQ8 search served from the PERSISTED, incrementally-maintained int8
     * view: integer-dot candidate scan over the stored `(q, qn)` rows
@@ -759,11 +740,6 @@ object SimilarityQueries {
           sqrt(call_function("vec_dot_q", quant, quant).cast("double")).as("qn")))))
   }
 
-  /** Per-JVM cache of the maintained IVF-SQ8 view and the (centroids,
-    * scale) model it serves with. */
-  private val ivfsqViews =
-    TrieMap.empty[String, (BucketedViewStore, Array[Array[Double]], Double)]
-
   /** Build the persisted IVF-SQ8 view on the ORIGINAL corpus, then push
     * the deterministic change batch through its refresh path. BOTH model
     * staleness gates compose: the IVF drift bound (a batch touching more
@@ -774,38 +750,36 @@ object SimilarityQueries {
     * (CDC stays contiguous); otherwise only the changed vectors re-cell
     * and re-quantize through the ordinary O(delta) refresh. Model rows
     * persist as centroids ++ one trailing `[scale]` row. */
-  private def ivfsqCellsView(s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]], Double) =
-    ivfsqViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "emb_ivfsq_cells"
-      if (Views.unitDone(store.baseDir, unit)) {
-        VectorFunctions.register(s)
-        val rows = Views.readModel(store.baseDir, unit).get
-        (store, rows.init.map(_.toArray).toArray, rows.last.head)
-      } else {
-        val e = emb(s, dir)
-        val cents = ivfCentroidsFor(s, dir)
-        val scale = maxAbsComponent(e)
-        store.materialize(ivfsqIdx(cents, scale), e)
-        val (ups, dels) = embChangeBatch(e)
-        val changed = ups.count() + dels.count()
-        val (servedC, servedS) =
-          if (changed > e.count() * RefitDriftBound || maxAbsComponent(ups) > scale) {
-            val m = modifiedEmb(s, dir)
-            val refitC = ivfCentroids(m)
-            val refitS = maxAbsComponent(m)
-            store.materialize(ivfsqIdx(refitC, refitS), m)
-            (refitC, refitS)
-          } else {
-            store.refresh(ivfsqIdx(cents, scale), ups, Some(dels))
-            (cents, scale)
-          }
-        Views.writeModel(store.baseDir, unit,
-          servedC.map(_.toSeq).toSeq :+ Seq(servedS))
-        Views.markUnitDone(store.baseDir, unit)
-        (store, servedC, servedS)
-      }
-    })
+  private def ivfsqCellsView(s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]], Double) = {
+    val store = Views.bucketedStore(s, dir)
+    val unit = "emb_ivfsq_cells"
+    Views.unit(store.baseDir, unit) {
+      VectorFunctions.register(s)
+      val rows = Views.readModel(store.baseDir, unit).get
+      (store, rows.init.map(_.toArray).toArray, rows.last.head)
+    } {
+      val e = emb(s, dir)
+      val cents = ivfCentroidsFor(s, dir)
+      val scale = maxAbsComponent(e)
+      store.materialize(ivfsqIdx(cents, scale), e)
+      val (ups, dels) = embChangeBatch(e)
+      val changed = ups.count() + dels.count()
+      val (servedC, servedS) =
+        if (changed > e.count() * RefitDriftBound || maxAbsComponent(ups) > scale) {
+          val m = modifiedEmb(s, dir)
+          val refitC = ivfCentroids(m)
+          val refitS = maxAbsComponent(m)
+          store.materialize(ivfsqIdx(refitC, refitS), m)
+          (refitC, refitS)
+        } else {
+          store.refresh(ivfsqIdx(cents, scale), ups, Some(dels))
+          (cents, scale)
+        }
+      Views.writeModel(store.baseDir, unit,
+        servedC.map(_.toSeq).toSeq :+ Seq(servedS))
+      (store, servedC, servedS)
+    }
+  }
 
   /** IVF-SQ8 search from the PERSISTED composed index: the probe's
     * nProbe cell ids prune the stored scan (pushed In-filter —
@@ -1208,37 +1182,27 @@ object SimilarityQueries {
     }
   }
 
-  /** Per-JVM cache of the maintained flat-PQ view + its served model. */
-  private val pqIncViews =
-    TrieMap.empty[String, (BucketedViewStore, Array[Array[Array[Double]]])]
-
   /** Build the flat-PQ view on the ORIGINAL corpus, then push the shared
     * deterministic change batch through [[pqApplyBatch]]'s gate. Model
     * rows persist as 8-dim codebook rows (m-major) ++ one trailing
     * `[baseErr]` row (length separates the families on reopen). */
-  private def pqIncView(s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Array[Double]]]) =
-    pqIncViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "emb_pq_inc"
-      if (Views.unitDone(store.baseDir, unit)) {
-        VectorFunctions.register(s)
-        val rows = Views.readModel(store.baseDir, unit).get
-        val flat = rows.filter(_.length == PqSubDim).map(_.toArray).toArray
-        val ks = flat.length / PqM
-        val books = Array.tabulate(PqM)(m => Array.tabulate(ks)(k => flat(m * ks + k)))
-        (store, books)
-      } else {
-        val e = emb(s, dir)
-        val (books, baseErr) = pqIncBuild(store, e)
-        val (ups, dels) = embChangeBatch(e)
-        val (servedB, servedErr) =
-          pqApplyBatch(store, books, baseErr, ups, Some(dels), modifiedEmb(s, dir))
-        Views.writeModel(store.baseDir, unit,
-          servedB.flatten.map(_.toSeq).toSeq :+ Seq(servedErr))
-        Views.markUnitDone(store.baseDir, unit)
-        (store, servedB)
-      }
-    })
+  private def pqIncView(s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Array[Double]]]) = {
+    val store = Views.bucketedStore(s, dir)
+    val unit = "emb_pq_inc"
+    Views.unit(store.baseDir, unit) {
+      VectorFunctions.register(s)
+      (store, readIvfpqModel(store, unit)._2)
+    } {
+      val e = emb(s, dir)
+      val (books, baseErr) = pqIncBuild(store, e)
+      val (ups, dels) = embChangeBatch(e)
+      val (servedB, servedErr) =
+        pqApplyBatch(store, books, baseErr, ups, Some(dels), modifiedEmb(s, dir))
+      Views.writeModel(store.baseDir, unit,
+        servedB.flatten.map(_.toSeq).toSeq :+ Seq(servedErr))
+      (store, servedB)
+    }
+  }
 
   /** Flat-PQ search served from the PERSISTED, incrementally-maintained
     * code view: ADC scan over the stored 8-byte codes (the probe's LUT
@@ -1410,10 +1374,6 @@ object SimilarityQueries {
     }
   }
 
-  /** Per-JVM cache of the maintained IVF-PQ view + the model it serves. */
-  private val ivfpqViews =
-    TrieMap.empty[String, (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]])]
-
   /** Build the persisted IVF-PQ view on the ORIGINAL corpus, then push the
     * shared change batch through its refresh path. Staleness gate = the
     * IVF drift bound (a batch above [[RefitDriftBound]] of the corpus
@@ -1423,38 +1383,32 @@ object SimilarityQueries {
     * codebook rows (m-major, k-minor) — the row LENGTH separates the two
     * families on reopen. */
   private def ivfpqCellsView(
-      s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]]) =
-    ivfpqViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "emb_ivfpq_cells"
-      if (Views.unitDone(store.baseDir, unit)) {
-        VectorFunctions.register(s)
-        val rows = Views.readModel(store.baseDir, unit).get
-        val cents = rows.filter(_.length == 64).map(_.toArray).toArray
-        val flat = rows.filter(_.length == PqSubDim).map(_.toArray).toArray
-        val ks = flat.length / PqM
-        val books = Array.tabulate(PqM)(m => Array.tabulate(ks)(k => flat(m * ks + k)))
-        (store, cents, books)
-      } else {
-        val e = emb(s, dir)
-        val cents = ivfCentroidsFor(s, dir)
-        val books = ivfpqBooksFor(s, dir, cents)
-        val baseErr = pqMeanSqError(residualsOf(e, cents), books)
-        store.materialize(ivfpqIdx(cents, books), e)
-        val (ups, dels) = embChangeBatch(e)
-        // BOTH staleness gates compose in [[ivfpqApplyBatch]]: the IVF
-        // drift bound AND the codebook reconstruction-error gate (the PQ
-        // analog of the SQ clamp gate); either firing re-fits both model
-        // families and re-materializes through the store's
-        // full-retraction rebuild (CDC stays contiguous)
-        val (servedC, servedB, _) = ivfpqApplyBatch(store, unit,
-          cents, books, baseErr, ups, Some(dels), modifiedEmb(s, dir), e.count())
-        Views.writeModel(store.baseDir, unit,
-          servedC.map(_.toSeq).toSeq ++ servedB.flatten.map(_.toSeq).toSeq)
-        Views.markUnitDone(store.baseDir, unit)
-        (store, servedC, servedB)
-      }
-    })
+      s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val store = Views.bucketedStore(s, dir)
+    val unit = "emb_ivfpq_cells"
+    Views.unit(store.baseDir, unit) {
+      VectorFunctions.register(s)
+      val (cents, books) = readIvfpqModel(store, unit)
+      (store, cents, books)
+    } {
+      val e = emb(s, dir)
+      val cents = ivfCentroidsFor(s, dir)
+      val books = ivfpqBooksFor(s, dir, cents)
+      val baseErr = pqMeanSqError(residualsOf(e, cents), books)
+      store.materialize(ivfpqIdx(cents, books), e)
+      val (ups, dels) = embChangeBatch(e)
+      // BOTH staleness gates compose in [[ivfpqApplyBatch]]: the IVF
+      // drift bound AND the codebook reconstruction-error gate (the PQ
+      // analog of the SQ clamp gate); either firing re-fits both model
+      // families and re-materializes through the store's
+      // full-retraction rebuild (CDC stays contiguous)
+      val (servedC, servedB, _) = ivfpqApplyBatch(store, unit,
+        cents, books, baseErr, ups, Some(dels), modifiedEmb(s, dir), e.count())
+      Views.writeModel(store.baseDir, unit,
+        servedC.map(_.toSeq).toSeq ++ servedB.flatten.map(_.toSeq).toSeq)
+      (store, servedC, servedB)
+    }
+  }
 
   /** The SECOND deterministic corpus change batch, applied on top of
     * [[embChangeBatch]]'s result (`m1` = the once-modified corpus):
@@ -1479,10 +1433,6 @@ object SimilarityQueries {
         when((col("vec_id") % 37 === 0) =!= (col("vec_id") % 31 === 0),
           reverse(col("v"))).otherwise(col("v")))
 
-  /** Per-JVM cache of the TWICE-maintained IVF-PQ view + its model. */
-  private val ivfpqIncViews =
-    TrieMap.empty[String, (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]])]
-
   /** The multi-epoch maintenance gate for the composed index: build the
     * view on the ORIGINAL corpus (epoch 0), then push TWO successive
     * change batches through [[ivfpqApplyBatch]] (epochs 1 and 2). Both
@@ -1494,37 +1444,31 @@ object SimilarityQueries {
     * store unit from [[ivfpqCellsView]] so the single-batch queries keep
     * their epoch arithmetic. */
   private def ivfpqIncView(
-      s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]]) =
-    ivfpqIncViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "emb_ivfpq_inc"
-      if (Views.unitDone(store.baseDir, unit)) {
-        VectorFunctions.register(s)
-        val rows = Views.readModel(store.baseDir, unit).get
-        val cents = rows.filter(_.length == 64).map(_.toArray).toArray
-        val flat = rows.filter(_.length == PqSubDim).map(_.toArray).toArray
-        val ks = flat.length / PqM
-        val books = Array.tabulate(PqM)(m => Array.tabulate(ks)(k => flat(m * ks + k)))
-        (store, cents, books)
-      } else {
-        val e = emb(s, dir)
-        val cents = ivfCentroidsFor(s, dir)
-        val books = ivfpqBooksFor(s, dir, cents)
-        val baseErr = pqMeanSqError(residualsOf(e, cents), books)
-        store.materialize(ivfpqIdxNamed(unit, cents, books), e)
-        val (ups1, dels1) = embChangeBatch(e)
-        val (c1, b1, err1) = ivfpqApplyBatch(store, unit,
-          cents, books, baseErr, ups1, Some(dels1), modifiedEmb(s, dir), e.count())
-        val m1 = modifiedEmb(s, dir)
-        val (ups2, dels2) = embChangeBatch2(m1)
-        val (c2, b2, _) = ivfpqApplyBatch(store, unit,
-          c1, b1, err1, ups2, Some(dels2), modifiedEmb2(s, dir), m1.count())
-        Views.writeModel(store.baseDir, unit,
-          c2.map(_.toSeq).toSeq ++ b2.flatten.map(_.toSeq).toSeq)
-        Views.markUnitDone(store.baseDir, unit)
-        (store, c2, b2)
-      }
-    })
+      s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val store = Views.bucketedStore(s, dir)
+    val unit = "emb_ivfpq_inc"
+    Views.unit(store.baseDir, unit) {
+      VectorFunctions.register(s)
+      val (cents, books) = readIvfpqModel(store, unit)
+      (store, cents, books)
+    } {
+      val e = emb(s, dir)
+      val cents = ivfCentroidsFor(s, dir)
+      val books = ivfpqBooksFor(s, dir, cents)
+      val baseErr = pqMeanSqError(residualsOf(e, cents), books)
+      store.materialize(ivfpqIdxNamed(unit, cents, books), e)
+      val (ups1, dels1) = embChangeBatch(e)
+      val (c1, b1, err1) = ivfpqApplyBatch(store, unit,
+        cents, books, baseErr, ups1, Some(dels1), modifiedEmb(s, dir), e.count())
+      val m1 = modifiedEmb(s, dir)
+      val (ups2, dels2) = embChangeBatch2(m1)
+      val (c2, b2, _) = ivfpqApplyBatch(store, unit,
+        c1, b1, err1, ups2, Some(dels2), modifiedEmb2(s, dir), m1.count())
+      Views.writeModel(store.baseDir, unit,
+        c2.map(_.toSeq).toSeq ++ b2.flatten.map(_.toSeq).toSeq)
+      (store, c2, b2)
+    }
+  }
 
   /** IVF-PQ search from the twice-maintained view — the serving path
     * behind `sim_ivfpq_incremental`, graded against exact top-k on the
@@ -1803,9 +1747,6 @@ object SimilarityQueries {
     rankTopK(cand)
   }
 
-  /** Per-JVM cache of the compacted IVF view + the model it serves. */
-  private val ivfCmpViews = TrieMap.empty[String, (BucketedViewStore, Array[Array[Double]])]
-
   /** The [[ivfCellsView]] history with a COMPACTION epoch on top — the
     * ANN twin of the pair store's `dedup_pairs_compacted` gate: build
     * (epoch 0) → change-batch refresh (epoch 1) → `compact` (epoch 2 —
@@ -1813,32 +1754,30 @@ object SimilarityQueries {
     * bucket and contributes NO CDC rows). A long-lived index accreting
     * daily deltas degrades into many small files per bucket without
     * this; serving afterwards must observe nothing but faster scans. */
-  private def ivfCmpView(s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]]) =
-    ivfCmpViews.getOrElseUpdate(dir, {
-      val store = Views.bucketedStore(s, dir)
-      val unit = "emb_ivf_cmp"
-      if (Views.unitDone(store.baseDir, unit)) {
-        VectorFunctions.register(s)
-        (store, Views.readModel(store.baseDir, unit).get.map(_.toArray).toArray)
-      } else {
-        val e = emb(s, dir)
-        val cents = ivfCentroidsFor(s, dir)
-        val idx = MapIndex.columns(unit)(
-          col("vec_id").cast("string"),
-          array(emit(assignExpr(cents).cast("string"),
-            struct(col("vec_id"), col("v"), col("norm")))))
-        store.materialize(idx, e)
-        val (ups, dels) = embChangeBatch(e)
-        store.refresh(idx, ups, Some(dels))
-        // maxFilesPerBucket = 0 forces every live bucket through the
-        // fold (this fixture's buckets are single-file already; the gate
-        // is about the epoch semantics, not the file counts)
-        store.compact(unit, maxFilesPerBucket = 0)
-        Views.writeModel(store.baseDir, unit, cents.map(_.toSeq).toSeq)
-        Views.markUnitDone(store.baseDir, unit)
-        (store, cents)
-      }
-    })
+  private def ivfCmpView(s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]]) = {
+    val store = Views.bucketedStore(s, dir)
+    val unit = "emb_ivf_cmp"
+    Views.unit(store.baseDir, unit) {
+      VectorFunctions.register(s)
+      (store, readCentroids(store, unit))
+    } {
+      val e = emb(s, dir)
+      val cents = ivfCentroidsFor(s, dir)
+      val idx = MapIndex.columns(unit)(
+        col("vec_id").cast("string"),
+        array(emit(assignExpr(cents).cast("string"),
+          struct(col("vec_id"), col("v"), col("norm")))))
+      store.materialize(idx, e)
+      val (ups, dels) = embChangeBatch(e)
+      store.refresh(idx, ups, Some(dels))
+      // maxFilesPerBucket = 0 forces every live bucket through the
+      // fold (this fixture's buckets are single-file already; the gate
+      // is about the epoch semantics, not the file counts)
+      store.compact(unit, maxFilesPerBucket = 0)
+      Views.writeModel(store.baseDir, unit, cents.map(_.toSeq).toSeq)
+      (store, cents)
+    }
+  }
 
   /** IVF ANN served from the COMPACTED store — the serving path behind
     * `sim_ivf_compacted`. */
@@ -1930,10 +1869,7 @@ object SimilarityQueries {
   /** Drop every per-JVM cache — lets a spec simulate a fresh process
     * against a durable store root (the reuse path is disk-gated). */
   private[graft] def resetCachesForTest(): Unit = {
-    ivfViews.clear(); lshViews.clear(); sqIncViews.clear(); sqViews.clear()
-    ivfsqViews.clear(); lshStreamViews.clear(); centroidCache.clear()
-    ivfpqViews.clear(); pqBookCache.clear(); pqIncViews.clear()
-    ivfStreamViews.clear(); ivfpqIncViews.clear(); ivfCmpViews.clear()
+    sqViews.clear(); centroidCache.clear(); pqBookCache.clear()
   }
 
   /** recall bounds asserted by the invariant queries below — measured at

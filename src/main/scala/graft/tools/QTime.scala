@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev-loop timing/plan harness (guide §1): time ONE query's serve path
@@ -17,23 +16,7 @@ object QTime {
     val runs = sys.env.getOrElse("SPARK_GRAFT_QT_RUNS", "3").toInt
     val planDir = sys.env.get("SPARK_GRAFT_QT_PLANDIR")
     val tag = sys.env.getOrElse("SPARK_GRAFT_QT_TAG", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // A/B knob for the size-based AQE coalescing experiment (guide §2.2):
-      // parallelismFirst=false coalesces post-shuffle partitions to the
-      // advisory size instead of one-per-core slivers
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      // static conf: size the generated-code cache to the query surface
-      // (stock 100 entries thrashes across ~800 codegen units; same
-      // default as Bench so dev timings match the bench environment)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val names = args.toSeq
     names.foreach { name =>

@@ -45,8 +45,8 @@ class ChangefeedReopenSpec extends AnyFunSuite with SparkSpec {
       val v0 = store.latestVersion("lineitem_byflag_agg").get
       val n0 = store.latestVersion("lineitem_byflag_net").get
       (1 to 5).foreach { i =>
-        // fresh-process simulation: per-JVM memos dropped, same root
-        MapIndexQueries.resetChangefeedCachesForTest()
+        // fresh-process simulation: per-JVM stores and unit memos
+        // dropped, same root
         Views.dropStoresForTest(corpus.toString)
         assert(serve() === first, s"reopen $i changed a gate's feed")
         val st = Views.store(spark, corpus.toString)
@@ -57,7 +57,6 @@ class ChangefeedReopenSpec extends AnyFunSuite with SparkSpec {
       }
     } finally {
       sys.props -= "graft.views.root"
-      MapIndexQueries.resetChangefeedCachesForTest()
       Views.dropStoresForTest(corpus.toString)
     }
   }
