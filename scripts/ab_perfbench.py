@@ -1,10 +1,19 @@
 #!/usr/bin/env python3
-"""A/B the benchmark between two commits: N alternating pairs of
-`python3 perfbench/run.py` runs, each side from its own `git worktree`
-checkout of the commit in a temporary directory.
+"""A/B the benchmark between two source trees: N alternating pairs of
+`python3 perfbench/run.py` runs, one side in each tree.
 
     python3 scripts/ab_perfbench.py --base HEAD~1 --change HEAD \
         --workload view_serve --pairs 10 --seed 23
+    python3 scripts/ab_perfbench.py --base-tree /tmp/parent --change-tree . \
+        --workload view_serve --pairs 5 --seed 53
+
+A side given as a revision (`--base`/`--change`) runs in a `git worktree`
+checkout of that commit in a temporary directory, removed at exit. A side
+given as a directory (`--base-tree`/`--change-tree`) runs in that
+directory as it is, uncommitted edits included, so a working copy can be
+measured before it is committed; the run leaves its build output there
+(`.bench_build/`). The report's first line names each side's kind: a
+commit id for a worktree, `dir <path>` for a directory.
 
 Run it from inside the repository. Every run uses the same seed, run length
 and tracing setting (`--trace 0`, the end-to-end metrics); even pairs run the
@@ -15,7 +24,7 @@ count for neither side) and whether a gain holds: the change wins at least
 nine tenths of the pairs run and the medians differ by more than the
 distance between the base's quartiles. A run that exits non-zero or reports
 an incorrect answer is listed; its pair counts as run but not won.
-Nothing under perfbench/ is changed; the worktrees are removed at exit.
+Nothing under perfbench/ is changed.
 """
 import argparse
 import json
@@ -60,6 +69,8 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--base", default="HEAD~1", help="parent commit (default HEAD~1)")
     ap.add_argument("--change", default="HEAD", help="changed commit (default HEAD)")
+    ap.add_argument("--base-tree", help="run the base side in this directory instead of --base")
+    ap.add_argument("--change-tree", help="run the change side in this directory instead of --change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, required=True)
@@ -67,15 +78,21 @@ def main():
                     help="timed phase per run (default: BENCHMARK.json run_seconds)")
     args = ap.parse_args()
 
-    repo = Path(git("rev-parse", "--show-toplevel", cwd=Path.cwd()))
-    revs = {side: git("rev-parse", "--verify", f"{rev}^{{commit}}", cwd=repo)
-            for side, rev in (("base", args.base), ("change", args.change))}
+    dirs = {"base": args.base_tree, "change": args.change_tree}
+    revs = {side: rev for side, rev in (("base", args.base), ("change", args.change))
+            if dirs[side] is None}
+    repo = Path(git("rev-parse", "--show-toplevel", cwd=Path.cwd())) if revs else None
+    trees = {side: Path(d).resolve() for side, d in dirs.items() if d is not None}
+    labels = {side: f"dir {t}" for side, t in trees.items()}
     tmp = Path(tempfile.mkdtemp(prefix="ab-perfbench-"))
-    trees = {}
+    worktrees = []
     try:
-        for side, sha in revs.items():
+        for side, rev in revs.items():
+            sha = git("rev-parse", "--verify", f"{rev}^{{commit}}", cwd=repo)
+            labels[side] = sha[:10]
             trees[side] = tmp / side
             git("worktree", "add", "--detach", str(trees[side]), sha, cwd=repo)
+            worktrees.append(trees[side])
         bench = json.loads((trees["change"] / "BENCHMARK.json").read_text())
         if args.seconds is None:
             args.seconds = bench["run_seconds"]
@@ -83,23 +100,24 @@ def main():
         for i in range(args.pairs):
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
             for side in order:
-                print(f"pair {i + 1}/{args.pairs}: {side} ({revs[side][:10]})", file=sys.stderr)
+                print(f"pair {i + 1}/{args.pairs}: {side} ({labels[side]})", file=sys.stderr)
                 results[side].append(run_side(trees[side], args))
-        report(bench["end_to_end"], results, revs, args)
+        report(bench["end_to_end"], results, labels, args)
     finally:
-        for t in trees.values():
+        for t in worktrees:
             subprocess.run(["git", "worktree", "remove", "--force", str(t)], cwd=repo,
                            capture_output=True)
-        subprocess.run(["git", "worktree", "prune"], cwd=repo, capture_output=True)
+        if worktrees:
+            subprocess.run(["git", "worktree", "prune"], cwd=repo, capture_output=True)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def report(end_to_end, results, revs, args):
+def report(end_to_end, results, labels, args):
     pairs = [(b, c) for b, c in zip(results["base"], results["change"])
              if b is not None and c is not None]
     failed = {s: sum(r is None for r in rs) for s, rs in results.items()}
     print(f"workload {args.workload}, seed {args.seed}, {args.seconds:g} s per run; "
-          f"base {revs['base'][:10]}, change {revs['change'][:10]}; "
+          f"base {labels['base']}, change {labels['change']}; "
           f"{len(pairs)} complete pairs of {args.pairs} "
           f"(failed runs: base {failed['base']}, change {failed['change']})")
     if not pairs:

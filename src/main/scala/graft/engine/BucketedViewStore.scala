@@ -424,14 +424,7 @@ final class BucketedViewStore(
     }
     val paths = livePaths(name, Emit, covering)
     val src = if (paths.isEmpty) emptyDf(name) else spark.read.parquet(paths: _*)
-    val base = (start, end) match {
-      case (Some(s), Some(e)) =>
-        src.filter(col("emit_key") >= lit(s) && col("emit_key") < lit(e))
-      case (Some(s), None) => src.filter(col("emit_key") >= lit(s))
-      case (None, Some(e)) => src.filter(col("emit_key") < lit(e))
-      case (None, None)    => src
-    }
-    base.orderBy("emit_key", "uid")
+    ViewStore.keyRange(start, end).fold(src)(src.filter).orderBy("emit_key", "uid")
   }
 
   /** Batch keyed read — the set analog of [[get]] for consumers holding a
@@ -459,7 +452,7 @@ final class BucketedViewStore(
       case None => df(name).filter(lit(false)).select("emit_value")
       case Some(v) =>
         spark.read.parquet(bucketPath(name, Emit, b, v))
-          .filter(col("emit_key") === lit(key))
+          .filter(ViewStore.keyIs(key))
           .orderBy("uid").select("emit_value")
     }
   }

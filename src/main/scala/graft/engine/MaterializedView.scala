@@ -14,7 +14,11 @@ import org.apache.spark.sql.functions._
  * schema — the analog of a LevelDB seek on an open snapshot. Range,
  * prefix and point predicates on the clustered `emit_key` column reach
  * the scan as `PushedFilters`, so only the matching files/row-groups are
- * read. `get`/`scan` keep their order through [[ViewStore.ordered]]: a
+ * read. The keys are bound by reference ([[ViewStore.keyIs]],
+ * [[ViewStore.keyRange]]): reads that differ only in their keys generate
+ * the same code, so after the first read of each shape (get, scan,
+ * countRange over a given view schema) a read compiles nothing.
+ * `get`/`scan` keep their order through [[ViewStore.ordered]]: a
  * view that fits one advisory partition is sorted inside one task (one
  * job, no exchange); a larger one keeps the parallel global sort.
  * Maintenance (`index.js:173-249`) is an anti-join + union upsert keyed
@@ -50,18 +54,15 @@ final class MaterializedView(
     ViewStore.ordered(range(start, end), Seq("emit_key", "uid"))
 
   /** The `[start, end)` rows of the current snapshot, unordered. */
-  private def range(start: Option[Any], end: Option[Any]): DataFrame =
-    (start, end) match {
-      case (Some(s), Some(e)) => df.filter(col("emit_key") >= lit(s) && col("emit_key") < lit(e))
-      case (Some(s), None)    => df.filter(col("emit_key") >= lit(s))
-      case (None, Some(e))    => df.filter(col("emit_key") < lit(e))
-      case (None, None)       => df
-    }
+  private def range(start: Option[Any], end: Option[Any]): DataFrame = {
+    val rows = df
+    ViewStore.keyRange(start, end).fold(rows)(rows.filter)
+  }
 
   /** Point/prefix lookup (O8, `index.js:151-172`): all values for one key,
     * in emission order. */
   def get(key: Any): DataFrame =
-    ViewStore.ordered(df.filter(col("emit_key") === lit(key)), Seq("uid")).select("emit_value")
+    ViewStore.ordered(df.filter(ViewStore.keyIs(key)), Seq("uid")).select("emit_value")
 
   /** COUNT over a range — the reference declared but never implemented this
     * (O16 stub, `index.js:148-150`). Counts the filtered rows directly; a

@@ -2,8 +2,9 @@ package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.BasicFileAttributes
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 
 /**
  * Versioned parquet storage for materialized [[MapIndex]] views.
@@ -431,6 +432,19 @@ object ViewStore {
     if (fitsOnePartition(df)) df.coalesce(1).sortWithinPartitions(sortCols: _*)
     else df.orderBy(sortCols: _*)
   }
+
+  /** `emit_key = key`, the point predicate of both stores' `get`. The key
+    * is bound by reference ([[Shims.boundLit]]): reads that differ only in
+    * their key generate the same code and share one compiled class, and
+    * the predicate still pushes into the parquet scan as `EqualTo`. */
+  private[engine] def keyIs(key: Any): Column = col("emit_key") === Shims.boundLit(key)
+
+  /** `start <= emit_key < end` (either bound optional), the range
+    * predicate of both stores' `scan`/`countRange`, bound by reference
+    * like [[keyIs]]; `None` for an unbounded range. */
+  private[engine] def keyRange(start: Option[Any], end: Option[Any]): Option[Column] =
+    (start.map(col("emit_key") >= Shims.boundLit(_)) ++
+      end.map(col("emit_key") < Shims.boundLit(_))).reduceOption(_ && _)
 
   /** The shared cutover of [[clustered]] and [[ordered]]: the optimizer's
     * size estimate at or below the advisory partition size. It reads a

@@ -311,6 +311,63 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("small stored-view reads bind their keys: new keys compile nothing, push down, answer as lit") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions._
+    import graft.engine.{MapIndex, MaterializedView, ViewStore}
+    val s = spark
+    import s.implicits._
+    val store = ViewStore.temp(spark)
+    val src = (1 to 500).map(i => s"k$i" -> i).toDF("key", "test")
+    def view(name: String, key: Column) =
+      MapIndex.columns(name)(col("key"), array(MapIndex.emit(key, col("test")))).materialize(src, store)
+    val ints = view("serve_small", col("test") % 50)
+    val longs = view("serve_small_long", (col("test") % 50).cast("long") + 1000000L)
+    val strings = view("serve_small_str", format_string("k%03d", col("test") % 50))
+
+    // one warm get, scan and countRange, then five keys never read before
+    def reads(k: Int): Unit = {
+      ints.get(k).collect(); ints.scan(Some(k), Some(k + 6)).collect(); ints.countRange(Some(k), Some(k + 6))
+    }
+    reads(3)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Seq(11, 19, 23, 31, 42).foreach(reads)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles === 0L,
+      "reads that differ only in their keys must reuse the compiled classes")
+
+    def plan(df: DataFrame): String = {
+      df.collect()
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    }
+    def lits(lo: Option[Any], hi: Option[Any]): Column =
+      (lo.map(col("emit_key") >= lit(_)) ++ hi.map(col("emit_key") < lit(_))).reduce(_ && _)
+    // Int keys on an int column, Long and String keys on theirs, and Int
+    // keys on the long column: the analyzer casts those, and the folded
+    // cast is a plain literal again
+    val cases = Seq[(String, MaterializedView, Any, Any)](
+      ("int", ints, 7, 13), ("long", longs, 1000007L, 1000013L),
+      ("string", strings, "k007", "k013"), ("int on long", longs, 1000007, 1000013))
+    for ((name, v, k, hi) <- cases) {
+      val get = v.get(k)
+      val p = plan(get)
+      assert(p.contains("EqualTo(emit_key"), s"$name: point lookup must push down:\n$p")
+      val want = v.df.filter(col("emit_key") === lit(k)).orderBy("uid").select("emit_value").collect()
+      assert(want.length === 10 && get.collect().toSeq === want.toSeq, s"$name get")
+      val scan = v.scan(Some(k), Some(hi))
+      val q = plan(scan)
+      assert(q.contains("GreaterThanOrEqual(emit_key") && q.contains("LessThan(emit_key"),
+        s"$name: range bounds must push down:\n$q")
+      for ((lo, up) <- Seq((Some(k), Some(hi)), (Some(k), None), (None, Some(hi)))) {
+        val ref = v.df.filter(lits(lo, up))
+        assert(v.scan(lo, up).collect().toSeq ===
+          ref.orderBy("emit_key", "uid").collect().toSeq, s"$name scan $lo $up")
+        assert(v.countRange(lo, up) === ref.count(), s"$name countRange $lo $up")
+      }
+      assert(v.countRange(Some(k), Some(hi)) === 60L, s"$name range size")
+    }
+  }
+
   test("mapindex_bucketed_get: one bucket read, key pushed into its scan") {
     val df = SparkEntry.queries("mapindex_bucketed_get")(spark, sf)
     df.collect()
