@@ -13,9 +13,12 @@ Method:
     file is a window. A window counts once for each place it occurs,
     provided its content occurs at least twice anywhere under DIR. A
     pasted 10-code-line block therefore adds 2 x 5 = 10 windows.
+  * memos: code lines holding `getOrElseUpdate` (a hand-rolled build memo
+    when it sits outside the memo primitives in `graft.engine.Views`).
+  * triemaps: code lines holding `TrieMap.empty` (one per `TrieMap` val).
 
-Prints one row per file (lines, code lines, duplicate windows), sorted by
-duplicate windows, then the totals.
+Prints one row per file (lines, code lines, duplicate windows, memos,
+triemaps), sorted by duplicate windows, then the totals.
 """
 import collections
 import os
@@ -57,11 +60,15 @@ def main():
     dups = {p: sum(1 for i in range(len(c) - WINDOW + 1)
                    if seen[tuple(c[i:i + WINDOW])] > 1)
             for p, c in code.items()}
-    print(f"{'lines':>7} {'code':>7} {'dup6':>6}  file")
+    memos = {p: sum("getOrElseUpdate" in t for t in c) for p, c in code.items()}
+    tries = {p: sum("TrieMap.empty" in t for t in c) for p, c in code.items()}
+    print(f"{'lines':>7} {'code':>7} {'dup6':>6} {'memos':>6} {'tries':>6}  file")
     for p in sorted(files, key=lambda p: (-dups[p], p)):
-        print(f"{lines[p]:7d} {len(code[p]):7d} {dups[p]:6d}  {os.path.relpath(p, root)}")
+        print(f"{lines[p]:7d} {len(code[p]):7d} {dups[p]:6d} {memos[p]:6d} "
+              f"{tries[p]:6d}  {os.path.relpath(p, root)}")
     print(f"{sum(lines.values()):7d} {sum(len(c) for c in code.values()):7d} "
-          f"{sum(dups.values()):6d}  total ({len(files)} files)")
+          f"{sum(dups.values()):6d} {sum(memos.values()):6d} "
+          f"{sum(tries.values()):6d}  total ({len(files)} files)")
 
 
 if __name__ == "__main__":

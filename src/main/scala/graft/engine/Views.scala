@@ -24,15 +24,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * centroids (SimilarityQueries.corpusFingerprint). Default stays temp:
  * the test/bench driver wants per-run isolation.
  *
- * Multi-step fixtures go through one primitive, [[Views.unit]]: it takes
- * the per-key lock, keeps the per-JVM memo, reopens a unit whose
- * `_UNIT_<unit>` marker exists or else builds it and then writes the
- * marker, and memoizes only after success.
+ * Every operator build memo goes through one of two primitives:
+ *  - [[Views.unit]] for DURABLE multi-step state (a view or aggregate
+ *    taken through several store calls): it takes the per-key lock, keeps
+ *    the per-JVM memo, reopens a unit whose `_UNIT_<unit>` marker exists
+ *    or else builds it and then writes the marker, and memoizes only after
+ *    success;
+ *  - [[Views.cached]] for PER-JVM state (temp stores, session-scoped
+ *    tables, single-materialize views whose own `_LATEST` is the durable
+ *    gate — [[Views.materialized]]): the same lock and memo, no marker.
+ * Memo names are unique per corpus across the three: [[materialized]]
+ * keys by the view name, so a [[cached]] or [[unit]] memo over a view
+ * that is also materialized keys by its builder's name.
  */
 object Views {
   private val stores = TrieMap.empty[String, ViewStore]
   private val bstores = TrieMap.empty[String, BucketedViewStore]
-  private val cache = TrieMap.empty[(String, String), MaterializedView]
+  private val cache = TrieMap.empty[(String, String), Any]
 
   /** Per-key build mutex. `TrieMap.getOrElseUpdate` evaluates its default
     * in EVERY racing thread (one result wins, the others are discarded) —
@@ -46,7 +54,7 @@ object Views {
     * follows the build-dependency DAG (acyclic), so lock order cannot
     * cycle and `synchronized` reentrancy covers self-recursion. */
   private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]
-  def locked[T](key: String)(body: => T): T =
+  private def locked[T](key: String)(body: => T): T =
     buildLocks.computeIfAbsent(key, _ => new Object).synchronized(body)
 
   /** Durable root directory, when configured. */
@@ -142,23 +150,24 @@ object Views {
       .map(_.split(",").toSeq.map(java.lang.Double.parseDouble)))
   }
 
+  /** A view materialized once from `source`. Its own `_LATEST` is the
+    * durable gate: a store that already holds the view (written by a
+    * previous JVM over a fingerprint-identical corpus) serves it without
+    * re-running the materialization. */
   def materialized(spark: SparkSession, sfDir: String, index: MapIndex)
       (source: => DataFrame): MaterializedView =
-    locked(s"view#$sfDir#${index.name}") {
-      cache.getOrElseUpdate((sfDir, index.name), {
-        val st = store(spark, sfDir)
-        // durable hit: the store already holds this view (written by a
-        // previous JVM over a fingerprint-identical corpus) — serve it
-        // without re-running the materialization
-        if (st.latestVersion(index.name).isDefined) st.load(index)
-        else index.materialize(source, st)
-      })
+    cached(sfDir, index.name) {
+      val st = store(spark, sfDir)
+      if (st.latestVersion(index.name).isDefined) st.load(index)
+      else index.materialize(source, st)
     }
 
-  /** Cache an arbitrarily-built view (cascades). */
-  def cached(sfDir: String, name: String)(build: => MaterializedView): MaterializedView =
+  /** Per-JVM memo of one corpus's `build`, under the per-key lock: the
+    * build runs at most once per JVM (until [[dropStoresForTest]]), and a
+    * build that throws memoizes nothing. */
+  def cached[T](sfDir: String, name: String)(build: => T): T =
     locked(s"view#$sfDir#$name") {
-      cache.getOrElseUpdate((sfDir, name), build)
+      cache.getOrElseUpdate((sfDir, name), build).asInstanceOf[T]
     }
 
   /**
@@ -191,10 +200,10 @@ object Views {
       numBuckets = numBuckets, rangeBoundaries = rangeBoundaries)
   }
 
-  /** Drop the cached store handles of one corpus, and the unit memos of
-    * those stores — lets a spec simulate a fresh process reopening the
-    * same durable root (the reuse decision itself is disk-gated, never
-    * cached). */
+  /** Drop the cached store handles of one corpus, the unit memos of
+    * those stores and the corpus's [[cached]] entries — lets a spec
+    * simulate a fresh process reopening the same durable root (the reuse
+    * decision itself is disk-gated, never cached). */
   private[graft] def dropStoresForTest(sfDir: String): Unit = {
     val dirs = stores.remove(sfDir).map(_.baseDir).toSet ++
       bstores.keySet.filter(_.startsWith(s"$sfDir#")).flatMap(bstores.remove).map(_.baseDir)

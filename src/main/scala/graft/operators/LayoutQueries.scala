@@ -1,9 +1,8 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Layout, Tables}
+import graft.engine.{Layout, Tables, Views}
 
 /**
  * Oracle-backed queries over the shuffle-avoidance layout helpers
@@ -16,39 +15,34 @@ import graft.engine.{Layout, Tables}
 object LayoutQueries {
 
   private val Buckets = 8
-  private val built = TrieMap.empty[String, (String, String)]
 
   /** Bucketed copies of orders/customer for one sf dir, built once per JVM
     * (write-time cost, like the map-view prewarm). */
   private def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    built.getOrElseUpdate(dir, {
+    Views.cached(dir, "bucketedTables") {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val o = s"orders_bkt_$tag"
       val c = s"customer_bkt_$tag"
       Layout.saveBucketed(Tables.orders(s, dir), o, "o_custkey", Buckets)
       Layout.saveBucketed(Tables.customer(s, dir), c, "c_custkey", Buckets)
       (o, c)
-    })
-
-  private val builtPartitioned = TrieMap.empty[String, String]
+    }
 
   /** Date-partitioned copy of events for one sf dir, built once per JVM. */
   private def partitionedEvents(s: SparkSession, dir: String): String =
-    builtPartitioned.getOrElseUpdate(dir, {
+    Views.cached(dir, "partitionedEvents") {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val t = s"events_part_$tag"
       Layout.savePartitioned(
         Tables.events(s, dir).withColumn("event_date", to_date(col("ts"))),
         t, "event_date")
       t
-    })
-
-  private val builtZ = TrieMap.empty[String, String]
+    }
 
   /** Z-ordered copy of lineitem on (l_partkey, l_suppkey), built once per
     * JVM. 64 files = 64 compact 2-D tiles. */
   private[graft] def zOrderedLineitem(s: SparkSession, dir: String): String =
-    builtZ.getOrElseUpdate(dir, {
+    Views.cached(dir, "zOrderedLineitem") {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = new org.apache.hadoop.fs.Path(
         s.conf.get("spark.sql.warehouse.dir"), s"lineitem_z_$tag").toString
@@ -57,13 +51,10 @@ object LayoutQueries {
           .select("l_partkey", "l_suppkey", "l_quantity", "l_extendedprice"),
         path, "l_partkey", "l_suppkey", 64)
       path
-    })
+    }
 
   /** Build the bucketed tables eagerly (write-time cost, like the map-view
     * prewarm) so bench timings measure the co-located read path. */
-  def prewarm(s: SparkSession, dir: String): Unit =
-    Prewarm.run(s, "layout", prewarmSteps(s, dir))
-
   private[operators] def prewarmSteps(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq[(String, () => Unit)](
       ("bucketedTables", () => { bucketedTables(s, dir); () }),
       ("partitionedEvents", () => { partitionedEvents(s, dir); () }),

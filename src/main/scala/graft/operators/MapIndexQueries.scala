@@ -47,28 +47,24 @@ object MapIndexQueries {
 
   /** The same index in the bucket-partitioned (100 TB) store, so the scale
     * configuration's read paths run under the driver's correctness gate. */
-  private val bucketedStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
   private def bucketedFlag(s: SparkSession, dir: String): graft.engine.BucketedViewStore =
-    bucketedStores.getOrElseUpdate(dir, {
+    Views.cached(dir, "bucketedFlag") {
       val st = graft.engine.BucketedViewStore.temp(s, numBuckets = 16)
       st.materialize(byFlag, Tables.lineitem(s, dir))
       st
-    })
+    }
 
   /** The same index RANGE-bucketed (boundaries on the flag domain): an O6
     * range scan prunes to covering buckets — the partition-level pruning
     * the hash layout cannot give a range. Boundaries N,R,S put each live
     * flag (A/N/R) in its own bucket, so the [A,N) scan below provably
     * skips R's bucket (PlanAuditSpec asserts the path count). */
-  private val rangeBucketedStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
   private def rangeBucketedFlag(s: SparkSession, dir: String): graft.engine.BucketedViewStore =
-    rangeBucketedStores.getOrElseUpdate(dir, {
+    Views.cached(dir, "rangeBucketedFlag") {
       val st = graft.engine.BucketedViewStore.tempRange(s, Seq("N", "R", "S"))
       st.materialize(byFlag, Tables.lineitem(s, dir))
       st
-    })
+    }
 
   /** The range layout MAINTAINED, not just read: its own view name (the
     * scan/get fixture above stays pinned at epoch 0 for the pruning
@@ -78,16 +74,14 @@ object MapIndexQueries {
     * sidecar are all graded against the identical from-scratch oracle. */
   private val byFlagRangeM = flagIdx("lineitem_byflag_range_m")
 
-  private val rangeMaintStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
   private def rangeMaintained(s: SparkSession, dir: String): graft.engine.BucketedViewStore =
-    rangeMaintStores.getOrElseUpdate(dir, {
+    Views.cached(dir, "rangeMaintained") {
       val st = graft.engine.BucketedViewStore.tempRange(s, Seq("N", "R", "S"))
       val li = Tables.lineitem(s, dir)
       st.materialize(byFlagRangeM, li)
       st.refresh(byFlagRangeM, reflaggedUpserts(li), Some(tombstoneKeys(li)))
       st
-    })
+    }
 
   /** The maintained fixture taken through a COMPACTION epoch after its
     * refresh — the no-change-epoch claim graded through the driver's
@@ -99,17 +93,15 @@ object MapIndexQueries {
     * deterministic regardless of how the refresh's files coalesced. */
   private val byFlagCompact = flagIdx("lineitem_byflag_compact")
 
-  private val compactStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
   private def compactedStore(s: SparkSession, dir: String): graft.engine.BucketedViewStore =
-    compactStores.getOrElseUpdate(dir, {
+    Views.cached(dir, "compactedStore") {
       val st = graft.engine.BucketedViewStore.temp(s, numBuckets = 8)
       val li = Tables.lineitem(s, dir)
       st.materialize(byFlagCompact, li)
       st.refresh(byFlagCompact, reflaggedUpserts(li), Some(tombstoneKeys(li)))
       st.compact(byFlagCompact.name, maxFilesPerBucket = 0)
       st
-    })
+    }
 
   /** Bucket-count DOUBLING (8 → 16) before the shared change batch: the
     * split's exchange-free rewrite (each old bucket fans locally into
@@ -120,17 +112,15 @@ object MapIndexQueries {
     * alone, exactly like a compaction crossing. */
   private val byFlagSplit = flagIdx("lineitem_byflag_split")
 
-  private val splitStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
   private def splitStore(s: SparkSession, dir: String): graft.engine.BucketedViewStore =
-    splitStores.getOrElseUpdate(dir, {
+    Views.cached(dir, "splitStore") {
       val st = graft.engine.BucketedViewStore.temp(s, numBuckets = 8)
       val li = Tables.lineitem(s, dir)
       st.materialize(byFlagSplit, li)
       val wide = st.splitBuckets(byFlagSplit.name)
       wide.refresh(byFlagSplit, reflaggedUpserts(li), Some(tombstoneKeys(li)))
       wide
-    })
+    }
 
   /** Incremental snapshot SHIP: materialize + full ship, then the shared
     * change batch + a second ship that moves only the refresh-touched
@@ -139,10 +129,8 @@ object MapIndexQueries {
     * modified-source oracle. */
   private val byFlagShip = flagIdx("lineitem_byflag_ship")
 
-  private val shipStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
   private def shippedReplica(s: SparkSession, dir: String): graft.engine.BucketedViewStore =
-    shipStores.getOrElseUpdate(dir, {
+    Views.cached(dir, "shippedReplica") {
       val st = graft.engine.BucketedViewStore.temp(s, numBuckets = 8)
       val li = Tables.lineitem(s, dir)
       val destDir = java.nio.file.Files
@@ -152,13 +140,15 @@ object MapIndexQueries {
       st.refresh(byFlagShip, reflaggedUpserts(li), Some(tombstoneKeys(li)))
       st.shipTo(byFlagShip.name, destDir)
       new graft.engine.BucketedViewStore(s, destDir, numBuckets = 8)
-    })
+    }
 
-  private def bucketView(s: SparkSession, dir: String) =
-    Views.cached(dir, byBucket.name) {
+  private def bucketView(s: SparkSession, dir: String) = {
+    val store = Views.store(s, dir)
+    Views.unit(store.baseDir, byBucket.name)(store.load(byBucket)) {
       Views.materialized(s, dir, byOrder)(Tables.lineitem(s, dir))
         .cascadeInto(byBucket)
     }
+  }
 
   /** Schema-free value model: the reference stores arbitrary JSON values
     * (`valueEncoding:'json'`, index.js:113); here the emission value is a
@@ -210,17 +200,22 @@ object MapIndexQueries {
     array(emit(concat_ws("|", col("l_returnflag"), col("l_extendedprice")),
       lit(1L))))
 
-  private val distinctViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.AggView]
   private def distinctView(s: SparkSession, dir: String): graft.engine.AggView =
-    distinctViews.getOrElseUpdate(dir, {
-      val store = Views.store(s, dir)
+    refcountUnit(s, dir, distinctIdx)
+
+  /** One refcount state as a durable build unit: `idx` materialized on
+    * lineitem, its `<name>__state` aggregate built, then the shared
+    * change batch through the aggregate refresh. A reopen attaches. */
+  private def refcountUnit(s: SparkSession, dir: String, idx: MapIndex): graft.engine.AggView = {
+    val store = Views.store(s, dir)
+    val state = s"${idx.name}__state"
+    Views.unit(store.baseDir, idx.name)(graft.engine.AggView.attach(s, store, state)) {
       val li = Tables.lineitem(s, dir)
-      val base = distinctIdx.materialize(li, store)
-      val agg0 = graft.engine.AggView.build(base, "lineitem_flagprice__state")
-      val (_, agg) = agg0.refresh(base, reflaggedUpserts(li), Some(tombstoneKeys(li)))
-      agg
-    })
+      val base = idx.materialize(li, store)
+      graft.engine.AggView.build(base, state)
+        .refresh(base, reflaggedUpserts(li), Some(tombstoneKeys(li)))._2
+    }
+  }
 
   /** The refcount distinct state in the BUCKETED (100 TB) layout: a
     * change batch rewrites only the state buckets of touched
@@ -231,17 +226,15 @@ object MapIndexQueries {
     array(emit(concat_ws("|", col("l_returnflag"), col("l_extendedprice")),
       lit(1L))))
 
-  private val distinctBViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedAggView]
   private def distinctBView(s: SparkSession, dir: String): graft.engine.BucketedAggView =
-    distinctBViews.getOrElseUpdate(dir, {
+    Views.cached(dir, "distinctBView") {
       val store = graft.engine.BucketedViewStore.temp(s, numBuckets = 16)
       val li = Tables.lineitem(s, dir)
       val v = graft.engine.BucketedAggView.build(
         store, distinctIdxB, li, "lineitem_flagprice_b__state")
       v.refresh(distinctIdxB, reflaggedUpserts(li), Some(tombstoneKeys(li)))
       v
-    })
+    }
 
   /** Maintained PERCENTILES from refcount state: quantiles are the
     * classically non-mergeable/non-retractable aggregate, but over a
@@ -259,17 +252,8 @@ object MapIndexQueries {
     array(emit(concat_ws("|", col("l_returnflag"), col("l_quantity").cast("int")),
       lit(1L))))
 
-  private val pctViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.AggView]
   private def percentileView(s: SparkSession, dir: String): graft.engine.AggView =
-    pctViews.getOrElseUpdate(dir, {
-      val store = Views.store(s, dir)
-      val li = Tables.lineitem(s, dir)
-      val base = pctIdx.materialize(li, store)
-      val agg0 = graft.engine.AggView.build(base, "lineitem_flagqty__state")
-      val (_, agg) = agg0.refresh(base, reflaggedUpserts(li), Some(tombstoneKeys(li)))
-      agg
-    })
+    refcountUnit(s, dir, pctIdx)
 
   /** CONTINUOUS-domain maintained quantiles: `l_extendedprice` has no
     * small discrete domain, so the refcount state keys on a FIXED VALUE
@@ -287,17 +271,8 @@ object MapIndexQueries {
     array(emit(concat_ws("|", col("l_returnflag"),
       floor(col("l_extendedprice") / 100).cast("long")), lit(1L))))
 
-  private val pctContViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.AggView]
   private def percentileContView(s: SparkSession, dir: String): graft.engine.AggView =
-    pctContViews.getOrElseUpdate(dir, {
-      val store = Views.store(s, dir)
-      val li = Tables.lineitem(s, dir)
-      val base = pctContIdx.materialize(li, store)
-      val agg0 = graft.engine.AggView.build(base, "lineitem_flaggrid__state")
-      val (_, agg) = agg0.refresh(base, reflaggedUpserts(li), Some(tombstoneKeys(li)))
-      agg
-    })
+    refcountUnit(s, dir, pctContIdx)
 
   /** The quantile state in the BUCKETED (100 TB) layout: the same
     * refcount index through [[graft.engine.BucketedAggView]], so a change
@@ -308,17 +283,15 @@ object MapIndexQueries {
     array(emit(concat_ws("|", col("l_returnflag"), col("l_quantity").cast("int")),
       lit(1L))))
 
-  private val pctBViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedAggView]
   private def percentileBView(s: SparkSession, dir: String): graft.engine.BucketedAggView =
-    pctBViews.getOrElseUpdate(dir, {
+    Views.cached(dir, "percentileBView") {
       val store = graft.engine.BucketedViewStore.temp(s, numBuckets = 16)
       val li = Tables.lineitem(s, dir)
       val v = graft.engine.BucketedAggView.build(
         store, pctIdxB, li, "lineitem_flagqty_b__state")
       v.refresh(pctIdxB, reflaggedUpserts(li), Some(tombstoneKeys(li)))
       v
-    })
+    }
 
   /** Shared percentile serving: discrete (type-1) p50/p95 from refcount
     * `(group, value)` state via a weighted cumulative sum — the windows
@@ -355,18 +328,17 @@ object MapIndexQueries {
     array(emit(concat_ws("|", col("l_returnflag"), col("l_extendedprice")),
       lit(1L))))
 
-  private val distinctSViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.AggView]
-  private def distinctSView(s: SparkSession, dir: String): graft.engine.AggView =
-    distinctSViews.getOrElseUpdate(dir, {
-      val store = Views.store(s, dir)
-      val smi = new graft.streaming.StreamingAggMapIndex(
-        distinctIdxS, store, "lineitem_flagprice_s__state")
+  private def distinctSView(s: SparkSession, dir: String): graft.engine.AggView = {
+    val store = Views.store(s, dir)
+    val state = "lineitem_flagprice_s__state"
+    Views.unit(store.baseDir, distinctIdxS.name)(graft.engine.AggView.attach(s, store, state)) {
+      val smi = new graft.streaming.StreamingAggMapIndex(distinctIdxS, store, state)
       val li = Tables.lineitem(s, dir)
       (0 to 2).foreach(r => smi.applyBatch(li.filter(col("l_orderkey") % 3 === r)))
       smi.applyBatch(streamedChangeBatch(li))
-      graft.engine.AggView.attach(s, store, "lineitem_flagprice_s__state")
-    })
+      graft.engine.AggView.attach(s, store, state)
+    }
+  }
 
   /** The shared deterministic change batch (lineitems of `%97` orders
     * re-flagged to 'X', lineitems of `%89` orders tombstoned) every
@@ -450,18 +422,15 @@ object MapIndexQueries {
     * reads back. */
   private val byFlagAggB = flagIdx("lineitem_byflag_agg_b")
 
-  private val bucketedAggViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedAggView]
-
   private def bucketedAggView(s: SparkSession, dir: String): graft.engine.BucketedAggView =
-    bucketedAggViews.getOrElseUpdate(dir, {
+    Views.cached(dir, "bucketedAggView") {
       val store = graft.engine.BucketedViewStore.temp(s, numBuckets = 16)
       val li = Tables.lineitem(s, dir)
       val v = graft.engine.BucketedAggView.build(
         store, byFlagAggB, li, "lineitem_byflag_agg_b__state")
       v.refresh(byFlagAggB, reflaggedUpserts(li), Some(tombstoneKeys(li)))
       v
-    })
+    }
 
   /** A view built purely through the STREAMING maintenance path
     * ([[graft.streaming.StreamingMapIndex.applyBatch]] micro-batches):
@@ -470,12 +439,9 @@ object MapIndexQueries {
     * streaming write path against the same batch-recompute oracle. */
   private val byFlagStream = flagIdx("lineitem_byflag_stream")
 
-  private val streamViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.MaterializedView]
-
-  private def streamView(s: SparkSession, dir: String): graft.engine.MaterializedView =
-    streamViews.getOrElseUpdate(dir, {
-      val store = Views.store(s, dir)
+  private def streamView(s: SparkSession, dir: String): graft.engine.MaterializedView = {
+    val store = Views.store(s, dir)
+    Views.unit(store.baseDir, byFlagStream.name)(store.load(byFlagStream)) {
       val smi = new graft.streaming.StreamingMapIndex(byFlagStream, store)
       val li = Tables.lineitem(s, dir)
       // micro-batch 0..2: disjoint thirds of the source (bootstrap + two
@@ -483,7 +449,8 @@ object MapIndexQueries {
       (0 to 2).foreach(r => smi.applyBatch(li.filter(col("l_orderkey") % 3 === r)))
       smi.applyBatch(streamedChangeBatch(li))
       store.load(byFlagStream)
-    })
+    }
+  }
 
   /** A downstream consumer maintained purely from the upstream CHANGE
     * FEED: bootstrapped from the v0 snapshot, then caught up to v1 by
@@ -524,18 +491,15 @@ object MapIndexQueries {
     * state must still hash-match the batch recompute. */
   private val byFlagStreamB = flagIdx("lineitem_byflag_stream_b")
 
-  private val bucketedStreamStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.BucketedViewStore]
-
   private def bucketedStreamView(s: SparkSession, dir: String): graft.engine.BucketedViewStore =
-    bucketedStreamStores.getOrElseUpdate(dir, {
+    Views.cached(dir, "bucketedStreamView") {
       val store = graft.engine.BucketedViewStore.temp(s, numBuckets = 16)
       val smi = new graft.streaming.BucketedStreamingMapIndex(byFlagStreamB, store)
       val li = Tables.lineitem(s, dir)
       (0 to 2).foreach(r => smi.applyBatch(li.filter(col("l_orderkey") % 3 === r)))
       smi.applyBatch(streamedChangeBatch(li))
       store
-    })
+    }
 
   /** Mixed-type (bytewise) keys — the reference's schema-free key model:
     * LevelDB keys are arbitrary JSON ordered ACROSS types, null < false <
@@ -1577,12 +1541,9 @@ object MapIndexQueries {
       v.refreshRight(clickUps(c), Some(clickDels(c)))
     }
 
-  def prewarm(s: SparkSession, dir: String): Unit =
-    Prewarm.run(s, "mapindex", prewarmSteps(s, dir))
-
-  /** Each step is one independent build unit ([[Prewarm.run]] may overlap
+  /** Each step is one independent build unit ([[Prewarm.all]] may overlap
     * them); steps sharing an underlying view serialize on its per-key
-    * lock ([[graft.engine.Views.unit]] / [[graft.engine.Views.materialized]]),
+    * lock ([[graft.engine.Views.unit]] / [[graft.engine.Views.cached]]),
     * so overlap never double-builds or interleaves refreshes. */
   private[operators] def prewarmSteps(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq[(String, () => Unit)](
     ("ordersCustomerView", () => { ordersCustomerView(s, dir); () }),

@@ -101,9 +101,7 @@ object PipelineQueries {
       tokenTfEmits("named_struct('doc_id', doc_id, 'tf', cast(ei - si + 1 as bigint))"))
 
   private def postingsView(s: SparkSession, dir: String) =
-    Views.cached(dir, postingsIdx.name) {
-      postingsIdx.materialize(docs(s, dir), Views.store(s, dir))
-    }
+    Views.materialized(s, dir, postingsIdx)(docs(s, dir))
 
   /** The inherited-maintenance claim made checkable: the same inverted
     * index (own name, own state) taken through a deterministic document
@@ -117,21 +115,52 @@ object PipelineQueries {
       col("doc_id").cast("string"),
       tokenTfEmits("named_struct('doc_id', doc_id, 'tf', cast(ei - si + 1 as bigint))"))
 
+  /** The text every `%37` document is rewritten to. */
+  private val RewrittenText = "spark join spark stream"
+
   /** The shared document change batch every maintained text fixture
-    * pushes: `%37` docs rewritten to one fixed text, `%41` tombstoned.
-    * Returns (upserts, tombstoned source keys). */
+    * pushes: `%37` docs rewritten to [[RewrittenText]], `%41`
+    * tombstoned. Returns (upserts with every column of `d`, tombstoned
+    * source keys); a fixture selects the upsert columns its index takes. */
   private def docChangeBatch(d: DataFrame): (DataFrame, DataFrame) =
     (d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-       .withColumn("text", lit("spark join spark stream")),
+       .withColumn("text", lit(RewrittenText)),
      d.filter(col("doc_id") % 41 === 0)
        .select(col("doc_id").cast("string").as("src_key")).distinct())
 
-  private def incPostingsView(s: SparkSession, dir: String) =
-    Views.cached(dir, postingsIncIdx.name) {
-      val base = postingsIncIdx.materialize(docs(s, dir), Views.store(s, dir))
+  /** The shared batch as ONE streaming micro-batch: `(doc_id, text)`
+    * upserts and tombstones together, split by the streaming contract's
+    * `deleted` column. A tombstone names its document both as `key` (the
+    * map-view streams) and as `doc_id` (the pair-graph stream). */
+  private def streamedDocChangeBatch(d: DataFrame): DataFrame = {
+    val (ups, dels) = docChangeBatch(d)
+    ups.select(col("doc_id"), col("text"), lit(false).as("deleted"))
+      .unionByName(dels.select(col("src_key").as("key"),
+        col("src_key").cast("long").as("doc_id"), lit(true).as("deleted")),
+        allowMissingColumns = true)
+  }
+
+  /** The corpus AFTER the shared batch — the from-scratch input every
+    * maintained fixture is graded against: `%41` docs gone, `%37` docs
+    * carrying [[RewrittenText]]. */
+  private def modifiedDocs(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir).filter(col("doc_id") % 41 =!= 0)
+      .withColumn("text", when(col("doc_id") % 37 === 0, lit(RewrittenText))
+        .otherwise(col("text")))
+
+  /** `idx` materialized on the corpus, then the shared change batch
+    * through ONE refresh, as a durable build unit: a reopen loads it. */
+  private def refreshedUnit(s: SparkSession, dir: String, idx: MapIndex) = {
+    val store = Views.store(s, dir)
+    Views.unit(store.baseDir, idx.name)(store.load(idx)) {
+      val base = idx.materialize(docs(s, dir), store)
       val (ups, dels) = docChangeBatch(docs(s, dir))
       base.refresh(ups, Some(dels))
     }
+  }
+
+  private def incPostingsView(s: SparkSession, dir: String) =
+    refreshedUnit(s, dir, postingsIncIdx)
 
   // --- BM25 ranked retrieval --------------------------------------------
 
@@ -152,9 +181,7 @@ object PipelineQueries {
   private val bm25Idx = bm25MapIndex("doc_postings_bm25")
 
   private def bm25View(s: SparkSession, dir: String) =
-    Views.cached(dir, bm25Idx.name) {
-      bm25Idx.materialize(docs(s, dir), Views.store(s, dir))
-    }
+    Views.materialized(s, dir, bm25Idx)(docs(s, dir))
 
   /** Corpus-wide length statistics (N, Σdl) as an incrementally-
     * maintained single-group [[graft.engine.AggView]] over a tiny
@@ -167,29 +194,40 @@ object PipelineQueries {
       col("doc_id").cast("string"),
       array(emit(lit("dl"), size(split(lower(col("text")), " ")).cast("long"))))
 
-  private val lenAggs =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.AggView]
+  /** The aggregate state `<idx>__state` over `idx` materialized on the
+    * corpus — or on its target subset (lang = 'en') when `target` — as a
+    * durable build unit (a reopen attaches). With `changed`, the shared
+    * `%37`-rewrite / `%41`-tombstone batch then goes through
+    * [[graft.engine.AggView.refresh]], its upserts restricted to the same
+    * subset (a rewrite of a non-English doc does not touch the target
+    * model); delete keys apply unrestricted — a tombstone for a doc the
+    * target never indexed is a no-op by the refresh contract. */
+  private def aggUnit(s: SparkSession, dir: String, idx: MapIndex,
+      target: Boolean = false, changed: Boolean = false): graft.engine.AggView = {
+    val store = Views.store(s, dir)
+    val state = s"${idx.name}__state"
+    def subset(d: DataFrame) = if (target) d.filter(col("lang") === "en") else d
+    Views.unit(store.baseDir, idx.name)(graft.engine.AggView.attach(s, store, state)) {
+      val base = idx.materialize(subset(docs(s, dir)), store)
+      val agg = graft.engine.AggView.build(base, state)
+      if (!changed) agg
+      else {
+        val (ups, dels) = docChangeBatch(docs(s, dir))
+        agg.refresh(base, subset(ups), Some(dels))._2
+      }
+    }
+  }
 
   /** Base-corpus stats view. */
   private def lenAgg(s: SparkSession, dir: String): graft.engine.AggView =
-    lenAggs.getOrElseUpdate(dir, {
-      val base = docLenMapIndex("doc_lengths").materialize(docs(s, dir), Views.store(s, dir))
-      graft.engine.AggView.build(base, "doc_lengths__state")
-    })
+    aggUnit(s, dir, docLenMapIndex("doc_lengths"))
 
   /** Post-change-batch stats view: the SAME `%37`-rewrite / `%41`-
     * tombstone batch [[incPostingsView]] pushes, taken through
     * [[graft.engine.AggView.refresh]] — so the incremental BM25 search
     * proves BOTH maintained inputs (postings and stats) are current. */
   private def incLenAgg(s: SparkSession, dir: String): graft.engine.AggView =
-    lenAggs.getOrElseUpdate(s"$dir#inc", {
-      val idx = docLenMapIndex("doc_lengths_inc")
-      val base = idx.materialize(docs(s, dir), Views.store(s, dir))
-      val agg0 = graft.engine.AggView.build(base, "doc_lengths_inc__state")
-      val (ups, dels) = docChangeBatch(docs(s, dir))
-      val (_, agg) = agg0.refresh(base, ups, Some(dels))
-      agg
-    })
+    aggUnit(s, dir, docLenMapIndex("doc_lengths_inc"), changed = true)
 
   /** Unigram language-model counts: one emission per DISTINCT token per
     * doc, value = term frequency — the [[graft.engine.AggView]] over it
@@ -204,27 +242,14 @@ object PipelineQueries {
       col("doc_id").cast("string"),
       tokenTfEmits("cast(ei - si + 1 as bigint)"))
 
-  private val unigramAggs =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.AggView]
-
   /** Base-corpus token-count state. */
   private def unigramAgg(s: SparkSession, dir: String): graft.engine.AggView =
-    unigramAggs.getOrElseUpdate(dir, {
-      val base = unigramMapIndex("doc_unigrams").materialize(docs(s, dir), Views.store(s, dir))
-      graft.engine.AggView.build(base, "doc_unigrams__state")
-    })
+    aggUnit(s, dir, unigramMapIndex("doc_unigrams"))
 
   /** Post-change-batch token-count state: the shared `%37`-rewrite /
     * `%41`-tombstone batch through the aggregate refresh path. */
   private def incUnigramAgg(s: SparkSession, dir: String): graft.engine.AggView =
-    unigramAggs.getOrElseUpdate(s"$dir#inc", {
-      val idx = unigramMapIndex("doc_unigrams_inc")
-      val base = idx.materialize(docs(s, dir), Views.store(s, dir))
-      val agg0 = graft.engine.AggView.build(base, "doc_unigrams_inc__state")
-      val (ups, dels) = docChangeBatch(docs(s, dir))
-      val (_, agg) = agg0.refresh(base, ups, Some(dels))
-      agg
-    })
+    aggUnit(s, dir, unigramMapIndex("doc_unigrams_inc"), changed = true)
 
   /** Per-doc average unigram log-probability — the perplexity-proxy
     * quality score — served ENTIRELY from maintained state: per-doc
@@ -256,56 +281,19 @@ object PipelineQueries {
     * Both models are maintained views; a target-corpus change batch
     * flows through the ordinary aggregate refresh. */
   private def unigramTgtAgg(s: SparkSession, dir: String): graft.engine.AggView =
-    unigramAggs.getOrElseUpdate(s"$dir#tgt", {
-      val base = unigramMapIndex("doc_unigrams_tgt").materialize(
-        docs(s, dir).filter(col("lang") === "en"), Views.store(s, dir))
-      graft.engine.AggView.build(base, "doc_unigrams_tgt__state")
-    })
+    aggUnit(s, dir, unigramMapIndex("doc_unigrams_tgt"), target = true)
 
   /** Target-subset token total (one-row stats state, like [[lenAgg]]). */
   private def lenTgtAgg(s: SparkSession, dir: String): graft.engine.AggView =
-    lenAggs.getOrElseUpdate(s"$dir#tgt", {
-      val base = docLenMapIndex("doc_lengths_tgt").materialize(
-        docs(s, dir).filter(col("lang") === "en"), Views.store(s, dir))
-      graft.engine.AggView.build(base, "doc_lengths_tgt__state")
-    })
+    aggUnit(s, dir, docLenMapIndex("doc_lengths_tgt"), target = true)
 
-  /** Post-change-batch TARGET states: the shared `%37`-rewrite / `%41`-
-    * tombstone batch restricted to the target subset for upserts
-    * (rewrites of non-English docs don't touch the target model); delete
-    * keys apply unrestricted — a tombstone for a doc the target never
-    * indexed is a no-op by the refresh contract. */
+  /** Post-change-batch TARGET states: the shared batch, upserts
+    * restricted to the target subset ([[aggUnit]]). */
   private def incUnigramTgtAgg(s: SparkSession, dir: String): graft.engine.AggView =
-    unigramAggs.getOrElseUpdate(s"$dir#tgt-inc", {
-      val idx = unigramMapIndex("doc_unigrams_tgt_inc")
-      val base = idx.materialize(
-        docs(s, dir).filter(col("lang") === "en"), Views.store(s, dir))
-      val agg0 = graft.engine.AggView.build(base, "doc_unigrams_tgt_inc__state")
-      val ups = docs(s, dir)
-        .filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0 &&
-          col("lang") === "en")
-        .withColumn("text", lit("spark join spark stream"))
-      val dels = docs(s, dir).filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("src_key")).distinct()
-      val (_, agg) = agg0.refresh(base, ups, Some(dels))
-      agg
-    })
+    aggUnit(s, dir, unigramMapIndex("doc_unigrams_tgt_inc"), target = true, changed = true)
 
   private def incLenTgtAgg(s: SparkSession, dir: String): graft.engine.AggView =
-    lenAggs.getOrElseUpdate(s"$dir#tgt-inc", {
-      val idx = docLenMapIndex("doc_lengths_tgt_inc")
-      val base = idx.materialize(
-        docs(s, dir).filter(col("lang") === "en"), Views.store(s, dir))
-      val agg0 = graft.engine.AggView.build(base, "doc_lengths_tgt_inc__state")
-      val ups = docs(s, dir)
-        .filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0 &&
-          col("lang") === "en")
-        .withColumn("text", lit("spark join spark stream"))
-      val dels = docs(s, dir).filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("src_key")).distinct()
-      val (_, agg) = agg0.refresh(base, ups, Some(dels))
-      agg
-    })
+    aggUnit(s, dir, docLenMapIndex("doc_lengths_tgt_inc"), target = true, changed = true)
 
   /** The importance-weight scoring join over any (postings, raw state,
     * target state, raw total, target total) quintuple — shared by the
@@ -348,15 +336,16 @@ object PipelineQueries {
     * same modified-corpus recompute that grades the batch-incremental
     * one, so a batch-boundary effect in ANY of the three states is a
     * hash mismatch. */
-  private val lmStreamViews = scala.collection.concurrent.TrieMap.empty[
-    String, (graft.engine.MaterializedView, graft.engine.AggView, graft.engine.AggView)]
   private val bm25StreamIdx = bm25MapIndex("doc_postings_bm25_stream")
   private val unigramStreamIdx = unigramMapIndex("doc_unigrams_stream")
   private val docLenStreamIdx = docLenMapIndex("doc_lengths_stream")
 
-  private def streamedLmViews(s: SparkSession, dir: String): (graft.engine.MaterializedView, graft.engine.AggView, graft.engine.AggView) =
-    lmStreamViews.getOrElseUpdate(dir, {
-      val store = Views.store(s, dir)
+  private def streamedLmViews(s: SparkSession, dir: String): (graft.engine.MaterializedView, graft.engine.AggView, graft.engine.AggView) = {
+    val store = Views.store(s, dir)
+    def open() = (store.load(bm25StreamIdx),
+      graft.engine.AggView.attach(s, store, "doc_unigrams_stream__state"),
+      graft.engine.AggView.attach(s, store, "doc_lengths_stream__state"))
+    Views.unit(store.baseDir, "doc_lm_stream")(open()) {
       val post = new graft.streaming.StreamingMapIndex(bm25StreamIdx, store)
       val toks = new graft.streaming.StreamingAggMapIndex(
         unigramStreamIdx, store, "doc_unigrams_stream__state")
@@ -368,26 +357,15 @@ object PipelineQueries {
       val d = docs(s, dir)
       (0 to 2).foreach(r =>
         push(d.filter(col("doc_id") % 3 === r).select("doc_id", "text")))
-      val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .withColumn("text", lit("spark join spark stream"))
-        .select("doc_id", "text").withColumn("deleted", lit(false))
-      val dels = d.filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("key"))
-        .withColumn("deleted", lit(true))
-      push(ups.unionByName(dels, allowMissingColumns = true))
-      (store.load(bm25StreamIdx),
-        graft.engine.AggView.attach(s, store, "doc_unigrams_stream__state"),
-        graft.engine.AggView.attach(s, store, "doc_lengths_stream__state"))
-    })
+      push(streamedDocChangeBatch(d))
+      open()
+    }
+  }
 
   private val bm25IncIdx = bm25MapIndex("doc_postings_bm25_inc")
 
   private def incBm25View(s: SparkSession, dir: String) =
-    Views.cached(dir, bm25IncIdx.name) {
-      val base = bm25IncIdx.materialize(docs(s, dir), Views.store(s, dir))
-      val (ups, dels) = docChangeBatch(docs(s, dir))
-      base.refresh(ups, Some(dels))
-    }
+    refreshedUnit(s, dir, bm25IncIdx)
 
   /** BM25 top-20 over [[SearchTerms]], served ENTIRELY from maintained
     * views: term-pruned posting read (pushed In-filter), per-term df from
@@ -417,9 +395,6 @@ object PipelineQueries {
 
   /** Materialize the stored postings + pair graph eagerly (write-time
     * cost) so bench timings measure the indexed read path. */
-  def prewarm(s: SparkSession, dir: String): Unit =
-    Prewarm.run(s, "pipeline", prewarmSteps(s, dir))
-
   private[operators] def prewarmSteps(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq[(String, () => Unit)](
       ("postingsView", () => { postingsView(s, dir); () }),
       ("incPostingsView", () => { incPostingsView(s, dir); () }),
@@ -511,18 +486,12 @@ object PipelineQueries {
   private val spanWinIdx = spanWinMapIndex("doc_spanwins")
 
   private def spanWinView(s: SparkSession, dir: String) =
-    Views.cached(dir, spanWinIdx.name) {
-      spanWinIdx.materialize(docs(s, dir), Views.store(s, dir))
-    }
+    Views.materialized(s, dir, spanWinIdx)(docs(s, dir))
 
   private val spanWinIncIdx = spanWinMapIndex("doc_spanwins_inc")
 
   private def incSpanWinView(s: SparkSession, dir: String) =
-    Views.cached(dir, spanWinIncIdx.name) {
-      val base = spanWinIncIdx.materialize(docs(s, dir), Views.store(s, dir))
-      val (ups, dels) = docChangeBatch(docs(s, dir))
-      base.refresh(ups, Some(dels))
-    }
+    refreshedUnit(s, dir, spanWinIncIdx)
 
   /** The window view built PURELY through streaming micro-batches: three
     * bootstrap thirds, then the shared upsert+tombstone batch through the
@@ -530,25 +499,18 @@ object PipelineQueries {
     * grades the streaming write path against the same modified-corpus
     * recompute that grades the batch-incremental view. */
   private val spanWinStreamIdx = spanWinMapIndex("doc_spanwins_stream")
-  private val spanStreamViews =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.MaterializedView]
 
-  private def streamedSpanWinView(s: SparkSession, dir: String): graft.engine.MaterializedView =
-    spanStreamViews.getOrElseUpdate(dir, {
-      val store = Views.store(s, dir)
+  private def streamedSpanWinView(s: SparkSession, dir: String): graft.engine.MaterializedView = {
+    val store = Views.store(s, dir)
+    Views.unit(store.baseDir, spanWinStreamIdx.name)(store.load(spanWinStreamIdx)) {
       val smi = new graft.streaming.StreamingMapIndex(spanWinStreamIdx, store)
       val d = docs(s, dir)
       (0 to 2).foreach(r =>
         smi.applyBatch(d.filter(col("doc_id") % 3 === r).select("doc_id", "text")))
-      val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .withColumn("text", lit("spark join spark stream"))
-        .select("doc_id", "text").withColumn("deleted", lit(false))
-      val dels = d.filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("key"))
-        .withColumn("deleted", lit(true))
-      smi.applyBatch(ups.unionByName(dels, allowMissingColumns = true))
+      smi.applyBatch(streamedDocChangeBatch(d))
       store.load(spanWinStreamIdx)
-    })
+    }
+  }
 
   /** Window OCCURRENCE emissions for the maintained removal decisions:
     * emit key = the window's 64-bit hash (8 bytes, like [[spanWinMapIndex]]
@@ -706,18 +668,15 @@ object PipelineQueries {
     * tool here (cache squatting, see [[postingStats]]); storage is. The
     * relation is clustered by `(i, j)`, so per-doc pair lookups prune by
     * file min/max like any other stored view. */
-  private val pairViewBuilt = scala.collection.concurrent.TrieMap.empty[String, Unit]
   private val PairViewName = "dedup_pairs"
   private[operators] def pairsView(s: SparkSession, dir: String): DataFrame = {
     val store = Views.store(s, dir)
-    // shared by two prewarm steps (itself and baseComponentsView) — see
-    // [[Views.locked]] on why racing builders must serialize
-    Views.locked(s"build#pipeline#pairsView#$dir") {
-      pairViewBuilt.getOrElseUpdate(dir, {
-        // durable reopen over an unchanged corpus serves the stored pairs
-        if (store.latestVersion(PairViewName).isEmpty)
-          store.writeClustered(PairViewName, ngramJaccardPairs(s, dir), Seq("i", "j"))
-      })
+    // shared by two prewarm steps (itself and baseComponentsView): the
+    // memo's lock serializes them
+    Views.cached(dir, "pairsView") {
+      // durable reopen over an unchanged corpus serves the stored pairs
+      if (store.latestVersion(PairViewName).isEmpty)
+        store.writeClustered(PairViewName, ngramJaccardPairs(s, dir), Seq("i", "j"))
     }
     store.readLatest(PairViewName)
   }
@@ -744,11 +703,8 @@ object PipelineQueries {
       val g = open(store)
       val d = docs(s, dir)
       g.build(d)
-      val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .withColumn("text", lit("spark join spark stream"))
-        .select("doc_id", "text")
-      val dels = d.filter(col("doc_id") % 41 === 0).select("doc_id")
-      g.refresh(ups, Some(dels))
+      val (ups, dels) = docChangeBatch(d)
+      g.refresh(ups.select("doc_id", "text"), Some(dels.select(col("src_key").as("doc_id"))))
       if (compact) store.compact(g.pairsName, maxFilesPerBucket = 0)
       g
     }
@@ -867,12 +823,7 @@ object PipelineQueries {
       (0 to 2).foreach(r =>
         spg.applyBatch(d.filter(col("doc_id") % 3 === r)
           .select("doc_id", "text")))
-      val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .select(col("doc_id"), lit("spark join spark stream").as("text"),
-          lit(false).as("deleted"))
-      val dels = d.filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id"), lit("").as("text"), lit(true).as("deleted"))
-      spg.applyBatch(ups.unionByName(dels))
+      spg.applyBatch(streamedDocChangeBatch(d))
       ci
     }
   }
@@ -896,10 +847,7 @@ object PipelineQueries {
       val d = docs(s, dir).select(col("doc_id").cast("long"), col("text"))
       val v = graft.engine.BucketedAggView.build(
         store, exactDedupIdx, d, "exact_dedup_state")
-      val ups = d.filter(col("doc_id") % 37 === 0 && col("doc_id") % 41 =!= 0)
-        .withColumn("text", lit("spark join spark stream"))
-      val dels = d.filter(col("doc_id") % 41 === 0)
-        .select(col("doc_id").cast("string").as("src_key"))
+      val (ups, dels) = docChangeBatch(d)
       v.refresh(exactDedupIdx, ups, Some(dels))
       v
     }
@@ -1079,13 +1027,6 @@ object PipelineQueries {
       .orderBy("i", "j")
   }
 
-  /** Drop every per-JVM cache — lets a spec simulate a fresh process
-    * against a durable store root (the reuse path is disk-gated). */
-  private[graft] def resetCachesForTest(): Unit = {
-    pairViewBuilt.clear(); lenAggs.clear(); unigramAggs.clear()
-    lmStreamViews.clear(); spanStreamViews.clear()
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // exact dedup: group by content hash, keep lowest doc_id
@@ -1185,9 +1126,7 @@ object PipelineQueries {
         .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
         .filter(col("d0") =!= col("d1"))
       val cand = occs.join(dupH.select("h"), Seq("h"), "left_semi")
-      val mod = docs(s, dir).filter(col("doc_id") % 41 =!= 0)
-        .withColumn("text", when(col("doc_id") % 37 === 0,
-          lit("spark join spark stream")).otherwise(col("text")))
+      val mod = modifiedDocs(s, dir)
       val withWin = verifySpanWindows(cand, mod)
       val dup = withWin.groupBy("win")
         .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
@@ -1212,9 +1151,7 @@ object PipelineQueries {
         .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
         .filter(col("d0") =!= col("d1"))
       val cand = occs.join(dupH.select("h"), Seq("h"), "left_semi")
-      val mod = docs(s, dir).filter(col("doc_id") % 41 =!= 0)
-        .withColumn("text", when(col("doc_id") % 37 === 0,
-          lit("spark join spark stream")).otherwise(col("text")))
+      val mod = modifiedDocs(s, dir)
       val withWin = verifySpanWindows(cand, mod)
       val dup = withWin.groupBy("win")
         .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
@@ -1249,9 +1186,7 @@ object PipelineQueries {
         .join(candH, Seq("h"), "left_semi")
         .select(expr("occ div 1000000").as("doc_id"),
           expr("cast(occ % 1000000 as int)").as("pos"), col("occ"))
-      val mod = docs(s, dir).filter(col("doc_id") % 41 =!= 0)
-        .withColumn("text", when(col("doc_id") % 37 === 0,
-          lit("spark join spark stream")).otherwise(col("text")))
+      val mod = modifiedDocs(s, dir)
       val withWin = verifySpanWindows(occs, mod)
       val dup = withWin.groupBy("win")
         .agg(count(lit(1)).as("nocc"), min("occ").as("firstk"))
@@ -1347,9 +1282,7 @@ object PipelineQueries {
     // deletions also un-hot df-capped fingerprints, exercising the
     // downward cap crossing at driver scale)
     "dedup_winnow_incremental" -> ((s, dir) => {
-      val d = docs(s, dir).filter(col("doc_id") % 41 =!= 0)
-        .withColumn("text", when(col("doc_id") % 37 === 0,
-          lit("spark join spark stream")).otherwise(col("text")))
+      val d = modifiedDocs(s, dir)
       incWinnowGraph(s, dir).pairs.filter(col("overlap") === 1.0)
         .join(d.select(col("doc_id").as("i"), col("text").as("ti")), Seq("i"))
         .join(d.select(col("doc_id").as("j"), col("text").as("tj")), Seq("j"))
@@ -1485,9 +1418,7 @@ object PipelineQueries {
     "pipeline_dedup_removal_incremental" -> ((s, dir) => {
       val ci = incComponentsIdx(s, dir)
       val kv = keeperView(s, dir)
-      val d = docs(s, dir).filter(col("doc_id") % 41 =!= 0)
-        .withColumn("text", when(col("doc_id") % 37 === 0,
-          lit("spark join spark stream")).otherwise(col("text")))
+      val d = modifiedDocs(s, dir)
       val keepers = d.join(ci.components.select("doc_id"), Seq("doc_id"), "left_anti")
         .select("doc_id")
         .union(kv.state.select(col("min_value").cast("long").as("doc_id")))

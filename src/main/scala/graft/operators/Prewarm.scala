@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /**
- * Shared prewarm runner: executes a family's view-build steps with
+ * Shared prewarm runner: executes every family's view-build steps with
  * per-step wall-clock timing on STDERR (the driver parses stdout; timing
  * lines must never land there) and labels each step's jobs so the UI /
  * event log attributes stages to builds (guide §1.5).
@@ -35,15 +35,17 @@ object Prewarm {
     sys.env.get("SPARK_GRAFT_PREWARM_PAR").map(_.toInt).getOrElse(
       math.min(8, math.max(4, spark.sparkContext.defaultParallelism / 4)))
 
-  private def timed(spark: SparkSession, family: String, name: String)
-      (f: => Unit): Unit = {
+  /** The prefix of every stderr line and job description. */
+  private val Tag = "prewarm[all]"
+
+  private def timed(spark: SparkSession, name: String)(f: => Unit): Unit = {
     // job descriptions are thread-local — safe under the pool
-    spark.sparkContext.setJobDescription(s"prewarm[$family]: $name")
+    spark.sparkContext.setJobDescription(s"$Tag: $name")
     val t0 = System.nanoTime()
     try f
     finally {
       System.err.println(
-        f"prewarm[$family] $name%-40s ${(System.nanoTime() - t0) / 1e9}%8.1f s")
+        f"$Tag $name%-40s ${(System.nanoTime() - t0) / 1e9}%8.1f s")
       spark.sparkContext.setJobDescription(null)
     }
   }
@@ -94,26 +96,23 @@ object Prewarm {
     * ([[graft.engine.Views.unit]]), so overlap never builds a unit twice.
     * Stable sort: heavies first by measured weight, everything else in
     * declared order behind them. */
-  def all(spark: SparkSession, dir: String): Unit =
-    run(spark, "all", steps(spark, dir).sortBy { case (n, _) => -measuredWeight.getOrElse(n, 0) })
-
-  def run(spark: SparkSession, family: String,
-      steps: Seq[(String, () => Unit)]): Unit = {
+  def all(spark: SparkSession, dir: String): Unit = {
+    val ordered = steps(spark, dir).sortBy { case (n, _) => -measuredWeight.getOrElse(n, 0) }
     val t0 = System.nanoTime()
     val par = parallelism(spark)
     if (par <= 1) {
-      steps.foreach { case (n, f) => timed(spark, family, n)(f()) }
+      ordered.foreach { case (n, f) => timed(spark, n)(f()) }
     } else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
       val failed = new java.util.concurrent.ConcurrentHashMap[String, Boolean]
       try {
-        steps.map { case (n, f) =>
+        ordered.map { case (n, f) =>
           pool.submit(new Runnable {
             def run(): Unit =
-              try timed(spark, family, n)(f())
+              try timed(spark, n)(f())
               catch {
                 case e: Throwable =>
-                  System.err.println(s"prewarm[$family] $n failed in parallel " +
+                  System.err.println(s"$Tag $n failed in parallel " +
                     s"phase (${e.getClass.getSimpleName}: ${e.getMessage}); " +
                     "queued for sequential retry")
                   failed.put(n, true)
@@ -123,11 +122,11 @@ object Prewarm {
       } finally pool.shutdown()
       // guard: anything that lost a build race (or hit a transient) gets a
       // clean sequential second chance; a second failure is real and throws
-      steps.filter { case (n, _) => failed.containsKey(n) }
-        .foreach { case (n, f) => timed(spark, family, s"$n (retry)")(f()) }
+      ordered.filter { case (n, _) => failed.containsKey(n) }
+        .foreach { case (n, f) => timed(spark, s"$n (retry)")(f()) }
     }
     System.err.println(
-      f"prewarm[$family] TOTAL ${(System.nanoTime() - t0) / 1e9}%8.1f s " +
+      f"$Tag TOTAL ${(System.nanoTime() - t0) / 1e9}%8.1f s " +
         s"(parallelism $par)")
   }
 }

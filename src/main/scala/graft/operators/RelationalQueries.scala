@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Tables, Views}
 
 /**
  * The extended relational surface (SURVEY.md §2.2): every operator category
@@ -1253,17 +1253,48 @@ object RelationalQueries {
 
   /** Run the one-time streaming materialization up front (write-time
     * cost, like every stored view) so bench timings measure the read. */
-  def prewarm(s: SparkSession, dir: String): Unit =
-    Prewarm.run(s, "relational", prewarmSteps(s, dir))
-
   private[operators] def prewarmSteps(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq[(String, () => Unit)](
       ("streamedHourlyTable", () => { streamedHourlyTable(s, dir); () }),
       ("streamedSessionsTable", () => { streamedSessionsTable(s, dir); () }),
       ("streamedFunnelTable", () => { streamedFunnelTable(s, dir); () }),
   )
 
-  private val streamedFunnels =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Stage `ev` (which carries `ts_us`) as a replayable file stream:
+    * its time thirds, then the `tail` batches built from the largest
+    * timestamp, each written as ONE parquet file with strictly
+    * increasing modification times. The file source orders batches by
+    * modification time, and the stateful operators' exactness needs
+    * time-ordered per-user ARRIVAL across batches (within a batch they
+    * sort). Returns the stage dir and the largest timestamp. */
+  private def stageTimeThirds(ev: DataFrame, prefix: String)
+      (tail: Long => Seq[DataFrame]): (String, Long) = {
+    import ev.sparkSession.implicits._
+    import scala.jdk.CollectionConverters._
+    val (t0, t1) = ev.agg(min("ts_us"), max("ts_us")).as[(Long, Long)].head()
+    val stage = java.nio.file.Files.createTempDirectory(prefix)
+    val cut1 = t0 + (t1 - t0) / 3
+    val cut2 = t0 + 2 * (t1 - t0) / 3
+    val batches = Seq(
+      ev.filter(col("ts_us") <= cut1),
+      ev.filter(col("ts_us") > cut1 && col("ts_us") <= cut2),
+      ev.filter(col("ts_us") > cut2)) ++ tail(t1)
+    batches.zipWithIndex.foreach { case (df, i) =>
+      val tmp = stage.resolve(s"_w$i")
+      df.coalesce(1).write.parquet(tmp.toString)
+      val part = java.nio.file.Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException(s"no parquet part in $tmp"))
+      val dest = stage.resolve(f"b$i%02d.parquet")
+      java.nio.file.Files.move(part, dest)
+      java.nio.file.Files.setLastModifiedTime(dest,
+        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
+      val walk = java.nio.file.Files.walk(tmp)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+      finally walk.close()
+    }
+    (stage.toString, t1)
+  }
 
   /** Run the stateful funnel ([[graft.streaming.StatefulFunnel]]) once per
     * corpus as a real multi-batch stream (three time-ordered files, one
@@ -1272,39 +1303,13 @@ object RelationalQueries {
     * emissions. Flags are monotone, so the serving aggregate ORs each
     * user's emissions — no sentinel batch. */
   private def streamedFunnelTable(s: SparkSession, dir: String): String =
-    streamedFunnels.getOrElseUpdate(s"$dir#${System.identityHashCode(s)}", {
+    Views.cached(dir, s"streamedFunnelTable#${System.identityHashCode(s)}") {
       import s.implicits._
-      import scala.jdk.CollectionConverters._
       import graft.streaming.StatefulFunnel
       val ev = Tables.events(s, dir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"), col("event_type"))
-      val (t0, t1) = ev.agg(min("ts_us"), max("ts_us")).as[(Long, Long)].head()
-      val stage = java.nio.file.Files.createTempDirectory("graft-funnel-stream-")
-      val cut1 = t0 + (t1 - t0) / 3
-      val cut2 = t0 + 2 * (t1 - t0) / 3
-      val batches = Seq(
-        ev.filter(col("ts_us") <= cut1),
-        ev.filter(col("ts_us") > cut1 && col("ts_us") <= cut2),
-        ev.filter(col("ts_us") > cut2))
-      batches.zipWithIndex.foreach { case (df, i) =>
-        // single-file layout with strictly increasing mod times: the file
-        // source orders batches by modification time, and the funnel's
-        // exactness needs time-ordered per-user ARRIVAL across batches
-        val tmp = stage.resolve(s"_w$i")
-        df.coalesce(1).write.parquet(tmp.toString)
-        val part = java.nio.file.Files.list(tmp).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no parquet part in $tmp"))
-        val dest = stage.resolve(f"b$i%02d.parquet")
-        java.nio.file.Files.move(part, dest)
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-        val walk = java.nio.file.Files.walk(tmp)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      }
+      val (stage, _) = stageTimeThirds(ev, "graft-funnel-stream-")(_ => Nil)
       val stream = s.readStream
         .schema(org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("user_id",
@@ -1316,7 +1321,7 @@ object RelationalQueries {
           org.apache.spark.sql.types.StructField("event_type",
             org.apache.spark.sql.types.StringType))))
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage.toString)
+        .parquet(stage)
         .as[StatefulFunnel.Event]
       val tbl = "events_funnel_streamed_" +
         java.lang.Integer.toHexString(dir.hashCode)
@@ -1326,10 +1331,7 @@ object RelationalQueries {
         .start()
       q.awaitTermination()
       tbl
-    })
-
-  private val streamedHourly =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** Run the streaming aggregation once per corpus (compute-on-write, like
     * every other stored view) and serve the memory-sink table. Complete
@@ -1343,7 +1345,7 @@ object RelationalQueries {
     * session-scoped, so a second session must rerun the stream, not
     * resolve a name that only exists elsewhere. */
   private def streamedHourlyTable(s: SparkSession, dir: String): String =
-    streamedHourly.getOrElseUpdate(s"$dir#${System.identityHashCode(s)}", {
+    Views.cached(dir, s"streamedHourlyTable#${System.identityHashCode(s)}") {
       if (!s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = s.read.parquet(s"$dir/events.parquet")
@@ -1366,10 +1368,7 @@ object RelationalQueries {
         .start()
       q.awaitTermination()
       tbl
-    })
-
-  private val streamedSessions =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
+    }
 
   /** Run the stateful sessionizer ([[graft.streaming.StatefulSessionizer]])
     * once per corpus as a REAL multi-batch stream and serve the
@@ -1384,40 +1383,14 @@ object RelationalQueries {
     * sentinel's own open sessions are never emitted. Returns
     * `(table, max real ts in µs)` for the gate's sentinel guard. */
   private def streamedSessionsTable(s: SparkSession, dir: String): (String, Long) =
-    streamedSessions.getOrElseUpdate(s"$dir#${System.identityHashCode(s)}", {
+    Views.cached(dir, s"streamedSessionsTable#${System.identityHashCode(s)}") {
       import s.implicits._
-      import scala.jdk.CollectionConverters._
       import graft.streaming.StatefulSessionizer
       val ev = Tables.events(s, dir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
-      val (t0, t1) = ev.agg(min("ts_us"), max("ts_us")).as[(Long, Long)].head()
-      val stage = java.nio.file.Files.createTempDirectory("graft-sess-stream-")
-      val cut1 = t0 + (t1 - t0) / 3
-      val cut2 = t0 + 2 * (t1 - t0) / 3
-      val sentinelUs = t1 + (1800L + 86400L) * 1000000L
-      val batches = Seq(
-        ev.filter(col("ts_us") <= cut1),
-        ev.filter(col("ts_us") > cut1 && col("ts_us") <= cut2),
-        ev.filter(col("ts_us") > cut2),
-        ev.select(col("user_id")).distinct().withColumn("ts_us", lit(sentinelUs)))
-      batches.zipWithIndex.foreach { case (df, i) =>
-        // flat single-file layout with explicit, strictly increasing mod
-        // times: FileStreamSource orders batches by modification time, and
-        // correctness of the gap logic needs per-user time-ordered ARRIVAL
-        // across batches (within a batch the sessionizer sorts)
-        val tmp = stage.resolve(s"_w$i")
-        df.coalesce(1).write.parquet(tmp.toString)
-        val part = java.nio.file.Files.list(tmp).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no parquet part in $tmp"))
-        val dest = stage.resolve(f"b$i%02d.parquet")
-        java.nio.file.Files.move(part, dest)
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-        val walk = java.nio.file.Files.walk(tmp)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
+      val (stage, t1) = stageTimeThirds(ev, "graft-sess-stream-") { t1 =>
+        val sentinelUs = t1 + (1800L + 86400L) * 1000000L
+        Seq(ev.select(col("user_id")).distinct().withColumn("ts_us", lit(sentinelUs)))
       }
       val stream = s.readStream
         .schema(org.apache.spark.sql.types.StructType(Seq(
@@ -1426,7 +1399,7 @@ object RelationalQueries {
           org.apache.spark.sql.types.StructField("ts_us",
             org.apache.spark.sql.types.LongType))))
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage.toString)
+        .parquet(stage)
         .as[StatefulSessionizer.Event]
       val tbl = "events_sessionize_streamed_" +
         java.lang.Integer.toHexString(dir.hashCode)
@@ -1436,7 +1409,7 @@ object RelationalQueries {
         .start()
       q.awaitTermination()
       (tbl, t1)
-    })
+    }
 
   val oracle: Map[String, String] = Map(
     "events_gapfill" ->

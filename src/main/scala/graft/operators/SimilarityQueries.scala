@@ -1,6 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -198,9 +197,6 @@ object SimilarityQueries {
   /** Train the IVF quantizer up front — index-build cost, not query cost,
     * the same compute-on-write stance as the stored map views (an IVF
     * index in production is fit once at ingest and served thereafter). */
-  def prewarm(s: SparkSession, dir: String): Unit =
-    Prewarm.run(s, "similarity", prewarmSteps(s, dir))
-
   private[operators] def prewarmSteps(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq[(String, () => Unit)](
       ("ivfCentroidsFor", () => { ivfCentroidsFor(s, dir); () }),
       ("ivfCellsView", () => { ivfCellsView(s, dir); () }),
@@ -1594,8 +1590,6 @@ object SimilarityQueries {
       .orderBy("probe_id", "rank")
   }
 
-  /** Per-(corpus) cache of the stored SQ8 relation + its scale. */
-  private val sqViews = TrieMap.empty[String, Double]
   private val SqViewName = "emb_sq8"
 
   /** Materialize the SQ8 (symmetric int8) spelling of the corpus ONCE as
@@ -1608,7 +1602,7 @@ object SimilarityQueries {
     * cost class as the IVF centroids. */
   private def sqView(s: SparkSession, dir: String): (DataFrame, Double) = {
     val store = Views.store(s, dir)
-    val scale = sqViews.getOrElseUpdate(dir, {
+    val scale = Views.cached(dir, "sqView") {
       // durable reopen: serve the stored codes with their persisted scale
       // (quantizing probes under a re-fit scale would disagree with them)
       Views.readModel(store.baseDir, SqViewName) match {
@@ -1632,7 +1626,7 @@ object SimilarityQueries {
           Views.writeModel(store.baseDir, SqViewName, Seq(Seq(sc)))
           sc
       }
-    })
+    }
     (store.readLatest(SqViewName), scale)
   }
 
@@ -1869,7 +1863,7 @@ object SimilarityQueries {
   /** Drop every per-JVM cache — lets a spec simulate a fresh process
     * against a durable store root (the reuse path is disk-gated). */
   private[graft] def resetCachesForTest(): Unit = {
-    sqViews.clear(); centroidCache.clear(); pqBookCache.clear()
+    centroidCache.clear(); pqBookCache.clear()
   }
 
   /** recall bounds asserted by the invariant queries below — measured at

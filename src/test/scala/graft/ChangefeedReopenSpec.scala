@@ -13,7 +13,9 @@ import graft.operators.MapIndexQueries
   * fix is two-sided — unit-gated builds (a reopen ATTACHES) and
   * version-relative replay ranges like the cascade relay — and this spec
   * pins both: five reopens must serve the identical feed with no version
-  * drift. */
+  * drift. The cascade, distinct, percentile and streamed lineitem gates
+  * ride along: their builders are durable units too, so a reopen serves
+  * them without rebuilding (before, every reopen advanced their views). */
 class ChangefeedReopenSpec extends AnyFunSuite with SparkSpec {
 
   private def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
@@ -34,7 +36,14 @@ class ChangefeedReopenSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("graft-cfroot-").toString
     sys.props("graft.views.root") = root
     val gates = Seq("mapindex_changefeed", "mapindex_agg_changefeed",
-      "mapindex_net_changefeed", "mapindex_cascade_cdc")
+      "mapindex_net_changefeed", "mapindex_cascade_cdc", "mapindex_cascade",
+      "mapindex_distinct_view", "mapindex_distinct_view_streamed",
+      "mapindex_percentile_view", "mapindex_percentile_cont",
+      "mapindex_streaming_group")
+    // views whose builders rebuilt (and advanced them) on every reopen
+    // before they became units
+    val held = Seq("order_bucket", "lineitem_flagprice", "lineitem_flagprice_s",
+      "lineitem_flagqty", "lineitem_flaggrid", "lineitem_byflag_stream")
     def serve(): Map[String, Seq[String]] = gates.map { q =>
       q -> MapIndexQueries.queries(q)(spark, corpus.toString)
         .collect().map(_.toString).toSeq.sorted
@@ -44,6 +53,8 @@ class ChangefeedReopenSpec extends AnyFunSuite with SparkSpec {
       val store = Views.store(spark, corpus.toString)
       val v0 = store.latestVersion("lineitem_byflag_agg").get
       val n0 = store.latestVersion("lineitem_byflag_net").get
+      val h0 = held.map(v => v -> store.latestVersion(v)).toMap
+      assert(h0.values.forall(_.isDefined), s"a held view was never built: $h0")
       (1 to 5).foreach { i =>
         // fresh-process simulation: per-JVM stores and unit memos
         // dropped, same root
@@ -54,6 +65,9 @@ class ChangefeedReopenSpec extends AnyFunSuite with SparkSpec {
           s"reopen $i advanced the aggView base version (unit gate broken)")
         assert(st.latestVersion("lineitem_byflag_net").get === n0,
           s"reopen $i advanced the netFeed version (unit gate broken)")
+        held.foreach { v =>
+          assert(st.latestVersion(v) === h0(v), s"reopen $i advanced $v (unit gate broken)")
+        }
       }
     } finally {
       sys.props -= "graft.views.root"

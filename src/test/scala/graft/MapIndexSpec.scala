@@ -402,6 +402,12 @@ class MapIndexSpec extends AnyFunSuite with SparkSpec {
       SimilarityQueries.sqTopKFromView(spark, corpus.toString).collect()
       SimilarityQueries.ivfpqTopKFromView(spark, corpus.toString).collect()
       PipelineQueries.queries("dedup_pairs_incremental")(spark, corpus.toString).collect()
+      val search = PipelineQueries.queries("search_bm25_incremental")(spark, corpus.toString)
+        .collect().toSeq
+      val flat = Views.store(spark, corpus.toString)
+      val bm25V = flat.latestVersion("doc_postings_bm25_inc")
+      val lenV = flat.latestVersion("doc_lengths_inc")
+      assert(bm25V.isDefined && lenV.isDefined)
       val store = Views.bucketedStore(spark, corpus.toString)
       val sqE = store.epoch("emb_sq8_inc")
       val pqE = store.epoch("emb_ivfpq_cells")
@@ -413,13 +419,19 @@ class MapIndexSpec extends AnyFunSuite with SparkSpec {
       // the reopened store must SERVE both units (same epochs, no
       // re-materialization, probe scale read from the persisted model)
       SimilarityQueries.resetCachesForTest()
-      PipelineQueries.resetCachesForTest()
       Views.dropStoresForTest(corpus.toString)
       SimilarityQueries.sqTopKFromView(spark, corpus.toString).collect()
       // the IVF-PQ reopen additionally parses the persisted mixed model
       // (64-dim centroid rows ++ 8-dim codebook rows, split by length)
       SimilarityQueries.ivfpqTopKFromView(spark, corpus.toString).collect()
       PipelineQueries.queries("dedup_pairs_incremental")(spark, corpus.toString).collect()
+      assert(PipelineQueries.queries("search_bm25_incremental")(spark, corpus.toString)
+        .collect().toSeq === search)
+      val flat2 = Views.store(spark, corpus.toString)
+      assert(flat2.latestVersion("doc_postings_bm25_inc") === bm25V,
+        "reopen must serve the incremental BM25 postings unit, not rebuild it")
+      assert(flat2.latestVersion("doc_lengths_inc") === lenV,
+        "reopen must serve the incremental length-stats unit, not rebuild it")
       val store2 = Views.bucketedStore(spark, corpus.toString)
       assert(store2.epoch("emb_sq8_inc") === sqE,
         "reopen must serve the SQ8 unit, not rebuild it")
@@ -448,7 +460,6 @@ class MapIndexSpec extends AnyFunSuite with SparkSpec {
     } finally {
       sys.props -= "graft.views.root"
       SimilarityQueries.resetCachesForTest()
-      PipelineQueries.resetCachesForTest()
       Views.dropStoresForTest(corpus.toString)
     }
   }

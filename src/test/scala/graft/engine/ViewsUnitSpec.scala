@@ -6,33 +6,41 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The build-unit contract of [[Views.unit]] — lock, memo, marker, memo
-  * only on success — on plain temp dirs: no SparkSession is created (a
-  * store handle needs none until it reads or writes data). */
+  * only on success — and the lock + memo of [[Views.cached]], on plain
+  * temp dirs: no SparkSession is created (a store handle needs none until
+  * it reads or writes data). */
 class ViewsUnitSpec extends AnyFunSuite {
   private def tmp(): String = Files.createTempDirectory("graft-unit-").toString
 
   test("six threads entering one unit at once run its build once and share the instance") {
     val dir = tmp()
-    val builds = new AtomicInteger
-    val start = new CountDownLatch(1)
-    val pool = Executors.newFixedThreadPool(6)
-    try {
-      val calls = (1 to 6).map(_ => pool.submit(new Callable[AnyRef] {
-        def call(): AnyRef = {
-          start.await()
-          Views.unit[AnyRef](dir, "race")(fail("a fresh dir has no marker to reopen")) {
-            builds.incrementAndGet()
-            Thread.sleep(100) // hold the build open while the others arrive
-            new Object
+    // the same contract for both memo primitives: the durable unit and
+    // the per-JVM cached memo
+    val inputs = Seq[(String, (=> AnyRef) => AnyRef)](
+      "unit" -> (b => Views.unit[AnyRef](dir, "race")(fail("a fresh dir has no marker to reopen"))(b)),
+      "cached" -> (b => Views.cached[AnyRef](dir, "race")(b)))
+    for ((label, enter) <- inputs) {
+      val builds = new AtomicInteger
+      val start = new CountDownLatch(1)
+      val pool = Executors.newFixedThreadPool(6)
+      try {
+        val calls = (1 to 6).map(_ => pool.submit(new Callable[AnyRef] {
+          def call(): AnyRef = {
+            start.await()
+            enter {
+              builds.incrementAndGet()
+              Thread.sleep(100) // hold the build open while the others arrive
+              new Object
+            }
           }
-        }
-      }))
-      start.countDown()
-      val got = calls.map(_.get(60, TimeUnit.SECONDS))
-      assert(builds.get === 1)
-      assert(got.forall(_ eq got.head), "every thread must get the built instance")
-      assert(Views.unitDone(dir, "race"))
-    } finally pool.shutdown()
+        }))
+        start.countDown()
+        val got = calls.map(_.get(60, TimeUnit.SECONDS))
+        assert(builds.get === 1, s"$label: one build")
+        assert(got.forall(_ eq got.head), s"$label: every thread must get the built instance")
+      } finally pool.shutdown()
+    }
+    assert(Views.unitDone(dir, "race"))
   }
 
   test("a build that throws leaves no marker and no memo entry; the next call builds") {
