@@ -19,10 +19,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * second process (or a restarted one) over the same corpus serves
  * yesterday's materializations without recomputing them, while a corpus
  * rewrite under the same path rolls the fingerprint and forces a rebuild
- * rather than silently serving stale views. This is the same
- * staleness-check pattern the IVF quantizer cache uses for its trained
- * centroids (SimilarityQueries.corpusFingerprint). Default stays temp:
- * the test/bench driver wants per-run isolation.
+ * rather than silently serving stale views. The trained ANN models
+ * (quantizer centroids, PQ codebooks) use the same staleness check: their
+ * [[cached]] memo names carry the [[corpusFingerprint]] of
+ * `embeddings.parquet`, so a rewrite retrains. Default stays temp: the
+ * test/bench driver wants per-run isolation.
  *
  * Every operator build memo goes through one of two primitives:
  *  - [[Views.unit]] for DURABLE multi-step state (a view or aggregate

@@ -51,6 +51,44 @@ object SimilarityQueries {
       .filter(col("norm") > 0)
   }
 
+  // ---------------------------------------------------------------------
+  // Search stages: every ANN tier below is built from these. A stage
+  // takes frames that the caller has already broadcast or hinted, so the
+  // plan shape (model-sized vs bulk) stays the caller's choice.
+  // ---------------------------------------------------------------------
+
+  /** The probe batch of corpus `e`: its vectors with `vec_id < 10` as
+    * `(probe_id, pv, pn)`, plus any `extra` probe-side columns. */
+  private def probesOf(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(col("vec_id") < 10).select(
+      Seq(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn")) ++ extra: _*)
+
+  /** Exact cosine from two vectors and their norms, rounded to the 6
+    * places the oracle rounds to. */
+  private def cosine(a: Column, b: Column, na: Column, nb: Column): Column =
+    round(dot(a, b) / (na * nb), 6)
+
+  /** Score rows that carry a probe `(pv, pn)` and a candidate
+    * `(v, norm)`: `(probe_id, neighbor_id, cos)`, the candidate id read
+    * from column `id`. */
+  private def scoreRows(rows: DataFrame, id: String = "vec_id"): DataFrame =
+    rows.withColumn("cos", cosine(col("pv"), col("v"), col("pn"), col("norm")))
+      .select(col("probe_id"), col(id).as("neighbor_id"), col("cos"))
+
+  /** Exact rerank: candidate ids `(probe_id, id)` join back to the float
+    * `corpus` and to the `probes`, then score exactly. */
+  private def exactScores(cands: DataFrame, corpus: DataFrame, probes: DataFrame,
+      id: String = "vec_id"): DataFrame =
+    scoreRows(cands.join(corpus, Seq(id)).join(probes, Seq("probe_id")), id)
+
+  /** Exact top-k of corpus `e` for its own probe batch: the corpus scan
+    * against the broadcast probes, ranked. `sim_brute_topk`, and the
+    * ground truth of every top-k recall gate. */
+  private def exactTopK(e: DataFrame): DataFrame =
+    rankTopK(scoreRows(e.join(broadcast(probesOf(e)), col("vec_id") =!= col("probe_id"))))
+
+  /** Final rank through a window: the top K `(probe_id, neighbor_id,
+    * cos, rank)` per probe, cos DESC then neighbor_id ASC. */
   private def rankTopK(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -58,6 +96,93 @@ object SimilarityQueries {
       .select(col("probe_id"), col("neighbor_id"), col("cos"), col("rank"))
       .orderBy("probe_id", "rank")
   }
+
+  /** [[rankTopK]] through the bounded-heap `topk_by` aggregate (score
+    * DESC, id ASC — the window's tie-break), with no window sort: its
+    * partial aggregation ships at most K rows per probe per map task. */
+  private def heapTopK(scored: DataFrame): DataFrame =
+    scored.groupBy("probe_id")
+      .agg(expr(s"topk_by(cos, neighbor_id, $K)").as("top"))
+      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "t")))
+      .select(col("probe_id"), col("t.id").as("neighbor_id"),
+        col("t.score").as("cos"), (col("r0") + 1).cast("long").as("rank"))
+      .orderBy("probe_id", "rank")
+
+  /** Refine cut of a quantized search: the top `n` candidate
+    * `(probe_id, vec_id)` per probe by approximate `score`, through a
+    * window. */
+  private def refineWindow(approx: DataFrame, score: String, n: Int): DataFrame = {
+    val w = Window.partitionBy("probe_id").orderBy(col(score).desc, col("vec_id"))
+    approx.withColumn("r", row_number().over(w))
+      .filter(col("r") <= n)
+      .select("probe_id", "vec_id")
+  }
+
+  /** [[refineWindow]]'s cut through the bounded-heap `topk_by` aggregate. */
+  private def refineHeap(approx: DataFrame, score: String, n: Int): DataFrame =
+    approx.groupBy("probe_id")
+      .agg(expr(s"topk_by($score, vec_id, $n)").as("top"))
+      .select(col("probe_id"), explode(expr("transform(top, t -> t.id)")).as("vec_id"))
+
+  /** One emit-value field of a stored index, under its own name. */
+  private def ev(field: String): Column = col(s"emit_value.$field").as(field)
+
+  /** A cell-keyed stored index as `(cid, vec_id, fields…)`. */
+  private def cellRows(stored: DataFrame, fields: String*): DataFrame =
+    stored.select(col("emit_key").as("cid") +: ("vec_id" +: fields).map(ev): _*)
+
+  /** A vec_id-keyed stored index as `(vec_id, fields…, qn)`, dropping
+    * vectors with no quantized direction (`qn = 0`). */
+  private def codeRows(stored: DataFrame, fields: String*): DataFrame =
+    stored.select(col("emit_key").cast("long").as("vec_id") +: (fields :+ "qn").map(ev): _*)
+      .filter(col("qn") > 0)
+
+  /** Model-sized prune: collect the probed emit keys (at most probes ×
+    * nProbe or probes × bands — model-sized) and push them to the stored
+    * scan as an In-filter. */
+  private def pushedKeys(stored: DataFrame, keys: DataFrame): DataFrame = {
+    val ids = keys.distinct().collect().map(_.getString(0)).toSeq
+    stored.filter(col("emit_key").isInCollection(ids))
+  }
+
+  /** Bulk prune: a shuffle semi-join against the probed key set, so
+    * nothing moves to the driver. */
+  private def semiPruned(rows: DataFrame, keys: DataFrame): DataFrame =
+    rows.join(keys.distinct().hint("shuffle_hash"), keys.columns.toSeq, "left_semi")
+
+  /** One row per (probe, probed cell): the probe's `nProbe` nearest
+    * cells, `cid` spelled as the stored emit key. */
+  private def probeCells(probes: DataFrame, cents: Array[Array[Double]], nProbe: Int): DataFrame =
+    probes.withColumn("cid0", explode(probeCellsCol(cents, nProbe, col("pv"))))
+      .withColumn("cid", col("cid0").cast("string"))
+
+  /** Candidates of each probe within its probed cells. A vector lives in
+    * exactly one cell, so each (probe, neighbor) pair joins at most once
+    * and no candidate dedupe is needed. */
+  private def inProbedCells(cells: DataFrame, probed: DataFrame): DataFrame =
+    cells.join(probed, Seq("cid")).filter(col("vec_id") =!= col("probe_id"))
+
+  /** SQ8 probe columns: each probe quantized at `scale` (`pq`) with its
+    * quantized norm (`pqn`); a probe that vanishes under quantization has
+    * no direction and is dropped. */
+  private def sqProbes(probes: DataFrame, scale: Double): DataFrame =
+    probes.withColumn("pq", call_function("vec_quantize", col("pv"), lit(scale)))
+      .withColumn("pqn", sqrt(call_function("vec_dot_q", col("pq"), col("pq")).cast("double")))
+      .filter(col("pqn") > 0)
+
+  /** Approximate SQ8 cosine of a probe `(pq, pqn)` and a code `(q, qn)`. */
+  private def sqCos: Column =
+    call_function("vec_dot_q", col("pq"), col("q")).cast("double") / (col("pqn") * col("qn"))
+
+  /** PQ probe columns: the probe's ADC lookup table (`lut`). */
+  private def lutProbes(probes: DataFrame, books: Array[Array[Array[Double]]]): DataFrame =
+    probes.withColumn("lut", pqLutExpr(books, col("pv")))
+
+  /** `pq_adc(codes, table)`: the sum over subspaces of `table[m·ks +
+    * codes[m]]` — a dot product when `table` is a probe's LUT, the
+    * reconstructed squared norm when it is [[pqNormLut]]. */
+  private def pqAdc(codes: Column, table: Column, books: Array[Array[Array[Double]]]): Column =
+    call_function("pq_adc", codes, table, lit(books(0).length))
 
   /** LSH-banded ANN top-k `(probe_id, neighbor_id, cos, rank)`: candidate
     * iff any 4-bit hyperplane band matches. The user-facing API behind
@@ -77,13 +202,7 @@ object SimilarityQueries {
           col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"))
       .distinct()
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-    val scored = candIds.join(e, Seq("vec_id"))
-      .join(broadcast(probes), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(scored)
+    rankTopK(exactScores(candIds, e, broadcast(probesOf(e))))
   }
 
   /** SemDeDup-style within-cell near-dup pairs `(i, j, cos)`: the corpus
@@ -95,14 +214,26 @@ object SimilarityQueries {
     * the scan is O(n · cell_size) at any corpus size. */
   def semanticDupPairs(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val cents = ivfCentroidsFor(s, dir)
-    val cells = e.withColumn("cell", assignExpr(cents))
-    val a = cells.select(col("cell"), col("vec_id").as("i"),
-      col("v").as("vi"), col("norm").as("ni"))
-    val b = cells.select(col("cell"), col("vec_id").as("j"),
-      col("v").as("vj"), col("norm").as("nj"))
-    a.join(b, Seq("cell")).filter(col("i") < col("j"))
-      .withColumn("cos", round(dot(col("vi"), col("vj")) / (col("ni") * col("nj")), 6))
+    cellPairs(e.withColumn("cell", assignExpr(ivfCentroidsFor(s, dir))))
+  }
+
+  /** [[semanticDupPairs]] served from the MAINTAINED IVF cell view: the
+    * within-cell scan reads the stored posting lists (which the engine
+    * refreshed O(delta) — moved vectors re-celled, tombstoned ones
+    * dropped), so the dedup pass needs no assignment recompute. */
+  private def semanticDupPairsFromView(s: SparkSession, dir: String): DataFrame = {
+    val (store, _) = ivfCellsView(s, dir)
+    cellPairs(store.df("emb_ivf_cells")
+      .select(col("emit_key").as("cell"), ev("vec_id"), ev("v"), ev("norm")))
+  }
+
+  /** Within-cell near-dup pairs `(i, j, cos)` of a `(cell, vec_id, v,
+    * norm)` relation: an equi-join on the cell id, exact cosine verify. */
+  private def cellPairs(cells: DataFrame): DataFrame = {
+    def side(id: String, v: String, n: String) =
+      cells.select(col("cell"), col("vec_id").as(id), col("v").as(v), col("norm").as(n))
+    side("i", "vi", "ni").join(side("j", "vj", "nj"), Seq("cell")).filter(col("i") < col("j"))
+      .withColumn("cos", cosine(col("vi"), col("vj"), col("ni"), col("nj")))
       .filter(col("cos") >= EmbDupThreshold)
       .select(col("i"), col("j"), col("cos"))
   }
@@ -124,7 +255,7 @@ object SimilarityQueries {
     pairs.select("i", "j")
       .join(e.select(col("vec_id").as("i"), col("v").as("vi"), col("norm").as("ni")), Seq("i"))
       .join(e.select(col("vec_id").as("j"), col("v").as("vj"), col("norm").as("nj")), Seq("j"))
-      .withColumn("cos", round(dot(col("vi"), col("vj")) / (col("ni") * col("nj")), 6))
+      .withColumn("cos", cosine(col("vi"), col("vj"), col("ni"), col("nj")))
       .filter(col("cos") >= EmbDupThreshold)
       .select(col("i"), col("j"), col("cos"))
       .orderBy("i", "j")
@@ -162,37 +293,21 @@ object SimilarityQueries {
     math.min(nCells, 2 * probesFor(nCells))
   private val KmeansIters = 5
 
-  /** Per-JVM quantizer cache: like a real IVF index, the model is trained
-    * once per corpus and served by every subsequent query (the `Views`
-    * pattern). Keyed by the corpus dir PLUS a cheap content fingerprint
-    * (file paths, sizes, mtimes of embeddings.parquet), so regenerating
-    * the parquet under the same path invalidates the cached model instead
-    * of silently serving a quantizer trained on the old data. Training is
-    * deterministic up to floating-point summation order in the
-    * distributed mean (partition layout can drift centroid low bits and
-    * flip cell-boundary vectors); the recall invariant carries enough
-    * margin to absorb that drift. */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-
-  /** Metadata-only fingerprint of the corpus files — one listStatus, no
-    * data read; any rewrite bumps an mtime or length and rolls the key. */
-  private def corpusFingerprint(s: SparkSession, dir: String): String = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val h = fs.listStatus(p).sortBy(_.getPath.toString)
-      .foldLeft(1469598103934665603L) { (acc, st) =>
-        val s1 = (acc ^ st.getPath.toString.hashCode.toLong) * 1099511628211L
-        val s2 = (s1 ^ st.getLen) * 1099511628211L
-        (s2 ^ st.getModificationTime) * 1099511628211L
-      }
-    java.lang.Long.toHexString(h)
-  }
+  /** Per-JVM model memo ([[Views.cached]]): like a real IVF index, each
+    * model (quantizer, codebooks) is trained once per corpus and served
+    * by every subsequent query. The memo name carries the metadata-only
+    * fingerprint of embeddings.parquet ([[Views.corpusFingerprint]]:
+    * file paths, sizes, mtimes), so regenerating the parquet under the
+    * same path retrains instead of silently serving a model trained on
+    * the old data. Training is deterministic up to floating-point
+    * summation order in the distributed mean (partition layout can drift
+    * centroid low bits and flip cell-boundary vectors); the recall
+    * invariant carries enough margin to absorb that drift. */
+  private def trained[T](dir: String, model: String)(train: => T): T =
+    Views.cached(dir, s"$model#${Views.corpusFingerprint(s"$dir/embeddings.parquet")}")(train)
 
   private def ivfCentroidsFor(s: SparkSession, dir: String): Array[Array[Double]] =
-    centroidCache.computeIfAbsent(s"$dir#${corpusFingerprint(s, dir)}",
-      _ => ivfCentroids(emb(s, dir)))
+    trained(dir, "ivfCentroids")(ivfCentroids(emb(s, dir)))
 
   /** Train the IVF quantizer up front — index-build cost, not query cost,
     * the same compute-on-write stance as the stored map views (an IVF
@@ -288,8 +403,8 @@ object SimilarityQueries {
     * for free. The assignment expression bakes the trained centroids in,
     * so a refresh reassigns upserted vectors with EXACTLY the quantizer
     * the stored cells were built with. */
-  private def ivfIdx(cents: Array[Array[Double]]): MapIndex =
-    MapIndex.columns("emb_ivf_cells")(
+  private def ivfIdx(cents: Array[Array[Double]], name: String = "emb_ivf_cells"): MapIndex =
+    MapIndex.columns(name)(
       col("vec_id").cast("string"),
       array(emit(assignExpr(cents).cast("string"),
         struct(col("vec_id"), col("v"), col("norm")))))
@@ -325,14 +440,8 @@ object SimilarityQueries {
         Seq("probe_id", "neighbor_id"), "left_semi").count()
       hit.toDouble / t.count()
     }
-    val bruteBase = queries("sim_brute_topk")(s, dir)
-    val e = modifiedEmb(s, dir)
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-    val bruteMod = rankTopK(
-      e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-        .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
+    val bruteBase = exactTopK(emb(s, dir))
+    val bruteMod = exactTopK(modifiedEmb(s, dir))
     Map(
       "pq_flat" -> recall(pqTopKPairs(s, dir), bruteBase),
       "pq_view" -> recall(pqTopKFromView(s, dir), bruteMod),
@@ -407,14 +516,15 @@ object SimilarityQueries {
     * re-bands only itself through the store's ordinary refresh — strictly
     * O(delta) at any scale, with CDC sidecars, epoch snapshots and the
     * concurrent-writer guard inherited from the store. */
-  private val lshIdx: MapIndex =
-    MapIndex.columns("emb_lsh_bands")(
+  private def bandIdx(name: String): MapIndex =
+    MapIndex.columns(name)(
       col("vec_id").cast("string"),
       expr("""transform(hyperplane_bands(v), (bv, band) ->
              |  named_struct(
              |    'emit_key', concat(cast(band as string), ':', cast(bv as string)),
              |    'emit_value', named_struct('vec_id', vec_id, 'v', v, 'norm', norm)))
              |""".stripMargin))
+  private val lshIdx: MapIndex = bandIdx("emb_lsh_bands")
 
   /** Build the persisted band view on the ORIGINAL corpus, then push the
     * SAME deterministic change batch as the IVF index through its refresh
@@ -453,39 +563,41 @@ object SimilarityQueries {
     * list. */
   def lshTopKFromView(s: SparkSession, dir: String): DataFrame = {
     val store = lshBandsView(s, dir)
-    val probes = modifiedEmb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-    lshTopKFromStored(store.df(lshIdx.name), probes)
+    lshTopKFromStored(store.df(lshIdx.name), probesOf(modifiedEmb(s, dir)))
   }
+
+  /** A probe batch's band keys: one `(probe_id, pv, pn, bkey)` row per
+    * hyperplane band, `bkey` spelled as the stored emit key `band:value`. */
+  private def probeBandsOf(probes: DataFrame): DataFrame =
+    probes
+      .select(col("probe_id"), col("pv"), col("pn"),
+        posexplode(expr("hyperplane_bands(pv)")).as(Seq("band", "bv")))
+      .withColumn("bkey", concat(col("band").cast("string"), lit(":"), col("bv").cast("string")))
+      .drop("band", "bv")
+
+  /** Stored band emissions as `(bkey, neighbor_id, v, norm)`. */
+  private def bandRows(stored: DataFrame): DataFrame =
+    stored.select(col("emit_key").as("bkey"), col("emit_value.vec_id").as("neighbor_id"),
+      ev("v"), ev("norm"))
+
+  /** Candidate ids of each probe from its colliding bands. A (probe,
+    * neighbor) pair can collide in several bands: the ids are deduped
+    * BEFORE the cosine so each pair scores once. */
+  private def bandCands(stored: DataFrame, probeBands: DataFrame): DataFrame =
+    stored.join(probeBands, Seq("bkey"))
+      .filter(col("neighbor_id") =!= col("probe_id"))
+      .select("probe_id", "neighbor_id").distinct()
 
   /** The stored-band search core shared by every LSH serving path (the
     * maintained view, its pre-batch epoch, the streaming-built view):
     * probe band keys collected (model-sized) → pushed In-filter on the
     * stored emissions → candidate dedupe → exact cosine. */
   private def lshTopKFromStored(stored0: DataFrame, probes: DataFrame): DataFrame = {
-    val probeBands = probes
-      .select(col("probe_id"), col("pv"), col("pn"),
-        posexplode(expr("hyperplane_bands(pv)")).as(Seq("band", "bv")))
-      .withColumn("bkey", concat(col("band").cast("string"), lit(":"), col("bv").cast("string")))
-      .drop("band", "bv")
-    val bandKeys = probeBands.select("bkey").distinct()
-      .collect().map(_.getString(0)).toSeq
-    val stored = stored0
-      .filter(col("emit_key").isInCollection(bandKeys))
-      .select(col("emit_key").as("bkey"), col("emit_value.vec_id").as("neighbor_id"),
-        col("emit_value.v").as("v"), col("emit_value.norm").as("norm"))
-    // a (probe, neighbor) pair can collide in several bands: dedupe the
-    // candidate ids BEFORE the cosine so each pair scores once
-    val candIds = stored.join(broadcast(probeBands.select("probe_id", "bkey")), Seq("bkey"))
-      .filter(col("neighbor_id") =!= col("probe_id"))
-      .select("probe_id", "neighbor_id").distinct()
-    val scored = candIds
-      .join(stored.select(col("neighbor_id"), col("v"), col("norm")).distinct(),
-        Seq("neighbor_id"))
-      .join(broadcast(probes), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("neighbor_id"), col("cos"))
-    rankTopK(scored)
+    val probeBands = probeBandsOf(probes)
+    val stored = bandRows(pushedKeys(stored0, probeBands.select("bkey")))
+    val candIds = bandCands(stored, broadcast(probeBands.select("probe_id", "bkey")))
+    rankTopK(exactScores(candIds, stored.select(col("neighbor_id"), col("v"), col("norm")).distinct(),
+      broadcast(probes), "neighbor_id"))
   }
 
   /** The maintained band view served AS OF its pre-batch epoch (the
@@ -497,9 +609,7 @@ object SimilarityQueries {
   def lshTopKAsOf(s: SparkSession, dir: String): DataFrame = {
     val store = lshBandsView(s, dir)
     val e = store.epoch(lshIdx.name)
-    val probes = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-    lshTopKFromStored(store.dfAsOf(lshIdx.name, e - 1), probes)
+    lshTopKFromStored(store.dfAsOf(lshIdx.name, e - 1), probesOf(emb(s, dir)))
   }
 
   /** The band index built PURELY through streaming micro-batches
@@ -510,14 +620,7 @@ object SimilarityQueries {
     * production embedding pipeline runs. The served result must match
     * the batch-maintained view's exactly (same ground truth grades
     * both). */
-  private val lshStreamIdx: MapIndex =
-    MapIndex.columns("emb_lsh_stream")(
-      col("vec_id").cast("string"),
-      expr("""transform(hyperplane_bands(v), (bv, band) ->
-             |  named_struct(
-             |    'emit_key', concat(cast(band as string), ':', cast(bv as string)),
-             |    'emit_value', named_struct('vec_id', vec_id, 'v', v, 'norm', norm)))
-             |""".stripMargin))
+  private val lshStreamIdx: MapIndex = bandIdx("emb_lsh_stream")
 
   private def lshStreamedView(s: SparkSession, dir: String): BucketedViewStore = {
     val store = Views.bucketedStore(s, dir)
@@ -545,9 +648,7 @@ object SimilarityQueries {
   /** LSH ANN served from the STREAMING-built band view. */
   def lshTopKStreamed(s: SparkSession, dir: String): DataFrame = {
     val store = lshStreamedView(s, dir)
-    val probes = modifiedEmb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-    lshTopKFromStored(store.df(lshStreamIdx.name), probes)
+    lshTopKFromStored(store.df(lshStreamIdx.name), probesOf(modifiedEmb(s, dir)))
   }
 
   /** The IVF cell view built PURELY through streaming micro-batches —
@@ -573,11 +674,7 @@ object SimilarityQueries {
       // standard streaming-ingest fit (cells ∝ √sample), and every later
       // batch is assigned under that frozen model
       val cents = ivfCentroids(e.filter(col("vec_id") % 3 === 0))
-      val idx = MapIndex.columns(unit)(
-        col("vec_id").cast("string"),
-        array(emit(assignExpr(cents).cast("string"),
-          struct(col("vec_id"), col("v"), col("norm")))))
-      val smi = new graft.streaming.BucketedStreamingMapIndex(idx, store)
+      val smi = new graft.streaming.BucketedStreamingMapIndex(ivfIdx(cents, unit), store)
       (0 to 2).foreach(r => smi.applyBatch(e.filter(col("vec_id") % 3 === r)))
       smi.applyBatch(streamedEmbBatch(e))
       Views.writeModel(store.baseDir, unit, cents.map(_.toSeq).toSeq)
@@ -685,31 +782,20 @@ object SimilarityQueries {
     * `K · SqRefine` best per probe against the post-batch corpus. */
   def sqTopKFromView(s: SparkSession, dir: String): DataFrame = {
     val (store, scale) = sqIncView(s, dir)
-    val m = modifiedEmb(s, dir)
-    val probes = m.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("pq", call_function("vec_quantize", col("pv"), lit(scale)))
-      .withColumn("pqn", sqrt(call_function("vec_dot_q", col("pq"), col("pq")).cast("double")))
-      .filter(col("pqn") > 0)
-    val qcorpus = store.df("emb_sq8_inc")
-      .select(col("emit_key").cast("long").as("vec_id"),
-        col("emit_value.q").as("q"), col("emit_value.qn").as("qn"))
-      .filter(col("qn") > 0)
+    sqSearch(codeRows(store.df("emb_sq8_inc"), "q"), modifiedEmb(s, dir), scale)
+  }
+
+  /** The model-sized SQ8 search core shared by the stored-relation and
+    * maintained-view paths: integer-dot scan of the `(vec_id, q, qn)`
+    * codes against the broadcast quantized probes, window refine cut,
+    * exact rerank against the float `corpus`. */
+  private def sqSearch(qcorpus: DataFrame, corpus: DataFrame, scale: Double): DataFrame = {
+    val probes = sqProbes(probesOf(corpus), scale)
     val approx = qcorpus
-      .join(broadcast(probes.select("probe_id", "pq", "pqn")),
-        col("vec_id") =!= col("probe_id"))
-      .withColumn("qcos",
-        call_function("vec_dot_q", col("pq"), col("q")).cast("double") / (col("pqn") * col("qn")))
-    val w = Window.partitionBy("probe_id").orderBy(col("qcos").desc, col("vec_id"))
-    val cands = approx.withColumn("r", row_number().over(w))
-      .filter(col("r") <= K * SqRefine)
-      .select("probe_id", "vec_id")
-    val scored = cands
-      .join(m.select(col("vec_id"), col("v"), col("norm")), Seq("vec_id"))
-      .join(broadcast(probes.select("probe_id", "pv", "pn")), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(scored)
+      .join(broadcast(probes.select("probe_id", "pq", "pqn")), col("vec_id") =!= col("probe_id"))
+      .withColumn("qcos", sqCos)
+    rankTopK(exactScores(refineWindow(approx, "qcos", K * SqRefine), corpus,
+      broadcast(probes.select("probe_id", "pv", "pn"))))
   }
 
   // ---------------------------------------------------------------------
@@ -787,39 +873,15 @@ object SimilarityQueries {
     * (measured 1.0) rank fidelity, so the [[IvfRecallBound]] carries. */
   def ivfsqTopKFromView(s: SparkSession, dir: String): DataFrame = {
     val (store, cents, scale) = ivfsqCellsView(s, dir)
-    val nProbe = probesFor(cents.length)
     val m = modifiedEmb(s, dir)
-    val probes = m.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("pq", call_function("vec_quantize", col("pv"), lit(scale)))
-      .withColumn("pqn", sqrt(call_function("vec_dot_q", col("pq"), col("pq")).cast("double")))
-      .filter(col("pqn") > 0)
-    val probeCells = probes
-      .withColumn("cid0", explode(probeCellsCol(cents, nProbe, col("pv"))))
-      .withColumn("cid", col("cid0").cast("string"))
+    val probes = sqProbes(probesOf(m), scale)
+    val probed = probeCells(probes, cents, probesFor(cents.length))
       .select("probe_id", "cid", "pq", "pqn")
-    val cellIds = probeCells.select("cid").distinct()
-      .collect().map(_.getString(0)).toSeq
-    val qcells = store.df("emb_ivfsq_cells")
-      .filter(col("emit_key").isInCollection(cellIds))
-      .select(col("emit_key").as("cid"), col("emit_value.vec_id").as("vec_id"),
-        col("emit_value.q").as("q"), col("emit_value.qn").as("qn"))
+    val qcells = cellRows(pushedKeys(store.df("emb_ivfsq_cells"), probed.select("cid")), "q", "qn")
       .filter(col("qn") > 0)
-    // a vector lives in exactly one cell — no candidate dedupe needed
-    val approx = qcells.join(broadcast(probeCells), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("qcos",
-        call_function("vec_dot_q", col("pq"), col("q")).cast("double") / (col("pqn") * col("qn")))
-    val w = Window.partitionBy("probe_id").orderBy(col("qcos").desc, col("vec_id"))
-    val cands = approx.withColumn("r", row_number().over(w))
-      .filter(col("r") <= K * SqRefine)
-      .select("probe_id", "vec_id")
-    val scored = cands
-      .join(m.select(col("vec_id"), col("v"), col("norm")), Seq("vec_id"))
-      .join(broadcast(probes.select("probe_id", "pv", "pn")), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(scored)
+    val approx = inProbedCells(qcells, broadcast(probed)).withColumn("qcos", sqCos)
+    rankTopK(exactScores(refineWindow(approx, "qcos", K * SqRefine), m,
+      broadcast(probes.select("probe_id", "pv", "pn"))))
   }
 
   /** The BULK-probe spelling of [[ivfsqTopKFromView]] — the full
@@ -833,41 +895,15 @@ object SimilarityQueries {
   def ivfsqTopKBulk(s: SparkSession, dir: String): DataFrame = {
     graft.functions.Sketches.register(s)
     val (store, cents, scale) = ivfsqCellsView(s, dir)
-    val nProbe = probesFor(cents.length)
     val m = modifiedEmb(s, dir)
-    val probes = m.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("pq", call_function("vec_quantize", col("pv"), lit(scale)))
-      .withColumn("pqn", sqrt(call_function("vec_dot_q", col("pq"), col("pq")).cast("double")))
-      .filter(col("pqn") > 0)
-    val probeCells = probes
-      .withColumn("cid0", explode(probeCellsCol(cents, nProbe, col("pv"))))
-      .withColumn("cid", col("cid0").cast("string"))
+    val probes = sqProbes(probesOf(m), scale)
+    val probed = probeCells(probes, cents, probesFor(cents.length))
       .select("probe_id", "cid", "pq", "pqn")
-    val qcells = store.df("emb_ivfsq_cells")
-      .select(col("emit_key").as("cid"), col("emit_value.vec_id").as("vec_id"),
-        col("emit_value.q").as("q"), col("emit_value.qn").as("qn"))
-      .filter(col("qn") > 0)
-      .join(probeCells.select("cid").distinct().hint("shuffle_hash"),
-        Seq("cid"), "left_semi")
-    val approx = qcells.join(probeCells.hint("shuffle_hash"), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("qcos",
-        call_function("vec_dot_q", col("pq"), col("q")).cast("double") / (col("pqn") * col("qn")))
-    val cands = approx.groupBy("probe_id")
-      .agg(expr(s"topk_by(qcos, vec_id, ${K * SqRefine})").as("top"))
-      .select(col("probe_id"), explode(expr("transform(top, t -> t.id)")).as("vec_id"))
-    val scored = cands
-      .join(m.select(col("vec_id"), col("v"), col("norm")).hint("shuffle_hash"), Seq("vec_id"))
-      .join(probes.select("probe_id", "pv", "pn").hint("shuffle_hash"), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    scored.groupBy("probe_id")
-      .agg(expr(s"topk_by(cos, neighbor_id, $K)").as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "t")))
-      .select(col("probe_id"), col("t.id").as("neighbor_id"),
-        col("t.score").as("cos"), (col("r0") + 1).cast("long").as("rank"))
-      .orderBy("probe_id", "rank")
+    val qcells = semiPruned(cellRows(store.df("emb_ivfsq_cells"), "q", "qn")
+      .filter(col("qn") > 0), probed.select("cid"))
+    val approx = inProbedCells(qcells, probed.hint("shuffle_hash")).withColumn("qcos", sqCos)
+    heapTopK(exactScores(refineHeap(approx, "qcos", K * SqRefine), m.hint("shuffle_hash"),
+      probes.select("probe_id", "pv", "pn").hint("shuffle_hash")))
   }
 
   /** The BULK-probe spelling of [[sqTopKFromView]] — the SQ twin of the
@@ -887,36 +923,13 @@ object SimilarityQueries {
     graft.functions.Sketches.register(s)
     val (store, scale) = sqIncView(s, dir)
     val m = modifiedEmb(s, dir)
-    val probes = m.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("pq", call_function("vec_quantize", col("pv"), lit(scale)))
-      .withColumn("pqn", sqrt(call_function("vec_dot_q", col("pq"), col("pq")).cast("double")))
-      .filter(col("pqn") > 0)
-    val qcorpus = store.df("emb_sq8_inc")
-      .select(col("emit_key").cast("long").as("vec_id"),
-        col("emit_value.q").as("q"), col("emit_value.qn").as("qn"))
-      .filter(col("qn") > 0)
-    val approx = qcorpus
+    val probes = sqProbes(probesOf(m), scale)
+    val approx = codeRows(store.df("emb_sq8_inc"), "q")
       .join(probes.select("probe_id", "pq", "pqn").hint("shuffle_replicate_nl"),
         col("vec_id") =!= col("probe_id"))
-      .withColumn("qcos",
-        call_function("vec_dot_q", col("pq"), col("q")).cast("double") / (col("pqn") * col("qn")))
-    val cands = approx.groupBy("probe_id")
-      .agg(expr(s"topk_by(qcos, vec_id, ${K * SqRefine})").as("top"))
-      .select(col("probe_id"), explode(expr("transform(top, t -> t.id)")).as("vec_id"))
-    val scored = cands
-      .join(m.select(col("vec_id"), col("v"), col("norm")).hint("shuffle_hash"), Seq("vec_id"))
-      .join(probes.select("probe_id", "pv", "pn").hint("shuffle_hash"), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    // final exact rank through the same bounded heap (score DESC, id ASC
-    // — identical tie-break to [[rankTopK]]'s window ordering)
-    scored.groupBy("probe_id")
-      .agg(expr(s"topk_by(cos, neighbor_id, $K)").as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "t")))
-      .select(col("probe_id"), col("t.id").as("neighbor_id"),
-        col("t.score").as("cos"), (col("r0") + 1).cast("long").as("rank"))
-      .orderBy("probe_id", "rank")
+      .withColumn("qcos", sqCos)
+    heapTopK(exactScores(refineHeap(approx, "qcos", K * SqRefine), m.hint("shuffle_hash"),
+      probes.select("probe_id", "pv", "pn").hint("shuffle_hash")))
   }
 
   // ---------------------------------------------------------------------
@@ -987,6 +1000,11 @@ object SimilarityQueries {
   private def pqNormLut(books: Array[Array[Array[Double]]]): Array[Double] =
     books.flatMap(_.map(c => c.map(x => x * x).sum))
 
+  /** `|recon(codes)|²`: the squared norm of the vector `codes`
+    * reconstructs under `books`. */
+  private def pqReconNorm2(codes: Column, books: Array[Array[Array[Double]]]): Column =
+    pqAdc(codes, typedlit(pqNormLut(books)), books)
+
   /** Effective sub-quantizer resolution for an n-vector corpus:
     * `min(PqKs, max(16, n/8))`. The corpus cap is NOT about plan size
     * (the reference-object LUT made Ks free there) — it keeps the
@@ -1049,42 +1067,35 @@ object SimilarityQueries {
     } finally subs.unpersist(blocking = false)
   }
 
-  /** Per-JVM codebook cache, fingerprint-keyed like [[centroidCache]]. */
-  private val pqBookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
+  /** The corpus codebooks, memoized like the quantizer ([[trained]]). */
   private def pqBooksFor(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqBookCache.computeIfAbsent(s"$dir#${corpusFingerprint(s, dir)}",
-      _ => pqCodebooks(emb(s, dir)))
+    trained(dir, "pqBooks")(pqCodebooks(emb(s, dir)))
 
   /** Flat-PQ ANN top-k over the base corpus: encode-on-the-fly ADC scan
     * (rank = adc / reconstructed-norm), refine top K·PqRefine, exact
     * rerank. The recall-invariant query behind `sim_pq_topk`; the
     * persisted, composed spelling is [[ivfpqTopKFromView]]. */
   def pqTopKPairs(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.typedlit
     val e = emb(s, dir)
     val books = pqBooksFor(s, dir)
     val codes = pqEncodeExpr(books, col("v"))
-    val corpus = e.select(col("vec_id"), codes.as("codes"),
-      sqrt(call_function("pq_adc", codes, typedlit(pqNormLut(books)), lit(books(0).length))).as("qn"))
+    val corpus = e.select(col("vec_id"), codes.as("codes"), sqrt(pqReconNorm2(codes, books)).as("qn"))
       .filter(col("qn") > 0)
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("lut", pqLutExpr(books, col("pv")))
-    val approx = corpus
+    pqSearch(corpus, e, books)
+  }
+
+  /** The model-sized flat-PQ search core shared by the encode-on-the-fly
+    * and maintained-view paths: ADC scan of the `(vec_id, codes, qn)`
+    * codes (rank = adc / reconstructed norm) against the broadcast probe
+    * LUTs, window refine cut, exact rerank against the float `corpus`. */
+  private def pqSearch(qcorpus: DataFrame, corpus: DataFrame,
+      books: Array[Array[Array[Double]]]): DataFrame = {
+    val probes = lutProbes(probesOf(corpus), books)
+    val approx = qcorpus
       .join(broadcast(probes.select("probe_id", "lut")), col("vec_id") =!= col("probe_id"))
-      .withColumn("adc",
-        call_function("pq_adc", col("codes"), col("lut"), lit(books(0).length)) / col("qn"))
-    val w = Window.partitionBy("probe_id").orderBy(col("adc").desc, col("vec_id"))
-    val cands = approx.withColumn("r", row_number().over(w))
-      .filter(col("r") <= K * PqRefine)
-      .select("probe_id", "vec_id")
-    val scored = cands
-      .join(e.select(col("vec_id"), col("v"), col("norm")), Seq("vec_id"))
-      .join(broadcast(probes.select("probe_id", "pv", "pn")), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(scored)
+      .withColumn("adc", pqAdc(col("codes"), col("lut"), books) / col("qn"))
+    rankTopK(exactScores(refineWindow(approx, "adc", K * PqRefine), corpus,
+      broadcast(probes.select("probe_id", "pv", "pn"))))
   }
 
   // ---------------------------------------------------------------------
@@ -1121,12 +1132,11 @@ object SimilarityQueries {
     * model-sized output. */
   private[graft] def pqMeanSqError(
       corpus: DataFrame, books: Array[Array[Array[Double]]]): Double = {
-    import org.apache.spark.sql.functions.typedlit
     val codes = pqEncodeExpr(books, col("v"))
     corpus.select(
         (call_function("vec_dot", col("v"), col("v"))
-          - lit(2.0) * call_function("pq_adc", codes, pqLutExpr(books, col("v")), lit(books(0).length))
-          + call_function("pq_adc", codes, typedlit(pqNormLut(books)), lit(books(0).length))).as("e"))
+          - lit(2.0) * pqAdc(codes, pqLutExpr(books, col("v")), books)
+          + pqReconNorm2(codes, books)).as("e"))
       .agg(coalesce(avg("e"), lit(0.0))).head().getDouble(0)
   }
 
@@ -1136,13 +1146,10 @@ object SimilarityQueries {
     * Refresh re-encodes changed vectors under EXACTLY the codebooks the
     * stored codes carry. */
   private def pqIncIdx(books: Array[Array[Array[Double]]]): MapIndex = {
-    import org.apache.spark.sql.functions.typedlit
     val codes = pqEncodeExpr(books, col("v"))
     MapIndex.columns("emb_pq_inc")(
       col("vec_id").cast("string"),
-      array(emit(col("vec_id"), struct(codes.as("codes"),
-        sqrt(call_function("pq_adc", codes, typedlit(pqNormLut(books)), lit(books(0).length)))
-          .as("qn")))))
+      array(emit(col("vec_id"), struct(codes.as("codes"), sqrt(pqReconNorm2(codes, books)).as("qn")))))
   }
 
   /** Build the flat-PQ view over `corpus`; returns (codebooks, base
@@ -1206,30 +1213,8 @@ object SimilarityQueries {
     * per probe against the post-batch corpus — [[sqTopKFromView]] with
     * 64× compression instead of 4×. */
   def pqTopKFromView(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.typedlit
     val (store, books) = pqIncView(s, dir)
-    val m = modifiedEmb(s, dir)
-    val probes = m.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("lut", pqLutExpr(books, col("pv")))
-    val qcorpus = store.df("emb_pq_inc")
-      .select(col("emit_key").cast("long").as("vec_id"),
-        col("emit_value.codes").as("codes"), col("emit_value.qn").as("qn"))
-      .filter(col("qn") > 0)
-    val approx = qcorpus
-      .join(broadcast(probes.select("probe_id", "lut")), col("vec_id") =!= col("probe_id"))
-      .withColumn("adc",
-        call_function("pq_adc", col("codes"), col("lut"), lit(books(0).length)) / col("qn"))
-    val w = Window.partitionBy("probe_id").orderBy(col("adc").desc, col("vec_id"))
-    val cands = approx.withColumn("r", row_number().over(w))
-      .filter(col("r") <= K * PqRefine)
-      .select("probe_id", "vec_id")
-    val scored = cands
-      .join(m.select(col("vec_id"), col("v"), col("norm")), Seq("vec_id"))
-      .join(broadcast(probes.select("probe_id", "pv", "pn")), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(scored)
+    pqSearch(codeRows(store.df("emb_pq_inc"), "codes"), modifiedEmb(s, dir), books)
   }
 
   /** The BULK-probe spelling of [[pqTopKFromView]] — the flat-PQ twin of
@@ -1245,32 +1230,13 @@ object SimilarityQueries {
     graft.functions.Sketches.register(s)
     val (store, books) = pqIncView(s, dir)
     val m = modifiedEmb(s, dir)
-    val probes = m.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("lut", pqLutExpr(books, col("pv")))
-    val qcorpus = store.df("emb_pq_inc")
-      .select(col("emit_key").cast("long").as("vec_id"),
-        col("emit_value.codes").as("codes"), col("emit_value.qn").as("qn"))
-      .filter(col("qn") > 0)
-    val approx = qcorpus
+    val probes = lutProbes(probesOf(m), books)
+    val approx = codeRows(store.df("emb_pq_inc"), "codes")
       .join(probes.select("probe_id", "lut").hint("shuffle_replicate_nl"),
         col("vec_id") =!= col("probe_id"))
-      .withColumn("adc",
-        call_function("pq_adc", col("codes"), col("lut"), lit(books(0).length)) / col("qn"))
-    val cands = approx.groupBy("probe_id")
-      .agg(expr(s"topk_by(adc, vec_id, ${K * PqRefine})").as("top"))
-      .select(col("probe_id"), explode(expr("transform(top, t -> t.id)")).as("vec_id"))
-    val scored = cands
-      .join(m.select(col("vec_id"), col("v"), col("norm")).hint("shuffle_hash"), Seq("vec_id"))
-      .join(probes.select("probe_id", "pv", "pn").hint("shuffle_hash"), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    scored.groupBy("probe_id")
-      .agg(expr(s"topk_by(cos, neighbor_id, $K)").as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "t")))
-      .select(col("probe_id"), col("t.id").as("neighbor_id"),
-        col("t.score").as("cos"), (col("r0") + 1).cast("long").as("rank"))
-      .orderBy("probe_id", "rank")
+      .withColumn("adc", pqAdc(col("codes"), col("lut"), books) / col("qn"))
+    heapTopK(exactScores(refineHeap(approx, "adc", K * PqRefine), m.hint("shuffle_hash"),
+      probes.select("probe_id", "pv", "pn").hint("shuffle_hash")))
   }
 
   /** The residual relation a corpus leaves against a coarse quantizer:
@@ -1294,12 +1260,7 @@ object SimilarityQueries {
     * term reads M bytes. Both model families bake into the map
     * expression, so refresh re-encodes changed vectors under exactly the
     * model the stored codes carry. */
-  private def ivfpqIdx(
-      cents: Array[Array[Double]],
-      books: Array[Array[Array[Double]]]): MapIndex =
-    ivfpqIdxNamed("emb_ivfpq_cells", cents, books)
-
-  private def ivfpqIdxNamed(name: String,
+  private def ivfpqIdx(name: String,
       cents: Array[Array[Double]],
       books: Array[Array[Array[Double]]]): MapIndex = {
     val cid = assignExpr(cents)
@@ -1312,15 +1273,12 @@ object SimilarityQueries {
           sqrt(VectorFunctions.pqReconNorm2(cid, codes, cents, books)).as("qn")))))
   }
 
-  /** Residual codebooks for a coarse quantizer: [[pqCodebooks]] over the
-    * corpus's residual relation. Per-JVM cache keyed like the other
-    * model caches. */
-  private val ivfpqBookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
+  /** Residual codebooks for the corpus quantizer `cents`: [[pqCodebooks]]
+    * over the corpus's residual relation, memoized like the other models
+    * ([[trained]]). */
   private def ivfpqBooksFor(s: SparkSession, dir: String,
       cents: Array[Array[Double]]): Array[Array[Array[Double]]] =
-    ivfpqBookCache.computeIfAbsent(s"$dir#${corpusFingerprint(s, dir)}",
-      _ => pqCodebooks(residualsOf(emb(s, dir), cents)))
+    trained(dir, "ivfpqBooks")(pqCodebooks(residualsOf(emb(s, dir), cents)))
 
   /** Build a composed IVF-PQ view over `corpus` under freshly-trained
     * models; returns (centroids, residual codebooks, base RESIDUAL
@@ -1331,7 +1289,7 @@ object SimilarityQueries {
       corpus: DataFrame): (Array[Array[Double]], Array[Array[Array[Double]]], Double) = {
     val cents = ivfCentroids(corpus)
     val books = pqCodebooks(residualsOf(corpus, cents))
-    store.materialize(ivfpqIdxNamed(unit, cents, books), corpus)
+    store.materialize(ivfpqIdx(unit, cents, books), corpus)
     (cents, books, pqMeanSqError(residualsOf(corpus, cents), books))
   }
 
@@ -1362,10 +1320,10 @@ object SimilarityQueries {
       val m = corpusAfter
       val refitC = ivfCentroids(m)
       val refitB = pqCodebooks(residualsOf(m, refitC))
-      store.materialize(ivfpqIdxNamed(unit, refitC, refitB), m)
+      store.materialize(ivfpqIdx(unit, refitC, refitB), m)
       (refitC, refitB, pqMeanSqError(residualsOf(m, refitC), refitB))
     } else {
-      store.refresh(ivfpqIdxNamed(unit, cents, books), ups, dels)
+      store.refresh(ivfpqIdx(unit, cents, books), ups, dels)
       (cents, books, baseErr)
     }
   }
@@ -1379,9 +1337,21 @@ object SimilarityQueries {
     * codebook rows (m-major, k-minor) — the row LENGTH separates the two
     * families on reopen. */
   private def ivfpqCellsView(
-      s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]]) = {
+      s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]]) =
+    ivfpqView(s, dir, "emb_ivfpq_cells", Seq((embChangeBatch _, modifiedEmb _)))
+
+  /** A composed IVF-PQ unit: built on the ORIGINAL corpus under the
+    * corpus models, then each `(batch, corpus after it)` of `epochs`
+    * pushed through [[ivfpqApplyBatch]] in turn, where BOTH staleness
+    * gates compose: the IVF drift bound AND the codebook
+    * reconstruction-error gate (the PQ analog of the SQ clamp gate);
+    * either firing re-fits both model families and re-materializes
+    * through the store's full-retraction rebuild (CDC stays contiguous).
+    * The served model persists with the unit. */
+  private def ivfpqView(s: SparkSession, dir: String, unit: String,
+      epochs: Seq[(DataFrame => (DataFrame, DataFrame), (SparkSession, String) => DataFrame)])
+      : (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]]) = {
     val store = Views.bucketedStore(s, dir)
-    val unit = "emb_ivfpq_cells"
     Views.unit(store.baseDir, unit) {
       VectorFunctions.register(s)
       val (cents, books) = readIvfpqModel(store, unit)
@@ -1391,15 +1361,14 @@ object SimilarityQueries {
       val cents = ivfCentroidsFor(s, dir)
       val books = ivfpqBooksFor(s, dir, cents)
       val baseErr = pqMeanSqError(residualsOf(e, cents), books)
-      store.materialize(ivfpqIdx(cents, books), e)
-      val (ups, dels) = embChangeBatch(e)
-      // BOTH staleness gates compose in [[ivfpqApplyBatch]]: the IVF
-      // drift bound AND the codebook reconstruction-error gate (the PQ
-      // analog of the SQ clamp gate); either firing re-fits both model
-      // families and re-materializes through the store's
-      // full-retraction rebuild (CDC stays contiguous)
-      val (servedC, servedB, _) = ivfpqApplyBatch(store, unit,
-        cents, books, baseErr, ups, Some(dels), modifiedEmb(s, dir), e.count())
+      store.materialize(ivfpqIdx(unit, cents, books), e)
+      val (_, servedC, servedB, _) = epochs.foldLeft((e, cents, books, baseErr)) {
+        case ((before, c, b, err), (batch, after)) =>
+          val (ups, dels) = batch(before)
+          val (c1, b1, err1) = ivfpqApplyBatch(store, unit,
+            c, b, err, ups, Some(dels), after(s, dir), before.count())
+          (after(s, dir), c1, b1, err1)
+      }
       Views.writeModel(store.baseDir, unit,
         servedC.map(_.toSeq).toSeq ++ servedB.flatten.map(_.toSeq).toSeq)
       (store, servedC, servedB)
@@ -1440,31 +1409,9 @@ object SimilarityQueries {
     * store unit from [[ivfpqCellsView]] so the single-batch queries keep
     * their epoch arithmetic. */
   private def ivfpqIncView(
-      s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val store = Views.bucketedStore(s, dir)
-    val unit = "emb_ivfpq_inc"
-    Views.unit(store.baseDir, unit) {
-      VectorFunctions.register(s)
-      val (cents, books) = readIvfpqModel(store, unit)
-      (store, cents, books)
-    } {
-      val e = emb(s, dir)
-      val cents = ivfCentroidsFor(s, dir)
-      val books = ivfpqBooksFor(s, dir, cents)
-      val baseErr = pqMeanSqError(residualsOf(e, cents), books)
-      store.materialize(ivfpqIdxNamed(unit, cents, books), e)
-      val (ups1, dels1) = embChangeBatch(e)
-      val (c1, b1, err1) = ivfpqApplyBatch(store, unit,
-        cents, books, baseErr, ups1, Some(dels1), modifiedEmb(s, dir), e.count())
-      val m1 = modifiedEmb(s, dir)
-      val (ups2, dels2) = embChangeBatch2(m1)
-      val (c2, b2, _) = ivfpqApplyBatch(store, unit,
-        c1, b1, err1, ups2, Some(dels2), modifiedEmb2(s, dir), m1.count())
-      Views.writeModel(store.baseDir, unit,
-        c2.map(_.toSeq).toSeq ++ b2.flatten.map(_.toSeq).toSeq)
-      (store, c2, b2)
-    }
-  }
+      s: SparkSession, dir: String): (BucketedViewStore, Array[Array[Double]], Array[Array[Array[Double]]]) =
+    ivfpqView(s, dir, "emb_ivfpq_inc",
+      Seq((embChangeBatch _, modifiedEmb _), (embChangeBatch2 _, modifiedEmb2 _)))
 
   /** IVF-PQ search from the twice-maintained view — the serving path
     * behind `sim_ivfpq_incremental`, graded against exact top-k on the
@@ -1508,39 +1455,26 @@ object SimilarityQueries {
     * `corpus`. */
   private def ivfpqSearchStored(stored: DataFrame, corpus: DataFrame,
       cents: Array[Array[Double]], books: Array[Array[Array[Double]]]): DataFrame = {
-    val nProbe = ivfpqProbesFor(cents.length)
-    val probes = corpus.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("lut", pqLutExpr(books, col("pv")))
-    val probeCells = probes
-      .withColumn("cid0", explode(probeCellsCol(cents, nProbe, col("pv"))))
-      .withColumn("pc", VectorFunctions.cellDot(col("pv"), col("cid0"), cents))
-      .withColumn("cid", col("cid0").cast("string"))
-      .select("probe_id", "cid", "lut", "pc")
-    val cellIds = probeCells.select("cid").distinct()
-      .collect().map(_.getString(0)).toSeq
-    val qcells = stored
-      .filter(col("emit_key").isInCollection(cellIds))
-      .select(col("emit_key").as("cid"), col("emit_value.vec_id").as("vec_id"),
-        col("emit_value.codes").as("codes"), col("emit_value.qn").as("qn"))
+    val probes = lutProbes(probesOf(corpus), books)
+    val probed = ivfpqProbeCells(probes, cents)
+    val qcells = cellRows(pushedKeys(stored, probed.select("cid")), "codes", "qn")
       .filter(col("qn") > 0)
-    // a vector lives in exactly one cell — no candidate dedupe needed
-    val approx = qcells.join(broadcast(probeCells), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("adc",
-        (col("pc") + call_function("pq_adc", col("codes"), col("lut"),
-          lit(books(0).length))) / col("qn"))
-    val w = Window.partitionBy("probe_id").orderBy(col("adc").desc, col("vec_id"))
-    val cands = approx.withColumn("r", row_number().over(w))
-      .filter(col("r") <= K * PqRefine)
-      .select("probe_id", "vec_id")
-    val scored = cands
-      .join(corpus.select(col("vec_id"), col("v"), col("norm")), Seq("vec_id"))
-      .join(broadcast(probes.select("probe_id", "pv", "pn")), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(scored)
+    val approx = inProbedCells(qcells, broadcast(probed)).withColumn("adc", ivfpqAdc(books))
+    rankTopK(exactScores(refineWindow(approx, "adc", K * PqRefine), corpus,
+      broadcast(probes.select("probe_id", "pv", "pn"))))
   }
+
+  /** IVF-PQ probe cells: the probe's [[ivfpqProbesFor]] nearest cells,
+    * each with its coarse term `pc = dot(probe, cents[cell])`, computed
+    * once per (probe, probed cell). */
+  private def ivfpqProbeCells(probes: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    probeCells(probes, cents, ivfpqProbesFor(cents.length))
+      .withColumn("pc", VectorFunctions.cellDot(col("pv"), col("cid0"), cents))
+      .select("probe_id", "cid", "lut", "pc")
+
+  /** Residual-ADC score of a stored code: `(pc + adc(codes, lut)) / qn`. */
+  private def ivfpqAdc(books: Array[Array[Array[Double]]]): Column =
+    (col("pc") + pqAdc(col("codes"), col("lut"), books)) / col("qn")
 
   /** The BULK-probe spelling of [[ivfpqTopKFromView]] — the IVF-PQ twin
     * of the bulk contract: cell prune via shuffle semi-join (no driver
@@ -1553,41 +1487,14 @@ object SimilarityQueries {
   def ivfpqTopKBulk(s: SparkSession, dir: String): DataFrame = {
     graft.functions.Sketches.register(s)
     val (store, cents, books) = ivfpqCellsView(s, dir)
-    val nProbe = ivfpqProbesFor(cents.length)
     val m = modifiedEmb(s, dir)
-    val probes = m.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("lut", pqLutExpr(books, col("pv")))
-    val probeCells = probes
-      .withColumn("cid0", explode(probeCellsCol(cents, nProbe, col("pv"))))
-      .withColumn("pc", VectorFunctions.cellDot(col("pv"), col("cid0"), cents))
-      .withColumn("cid", col("cid0").cast("string"))
-      .select("probe_id", "cid", "lut", "pc")
-    val qcells = store.df("emb_ivfpq_cells")
-      .select(col("emit_key").as("cid"), col("emit_value.vec_id").as("vec_id"),
-        col("emit_value.codes").as("codes"), col("emit_value.qn").as("qn"))
-      .filter(col("qn") > 0)
-      .join(probeCells.select("cid").distinct().hint("shuffle_hash"),
-        Seq("cid"), "left_semi")
-    val approx = qcells.join(probeCells.hint("shuffle_hash"), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("adc",
-        (col("pc") + call_function("pq_adc", col("codes"), col("lut"),
-          lit(books(0).length))) / col("qn"))
-    val cands = approx.groupBy("probe_id")
-      .agg(expr(s"topk_by(adc, vec_id, ${K * PqRefine})").as("top"))
-      .select(col("probe_id"), explode(expr("transform(top, t -> t.id)")).as("vec_id"))
-    val scored = cands
-      .join(m.select(col("vec_id"), col("v"), col("norm")).hint("shuffle_hash"), Seq("vec_id"))
-      .join(probes.select("probe_id", "pv", "pn").hint("shuffle_hash"), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    scored.groupBy("probe_id")
-      .agg(expr(s"topk_by(cos, neighbor_id, $K)").as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "t")))
-      .select(col("probe_id"), col("t.id").as("neighbor_id"),
-        col("t.score").as("cos"), (col("r0") + 1).cast("long").as("rank"))
-      .orderBy("probe_id", "rank")
+    val probes = lutProbes(probesOf(m), books)
+    val probed = ivfpqProbeCells(probes, cents)
+    val qcells = semiPruned(cellRows(store.df("emb_ivfpq_cells"), "codes", "qn")
+      .filter(col("qn") > 0), probed.select("cid"))
+    val approx = inProbedCells(qcells, probed.hint("shuffle_hash")).withColumn("adc", ivfpqAdc(books))
+    heapTopK(exactScores(refineHeap(approx, "adc", K * PqRefine), m.hint("shuffle_hash"),
+      probes.select("probe_id", "pv", "pn").hint("shuffle_hash")))
   }
 
   private val SqViewName = "emb_sq8"
@@ -1610,9 +1517,7 @@ object SimilarityQueries {
         case _ =>
           VectorFunctions.register(s)
           val e = emb(s, dir)
-          val sc = e.agg(max(expr(
-            "aggregate(v, cast(0.0 as double), (m, x) -> greatest(m, abs(x)))")))
-            .head().getDouble(0)
+          val sc = maxAbsComponent(e)
           val q = e
             .withColumn("q", call_function("vec_quantize", col("v"), lit(sc)))
             .withColumn("qn", sqrt(call_function("vec_dot_q", col("q"), col("q")).cast("double")))
@@ -1640,26 +1545,7 @@ object SimilarityQueries {
   def sqTopKPairs(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val (qcorpus, scale) = sqView(s, dir)
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("pq", call_function("vec_quantize", col("pv"), lit(scale)))
-      .withColumn("pqn", sqrt(call_function("vec_dot_q", col("pq"), col("pq")).cast("double")))
-      .filter(col("pqn") > 0)
-    val approx = qcorpus
-      .join(broadcast(probes.select("probe_id", "pq", "pqn")),
-        col("vec_id") =!= col("probe_id"))
-      .withColumn("qcos",
-        call_function("vec_dot_q", col("pq"), col("q")).cast("double") / (col("pqn") * col("qn")))
-    val w = Window.partitionBy("probe_id").orderBy(col("qcos").desc, col("vec_id"))
-    val cands = approx.withColumn("r", row_number().over(w))
-      .filter(col("r") <= K * SqRefine)
-      .select("probe_id", "vec_id")
-    val scored = cands
-      .join(e.select(col("vec_id"), col("v"), col("norm")), Seq("vec_id"))
-      .join(broadcast(probes.select("probe_id", "pv", "pn")), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(scored)
+    sqSearch(qcorpus, e, scale)
   }
 
   /** The BULK-probe spelling of [[lshTopKFromView]] — the variant its
@@ -1676,28 +1562,13 @@ object SimilarityQueries {
     * read the same maintained view, so their results are identical. */
   def lshTopKBulk(s: SparkSession, dir: String): DataFrame = {
     val store = lshBandsView(s, dir)
-    val probes = modifiedEmb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-    val probeBands = probes
-      .select(col("probe_id"), col("pv"), col("pn"),
-        posexplode(expr("hyperplane_bands(pv)")).as(Seq("band", "bv")))
-      .withColumn("bkey", concat(col("band").cast("string"), lit(":"), col("bv").cast("string")))
-      .drop("band", "bv")
-    val stored = store.df(lshIdx.name)
-      .select(col("emit_key").as("bkey"), col("emit_value.vec_id").as("neighbor_id"),
-        col("emit_value.v").as("v"), col("emit_value.norm").as("norm"))
-      .join(probeBands.select("bkey").distinct().hint("shuffle_hash"), Seq("bkey"), "left_semi")
-    val candIds = stored
-      .join(probeBands.select("probe_id", "bkey").hint("shuffle_hash"), Seq("bkey"))
-      .filter(col("neighbor_id") =!= col("probe_id"))
-      .select("probe_id", "neighbor_id").distinct()
-    val scored = candIds
-      .join(stored.select(col("neighbor_id"), col("v"), col("norm")).distinct()
-        .hint("shuffle_hash"), Seq("neighbor_id"))
-      .join(probes.hint("shuffle_hash"), Seq("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("neighbor_id"), col("cos"))
-    rankTopK(scored)
+    val probes = probesOf(modifiedEmb(s, dir))
+    val probeBands = probeBandsOf(probes)
+    val stored = semiPruned(bandRows(store.df(lshIdx.name)), probeBands.select("bkey"))
+    val candIds = bandCands(stored, probeBands.select("probe_id", "bkey").hint("shuffle_hash"))
+    rankTopK(exactScores(candIds,
+      stored.select(col("neighbor_id"), col("v"), col("norm")).distinct().hint("shuffle_hash"),
+      probes.hint("shuffle_hash"), "neighbor_id"))
   }
 
   /** IVF ANN top-k served from the PERSISTED, incrementally-maintained
@@ -1708,7 +1579,7 @@ object SimilarityQueries {
     * the search reads only the probed posting lists, not the corpus. */
   def ivfTopKFromView(s: SparkSession, dir: String): DataFrame = {
     val (store, cents) = ivfCellsView(s, dir)
-    ivfSearchStored(store.df(ivfIdx(cents).name), modifiedEmb(s, dir), cents)
+    ivfSearchStored(store.df("emb_ivf_cells"), modifiedEmb(s, dir), cents)
   }
 
   /** The float-IVF search core shared by the maintained, streaming-built
@@ -1723,22 +1594,9 @@ object SimilarityQueries {
   private def ivfSearchStored(stored: DataFrame, corpus: DataFrame,
       cents: Array[Array[Double]], probeBoost: Int = 1): DataFrame = {
     val nProbe = math.min(cents.length, probesFor(cents.length) * probeBoost)
-    val probesWithCells = corpus.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("cid0", explode(probeCellsCol(cents, nProbe, col("pv"))))
-      .withColumn("cid", col("cid0").cast("string"))
-      .drop("cid0")
-    val cellIds = probesWithCells.select("cid").distinct()
-      .collect().map(_.getString(0)).toSeq
-    val cells = stored
-      .filter(col("emit_key").isInCollection(cellIds))
-      .select(col("emit_key").as("cid"), col("emit_value.vec_id").as("vec_id"),
-        col("emit_value.v").as("v"), col("emit_value.norm").as("norm"))
-    val cand = cells.join(broadcast(probesWithCells), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(cand)
+    val probed = probeCells(probesOf(corpus), cents, nProbe).drop("cid0")
+    val cells = cellRows(pushedKeys(stored, probed.select("cid")), "v", "norm")
+    rankTopK(scoreRows(inProbedCells(cells, broadcast(probed))))
   }
 
   /** The [[ivfCellsView]] history with a COMPACTION epoch on top — the
@@ -1757,10 +1615,7 @@ object SimilarityQueries {
     } {
       val e = emb(s, dir)
       val cents = ivfCentroidsFor(s, dir)
-      val idx = MapIndex.columns(unit)(
-        col("vec_id").cast("string"),
-        array(emit(assignExpr(cents).cast("string"),
-          struct(col("vec_id"), col("v"), col("norm")))))
+      val idx = ivfIdx(cents, unit)
       store.materialize(idx, e)
       val (ups, dels) = embChangeBatch(e)
       store.refresh(idx, ups, Some(dels))
@@ -1787,23 +1642,10 @@ object SimilarityQueries {
     * id, so the plan scales with probe volume and probed-cell mass. */
   def ivfTopKBulk(s: SparkSession, dir: String): DataFrame = {
     val (store, cents) = ivfCellsView(s, dir)
-    val nProbe = probesFor(cents.length)
-    val probesWithCells = modifiedEmb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("cid0", explode(probeCellsCol(cents, nProbe, col("pv"))))
-      .withColumn("cid", col("cid0").cast("string"))
+    val probed = probeCells(probesOf(modifiedEmb(s, dir)), cents, probesFor(cents.length))
       .drop("cid0")
-    val corpus = store.df(ivfIdx(cents).name)
-      .select(col("emit_key").as("cid"), col("emit_value.vec_id").as("vec_id"),
-        col("emit_value.v").as("v"), col("emit_value.norm").as("norm"))
-      .join(probesWithCells.select("cid").distinct().hint("shuffle_hash"),
-        Seq("cid"), "left_semi")
-    val cand = corpus
-      .join(probesWithCells.hint("shuffle_hash"), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(cand)
+    val cells = semiPruned(cellRows(store.df("emb_ivf_cells"), "v", "norm"), probed.select("cid"))
+    rankTopK(scoreRows(inProbedCells(cells, probed.hint("shuffle_hash"))))
   }
 
   /** IVF ANN top-k `(probe_id, neighbor_id, cos, rank)`: corpus vectors
@@ -1811,7 +1653,6 @@ object SimilarityQueries {
     * nearest cells, then exact cosine ranks the candidates. The
     * user-facing API behind the `sim_ivf_topk` recall-invariant query. */
   def ivfTopKPairs(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.typedlit
     val e = emb(s, dir)
     val cents = ivfCentroidsFor(s, dir)
     val corpus = e.withColumn("cid", assignExpr(cents))
@@ -1819,17 +1660,9 @@ object SimilarityQueries {
     // probe side: rank cells with the SAME scoring loop as corpus
     // assignment (nearest_cells), keep the √nCells nearest, one row per
     // (probe, cell)
-    val nProbe = probesFor(cents.length)
-    val probesWithCells = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      .withColumn("cid", explode(probeCellsCol(cents, nProbe, col("pv"))))
-    val cand = corpus.join(broadcast(probesWithCells), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      // no distinct needed: a corpus vector lives in exactly one cell, so
-      // each (probe, neighbor) pair joins at most once
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(cand)
+    val probesWithCells = probesOf(e)
+      .withColumn("cid", explode(probeCellsCol(cents, probesFor(cents.length), col("pv"))))
+    rankTopK(scoreRows(inProbedCells(corpus, broadcast(probesWithCells))))
   }
 
   /** IVF-tier hard-negative mining: candidates from the probe's nProbe
@@ -1841,29 +1674,29 @@ object SimilarityQueries {
     * unchanged, because it is a per-candidate predicate, not a
     * post-selection pass. */
   def hardNegativesIvfPairs(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-    val lab = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label").cast("long").as("label"))
-    val el = e.join(lab, Seq("vec_id"))
+    val el = labeled(s, dir)
     val cents = ivfCentroidsFor(s, dir)
     val corpus = el.withColumn("cid", assignExpr(cents))
       .select(col("vec_id"), col("v"), col("norm"), col("label"), col("cid"))
-    val nProbe = probesFor(cents.length)
-    val probesWithCells = el.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("norm").as("pn"), col("label").as("plabel"))
-      .withColumn("cid", explode(probeCellsCol(cents, nProbe, col("pv"))))
+    val probesWithCells = probesOf(el, col("label").as("plabel"))
+      .withColumn("cid", explode(probeCellsCol(cents, probesFor(cents.length), col("pv"))))
     val cand = corpus.join(broadcast(probesWithCells), Seq("cid"))
       .filter(col("vec_id") =!= col("probe_id") && col("label") =!= col("plabel"))
-      .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-    rankTopK(cand)
+    rankTopK(scoreRows(cand))
   }
 
-  /** Drop every per-JVM cache — lets a spec simulate a fresh process
-    * against a durable store root (the reuse path is disk-gated). */
-  private[graft] def resetCachesForTest(): Unit = {
-    centroidCache.clear(); pqBookCache.clear()
+  /** The corpus with each vector's label. */
+  private def labeled(s: SparkSession, dir: String): DataFrame =
+    emb(s, dir).join(Tables.embeddings(s, dir)
+      .select(col("vec_id"), col("label").cast("long").as("label")), Seq("vec_id"))
+
+  /** Exact cross-label top-k: for each probe, the nearest corpus vectors
+    * whose label differs from the probe's (the `sim_hard_negatives`
+    * answer, and the ground truth of its IVF-tier gate). */
+  private def hardNegatives(s: SparkSession, dir: String): DataFrame = {
+    val el = labeled(s, dir)
+    rankTopK(scoreRows(el.join(broadcast(probesOf(el, col("label").as("plabel"))),
+      col("vec_id") =!= col("probe_id") && col("label") =!= col("plabel"))))
   }
 
   /** recall bounds asserted by the invariant queries below — measured at
@@ -1921,7 +1754,220 @@ object SimilarityQueries {
     * restricted to pairs touching vec_id < this (full brute is O(n²)). */
   private val SampleVecs = 50
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  // ---------------------------------------------------------------------
+  // Recall gates: the whole ANN family as data
+  // ---------------------------------------------------------------------
+
+  // double-precision dot/norms spelled out: DuckDB's list_cosine_similarity
+  // computes in float32, which disagrees with Spark's double math at 1e-6
+  private val cosSql =
+    """(list_sum([CAST(a.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE) for i in range(64)])
+      | / (sqrt(list_sum([CAST(a.embedding[i+1] AS DOUBLE) * CAST(a.embedding[i+1] AS DOUBLE) for i in range(64)]))
+      |   * sqrt(list_sum([CAST(b.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE) for i in range(64)]))))""".stripMargin
+
+  private def bruteTopkSqlOver(table: String) =
+    s"""SELECT probe_id, neighbor_id, cos, rank FROM (
+       |  SELECT a.vec_id AS probe_id, b.vec_id AS neighbor_id,
+       |         round($cosSql, 6) AS cos,
+       |         row_number() OVER (
+       |           PARTITION BY a.vec_id
+       |           ORDER BY round($cosSql, 6) DESC, b.vec_id) AS rank
+       |  FROM $table a JOIN $table b ON a.vec_id < 10 AND b.vec_id <> a.vec_id) t
+       |WHERE rank <= $K ORDER BY probe_id, rank""".stripMargin
+
+  /** A corpus state a gate grades against: its DataFrame, and its DuckDB
+    * spelling as a `corpus` CTE over `embeddings` (None: the base table). */
+  private final case class Corpus(df: (SparkSession, String) => DataFrame, cte: Option[String]) {
+    def table: String = if (cte.isEmpty) "embeddings" else "corpus"
+  }
+  private val baseCorpus = Corpus(emb, None)
+  /** After [[embChangeBatch]] — the batch every maintained index pushes
+    * through its refresh path: `%37` reversed, `%41` tombstoned. */
+  private val modifiedCorpus = Corpus(modifiedEmb, Some(
+    """corpus AS (
+      |  SELECT vec_id,
+      |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
+      |              ELSE embedding END AS embedding
+      |  FROM embeddings WHERE vec_id % 41 <> 0)""".stripMargin))
+  /** After both change batches ([[modifiedEmb2]]): alive iff neither `%41`
+    * nor `%29` divides, reversed iff exactly one of `%37` / `%31` divides
+    * (XOR — a second reversal composes to the identity). */
+  private val twiceModifiedCorpus = Corpus(modifiedEmb2, Some(
+    """corpus AS (
+      |  SELECT vec_id,
+      |         CASE WHEN (vec_id % 37 = 0) <> (vec_id % 31 = 0)
+      |              THEN list_reverse(embedding)
+      |              ELSE embedding END AS embedding
+      |  FROM embeddings WHERE vec_id % 41 <> 0 AND vec_id % 29 <> 0)""".stripMargin))
+
+  /** The exact answer a gate grades against: `frame` yields rows keyed by
+    * `keys`; `counts` are the gate's oracle-exact columns, the last one
+    * the total its bound scales; `sql` is the DuckDB oracle of the gate's
+    * output row, whose `recall_ok` is always true. */
+  private final case class Truth(frame: (SparkSession, String) => DataFrame,
+      keys: Seq[String], counts: Seq[(String, Column)], sql: String)
+
+  /** Top-k `(probe_id, neighbor_id)` truth; `from` is the oracle's exact
+    * top-k subquery, `cte` its corpus definition. */
+  private def topKTruth(frame: (SparkSession, String) => DataFrame,
+      cte: Option[String], from: String): Truth =
+    Truth(frame, Seq("probe_id", "neighbor_id"),
+      Seq("n_probes" -> count_distinct(col("probe_id")), "n_pairs" -> count(lit(1))),
+      s"""${cte.fold("")(c => s"WITH $c\n")}SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
+         |       true AS recall_ok
+         |FROM ($from)""".stripMargin)
+
+  /** Exact top-k of corpus `c` ([[exactTopK]]). */
+  private def exactTruth(c: Corpus): Truth =
+    topKTruth((s, dir) => exactTopK(c.df(s, dir)), c.cte, bruteTopkSqlOver(c.table))
+
+  /** Exact cross-label top-k ([[hardNegatives]]). */
+  private val hardNegativesTruth = topKTruth(hardNegatives, None,
+    s"""
+       |  SELECT probe_id, neighbor_id FROM (
+       |    SELECT a.vec_id AS probe_id, b.vec_id AS neighbor_id,
+       |           row_number() OVER (
+       |             PARTITION BY a.vec_id
+       |             ORDER BY round($cosSql, 6) DESC, b.vec_id) AS rank
+       |    FROM embeddings a JOIN embeddings b
+       |      ON a.vec_id < 10 AND b.vec_id <> a.vec_id AND b.label <> a.label) t
+       |  WHERE rank <= $K""".stripMargin)
+
+  /** Sample-pair `(i, j)` truth over corpus `c`: the exact corpus-wide
+    * pair set with `cos ≥ τ` anchored on a sample vector (`vec_id <
+    * SampleVecs` — full brute is O(n²)). */
+  private def samplePairsTruth(c: Corpus): Truth = Truth(
+    (s, dir) => {
+      val e = c.df(s, dir)
+      e.filter(col("vec_id") < SampleVecs)
+        .select(col("vec_id").as("a"), col("v").as("va"), col("norm").as("na"))
+        .join(e.select(col("vec_id").as("b"), col("v").as("vb"), col("norm").as("nb")),
+          col("a") =!= col("b"))
+        .withColumn("cos", cosine(col("va"), col("vb"), col("na"), col("nb")))
+        .filter(col("cos") >= EmbDupThreshold)
+        .select(least(col("a"), col("b")).as("i"), greatest(col("a"), col("b")).as("j"))
+        .distinct()
+    },
+    Seq("i", "j"), Seq("n_sample_pairs" -> count(lit(1))),
+    s"""WITH ${c.cte.fold("")(_ + ",\n")}p AS (
+       |  SELECT least(a.vec_id, b.vec_id) AS i, greatest(a.vec_id, b.vec_id) AS j
+       |  FROM ${c.table} a JOIN ${c.table} b
+       |    ON a.vec_id < $SampleVecs AND b.vec_id <> a.vec_id
+       |  WHERE round($cosSql, 6) >= $EmbDupThreshold
+       |  GROUP BY 1, 2)
+       |SELECT count(*) AS n_sample_pairs, true AS recall_ok FROM p""".stripMargin)
+
+  private val baseTopK = exactTruth(baseCorpus)
+  private val modifiedTopK = exactTruth(modifiedCorpus)
+
+  /** One recall gate: the rows `found` returns graded against `truth`;
+    * `recall_ok` asserts it found at least `bound` of them. */
+  private final case class Gate(name: String, truth: Truth,
+      found: (SparkSession, String) => DataFrame, bound: Double)
+
+  private def recall(g: Gate, s: SparkSession, dir: String): DataFrame = {
+    val keys = g.truth.keys.map(col)
+    val truth = g.truth.frame(s, dir).select(keys: _*)
+    val found = g.found(s, dir).select(keys: _*).withColumn("f", lit(1L))
+    val aggs = g.truth.counts.map { case (n, c) => c.as(n) } :+
+      coalesce(sum(col("f")), lit(0L)).as("nf")
+    truth.join(found, g.truth.keys, "left_outer")
+      .agg(aggs.head, aggs.tail: _*)
+      .select(g.truth.counts.map(c => col(c._1)) :+
+        (col("nf") >= col(g.truth.counts.last._1) * lit(g.bound)).as("recall_ok"): _*)
+  }
+
+  /** Every recall gate. The truth's counts are recomputed exactly by the
+    * DuckDB oracle; `recall_ok` is the engine's bound, so a stale index
+    * (a `%37` vector still filed at its old position, a `%41` vector not
+    * retracted) or a broken composition shows as lost recall or a wrong
+    * count. */
+  private val gates: Seq[Gate] = Seq(
+    // SemDeDup-style semantic dedup (public recipe: cluster the corpus
+    // with k-means, then dedup QUADRATICALLY only WITHIN each cluster, so
+    // the pairwise scan is O(n · cell_size), never O(n²) corpus-wide);
+    // cells come from the same Lloyd quantizer the IVF tier serves. On
+    // THIS synthetic corpus the vectors are random, so τ = 0.4 pairs
+    // co-cluster far less reliably than the ≥ 0.9 near-copies SemDeDup
+    // targets; the bound is calibrated to the measured floor with margin
+    Gate("dedup_semantic", samplePairsTruth(baseCorpus), semanticDupPairs, SemRecallBound),
+    // the same dedup over the MAINTAINED cell view after the change
+    // batch, graded on the modified corpus: a stale cell shifts the
+    // co-cell pair set
+    Gate("dedup_semantic_incremental", samplePairsTruth(modifiedCorpus),
+      semanticDupPairsFromView, SemRecallBound),
+    // the ANN-tier spelling of hard-negative mining: IVF cell prune +
+    // per-candidate label exclusion, graded on the exact cross-label top-k
+    Gate("sim_hard_negatives_ivf", hardNegativesTruth, hardNegativesIvfPairs, IvfRecallBound),
+    // banded LSH (top-k output for users: [[lshTopKPairs]])
+    Gate("sim_lsh_topk", baseTopK, lshTopKPairs, AnnRecallBound),
+    // SQ8: the stored int8 corpus's integer-dot scan (4-8× less scan I/O
+    // than the float relation), exact float rerank on the refine set
+    Gate("sim_sq_topk", baseTopK, sqTopKPairs, SqRecallBound),
+    // IVF: a probe scans only its nearest cells
+    Gate("sim_ivf_topk", baseTopK, ivfTopKPairs, IvfRecallBound),
+    // the PERSISTED IVF index after the change batch went through its
+    // incremental refresh path
+    Gate("sim_ivf_incremental", modifiedTopK, ivfTopKFromView, IvfRecallBound),
+    // the PERSISTED band index after the same batch
+    Gate("sim_lsh_incremental", modifiedTopK, lshTopKFromView, AnnRecallBound),
+    // the IVF view through the BULK plan: no driver In-list, no probe
+    // broadcast — the same view, so the same truth as the model-sized path
+    Gate("sim_ivf_bulk", modifiedTopK, ivfTopKBulk, IvfRecallBound),
+    // the PERSISTED int8 view after its O(delta) refresh
+    Gate("sim_sq_incremental", modifiedTopK, sqTopKFromView, SqRecallBound),
+    // the band view AS OF its pre-batch epoch: time travel on an ANN
+    // index must reproduce the ORIGINAL corpus's truth, proving the
+    // refresh left the prior epoch intact and addressable
+    Gate("sim_lsh_asof", baseTopK, lshTopKAsOf, AnnRecallBound),
+    // the band index built PURELY through streaming micro-batches must
+    // land the same index state the batch path maintains
+    Gate("sim_lsh_streamed", modifiedTopK, lshTopKStreamed, AnnRecallBound),
+    // the cell view built PURELY through streaming micro-batches under a
+    // once-trained quantizer
+    Gate("sim_ivf_streamed", modifiedTopK, ivfTopKStreamed, IvfRecallBound),
+    // the cell view with a COMPACTION epoch on top: bin-packing each
+    // bucket's delta fragments must be invisible to the search (the spec
+    // asserts the empty-sidecar epoch and file-count collapse)
+    Gate("sim_ivf_compacted", modifiedTopK, ivfTopKCompacted, IvfRecallBound),
+    // the composed IVF-SQ8 index: cell-pruned scan over stored int8 codes
+    // + exact rerank — a stale cell, a stale code or a broken composition
+    // is lost recall
+    Gate("sim_ivfsq_topk", modifiedTopK, ivfsqTopKFromView, IvfRecallBound),
+    // the composed index through the BULK plan
+    Gate("sim_ivfsq_bulk", modifiedTopK, ivfsqTopKBulk, IvfRecallBound),
+    // flat product quantization: 8-byte codes, ADC table scoring, exact
+    // rerank of the K·PqRefine refine set
+    Gate("sim_pq_topk", baseTopK, pqTopKPairs, PqRecallBound),
+    // the maintained flat-PQ code view after the codebook-gated refresh
+    Gate("sim_pq_incremental", modifiedTopK, pqTopKFromView, PqRecallBound),
+    // the maintained flat-PQ view through the BULK plan
+    Gate("sim_pq_bulk", modifiedTopK, pqTopKBulk, PqRecallBound),
+    // the composed IVF-PQ index AS OF its pre-batch epoch
+    Gate("sim_ivfpq_asof", baseTopK, ivfpqTopKAsOf, IvfPqRecallBound),
+    // the composed IVF-PQ index: cell-pruned scan over 8-byte codes + ADC
+    // tables + exact rerank, after the change batch
+    Gate("sim_ivfpq_topk", modifiedTopK, ivfpqTopKFromView, IvfPqRecallBound),
+    // the composed index after TWO successive change batches: epoch 2's
+    // delete-then-insert runs against state epoch 1 wrote, so a stale
+    // cell from EITHER batch (a %31 vector still celled at its
+    // pre-reversal position, a %29 vector not retracted) is lost recall
+    Gate("sim_ivfpq_incremental", exactTruth(twiceModifiedCorpus),
+      ivfpqTopKIncremental, IvfPqRecallBound),
+    // the composed IVF-PQ index through the BULK plan
+    Gate("sim_ivfpq_bulk", modifiedTopK, ivfpqTopKBulk, IvfPqRecallBound),
+    // the SQ8 view through the BULK plan: bounded-heap selection instead
+    // of windows
+    Gate("sim_sq_bulk", modifiedTopK, sqTopKBulk, SqRecallBound),
+    // the band view through the BULK plan: shuffle semi-join prune +
+    // equi-join, the shape a data-sized probe batch needs
+    Gate("sim_lsh_bulk", modifiedTopK, lshTopKBulk, AnnRecallBound),
+    // embedding near-dup: the banded pipeline (pair output for users:
+    // [[embeddingPairs]]) graded on the exact sample pair set
+    Gate("dedup_embedding", samplePairsTruth(baseCorpus), embeddingPairs, EmbSampleRecallBound),
+  )
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, (SparkSession, String) => DataFrame](
 
     // per-label corpus health stats for an embedding table: vector counts
     // and the L2-norm envelope (min/max only — no cross-row float sums, so
@@ -1942,32 +1988,8 @@ object SimilarityQueries {
     }),
 
     // exact cosine top-k: broadcast probes against the corpus scan
-    "sim_brute_topk" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-        .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-      rankTopK(scored)
-    }),
+    "sim_brute_topk" -> ((s, dir) => exactTopK(emb(s, dir))),
 
-    // SemDeDup-style semantic dedup (public recipe: cluster the corpus
-    // with k-means, then dedup QUADRATICALLY only WITHIN each cluster —
-    // the cluster granularity k ∝ n keeps per-cell populations bounded,
-    // so the pairwise scan is O(n · cell_size), never O(n²) corpus-wide).
-    // Cells come from the SAME deterministic Lloyd quantizer the IVF
-    // tier serves; within-cell pairs verify by exact cosine (a removal
-    // pass composes downstream exactly like dedup_embedding's: feed the
-    // pair set to the components labeling + keeper selection the
-    // pipeline_dedup_removal chain already exercises). The invariant follows
-    // dedup_embedding: the oracle recomputes the exact corpus-wide
-    // sample pair set (every cos ≥ τ pair anchored on a sample vector),
-    // and recall_ok asserts the within-cell scan captured ≥
-    // SemRecallBound of them — on THIS synthetic corpus the vectors are
-    // random, so τ = 0.4 pairs co-cluster far less reliably than the
-    // ≥ 0.9 near-copies SemDeDup targets in practice; the bound is
-    // calibrated to the measured floor across SFs with margin.
     // cluster-balanced DIVERSITY sampling (the curation op next to
     // SemDeDup in the published pipelines: cap each semantic cluster's
     // contribution so dominant modes don't swamp the mix): keep at most
@@ -1995,63 +2017,6 @@ object SimilarityQueries {
           .as("kept_exact_ok"))
     }),
 
-    "dedup_semantic" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val within = semanticDupPairs(s, dir).select("i", "j")
-      val sample = e.filter(col("vec_id") < SampleVecs)
-        .select(col("vec_id").as("a"), col("v").as("va"), col("norm").as("na"))
-        .join(e.select(col("vec_id").as("b"), col("v").as("vb"), col("norm").as("nb")),
-          col("a") =!= col("b"))
-        .withColumn("cos", round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
-        .filter(col("cos") >= EmbDupThreshold)
-        .select(least(col("a"), col("b")).as("i"), greatest(col("a"), col("b")).as("j"))
-        .distinct()
-      val found = within.withColumn("f", lit(1L))
-      sample.join(found, Seq("i", "j"), "left_outer")
-        .agg(count(lit(1)).as("n_sample_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_sample_pairs"),
-          (col("nf") >= col("n_sample_pairs") * lit(SemRecallBound)).as("recall_ok"))
-    }),
-
-    // the same semantic dedup served from the MAINTAINED IVF cell view
-    // after the corpus change batch: the within-cell scan reads the
-    // stored posting lists (which the engine refreshed O(delta) — moved
-    // vectors re-celled, tombstoned ones dropped), so the dedup pass
-    // needs no assignment recompute at all; the oracle recomputes the
-    // exact sample pair set over the MODIFIED corpus, so a stale cell
-    // (a reversed vector still serving its old posting list) shifts the
-    // co-cell pair set and recall against the fresh ground truth
-    "dedup_semantic_incremental" -> ((s, dir) => {
-      val (store, _) = ivfCellsView(s, dir)
-      val cellsDf = store.df("emb_ivf_cells")
-        .select(col("emit_key").as("cell"), col("emit_value.vec_id").as("vec_id"),
-          col("emit_value.v").as("v"), col("emit_value.norm").as("norm"))
-      val a = cellsDf.select(col("cell"), col("vec_id").as("i"),
-        col("v").as("vi"), col("norm").as("ni"))
-      val b = cellsDf.select(col("cell"), col("vec_id").as("j"),
-        col("v").as("vj"), col("norm").as("nj"))
-      val within = a.join(b, Seq("cell")).filter(col("i") < col("j"))
-        .withColumn("cos", round(dot(col("vi"), col("vj")) / (col("ni") * col("nj")), 6))
-        .filter(col("cos") >= EmbDupThreshold)
-        .select("i", "j")
-      val m = modifiedEmb(s, dir)
-      val sample = m.filter(col("vec_id") < SampleVecs)
-        .select(col("vec_id").as("a"), col("v").as("va"), col("norm").as("na"))
-        .join(m.select(col("vec_id").as("b"), col("v").as("vb"), col("norm").as("nb")),
-          col("a") =!= col("b"))
-        .withColumn("cos", round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
-        .filter(col("cos") >= EmbDupThreshold)
-        .select(least(col("a"), col("b")).as("i"), greatest(col("a"), col("b")).as("j"))
-        .distinct()
-      val found = within.withColumn("f", lit(1L))
-      sample.join(found, Seq("i", "j"), "left_outer")
-        .agg(count(lit(1)).as("n_sample_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_sample_pairs"),
-          (col("nf") >= col("n_sample_pairs") * lit(SemRecallBound)).as("recall_ok"))
-    }),
-
     // hard-negative mining for contrastive training: for each probe, the
     // top-k nearest CORPUS vectors whose label differs from the probe's —
     // high-similarity cross-label examples, the negatives an embedding /
@@ -2060,555 +2025,8 @@ object SimilarityQueries {
     // same way — it filters candidates BEFORE the exact rerank, so the
     // IVF/LSH bulk plans serve the data-sized-anchor mining run (every
     // training example is a probe) with the same semi-join-prune shape.
-    "sim_hard_negatives" -> ((s, dir) => {
-      val lab = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"))
-      val el = emb(s, dir).join(lab, Seq("vec_id"))
-      val probes = el.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-          col("norm").as("pn"), col("label").as("plabel"))
-      val scored = el.join(broadcast(probes),
-          col("vec_id") =!= col("probe_id") && col("label") =!= col("plabel"))
-        .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos"))
-      rankTopK(scored)
-    }),
-
-    // the ANN-tier spelling of hard-negative mining: IVF cell prune +
-    // per-candidate label exclusion + exact top-k; graded like the other
-    // ANN invariants — the oracle recomputes the exact cross-label
-    // ground truth, recall_ok asserts the pruned mine found enough of it
-    "sim_hard_negatives_ivf" -> ((s, dir) => {
-      val exact = queries("sim_hard_negatives")(s, dir)
-        .select("probe_id", "neighbor_id")
-      val ivf = hardNegativesIvfPairs(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      exact.join(ivf, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfRecallBound)).as("recall_ok"))
-    }),
-
-    // ANN with a driver-checkable invariant: n_probes and n_pairs are
-    // recomputed exactly by the DuckDB oracle from the brute-force top-k;
-    // recall_ok asserts the banded LSH found ≥ AnnRecallBound of those
-    // exact neighbors. Top-k output for users: [[lshTopKPairs]].
-    "sim_lsh_topk" -> ((s, dir) => {
-      val brute = queries("sim_brute_topk")(s, dir).select("probe_id", "neighbor_id")
-      val lsh = lshTopKPairs(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(lsh, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(AnnRecallBound)).as("recall_ok"))
-    }),
-
-    // SQ8 (scalar-quantized) ANN under the same invariant: candidates
-    // from the stored int8 corpus's integer-dot scan (4-8× less scan
-    // I/O than the float relation), exact float rerank on the refine
-    // set. Top-k output for users: [[sqTopKPairs]].
-    "sim_sq_topk" -> ((s, dir) => {
-      val brute = queries("sim_brute_topk")(s, dir).select("probe_id", "neighbor_id")
-      val sq = sqTopKPairs(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(sq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(SqRecallBound)).as("recall_ok"))
-    }),
-
-    // IVF ANN with the same invariant pattern as sim_lsh_topk: n_probes
-    // and n_pairs oracle-recomputed from the brute-force top-k, recall_ok
-    // asserting the cell-probed search found ≥ IvfRecallBound of the
-    // exact neighbors. Top-k output for users: [[ivfTopKPairs]].
-    "sim_ivf_topk" -> ((s, dir) => {
-      val brute = queries("sim_brute_topk")(s, dir).select("probe_id", "neighbor_id")
-      val ivf = ivfTopKPairs(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivf, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfRecallBound)).as("recall_ok"))
-    }),
-
-    // the IVF search served from the PERSISTED index after the corpus
-    // change batch went through the incremental refresh path — the oracle
-    // recomputes the exact top-k ground truth from the MODIFIED corpus,
-    // so a stale index (or a broken reassignment) shows up as lost recall
-    // and a hash mismatch on n_probes/n_pairs
-    "sim_ivf_incremental" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val ivf = ivfTopKFromView(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivf, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfRecallBound)).as("recall_ok"))
-    }),
-
-    // the LSH search served from the PERSISTED band index after the same
-    // corpus change batch went through its refresh path — the oracle
-    // recomputes exact top-k ground truth from the MODIFIED corpus, so a
-    // stale band list (a %37 vector still banded at its old position, a
-    // %41 vector not retracted) shows up as lost recall / a wrong pair
-    "sim_lsh_incremental" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val lsh = lshTopKFromView(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(lsh, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(AnnRecallBound)).as("recall_ok"))
-    }),
-
-    // the IVF view probed through the BULK plan ([[ivfTopKBulk]]): no
-    // driver In-list, no probe broadcast — graded against the identical
-    // modified-corpus ground truth as the model-sized path
-    "sim_ivf_bulk" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val ivf = ivfTopKBulk(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivf, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfRecallBound)).as("recall_ok"))
-    }),
-
-    // the SQ8 search served from the PERSISTED int8 view after the
-    // corpus change batch went through its O(delta) refresh path — the
-    // oracle recomputes exact top-k from the MODIFIED corpus, so a stale
-    // code (a %37 vector still quantized at its old orientation, a %41
-    // vector not retracted) shows up as lost recall / a wrong pair
-    "sim_sq_incremental" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val sq = sqTopKFromView(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(sq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(SqRecallBound)).as("recall_ok"))
-    }),
-
-    // the maintained band view served AS OF its pre-batch epoch
-    // ([[lshTopKAsOf]]): time travel on an ANN index — the historical
-    // search must reproduce the ORIGINAL corpus's recall invariant (the
-    // same ground truth as sim_lsh_topk), proving the refresh left the
-    // prior epoch intact and addressable
-    "sim_lsh_asof" -> ((s, dir) => {
-      val brute = queries("sim_brute_topk")(s, dir).select("probe_id", "neighbor_id")
-      val lsh = lshTopKAsOf(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(lsh, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(AnnRecallBound)).as("recall_ok"))
-    }),
-
-    // the band index built PURELY through streaming micro-batches
-    // ([[lshTopKStreamed]]): per-batch partition-scoped maintenance must
-    // land the same index state the batch path maintains — identical
-    // modified-corpus ground truth grades both
-    "sim_lsh_streamed" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val lsh = lshTopKStreamed(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(lsh, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(AnnRecallBound)).as("recall_ok"))
-    }),
-
-    // the IVF cell view built PURELY through streaming micro-batches
-    // ([[ivfTopKStreamed]]): per-batch partition-scoped maintenance under
-    // a once-trained quantizer must land the same index state the batch
-    // path maintains — identical modified-corpus ground truth grades both
-    "sim_ivf_streamed" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val ivf = ivfTopKStreamed(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivf, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfRecallBound)).as("recall_ok"))
-    }),
-
-    // the maintained cell view with a COMPACTION epoch on top
-    // ([[ivfTopKCompacted]]): bin-packing each bucket's accreted delta
-    // fragments must be invisible to the search — same modified-corpus
-    // ground truth as sim_ivf_incremental (the spec asserts the
-    // empty-sidecar epoch and file-count collapse; this gates serving)
-    "sim_ivf_compacted" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val ivf = ivfTopKCompacted(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivf, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfRecallBound)).as("recall_ok"))
-    }),
-
-    // the composed IVF-SQ8 index ([[ivfsqTopKFromView]]): cell-pruned
-    // scan over stored int8 codes + exact rerank, after the corpus
-    // change batch went through the view's refresh path — same
-    // modified-corpus exact-top-k ground truth as sim_ivf_incremental,
-    // so a stale cell, a stale code, or a broken composition is lost
-    // recall / a wrong pair
-    "sim_ivfsq_topk" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val ivfsq = ivfsqTopKFromView(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivfsq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfRecallBound)).as("recall_ok"))
-    }),
-
-    // the composed index probed through the BULK plan ([[ivfsqTopKBulk]]):
-    // shuffle semi-join cell prune over int8 codes, bounded-heap
-    // selection, nothing broadcast — graded against the identical
-    // modified-corpus ground truth as the model-sized composed path
-    "sim_ivfsq_bulk" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val ivfsq = ivfsqTopKBulk(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivfsq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfRecallBound)).as("recall_ok"))
-    }),
-
-    // flat product quantization ([[pqTopKPairs]]): 8-byte codes, ADC
-    // table scoring, exact rerank of the K·PqRefine refine set — graded
-    // as a recall invariant against the exact base-corpus top-k
-    "sim_pq_topk" -> ((s, dir) => {
-      val brute = queries("sim_brute_topk")(s, dir).select("probe_id", "neighbor_id")
-      val pq = pqTopKPairs(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(pq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(PqRecallBound)).as("recall_ok"))
-    }),
-
-    // the flat-PQ corpus served from its PERSISTED, incrementally-
-    // maintained code view ([[pqTopKFromView]]) after the change batch
-    // went through the codebook-gated refresh path — the oracle
-    // recomputes exact top-k from the MODIFIED corpus, so a stale code
-    // (a reversed vector still encoded at its old orientation, a
-    // tombstoned one not retracted) is lost recall / a wrong pair
-    "sim_pq_incremental" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val pq = pqTopKFromView(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(pq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(PqRecallBound)).as("recall_ok"))
-    }),
-
-    // the maintained flat-PQ view probed through the BULK plan
-    // ([[pqTopKBulk]]): shuffle-replicated ADC scan over stored M-byte
-    // codes, bounded-heap selection, nothing broadcast — identical
-    // modified-corpus ground truth as the model-sized path
-    "sim_pq_bulk" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val pq = pqTopKBulk(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(pq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(PqRecallBound)).as("recall_ok"))
-    }),
-
-    // the composed IVF-PQ index served AS OF its pre-batch epoch
-    // ([[ivfpqTopKAsOf]]): time travel on the composed index must
-    // reproduce the ORIGINAL corpus's recall invariant, proving the
-    // refresh left the prior epoch intact and addressable
-    "sim_ivfpq_asof" -> ((s, dir) => {
-      val brute = queries("sim_brute_topk")(s, dir).select("probe_id", "neighbor_id")
-      val ivfpq = ivfpqTopKAsOf(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivfpq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfPqRecallBound)).as("recall_ok"))
-    }),
-
-    // the composed IVF-PQ index ([[ivfpqTopKFromView]]): cell-pruned scan
-    // over stored 8-byte codes + ADC tables + exact rerank, after the
-    // corpus change batch went through the view's refresh path — same
-    // modified-corpus exact-top-k ground truth as the other maintained
-    // indexes, so a stale cell, a stale code, or a broken composition is
-    // lost recall / a wrong pair
-    "sim_ivfpq_topk" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val ivfpq = ivfpqTopKFromView(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivfpq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfPqRecallBound)).as("recall_ok"))
-    }),
-
-    // the composed index after TWO successive change batches through its
-    // refresh path ([[ivfpqTopKIncremental]]): epoch 2's partition-scoped
-    // delete-then-insert runs against state epoch 1 wrote — a stale cell
-    // from EITHER batch (a %31 vector still celled at its pre-reversal
-    // position, a %29 vector not retracted) is lost recall / a wrong pair
-    // against exact top-k on the twice-modified corpus
-    "sim_ivfpq_incremental" -> ((s, dir) => {
-      val e = modifiedEmb2(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val ivfpq = ivfpqTopKIncremental(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivfpq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfPqRecallBound)).as("recall_ok"))
-    }),
-
-    // the composed IVF-PQ index probed through the BULK plan
-    // ([[ivfpqTopKBulk]]): shuffle semi-join cell prune over 8-byte
-    // codes, bounded-heap selection, nothing broadcast — identical
-    // modified-corpus ground truth as the model-sized composed path
-    "sim_ivfpq_bulk" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val ivfpq = ivfpqTopKBulk(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(ivfpq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(IvfPqRecallBound)).as("recall_ok"))
-    }),
-
-    // the SQ8 view probed through the BULK plan ([[sqTopKBulk]]): no
-    // probe broadcast, no driver In-list, bounded-heap selection instead
-    // of windows — graded against the identical modified-corpus ground
-    // truth as sim_sq_incremental (both read one maintained view)
-    "sim_sq_bulk" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val sq = sqTopKBulk(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(sq, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(SqRecallBound)).as("recall_ok"))
-    }),
-
-    // the SAME persisted band view probed through the BULK plan
-    // ([[lshTopKBulk]]): no driver In-list, no probe broadcast — shuffle
-    // semi-join prune + equi-join, the shape a data-sized probe batch
-    // needs. Graded against the identical modified-corpus ground truth
-    // as the model-sized path (both read one maintained view)
-    "sim_lsh_bulk" -> ((s, dir) => {
-      val e = modifiedEmb(s, dir)
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pn"))
-      val brute = rankTopK(
-        e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-          .withColumn("cos", round(dot(col("pv"), col("v")) / (col("pn") * col("norm")), 6))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cos")))
-        .select("probe_id", "neighbor_id")
-      val lsh = lshTopKBulk(s, dir).select("probe_id", "neighbor_id")
-        .withColumn("f", lit(1L))
-      brute.join(lsh, Seq("probe_id", "neighbor_id"), "left_outer")
-        .agg(count_distinct(col("probe_id")).as("n_probes"),
-          count(lit(1)).as("n_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_probes"), col("n_pairs"),
-          (col("nf") >= col("n_pairs") * lit(AnnRecallBound)).as("recall_ok"))
-    }),
-
-    // embedding near-dup with a driver-checkable invariant: the exact
-    // cosine-threshold pair set over a sample frame (pairs touching
-    // vec_id < SampleVecs) is recomputed by the DuckDB oracle;
-    // recall_ok asserts the banded pipeline found ≥ bound of it.
-    // Pair output for users: [[embeddingPairs]].
-    "dedup_embedding" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val sample = e.filter(col("vec_id") < SampleVecs)
-        .select(col("vec_id").as("a"), col("v").as("va"), col("norm").as("na"))
-        .join(e.select(col("vec_id").as("b"), col("v").as("vb"), col("norm").as("nb")),
-          col("a") =!= col("b"))
-        .withColumn("cos", round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
-        .filter(col("cos") >= EmbDupThreshold)
-        .select(least(col("a"), col("b")).as("i"), greatest(col("a"), col("b")).as("j"))
-        .distinct()
-      val found = embeddingPairs(s, dir).select("i", "j").withColumn("f", lit(1L))
-      sample.join(found, Seq("i", "j"), "left_outer")
-        .agg(count(lit(1)).as("n_sample_pairs"),
-          coalesce(sum(col("f")), lit(0L)).as("nf"))
-        .select(col("n_sample_pairs"),
-          (col("nf") >= col("n_sample_pairs") * lit(EmbSampleRecallBound)).as("recall_ok"))
-    }),
-  )
-
-  // double-precision dot/norms spelled out: DuckDB's list_cosine_similarity
-  // computes in float32, which disagrees with Spark's double math at 1e-6
-  private val cosSql =
-    """(list_sum([CAST(a.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE) for i in range(64)])
-      | / (sqrt(list_sum([CAST(a.embedding[i+1] AS DOUBLE) * CAST(a.embedding[i+1] AS DOUBLE) for i in range(64)]))
-      |   * sqrt(list_sum([CAST(b.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE) for i in range(64)]))))""".stripMargin
-
-  private def bruteTopkSqlOver(table: String) =
-    s"""SELECT probe_id, neighbor_id, cos, rank FROM (
-       |  SELECT a.vec_id AS probe_id, b.vec_id AS neighbor_id,
-       |         round($cosSql, 6) AS cos,
-       |         row_number() OVER (
-       |           PARTITION BY a.vec_id
-       |           ORDER BY round($cosSql, 6) DESC, b.vec_id) AS rank
-       |  FROM $table a JOIN $table b ON a.vec_id < 10 AND b.vec_id <> a.vec_id) t
-       |WHERE rank <= $K ORDER BY probe_id, rank""".stripMargin
-
-  private val bruteTopkSql = bruteTopkSqlOver("embeddings")
+    "sim_hard_negatives" -> ((s, dir) => hardNegatives(s, dir)),
+  ) ++ gates.map(g => g.name -> ((s: SparkSession, dir: String) => recall(g, s, dir)))
 
   val oracle: Map[String, String] = Map(
     "embed_label_stats" ->
@@ -2617,51 +2035,13 @@ object SimilarityQueries {
         |  round(max(sqrt(list_sum([CAST(embedding[i+1] AS DOUBLE) * CAST(embedding[i+1] AS DOUBLE) for i in range(64)]))), 6) AS max_norm,
         |  CAST(min(len(embedding)) AS BIGINT) AS dim
         |FROM embeddings GROUP BY 1 ORDER BY label""".stripMargin,
-    "sim_brute_topk" -> bruteTopkSql,
-    // the oracle recomputes the exact corpus-wide sample pair set the
+    "sim_brute_topk" -> bruteTopkSqlOver("embeddings"),
     // the stored cell view holds exactly the post-batch corpus, so the
     // total is oracle-exact; cap and keep-count identity are engine
     // assertions over engine-defined cells
     "sample_cluster_balance" ->
       """SELECT count(*) AS n_vecs, true AS cap_ok, true AS kept_exact_ok
         |FROM embeddings WHERE vec_id % 41 <> 0""".stripMargin,
-    // within-cell scan is graded against; recall_ok is the engine's bound
-    "dedup_semantic" ->
-      s"""WITH p AS (
-         |  SELECT least(a.vec_id, b.vec_id) AS i, greatest(a.vec_id, b.vec_id) AS j
-         |  FROM embeddings a JOIN embeddings b
-         |    ON a.vec_id < $SampleVecs AND b.vec_id <> a.vec_id
-         |  WHERE round($cosSql, 6) >= $EmbDupThreshold
-         |  GROUP BY 1, 2)
-         |SELECT count(*) AS n_sample_pairs, true AS recall_ok FROM p""".stripMargin,
-    // the oracle recomputes the exact cross-label ground truth the
-    // IVF-pruned mine is graded against
-    "sim_hard_negatives_ivf" ->
-      s"""SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (
-         |  SELECT probe_id, neighbor_id FROM (
-         |    SELECT a.vec_id AS probe_id, b.vec_id AS neighbor_id,
-         |           row_number() OVER (
-         |             PARTITION BY a.vec_id
-         |             ORDER BY round($cosSql, 6) DESC, b.vec_id) AS rank
-         |    FROM embeddings a JOIN embeddings b
-         |      ON a.vec_id < 10 AND b.vec_id <> a.vec_id AND b.label <> a.label) t
-         |  WHERE rank <= $K)""".stripMargin,
-    // the incremental twin's ground truth is the MODIFIED corpus
-    "dedup_semantic_incremental" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0),
-         |p AS (
-         |  SELECT least(a.vec_id, b.vec_id) AS i, greatest(a.vec_id, b.vec_id) AS j
-         |  FROM corpus a JOIN corpus b
-         |    ON a.vec_id < $SampleVecs AND b.vec_id <> a.vec_id
-         |  WHERE round($cosSql, 6) >= $EmbDupThreshold
-         |  GROUP BY 1, 2)
-         |SELECT count(*) AS n_sample_pairs, true AS recall_ok FROM p""".stripMargin,
     // exact cross-label top-k: the brute ground truth with the label
     // exclusion inside the join predicate
     "sim_hard_negatives" ->
@@ -2674,220 +2054,5 @@ object SimilarityQueries {
          |  FROM embeddings a JOIN embeddings b
          |    ON a.vec_id < 10 AND b.vec_id <> a.vec_id AND b.label <> a.label) t
          |WHERE rank <= $K ORDER BY probe_id, rank""".stripMargin,
-    // the oracle recomputes the exact top-k ground truth the invariant
-    // counts; recall_ok is the engine's asserted bound
-    "sim_lsh_topk" ->
-      s"""SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM ($bruteTopkSql)""".stripMargin,
-    "sim_ivf_topk" ->
-      s"""SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM ($bruteTopkSql)""".stripMargin,
-    "sim_sq_topk" ->
-      s"""SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM ($bruteTopkSql)""".stripMargin,
-    // the exact top-k ground truth recomputed from the MODIFIED corpus
-    // (the same %37-reversal / %41-tombstone batch the engine pushed
-    // through the persisted index's refresh path)
-    "sim_ivf_incremental" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // same modified-corpus ground truth as sim_ivf_incremental — the two
-    // persisted indexes are graded against the identical change batch
-    "sim_lsh_incremental" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // the IVF bulk plan reads the same maintained view as the model-sized
-    // path, so the identical ground truth grades it
-    "sim_ivf_bulk" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // the pre-batch epoch must serve the ORIGINAL corpus's ground truth
-    // — same oracle as sim_lsh_topk
-    "sim_lsh_asof" ->
-      s"""SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM ($bruteTopkSql)""".stripMargin,
-    // the streaming-built band view serves the same modified-corpus
-    // ground truth as the batch-maintained one
-    "sim_lsh_streamed" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // compaction is invisible to the search: same modified-corpus ground
-    // truth as the incremental gate
-    "sim_ivf_compacted" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // the streaming-built cell view serves the same modified-corpus
-    // ground truth as the batch-maintained one
-    "sim_ivf_streamed" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // the composed IVF-SQ8 index graded against the same modified-corpus
-    // ground truth as the other maintained indexes
-    "sim_ivfsq_topk" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // the composed bulk plan reads the same maintained view as the
-    // model-sized composed path, so the identical ground truth grades it
-    "sim_ivfsq_bulk" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // flat PQ graded against the exact base-corpus top-k
-    "sim_pq_topk" ->
-      s"""SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM ($bruteTopkSql)""".stripMargin,
-    // the maintained flat-PQ view graded against the modified corpus
-    "sim_pq_incremental" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // the flat-PQ bulk plan reads the same maintained view as the
-    // model-sized path, so the identical ground truth grades it
-    "sim_pq_bulk" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // the pre-batch epoch must serve the ORIGINAL corpus's ground truth
-    "sim_ivfpq_asof" ->
-      s"""SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM ($bruteTopkSql)""".stripMargin,
-    // the composed IVF-PQ index graded against the same modified-corpus
-    // ground truth as the other maintained indexes
-    "sim_ivfpq_topk" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // the IVF-PQ bulk plan reads the same maintained view as the
-    // model-sized composed path, so the identical ground truth grades it
-    // the twice-modified corpus: alive iff neither %41 nor %29 divides,
-    // reversed iff exactly one of %37 / %31 divides (XOR — a second
-    // reversal composes to the identity)
-    "sim_ivfpq_incremental" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN (vec_id % 37 = 0) <> (vec_id % 31 = 0)
-         |              THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0 AND vec_id % 29 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    "sim_ivfpq_bulk" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // the SQ8 bulk plan reads the same maintained view as the model-sized
-    // path, so the identical ground truth grades it
-    "sim_sq_bulk" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // same modified-corpus ground truth as the other incremental indexes
-    "sim_sq_incremental" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    // the bulk plan reads the same maintained view as the model-sized
-    // path, so the identical ground truth grades it
-    "sim_lsh_bulk" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |         CASE WHEN vec_id % 37 = 0 THEN list_reverse(embedding)
-         |              ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 41 <> 0)
-         |SELECT count(DISTINCT probe_id) AS n_probes, count(*) AS n_pairs,
-         |       true AS recall_ok
-         |FROM (${bruteTopkSqlOver("corpus")})""".stripMargin,
-    "dedup_embedding" ->
-      s"""WITH p AS (
-         |  SELECT least(a.vec_id, b.vec_id) AS i, greatest(a.vec_id, b.vec_id) AS j
-         |  FROM embeddings a JOIN embeddings b
-         |    ON a.vec_id < $SampleVecs AND b.vec_id <> a.vec_id
-         |  WHERE round($cosSql, 6) >= $EmbDupThreshold
-         |  GROUP BY 1, 2)
-         |SELECT count(*) AS n_sample_pairs, true AS recall_ok FROM p""".stripMargin,
-  )
+  ) ++ gates.map(g => g.name -> g.truth.sql)
 }

@@ -418,7 +418,6 @@ class MapIndexSpec extends AnyFunSuite with SparkSpec {
       // fresh-process simulation: per-JVM caches dropped, same root —
       // the reopened store must SERVE both units (same epochs, no
       // re-materialization, probe scale read from the persisted model)
-      SimilarityQueries.resetCachesForTest()
       Views.dropStoresForTest(corpus.toString)
       SimilarityQueries.sqTopKFromView(spark, corpus.toString).collect()
       // the IVF-PQ reopen additionally parses the persisted mixed model
@@ -459,7 +458,6 @@ class MapIndexSpec extends AnyFunSuite with SparkSpec {
       assert(store3.manifest("pairgraph_inc_pairs").isEmpty)
     } finally {
       sys.props -= "graft.views.root"
-      SimilarityQueries.resetCachesForTest()
       Views.dropStoresForTest(corpus.toString)
     }
   }
