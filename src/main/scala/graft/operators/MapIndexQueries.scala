@@ -353,6 +353,14 @@ object MapIndexQueries {
       .select(lineitemKey.as("src_key"))
       .distinct()
 
+  /** The shared lineitem batch in DuckDB, as the CTE `name`: the
+    * (possibly re-flagged) flag aliased `key`, then the item `value`. */
+  private def lineitemSql(key: String, value: String, name: String = "src"): String =
+    s"""$name AS (
+       |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS $key,
+       |         $value
+       |  FROM lineitem WHERE l_orderkey % 89 <> 0)""".stripMargin
+
   /** The shared batch as ONE streaming micro-batch: upserts + tombstones
     * together, the streaming contract's `deleted` column splitting them
     * (index.js:178,187-205). */
@@ -693,6 +701,15 @@ object MapIndexQueries {
      Some(o.filter(gone).select(col("o_orderkey").cast("string")).distinct()))
   }
 
+  /** [[ordersBatch]] in DuckDB, as the CTE `o`: `cols` and the repriced
+    * `o_totalprice` of the surviving orders (`orphan` as there). */
+  private def ordersSql(cols: String, orphan: Boolean = false): String =
+    s"""o AS (
+       |  SELECT $cols,
+       |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
+       |              ELSE o_totalprice END AS o_totalprice
+       |  FROM orders WHERE o_orderkey % 41 <> 0${if (orphan) " AND o_custkey % 19 <> 0" else ""})""".stripMargin
+
   /** The shared customers change batch: `%13` customers re-balanced
     * (+100 acctbal), `%17` tombstoned. `rebalance = false` upserts them
     * unchanged (the semi/anti views store right keys only). */
@@ -703,6 +720,23 @@ object MapIndexQueries {
      Some(c.filter(col("c_custkey") % 17 === 0)
        .select(col("c_custkey").cast("string")).distinct()))
   }
+
+  /** [[customersBatch]] in DuckDB, as the CTE `c`: `cols` of the
+    * surviving customers, then (`rebalance`) their re-balanced
+    * `c_acctbal`. */
+  private def customerSql(cols: String, rebalance: Boolean = true): String =
+    if (rebalance)
+      s"""c AS (
+         |  SELECT $cols,
+         |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
+         |              ELSE c_acctbal END AS c_acctbal
+         |  FROM customer WHERE c_custkey % 17 <> 0)""".stripMargin
+    else
+      s"""c AS (
+         |  SELECT $cols
+         |  FROM customer WHERE c_custkey % 17 <> 0)""".stripMargin
+  /** The surviving customer keys alone, as the CTE `c`. */
+  private val customerKeysSql = "c AS (SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)"
 
   /** The shared orders⋈customer history: [[twoSidedHistory]] over the
     * base orders and customers with [[ordersBatch]] on the left and
@@ -730,6 +764,14 @@ object MapIndexQueries {
        .withColumn("n_name", concat(col("n_name"), lit("_X"))),
      Some(n.filter(col("n_nationkey") % 7 === 0)
        .select(col("n_nationkey").cast("string")).distinct()))
+
+  /** [[nationBatch]] in DuckDB, as the CTE `n`. */
+  private val nationSql =
+    """n AS (
+      |  SELECT n_nationkey,
+      |         CASE WHEN n_nationkey % 5 = 0 THEN n_name || '_X'
+      |              ELSE n_name END AS n_name
+      |  FROM nation WHERE n_nationkey % 7 <> 0)""".stripMargin
 
   /** Orders joined to the derived per-priority dim. */
   private def ordersPriority(store: BucketedViewStore, name: String): JoinView =
@@ -976,6 +1018,65 @@ object MapIndexQueries {
       .withColumn("b_ts", col("b_ts") + expr("INTERVAL 30 MINUTES"))
   private def clickDels(c: DataFrame): DataFrame =
     c.filter(col("b_id") % 17 === 0).select(col("b_id").cast("string")).distinct()
+
+  /** Both sides after their batches in DuckDB: purchases as the CTE `p`
+    * ([[purchaseUps]], [[purchaseDels]]), clicks as `c` ([[clickUps]],
+    * [[clickDels]]). */
+  private val purchaseClickSql =
+    """p AS (
+      |  SELECT event_id AS a_id, user_id AS a_user,
+      |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
+      |              ELSE ts END AS a_ts,
+      |         CASE WHEN event_id % 37 = 0 THEN value + 1000
+      |              ELSE value END AS a_value
+      |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
+      |c AS (
+      |  SELECT event_id AS b_id, user_id AS b_user,
+      |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
+      |              ELSE ts END AS b_ts,
+      |         CASE WHEN event_id % 13 = 0 THEN value + 100
+      |              ELSE value END AS b_value
+      |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0)""".stripMargin
+
+  /** The as-of pick rules in DuckDB: the WHERE … LIMIT 1 lines of the
+    * correlated subquery that picks click `b` for purchase row `p`.
+    * Backward: greatest ts <= the purchase's, ties to the greatest click
+    * id; `tol` bounds the distance to one hour. */
+  private def backwardPick(tol: Boolean)(p: String): String = {
+    val within = if (tol) s"\n  AND epoch_us($p.a_ts) - epoch_us(b.b_ts) <= 3600000000" else ""
+    s"""WHERE b.b_user = $p.a_user AND b.b_ts <= $p.a_ts$within
+       |ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1""".stripMargin
+  }
+  /** Forward: least ts >= the purchase's, ties to the least click id. */
+  private def forwardPick(p: String): String =
+    s"""WHERE b.b_user = $p.a_user AND b.b_ts >= $p.a_ts
+       |ORDER BY b.b_ts ASC, b.b_id ASC LIMIT 1""".stripMargin
+  /** Nearest within one hour: least |dt|, distance ties backward, then
+    * the side's own id rule (epoch_us: the engine reads microseconds). */
+  private def nearestPick(p: String): String =
+    s"""WHERE b.b_user = $p.a_user
+       |  AND abs(epoch_us(b.b_ts) - epoch_us($p.a_ts)) <= 3600000000
+       |ORDER BY abs(epoch_us(b.b_ts) - epoch_us($p.a_ts)) ASC,
+       |         (b.b_ts <= $p.a_ts) DESC,
+       |         CASE WHEN b.b_ts <= $p.a_ts THEN -b.b_id ELSE b.b_id END ASC
+       |LIMIT 1""".stripMargin
+  /** The `b_id` (and, with `value`, the rounded `b_value`) of the click
+    * `rule` picks from relation `side` for purchase row `p`, as select
+    * items indented by `ind`. */
+  private def asOfPickSql(rule: String => String, p: String = "a", side: String = "c",
+      ind: String = "  ", value: Boolean = true): String = {
+    def pick(item: String, as: String) =
+      s"$ind(SELECT $item FROM $side b\n" +
+        rule(p).linesIterator.map(l => s"$ind $l").mkString("\n") + s") AS $as"
+    if (value) s"${pick("b.b_id", "b_id")},\n${pick("round(b.b_value, 2)", "b_value")}"
+    else pick("b.b_id", "b_id")
+  }
+  /** The backward as-of row of each purchase in `p` from clicks `c`, as
+    * the body of a CTE. */
+  private def asOfRowsSql(p: String, c: String): String =
+    s"""  SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
+       |${asOfPickSql(backwardPick(tol = false), side = c, ind = "    ")}
+       |  FROM $p a)""".stripMargin
 
   /** The as-of view built PURELY through interleaved out-of-order
     * micro-batches ([[purchaseClickView]]'s streaming twin): purchases
@@ -1342,6 +1443,17 @@ object MapIndexQueries {
        .withColumn("u_events", col("u_events") + 50),
      Some(dim.filter(col("u_id") % 17 === 0).select(col("u_id").cast("string")).distinct()))
 
+  /** [[userDim]] after [[userDimBatch]] in DuckDB, as the CTEs `d0`, `d`. */
+  private val userDimSql =
+    """d0 AS (
+      |  SELECT user_id AS u_id, count(*) AS u_events
+      |  FROM events GROUP BY 1),
+      |d AS (
+      |  SELECT u_id,
+      |         CASE WHEN u_id % 13 = 0 THEN u_events + 50
+      |              ELSE u_events END AS u_events
+      |  FROM d0 WHERE u_id % 17 <> 0)""".stripMargin
+
   /** MULTI-MEASURE maintained rollup ([[graft.engine.Measures]] — the
     * TPC-H-Q1 shape): ONE state row per segment carrying (cnt, vcnt,
     * sum) for BOTH o_totalprice and c_acctbal, folded in ONE pass from
@@ -1693,6 +1805,17 @@ object MapIndexQueries {
      Some(ev.filter(col("event_id") % 41 === 0)
        .select(col("event_id").cast("string")).distinct()))
 
+  /** [[eventsBatch]] in DuckDB, as the CTE `e`: `key`, the re-timed `ts`
+    * and the re-valued value aliased `value`. */
+  private def eventsSql(key: String, value: String): String =
+    s"""e AS (
+       |  SELECT $key,
+       |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
+       |              ELSE ts END AS ts,
+       |         CASE WHEN event_id % 37 = 0 THEN value + 1000
+       |              ELSE value END AS $value
+       |  FROM events WHERE event_id % 41 <> 0)""".stripMargin
+
   /** The windowed SKETCH twin over the same events contract: one
     * mergeable quantile sketch per (day, event_type), maintained through
     * the shared batch (%37 migrations = rebuild of the dirty pairs, the
@@ -1855,6 +1978,43 @@ object MapIndexQueries {
 
   private def nettedFeed(feed: DataFrame): DataFrame =
     graft.engine.MaterializedView.nettedFeed(feed)
+
+  /** Right-keyed serving of as-of view `v`: the purchases attributed to
+    * a deterministic probe subset of the surviving clicks (%7 == 3). */
+  private def byRightServe(s: SparkSession, dir: String, v: AsOfJoinView): DataFrame = {
+    val probes = Tables.events(s, dir)
+      .filter(col("event_type") === "click" && col("event_id") % 17 =!= 0
+        && col("event_id") % 7 === 3)
+      .select(col("event_id").cast("string").as("emit_key")).distinct()
+    v.byRightKeys(probes)
+      .select(col("a_id"), col("a_user"),
+        round(col("a_value"), 2).as("a_value"),
+        col("b_id"), round(col("b_value"), 2).as("b_value"))
+      .orderBy("a_id")
+  }
+
+  /** Trailing-7-day p50/p95 of sketch view `v`, gated against the exact
+    * anchors of the same window of the modified events. */
+  private def trailingSketchServe(s: SparkSession, dir: String,
+      v: graft.engine.WindowedSketchView): DataFrame = {
+    val est = v.trailingQuantiles(7, Seq("est50" -> 0.5, "est95" -> 0.95))
+      .withColumnRenamed("emit_key", "flag")
+    val e = Tables.events(s, dir)
+      .filter(col("event_id") % 41 =!= 0)
+      .select(col("event_type").as("flag"),
+        when(col("event_id") % 37 === 0, col("ts") + expr("INTERVAL 1 HOUR"))
+          .otherwise(col("ts")).as("ts"),
+        when(col("event_id") % 37 === 0, col("value") + 1000)
+          .otherwise(col("value")).as("v"))
+      .withColumn("sl", (floor(unix_seconds(col("ts")) / 86400).cast("long")) * 86400)
+    // newest event day from the slice LAYOUT, not an events-wide max()
+    // scan: a slice is live iff an event of the modified corpus lands
+    // in it (empty slices drop at publish), so liveSlices.max IS the
+    // max sl — same window, one less corpus scan + driver action
+    val mx = v.liveSlices.max
+    sketchQuantileGateFrom(est,
+      e.filter(col("sl") >= mx - 6 * 86400L).select("flag", "v"))
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the maintained orders⋈customer join view after a change batch to
@@ -2182,35 +2342,15 @@ object MapIndexQueries {
     // and filters the picked click id to the same subset — a stale twin
     // row (a lost match not retracted, a re-pick not mirrored) is a
     // hash mismatch
-    "mapindex_asofjoinview_byright" -> ((s, dir) => {
-      val v = purchaseClickRightKeyedView(s, dir)
-      val probes = Tables.events(s, dir)
-        .filter(col("event_type") === "click" && col("event_id") % 17 =!= 0
-          && col("event_id") % 7 === 3)
-        .select(col("event_id").cast("string").as("emit_key")).distinct()
-      v.byRightKeys(probes)
-        .select(col("a_id"), col("a_user"),
-          round(col("a_value"), 2).as("a_value"),
-          col("b_id"), round(col("b_value"), 2).as("b_value"))
-        .orderBy("a_id")
-    }),
+    "mapindex_asofjoinview_byright" -> ((s, dir) =>
+      byRightServe(s, dir, purchaseClickRightKeyedView(s, dir))),
 
     // the right-keyed twin under SALT SHARDS
     // ([[purchaseClickRightKeyedSaltedView]]): the point read fans out
     // to the bounded S sub-keys and the shard layout must be invisible
     // — same probe subset and oracle as the unsalted twin
-    "mapindex_asofjoinview_byright_salted" -> ((s, dir) => {
-      val v = purchaseClickRightKeyedSaltedView(s, dir)
-      val probes = Tables.events(s, dir)
-        .filter(col("event_type") === "click" && col("event_id") % 17 =!= 0
-          && col("event_id") % 7 === 3)
-        .select(col("event_id").cast("string").as("emit_key")).distinct()
-      v.byRightKeys(probes)
-        .select(col("a_id"), col("a_user"),
-          round(col("a_value"), 2).as("a_value"),
-          col("b_id"), round(col("b_value"), 2).as("b_value"))
-        .orderBy("a_id")
-    }),
+    "mapindex_asofjoinview_byright_salted" -> ((s, dir) =>
+      byRightServe(s, dir, purchaseClickRightKeyedSaltedView(s, dir))),
 
     // the as-of view's NET CDC across both refresh epochs: gross feed
     // over (build, latest], insert/delete multisets cancelled — must
@@ -2531,26 +2671,8 @@ object MapIndexQueries {
     // asserting each estimate's true rank within 5% of target — the
     // estimates themselves stay out of the hash (merge order may legally
     // move them within the bound, as in the other sketch gates)
-    "mapindex_windowed_sketch" -> ((s, dir) => {
-      val v = eventsWindowedSketchView(s, dir)
-      val est = v.trailingQuantiles(7, Seq("est50" -> 0.5, "est95" -> 0.95))
-        .withColumnRenamed("emit_key", "flag")
-      val e = Tables.events(s, dir)
-        .filter(col("event_id") % 41 =!= 0)
-        .select(col("event_type").as("flag"),
-          when(col("event_id") % 37 === 0, col("ts") + expr("INTERVAL 1 HOUR"))
-            .otherwise(col("ts")).as("ts"),
-          when(col("event_id") % 37 === 0, col("value") + 1000)
-            .otherwise(col("value")).as("v"))
-        .withColumn("sl", (floor(unix_seconds(col("ts")) / 86400).cast("long")) * 86400)
-      // newest event day from the slice LAYOUT, not an events-wide max()
-      // scan: a slice is live iff an event of the modified corpus lands
-      // in it (empty slices drop at publish), so liveSlices.max IS the
-      // max sl — same window, one less corpus scan + driver action
-      val mx = v.liveSlices.max
-      sketchQuantileGateFrom(est,
-        e.filter(col("sl") >= mx - 6 * 86400L).select("flag", "v"))
-    }),
+    "mapindex_windowed_sketch" -> ((s, dir) =>
+      trailingSketchServe(s, dir, eventsWindowedSketchView(s, dir))),
 
     // ONE group's per-day series (the metric-dashboard serve): the
     // emit_key equality pushes through the slice union into every slice
@@ -2683,23 +2805,8 @@ object MapIndexQueries {
     // the sketch state built through pure insert-only micro-batch MERGES
     // (the O(delta) fold path) before the shared batch drives rebuilds —
     // the streamed twin, same oracle as the batch-built trailing gate
-    "mapindex_windowed_sketch_streamed" -> ((s, dir) => {
-      val v = eventsWindowedSketchView(s, dir, "st")
-      val est = v.trailingQuantiles(7, Seq("est50" -> 0.5, "est95" -> 0.95))
-        .withColumnRenamed("emit_key", "flag")
-      val e = Tables.events(s, dir)
-        .filter(col("event_id") % 41 =!= 0)
-        .select(col("event_type").as("flag"),
-          when(col("event_id") % 37 === 0, col("ts") + expr("INTERVAL 1 HOUR"))
-            .otherwise(col("ts")).as("ts"),
-          when(col("event_id") % 37 === 0, col("value") + 1000)
-            .otherwise(col("value")).as("v"))
-        .withColumn("sl", (floor(unix_seconds(col("ts")) / 86400).cast("long")) * 86400)
-      // newest event day from the slice layout (see mapindex_windowed_sketch)
-      val mx = v.liveSlices.max
-      sketchQuantileGateFrom(est,
-        e.filter(col("sl") >= mx - 6 * 86400L).select("flag", "v"))
-    }),
+    "mapindex_windowed_sketch_streamed" -> ((s, dir) =>
+      trailingSketchServe(s, dir, eventsWindowedSketchView(s, dir, "st"))),
 
     // the sketch view's WHOLE history decoded across BOTH tiers — three
     // coarsened week slices merged with the daily tail in one serve
@@ -3314,274 +3421,225 @@ object MapIndexQueries {
         .orderBy("emit_key")),
   )
 
+  /** The exact-anchor tail of the quantile-sketch gates over a `src` CTE
+    * of (`flag`, `v`): exact n and the p50/p95 anchors per flag (the
+    * smallest value whose cumulative count reaches ceil(p·n); window sums
+    * cast BIGINT, as DuckDB sums BIGINT into HUGEINT). The rank-bound
+    * booleans are literal TRUE — Spark's arm computing them from the
+    * sketch state must agree or the hash mismatches. */
+  private val exactAnchorsSql =
+    """vcounts AS (
+      |  SELECT flag, v, count(*) AS cnt FROM src GROUP BY flag, v),
+      |vcum AS (
+      |  SELECT flag, v,
+      |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY v) AS BIGINT) AS cum,
+      |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n2
+      |  FROM vcounts),
+      |exact AS (
+      |  SELECT flag, max(n2) AS n,
+      |         min(CASE WHEN cum >= ceil(n2 / 2.0) THEN v END) AS x50,
+      |         min(CASE WHEN cum >= ceil(n2 * 19 / 20.0) THEN v END) AS x95
+      |  FROM vcum GROUP BY flag)
+      |SELECT flag, n, round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
+      |       true AS p50_within_rank, true AS p95_within_rank
+      |FROM exact ORDER BY flag""".stripMargin
+
   // windowed maintained aggregate: from-scratch per-day GROUP BY over the
   // MODIFIED events table (the %37 +1 h shift moves events across day
   // boundaries — a slice that failed to retract or receive them
   // mismatches); shared by the batch-built and streamed twins
   private val windowedAggOracle: String =
-    """WITH e AS (
-      |  SELECT event_type,
-      |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-      |              ELSE ts END AS ts,
-      |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-      |              ELSE value END AS value
-      |  FROM events WHERE event_id % 41 <> 0)
-      |SELECT CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS slice_start,
-      |       event_type AS emit_key, count(*) AS cnt,
-      |       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-      |       round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
-      |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+    s"""WITH ${eventsSql("event_type", "value")}
+       |SELECT CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS slice_start,
+       |       event_type AS emit_key, count(*) AS cnt,
+       |       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
+       |       round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
+       |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   private val windowedSketchOracle: String =
-    """WITH e AS (
-        |  SELECT event_type AS flag,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS v
-        |  FROM events WHERE event_id % 41 <> 0),
-        |sl AS (SELECT flag, v,
-        |              CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS sl FROM e),
-        |m AS (SELECT max(sl) AS mx FROM sl),
-        |src AS (SELECT flag, v FROM sl, m WHERE sl >= mx - 6*86400),
-        |vcounts AS (
-        |  SELECT flag, v, count(*) AS cnt FROM src GROUP BY flag, v),
-        |vcum AS (
-        |  SELECT flag, v,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY v) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n2
-        |  FROM vcounts),
-        |exact AS (
-        |  SELECT flag, max(n2) AS n,
-        |         min(CASE WHEN cum >= ceil(n2 / 2.0) THEN v END) AS x50,
-        |         min(CASE WHEN cum >= ceil(n2 * 19 / 20.0) THEN v END) AS x95
-        |  FROM vcum GROUP BY flag)
-        |SELECT flag, n, round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
-        |       true AS p50_within_rank, true AS p95_within_rank
-        |FROM exact ORDER BY flag""".stripMargin
+    s"""WITH ${eventsSql("event_type AS flag", "v")},
+       |sl AS (SELECT flag, v,
+       |              CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS sl FROM e),
+       |m AS (SELECT max(sl) AS mx FROM sl),
+       |src AS (SELECT flag, v FROM sl, m WHERE sl >= mx - 6*86400),
+       |$exactAnchorsSql""".stripMargin
+
+  /** Exact distinct users per type over the trailing 7-day window of the
+    * modified events, aliased `distinctAs`, then the literal `flag`. */
+  private def windowedDistinctSql(distinctAs: String, flag: String): String =
+    s"""WITH e AS (
+       |  SELECT event_type AS emit_key,
+       |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
+       |              ELSE ts END AS ts,
+       |         user_id
+       |  FROM events WHERE event_id % 41 <> 0),
+       |s AS (SELECT emit_key, user_id,
+       |             CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS sl FROM e),
+       |m AS (SELECT max(sl) AS mx FROM s)
+       |SELECT emit_key, count(DISTINCT user_id) AS $distinctAs,
+       |       $flag
+       |FROM s, m WHERE sl >= mx - 6*86400
+       |GROUP BY emit_key ORDER BY emit_key""".stripMargin
+
+  /** The net change between the CTEs `before` and `after` (bag
+    * difference: rows only before are deletes, rows only after are
+    * inserts), each row headed by `cols`, ordered by `key`. */
+  private def netDiffSql(cols: String, key: String): String =
+    s"""SELECT $cols'delete' AS change_type
+       |FROM (SELECT * FROM before EXCEPT ALL SELECT * FROM after)
+       |UNION ALL
+       |SELECT $cols'insert' AS change_type
+       |FROM (SELECT * FROM after EXCEPT ALL SELECT * FROM before)
+       |ORDER BY change_type, $key""".stripMargin
+
+  /** The segment × priority lattice of `o` `join` `c`, grouped by
+    * `grouping`, with `gid` rebuilt from GROUPING() in the engine's bit
+    * layout; `measures` follow `cnt`. */
+  private def latticeSql(join: String, measures: String, grouping: String = "ROLLUP"): String =
+    s"""SELECT CAST(GROUPING(c_mktsegment) + 2 * GROUPING(o_orderpriority)
+       |            AS INTEGER) AS gid,
+       |       c_mktsegment, o_orderpriority, count(*) AS cnt,
+       |$measures
+       |FROM o $join c ON o_custkey = c_custkey
+       |GROUP BY $grouping(c_mktsegment, o_orderpriority)
+       |ORDER BY gid, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin
+  // the rollup measures on the DECIMAL(18,4) spelling the engine's sum
+  // and refcount states key on
+  private val revenueSql =
+    """       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
+      |         AS revenue""".stripMargin
+  private val acctbalSql =
+    """       round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE), 2)
+      |         AS acctbal""".stripMargin
+  private val measuresSql =
+    s"""       count(o_totalprice) AS n_price,
+       |$revenueSql,
+       |       count(c_acctbal) AS n_acct,
+       |$acctbalSql""".stripMargin
+  private val priceSpreadSql =
+    """       round(CAST(min(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
+      |         AS min_price,
+      |       round(CAST(max(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
+      |         AS max_price,
+      |       count(DISTINCT CAST(o_totalprice AS DECIMAL(18,4))) AS n_distinct""".stripMargin
 
   private val oracleBase: Map[String, String] = Map(
     // the from-scratch join of both MODIFIED base tables
     "mapindex_joinview" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_name,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, c_name,
-        |       round(o_totalprice, 2) AS o_totalprice,
-        |       round(c_acctbal, 2) AS c_acctbal
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey")},
+         |${customerSql("c_custkey, c_name")}
+         |SELECT o_orderkey, o_custkey, c_name,
+         |       round(o_totalprice, 2) AS o_totalprice,
+         |       round(c_acctbal, 2) AS c_acctbal
+         |FROM o JOIN c ON o_custkey = c_custkey
+         |ORDER BY o_orderkey""".stripMargin,
     // net CDC = from-scratch diff of the post-batch join vs the original
     "mapindex_joinview_changefeed" ->
-      """WITH before AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         round(o_totalprice, 2) AS o_totalprice,
-        |         round(c_acctbal, 2) AS c_acctbal
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0),
-        |after AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         round(o_totalprice, 2) AS o_totalprice,
-        |         round(c_acctbal, 2) AS c_acctbal
-        |  FROM o JOIN c ON o_custkey = c_custkey)
-        |SELECT o_orderkey, o_custkey, o_totalprice, c_acctbal,
-        |       'delete' AS change_type
-        |FROM (SELECT * FROM before EXCEPT ALL SELECT * FROM after)
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_totalprice, c_acctbal,
-        |       'insert' AS change_type
-        |FROM (SELECT * FROM after EXCEPT ALL SELECT * FROM before)
-        |ORDER BY change_type, o_orderkey""".stripMargin,
+      s"""WITH before AS (
+         |  SELECT o_orderkey, o_custkey,
+         |         round(o_totalprice, 2) AS o_totalprice,
+         |         round(c_acctbal, 2) AS c_acctbal
+         |  FROM orders JOIN customer ON o_custkey = c_custkey),
+         |${ordersSql("o_orderkey, o_custkey")},
+         |${customerSql("c_custkey")},
+         |after AS (
+         |  SELECT o_orderkey, o_custkey,
+         |         round(o_totalprice, 2) AS o_totalprice,
+         |         round(c_acctbal, 2) AS c_acctbal
+         |  FROM o JOIN c ON o_custkey = c_custkey)
+         |${netDiffSql("o_orderkey, o_custkey, o_totalprice, c_acctbal,\n       ", "o_orderkey")}""".stripMargin,
     // the from-scratch LEFT JOIN of both modified tables: %17-tombstoned
     // customers' surviving orders appear null-padded
     "mapindex_joinview_outer" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_name,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, c_name,
-        |       round(o_totalprice, 2) AS o_totalprice,
-        |       round(c_acctbal, 2) AS c_acctbal
-        |FROM o LEFT JOIN c ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey")},
+         |${customerSql("c_custkey, c_name")}
+         |SELECT o_orderkey, o_custkey, c_name,
+         |       round(o_totalprice, 2) AS o_totalprice,
+         |       round(c_acctbal, 2) AS c_acctbal
+         |FROM o LEFT JOIN c ON o_custkey = c_custkey
+         |ORDER BY o_orderkey""".stripMargin,
     // the from-scratch FULL JOIN of both modified tables: left-pads for
     // orders of tombstoned customers, right-pads for the %19 customers
     // whose orders the left batch tombstoned wholesale
     "mapindex_joinview_full" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0 AND o_custkey % 19 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_name,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, c_custkey, c_name,
-        |       round(o_totalprice, 2) AS o_totalprice,
-        |       round(c_acctbal, 2) AS c_acctbal
-        |FROM o FULL JOIN c ON o_custkey = c_custkey
-        |ORDER BY o_orderkey NULLS FIRST, c_custkey NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey", orphan = true)},
+         |${customerSql("c_custkey, c_name")}
+         |SELECT o_orderkey, o_custkey, c_custkey, c_name,
+         |       round(o_totalprice, 2) AS o_totalprice,
+         |       round(c_acctbal, 2) AS c_acctbal
+         |FROM o FULL JOIN c ON o_custkey = c_custkey
+         |ORDER BY o_orderkey NULLS FIRST, c_custkey NULLS FIRST""".stripMargin,
     // the from-scratch RIGHT JOIN of both modified tables: right-pads
     // for the %19 customers whose orders the left batch tombstoned
     // wholesale, NO left-pads
     "mapindex_joinview_right" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0 AND o_custkey % 19 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_name,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, c_custkey, c_name,
-        |       round(o_totalprice, 2) AS o_totalprice,
-        |       round(c_acctbal, 2) AS c_acctbal
-        |FROM o RIGHT JOIN c ON o_custkey = c_custkey
-        |ORDER BY o_orderkey NULLS FIRST, c_custkey""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey", orphan = true)},
+         |${customerSql("c_custkey, c_name")}
+         |SELECT o_orderkey, o_custkey, c_custkey, c_name,
+         |       round(o_totalprice, 2) AS o_totalprice,
+         |       round(c_acctbal, 2) AS c_acctbal
+         |FROM o RIGHT JOIN c ON o_custkey = c_custkey
+         |ORDER BY o_orderkey NULLS FIRST, c_custkey""".stripMargin,
     // FULL JOIN then GROUP BY recomputed from scratch: the NULL segment
     // collects left-pads (orders of tombstoned customers), right-pads
     // count into their real segment with a null (sum-invisible) value
     "mapindex_joinview_full_agg" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0 AND o_custkey % 19 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT c_mktsegment, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
-        |FROM o FULL JOIN c ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey", orphan = true)},
+         |${customerSql("c_custkey, c_mktsegment", rebalance = false)}
+         |SELECT c_mktsegment, count(*) AS cnt,
+         |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
+         |FROM o FULL JOIN c ON o_custkey = c_custkey
+         |GROUP BY c_mktsegment
+         |ORDER BY c_mktsegment NULLS FIRST""".stripMargin,
     // the maintained rollup must equal join-then-group-by on both
     // modified tables, recomputed from scratch
     "mapindex_joinview_agg" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")},
+         |c AS (
+         |  SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)
+         |SELECT o_orderpriority, count(*) AS cnt,
+         |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
+         |FROM o JOIN c ON o_custkey = c_custkey
+         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
     // all six aggregates recomputed from scratch; min/max/distinct run
     // over the same DECIMAL(18,4) spelling the refcount state keys on
     "mapindex_joinview_agg_multi" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue,
-        |       round(CAST(min(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS min_price,
-        |       round(CAST(max(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS max_price,
-        |       count(DISTINCT CAST(o_totalprice AS DECIMAL(18,4))) AS n_distinct
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")},
+         |c AS (
+         |  SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)
+         |SELECT o_orderpriority, count(*) AS cnt,
+         |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue,
+         |       round(CAST(min(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS min_price,
+         |       round(CAST(max(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS max_price,
+         |       count(DISTINCT CAST(o_totalprice AS DECIMAL(18,4))) AS n_distinct
+         |FROM o JOIN c ON o_custkey = c_custkey
+         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
     // the multi-measure rollup: both sums + both non-null counts from
     // the from-scratch LEFT JOIN of both modified tables (the NULL
     // segment's acctbal sum is SQL-NULL, its revenue a number)
     "mapindex_joinview_agg_measures" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT c_mktsegment, count(*) AS cnt,
-        |       count(o_totalprice) AS n_price,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue,
-        |       count(c_acctbal) AS n_acct,
-        |       round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS acctbal
-        |FROM o LEFT JOIN c ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey")},
+         |${customerSql("c_custkey, c_mktsegment")}
+         |SELECT c_mktsegment, count(*) AS cnt,
+         |$measuresSql
+         |FROM o LEFT JOIN c ON o_custkey = c_custkey
+         |GROUP BY c_mktsegment ORDER BY c_mktsegment NULLS FIRST""".stripMargin,
     // multi-measure rollup as-of the inter-batch epoch: modified orders
     // LEFT JOIN original customers, all five aggregates from scratch
     "mapindex_joinview_agg_measures_asof" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0)
-        |SELECT c_mktsegment, count(*) AS cnt,
-        |       count(o_totalprice) AS n_price,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue,
-        |       count(c_acctbal) AS n_acct,
-        |       round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS acctbal
-        |FROM o LEFT JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey")}
+         |SELECT c_mktsegment, count(*) AS cnt,
+         |$measuresSql
+         |FROM o LEFT JOIN customer ON o_custkey = c_custkey
+         |GROUP BY c_mktsegment ORDER BY c_mktsegment NULLS FIRST""".stripMargin,
     // the measures lattice's full multi-aggregate surface: ROLLUP of
     // the from-scratch FULL JOIN with cnt, both sums, and the first
     // measure's min/max/distinct-count (DECIMAL(18,4) spelling — the
     // refcount state's key domain)
     "mapindex_lattice_measures_multi" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0 AND o_custkey % 19 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT CAST(GROUPING(c_mktsegment) + 2 * GROUPING(o_orderpriority)
-        |            AS INTEGER) AS gid,
-        |       c_mktsegment, o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue,
-        |       round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS acctbal,
-        |       round(CAST(min(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS min_price,
-        |       round(CAST(max(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS max_price,
-        |       count(DISTINCT CAST(o_totalprice AS DECIMAL(18,4))) AS n_distinct
-        |FROM o FULL JOIN c ON o_custkey = c_custkey
-        |GROUP BY ROLLUP(c_mktsegment, o_orderpriority)
-        |ORDER BY gid, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority", orphan = true)},
+         |${customerSql("c_custkey, c_mktsegment")}
+         |${latticeSql("FULL JOIN", s"$revenueSql,\n$acctbalSql,\n$priceSpreadSql")}""".stripMargin,
     // the streamed Q1 twin converges to the batch-built state
     "mapindex_q1_measures_streamed" ->
       """WITH li AS (
@@ -3607,611 +3665,259 @@ object MapIndexQueries {
     // the multi-measure FULL-OUTER lattice: ROLLUP of the from-scratch
     // FULL JOIN with both sums and both non-null counts per set
     "mapindex_lattice_measures" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0 AND o_custkey % 19 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT CAST(GROUPING(c_mktsegment) + 2 * GROUPING(o_orderpriority)
-        |            AS INTEGER) AS gid,
-        |       c_mktsegment, o_orderpriority, count(*) AS cnt,
-        |       count(o_totalprice) AS n_price,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue,
-        |       count(c_acctbal) AS n_acct,
-        |       round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS acctbal
-        |FROM o FULL JOIN c ON o_custkey = c_custkey
-        |GROUP BY ROLLUP(c_mktsegment, o_orderpriority)
-        |ORDER BY gid, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority", orphan = true)},
+         |${customerSql("c_custkey, c_mktsegment")}
+         |${latticeSql("FULL JOIN", measuresSql)}""".stripMargin,
     // semi-over-join cascade: the from-scratch join of both modified
     // tables under the surviving-priority EXISTS
     "mapindex_joinview_semiview_cascade" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment,
-        |         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100
-        |              ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, o_orderpriority,
-        |       round(o_totalprice, 2) AS o_totalprice,
-        |       round(c_acctbal, 2) AS c_acctbal, c_mktsegment
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |WHERE CAST(substr(o_orderpriority, 1, 1) AS INT) % 5 <> 0
-        |ORDER BY o_orderkey""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")},
+         |${customerSql("c_custkey, c_mktsegment")}
+         |SELECT o_orderkey, o_custkey, o_orderpriority,
+         |       round(o_totalprice, 2) AS o_totalprice,
+         |       round(c_acctbal, 2) AS c_acctbal, c_mktsegment
+         |FROM o JOIN c ON o_custkey = c_custkey
+         |WHERE CAST(substr(o_orderpriority, 1, 1) AS INT) % 5 <> 0
+         |ORDER BY o_orderkey""".stripMargin,
     // the depth-2 rollup equals the from-scratch three-way join+group-by
     "mapindex_joinview3_agg" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_nationkey
-        |  FROM customer WHERE c_custkey % 17 <> 0),
-        |n AS (
-        |  SELECT n_nationkey,
-        |         CASE WHEN n_nationkey % 5 = 0 THEN n_name || '_X'
-        |              ELSE n_name END AS n_name
-        |  FROM nation WHERE n_nationkey % 7 <> 0)
-        |SELECT n_name, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |       JOIN n ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey")},
+         |${customerSql("c_custkey, c_nationkey", rebalance = false)},
+         |$nationSql
+         |SELECT n_name, count(*) AS cnt,
+         |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
+         |FROM o JOIN c ON o_custkey = c_custkey
+         |       JOIN n ON c_nationkey = n_nationkey
+         |GROUP BY n_name ORDER BY n_name""".stripMargin,
     // rollup as-of the inter-batch epoch: modified orders ⋈ ORIGINAL
     // customers, grouped from scratch
     "mapindex_joinview_agg_asof" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0)
-        |SELECT o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
-        |FROM o JOIN customer ON o_custkey = c_custkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")}
+         |SELECT o_orderpriority, count(*) AS cnt,
+         |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
+         |FROM o JOIN customer ON o_custkey = c_custkey
+         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
     // the from-scratch THREE-WAY join of all three modified tables
     // as-of IVM: the oracle recomputes each purchase's backward argmax
     // (greatest ts <= purchase ts, ties to the greatest click id) from
     // both modified tables with a correlated subquery
     "mapindex_asofjoinview" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0)
-        |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |  (SELECT b.b_id FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |  (SELECT round(b.b_value, 2) FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |FROM p a ORDER BY a.a_id""".stripMargin,
+      s"""WITH $purchaseClickSql
+         |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
+         |${asOfPickSql(backwardPick(tol = false))}
+         |FROM p a ORDER BY a.a_id""".stripMargin,
     // as-of-over-join cascade: enrichment + per-row argmax, all three
     // relations modified, from scratch
     "mapindex_joinview_asofview_cascade" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0),
-        |d0 AS (
-        |  SELECT user_id AS u_id, count(*) AS u_events
-        |  FROM events GROUP BY 1),
-        |d AS (
-        |  SELECT u_id,
-        |         CASE WHEN u_id % 13 = 0 THEN u_events + 50
-        |              ELSE u_events END AS u_events
-        |  FROM d0 WHERE u_id % 17 <> 0),
-        |e AS (
-        |  SELECT p.a_id, p.a_user, p.a_ts, p.a_value, d.u_events
-        |  FROM p JOIN d ON p.a_user = d.u_id)
-        |SELECT e.a_id, e.a_user, round(e.a_value, 2) AS a_value, e.u_events,
-        |  (SELECT b.b_id FROM c b
-        |   WHERE b.b_user = e.a_user AND b.b_ts <= e.a_ts
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |  (SELECT round(b.b_value, 2) FROM c b
-        |   WHERE b.b_user = e.a_user AND b.b_ts <= e.a_ts
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |FROM e ORDER BY e.a_id""".stripMargin,
+      s"""WITH $purchaseClickSql,
+         |$userDimSql,
+         |e AS (
+         |  SELECT p.a_id, p.a_user, p.a_ts, p.a_value, d.u_events
+         |  FROM p JOIN d ON p.a_user = d.u_id)
+         |SELECT e.a_id, e.a_user, round(e.a_value, 2) AS a_value, e.u_events,
+         |${asOfPickSql(backwardPick(tol = false), p = "e")}
+         |FROM e ORDER BY e.a_id""".stripMargin,
     // the salted right-keyed twin: identical semantics, shard layout
     // invisible — same oracle as the unsalted twin
     "mapindex_asofjoinview_byright_salted" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0),
-        |m AS (
-        |  SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |    (SELECT b.b_id FROM c b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |    (SELECT round(b.b_value, 2) FROM c b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |  FROM p a)
-        |SELECT a_id, a_user, a_value, b_id, b_value
-        |FROM m WHERE b_id IS NOT NULL AND b_id % 7 = 3
-        |ORDER BY a_id""".stripMargin,
+      s"""WITH $purchaseClickSql,
+         |m AS (
+         |${asOfRowsSql("p", "c")}
+         |SELECT a_id, a_user, a_value, b_id, b_value
+         |FROM m WHERE b_id IS NOT NULL AND b_id % 7 = 3
+         |ORDER BY a_id""".stripMargin,
     // net as-of CDC = diff of the post-batch as-of join vs build-time
     "mapindex_asofjoinview_changefeed" ->
-      """WITH p0 AS (
-        |  SELECT event_id AS a_id, user_id AS a_user, ts AS a_ts, value AS a_value
-        |  FROM events WHERE event_type = 'purchase'),
-        |c0 AS (
-        |  SELECT event_id AS b_id, user_id AS b_user, ts AS b_ts, value AS b_value
-        |  FROM events WHERE event_type = 'click'),
-        |before AS (
-        |  SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |    (SELECT b.b_id FROM c0 b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |    (SELECT round(b.b_value, 2) FROM c0 b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |  FROM p0 a),
-        |p AS (
-        |  SELECT a_id, a_user,
-        |         CASE WHEN a_id % 37 = 0 THEN a_ts + INTERVAL 1 HOUR
-        |              ELSE a_ts END AS a_ts,
-        |         CASE WHEN a_id % 37 = 0 THEN a_value + 1000
-        |              ELSE a_value END AS a_value
-        |  FROM p0 WHERE a_id % 41 <> 0),
-        |c AS (
-        |  SELECT b_id, b_user,
-        |         CASE WHEN b_id % 13 = 0 THEN b_ts + INTERVAL 30 MINUTE
-        |              ELSE b_ts END AS b_ts,
-        |         CASE WHEN b_id % 13 = 0 THEN b_value + 100
-        |              ELSE b_value END AS b_value
-        |  FROM c0 WHERE b_id % 17 <> 0),
-        |after AS (
-        |  SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |    (SELECT b.b_id FROM c b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |    (SELECT round(b.b_value, 2) FROM c b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |  FROM p a)
-        |SELECT a_id, a_user, a_value, b_id, b_value, 'delete' AS change_type
-        |FROM (SELECT * FROM before EXCEPT ALL SELECT * FROM after)
-        |UNION ALL
-        |SELECT a_id, a_user, a_value, b_id, b_value, 'insert' AS change_type
-        |FROM (SELECT * FROM after EXCEPT ALL SELECT * FROM before)
-        |ORDER BY change_type, a_id""".stripMargin,
+      s"""WITH p0 AS (
+         |  SELECT event_id AS a_id, user_id AS a_user, ts AS a_ts, value AS a_value
+         |  FROM events WHERE event_type = 'purchase'),
+         |c0 AS (
+         |  SELECT event_id AS b_id, user_id AS b_user, ts AS b_ts, value AS b_value
+         |  FROM events WHERE event_type = 'click'),
+         |before AS (
+         |${asOfRowsSql("p0", "c0")},
+         |p AS (
+         |  SELECT a_id, a_user,
+         |         CASE WHEN a_id % 37 = 0 THEN a_ts + INTERVAL 1 HOUR
+         |              ELSE a_ts END AS a_ts,
+         |         CASE WHEN a_id % 37 = 0 THEN a_value + 1000
+         |              ELSE a_value END AS a_value
+         |  FROM p0 WHERE a_id % 41 <> 0),
+         |c AS (
+         |  SELECT b_id, b_user,
+         |         CASE WHEN b_id % 13 = 0 THEN b_ts + INTERVAL 30 MINUTE
+         |              ELSE b_ts END AS b_ts,
+         |         CASE WHEN b_id % 13 = 0 THEN b_value + 100
+         |              ELSE b_value END AS b_value
+         |  FROM c0 WHERE b_id % 17 <> 0),
+         |after AS (
+         |${asOfRowsSql("p", "c")}
+         |${netDiffSql("a_id, a_user, a_value, b_id, b_value, ", "a_id")}""".stripMargin,
     // forward maintained as-of: least ts >= purchase ts, ties to least id
     "mapindex_asofjoinview_fwd" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0)
-        |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |  (SELECT b.b_id FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts >= a.a_ts
-        |   ORDER BY b.b_ts ASC, b.b_id ASC LIMIT 1) AS b_id,
-        |  (SELECT round(b.b_value, 2) FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts >= a.a_ts
-        |   ORDER BY b.b_ts ASC, b.b_id ASC LIMIT 1) AS b_value
-        |FROM p a ORDER BY a.a_id""".stripMargin,
+      s"""WITH $purchaseClickSql
+         |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
+         |${asOfPickSql(forwardPick)}
+         |FROM p a ORDER BY a.a_id""".stripMargin,
     // tolerance maintained as-of: backward pick bounded to one hour
     "mapindex_asofjoinview_tol" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0)
-        |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |  (SELECT b.b_id FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     AND epoch_us(a.a_ts) - epoch_us(b.b_ts) <= 3600000000
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |  (SELECT round(b.b_value, 2) FROM c b
-        |   WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     AND epoch_us(a.a_ts) - epoch_us(b.b_ts) <= 3600000000
-        |   ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |FROM p a ORDER BY a.a_id""".stripMargin,
+      s"""WITH $purchaseClickSql
+         |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
+         |${asOfPickSql(backwardPick(tol = true))}
+         |FROM p a ORDER BY a.a_id""".stripMargin,
     // multi-aggregate attribution: all five recomputed from scratch
     "mapindex_asofjoinview_agg_multi" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0),
-        |m AS (
-        |  SELECT a.a_value,
-        |    (SELECT b.b_id FROM c b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id
-        |  FROM p a)
-        |SELECT CAST(b_id AS VARCHAR) AS b_id, count(*) AS cnt,
-        |       round(CAST(sum(CAST(a_value AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue,
-        |       round(CAST(min(CAST(a_value AS DECIMAL(18,4))) AS DOUBLE), 2) AS min_rev,
-        |       round(CAST(max(CAST(a_value AS DECIMAL(18,4))) AS DOUBLE), 2) AS max_rev,
-        |       count(DISTINCT CAST(a_value AS DECIMAL(18,4))) AS n_distinct
-        |FROM m GROUP BY 1
-        |ORDER BY b_id NULLS FIRST""".stripMargin,
+      s"""WITH $purchaseClickSql,
+         |m AS (
+         |  SELECT a.a_value,
+         |${asOfPickSql(backwardPick(tol = false), ind = "    ", value = false)}
+         |  FROM p a)
+         |SELECT CAST(b_id AS VARCHAR) AS b_id, count(*) AS cnt,
+         |       round(CAST(sum(CAST(a_value AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue,
+         |       round(CAST(min(CAST(a_value AS DECIMAL(18,4))) AS DOUBLE), 2) AS min_rev,
+         |       round(CAST(max(CAST(a_value AS DECIMAL(18,4))) AS DOUBLE), 2) AS max_rev,
+         |       count(DISTINCT CAST(a_value AS DECIMAL(18,4))) AS n_distinct
+         |FROM m GROUP BY 1
+         |ORDER BY b_id NULLS FIRST""".stripMargin,
     // lattice time travel: epoch 1 = modified orders x ORIGINAL customers
     "mapindex_lattice_asof" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (SELECT c_custkey, c_mktsegment FROM customer)
-        |SELECT CAST(GROUPING(c_mktsegment) + 2 * GROUPING(o_orderpriority)
-        |            AS INTEGER) AS gid,
-        |       c_mktsegment, o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |GROUP BY ROLLUP(c_mktsegment, o_orderpriority)
-        |ORDER BY gid, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")},
+         |c AS (SELECT c_custkey, c_mktsegment FROM customer)
+         |${latticeSql("JOIN", revenueSql)}""".stripMargin,
     // attribution rollup: match per purchase, then group by the matched
     // click (NULL = unattributed), both recomputed from scratch
     "mapindex_asofjoinview_agg" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0),
-        |m AS (
-        |  SELECT a.a_value,
-        |    (SELECT b.b_id FROM c b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id
-        |  FROM p a)
-        |SELECT CAST(b_id AS VARCHAR) AS b_id, count(*) AS cnt,
-        |       round(CAST(sum(CAST(a_value AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
-        |FROM m GROUP BY 1
-        |ORDER BY b_id NULLS FIRST""".stripMargin,
+      s"""WITH $purchaseClickSql,
+         |m AS (
+         |  SELECT a.a_value,
+         |${asOfPickSql(backwardPick(tol = false), ind = "    ", value = false)}
+         |  FROM p a)
+         |SELECT CAST(b_id AS VARCHAR) AS b_id, count(*) AS cnt,
+         |       round(CAST(sum(CAST(a_value AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
+         |FROM m GROUP BY 1
+         |ORDER BY b_id NULLS FIRST""".stripMargin,
     // nearest as-of within 1 h: bounded argmin |dt| per purchase,
     // distance ties backward (then the side's own pk rule) — epoch_us
     // arithmetic matches the engine's microsecond read granularity
     "mapindex_asofjoinview_nearest" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0)
-        |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |  (SELECT b.b_id FROM c b
-        |   WHERE b.b_user = a.a_user
-        |     AND abs(epoch_us(b.b_ts) - epoch_us(a.a_ts)) <= 3600000000
-        |   ORDER BY abs(epoch_us(b.b_ts) - epoch_us(a.a_ts)) ASC,
-        |            (b.b_ts <= a.a_ts) DESC,
-        |            CASE WHEN b.b_ts <= a.a_ts THEN -b.b_id ELSE b.b_id END ASC
-        |   LIMIT 1) AS b_id,
-        |  (SELECT round(b.b_value, 2) FROM c b
-        |   WHERE b.b_user = a.a_user
-        |     AND abs(epoch_us(b.b_ts) - epoch_us(a.a_ts)) <= 3600000000
-        |   ORDER BY abs(epoch_us(b.b_ts) - epoch_us(a.a_ts)) ASC,
-        |            (b.b_ts <= a.a_ts) DESC,
-        |            CASE WHEN b.b_ts <= a.a_ts THEN -b.b_id ELSE b.b_id END ASC
-        |   LIMIT 1) AS b_value
-        |FROM p a ORDER BY a.a_id""".stripMargin,
+      s"""WITH $purchaseClickSql
+         |SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
+         |${asOfPickSql(nearestPick)}
+         |FROM p a ORDER BY a.a_id""".stripMargin,
     // composite-key join: the from-scratch TWO-column-ON join of the
     // modified orders against the modified derived dim
     "mapindex_joinview_composite" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |d0 AS (
-        |  SELECT o_custkey AS d_custkey, o_orderstatus AS d_status,
-        |         count(*) AS d_cnt
-        |  FROM orders GROUP BY 1, 2),
-        |d AS (
-        |  SELECT d_custkey, d_status,
-        |         CASE WHEN d_custkey % 13 = 0 THEN d_cnt + 5 ELSE d_cnt END AS d_cnt
-        |  FROM d0 WHERE d_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, o_orderstatus,
-        |       round(o_totalprice, 2) AS o_totalprice, d_cnt
-        |FROM o JOIN d ON o_custkey = d_custkey AND o_orderstatus = d_status
-        |ORDER BY o_orderkey""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderstatus")},
+         |d0 AS (
+         |  SELECT o_custkey AS d_custkey, o_orderstatus AS d_status,
+         |         count(*) AS d_cnt
+         |  FROM orders GROUP BY 1, 2),
+         |d AS (
+         |  SELECT d_custkey, d_status,
+         |         CASE WHEN d_custkey % 13 = 0 THEN d_cnt + 5 ELSE d_cnt END AS d_cnt
+         |  FROM d0 WHERE d_custkey % 17 <> 0)
+         |SELECT o_orderkey, o_custkey, o_orderstatus,
+         |       round(o_totalprice, 2) AS o_totalprice, d_cnt
+         |FROM o JOIN d ON o_custkey = d_custkey AND o_orderstatus = d_status
+         |ORDER BY o_orderkey""".stripMargin,
     // the multi-aggregate lattice: ROLLUP with min/max/count(DISTINCT)
     // recomputed from scratch over both modified tables, on the same
     // DECIMAL(18,4) spelling the refcount state keys on
     "mapindex_lattice_multi" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT CAST(GROUPING(c_mktsegment) + 2 * GROUPING(o_orderpriority)
-        |            AS INTEGER) AS gid,
-        |       c_mktsegment, o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue,
-        |       round(CAST(min(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS min_price,
-        |       round(CAST(max(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS max_price,
-        |       count(DISTINCT CAST(o_totalprice AS DECIMAL(18,4))) AS n_distinct
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |GROUP BY ROLLUP(c_mktsegment, o_orderpriority)
-        |ORDER BY gid, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")},
+         |${customerSql("c_custkey, c_mktsegment", rebalance = false)}
+         |${latticeSql("JOIN", s"$revenueSql,\n$priceSpreadSql")}""".stripMargin,
     // rollup over the anti view: NOT EXISTS + group-by from scratch
     "mapindex_antiview_agg" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue
-        |FROM o WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")},
+         |$customerKeysSql
+         |SELECT o_orderpriority, count(*) AS cnt,
+         |$revenueSql
+         |FROM o WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
+         |GROUP BY o_orderpriority
+         |ORDER BY o_orderpriority""".stripMargin,
     // generic cascade: EXISTS membership + the priority-dim join, all
     // three relations modified, from scratch
     "mapindex_semiview_cascade" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0),
-        |d0 AS (
-        |  SELECT o_orderpriority AS p_name, count(*) AS p_cnt
-        |  FROM orders GROUP BY 1),
-        |d AS (
-        |  SELECT p_name,
-        |         CASE WHEN CAST(substr(p_name, 1, 1) AS INT) % 2 = 1
-        |              THEN p_cnt + 7 ELSE p_cnt END AS p_cnt
-        |  FROM d0 WHERE CAST(substr(p_name, 1, 1) AS INT) % 5 <> 0)
-        |SELECT o_orderkey, o_custkey, o_orderpriority,
-        |       round(o_totalprice, 2) AS o_totalprice, p_cnt
-        |FROM o JOIN d ON o_orderpriority = p_name
-        |WHERE EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")},
+         |$customerKeysSql,
+         |d0 AS (
+         |  SELECT o_orderpriority AS p_name, count(*) AS p_cnt
+         |  FROM orders GROUP BY 1),
+         |d AS (
+         |  SELECT p_name,
+         |         CASE WHEN CAST(substr(p_name, 1, 1) AS INT) % 2 = 1
+         |              THEN p_cnt + 7 ELSE p_cnt END AS p_cnt
+         |  FROM d0 WHERE CAST(substr(p_name, 1, 1) AS INT) % 5 <> 0)
+         |SELECT o_orderkey, o_custkey, o_orderpriority,
+         |       round(o_totalprice, 2) AS o_totalprice, p_cnt
+         |FROM o JOIN d ON o_orderpriority = p_name
+         |WHERE EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
+         |ORDER BY o_orderkey""".stripMargin,
     // as-of cascade: per-purchase argmax + user-dim join, all three
     // relations modified, from scratch
     "mapindex_asofjoinview_cascade" ->
-      """WITH p AS (
-        |  SELECT event_id AS a_id, user_id AS a_user,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS a_ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS a_value
-        |  FROM events WHERE event_type = 'purchase' AND event_id % 41 <> 0),
-        |c AS (
-        |  SELECT event_id AS b_id, user_id AS b_user,
-        |         CASE WHEN event_id % 13 = 0 THEN ts + INTERVAL 30 MINUTE
-        |              ELSE ts END AS b_ts,
-        |         CASE WHEN event_id % 13 = 0 THEN value + 100
-        |              ELSE value END AS b_value
-        |  FROM events WHERE event_type = 'click' AND event_id % 17 <> 0),
-        |m AS (
-        |  SELECT a.a_id, a.a_user, round(a.a_value, 2) AS a_value,
-        |    (SELECT b.b_id FROM c b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_id,
-        |    (SELECT round(b.b_value, 2) FROM c b
-        |     WHERE b.b_user = a.a_user AND b.b_ts <= a.a_ts
-        |     ORDER BY b.b_ts DESC, b.b_id DESC LIMIT 1) AS b_value
-        |  FROM p a),
-        |d0 AS (
-        |  SELECT user_id AS u_id, count(*) AS u_events
-        |  FROM events GROUP BY 1),
-        |d AS (
-        |  SELECT u_id,
-        |         CASE WHEN u_id % 13 = 0 THEN u_events + 50
-        |              ELSE u_events END AS u_events
-        |  FROM d0 WHERE u_id % 17 <> 0)
-        |SELECT m.a_id, m.a_user, m.a_value, m.b_id, m.b_value, d.u_events
-        |FROM m JOIN d ON m.a_user = d.u_id
-        |ORDER BY m.a_id""".stripMargin,
+      s"""WITH $purchaseClickSql,
+         |m AS (
+         |${asOfRowsSql("p", "c")},
+         |$userDimSql
+         |SELECT m.a_id, m.a_user, m.a_value, m.b_id, m.b_value, d.u_events
+         |FROM m JOIN d ON m.a_user = d.u_id
+         |ORDER BY m.a_id""".stripMargin,
     // rollup over the semi view: EXISTS filter + group-by from scratch
     "mapindex_semiview_agg" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue
-        |FROM o WHERE EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")},
+         |$customerKeysSql
+         |SELECT o_orderpriority, count(*) AS cnt,
+         |$revenueSql
+         |FROM o WHERE EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
+         |GROUP BY o_orderpriority
+         |ORDER BY o_orderpriority""".stripMargin,
     // lattice over the full-outer view: ROLLUP of the from-scratch FULL
     // JOIN (genuine null groups from pads, sum-invisible right-pads)
     "mapindex_lattice_full" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0 AND o_custkey % 19 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT CAST(GROUPING(c_mktsegment) + 2 * GROUPING(o_orderpriority)
-        |            AS INTEGER) AS gid,
-        |       c_mktsegment, o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue
-        |FROM o FULL JOIN c ON o_custkey = c_custkey
-        |GROUP BY ROLLUP(c_mktsegment, o_orderpriority)
-        |ORDER BY gid, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority", orphan = true)},
+         |${customerSql("c_custkey, c_mktsegment", rebalance = false)}
+         |${latticeSql("FULL JOIN", revenueSql)}""".stripMargin,
     // streamed lattice converges to the batch-built lattice's oracle
     "mapindex_lattice_streamed" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT CAST(GROUPING(c_mktsegment) + 2 * GROUPING(o_orderpriority)
-        |            AS INTEGER) AS gid,
-        |       c_mktsegment, o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |GROUP BY ROLLUP(c_mktsegment, o_orderpriority)
-        |ORDER BY gid, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")},
+         |${customerSql("c_custkey, c_mktsegment", rebalance = false)}
+         |${latticeSql("JOIN", revenueSql)}""".stripMargin,
     // semi/anti IVM: from-scratch EXISTS / NOT EXISTS on modified tables
     "mapindex_semiview" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
-        |FROM o WHERE EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey")},
+         |$customerKeysSql
+         |SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
+         |FROM o WHERE EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
+         |ORDER BY o_orderkey""".stripMargin,
     "mapindex_antiview" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (SELECT c_custkey FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
-        |FROM o WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey")},
+         |$customerKeysSql
+         |SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
+         |FROM o WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
+         |ORDER BY o_orderkey""".stripMargin,
     "mapindex_joinview_cube_lattice" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment
-        |  FROM customer WHERE c_custkey % 17 <> 0)
-        |SELECT CAST(GROUPING(c_mktsegment) + 2 * GROUPING(o_orderpriority)
-        |            AS INTEGER) AS gid,
-        |       c_mktsegment, o_orderpriority, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |         AS revenue
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |GROUP BY CUBE(c_mktsegment, o_orderpriority)
-        |ORDER BY gid, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey, o_orderpriority")},
+         |${customerSql("c_custkey, c_mktsegment", rebalance = false)}
+         |${latticeSql("JOIN", revenueSql, grouping = "CUBE")}""".stripMargin,
     "mapindex_joinview3" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_name, c_nationkey
-        |  FROM customer WHERE c_custkey % 17 <> 0),
-        |n AS (
-        |  SELECT n_nationkey,
-        |         CASE WHEN n_nationkey % 5 = 0 THEN n_name || '_X'
-        |              ELSE n_name END AS n_name
-        |  FROM nation WHERE n_nationkey % 7 <> 0)
-        |SELECT o_orderkey, o_custkey, c_name, n_name,
-        |       round(o_totalprice, 2) AS o_totalprice
-        |FROM o JOIN c ON o_custkey = c_custkey
-        |       JOIN n ON c_nationkey = n_nationkey
-        |ORDER BY o_orderkey""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey")},
+         |${customerSql("c_custkey, c_name, c_nationkey", rebalance = false)},
+         |$nationSql
+         |SELECT o_orderkey, o_custkey, c_name, n_name,
+         |       round(o_totalprice, 2) AS o_totalprice
+         |FROM o JOIN c ON o_custkey = c_custkey
+         |       JOIN n ON c_nationkey = n_nationkey
+         |ORDER BY o_orderkey""".stripMargin,
     // the inter-refresh epoch = modified orders ⋈ original customers
     "mapindex_joinview_asof" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0)
-        |SELECT o_orderkey, o_custkey, c_name,
-        |       round(o_totalprice, 2) AS o_totalprice,
-        |       round(c_acctbal, 2) AS c_acctbal
-        |FROM o JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
+      s"""WITH ${ordersSql("o_orderkey, o_custkey")}
+         |SELECT o_orderkey, o_custkey, c_name,
+         |       round(o_totalprice, 2) AS o_totalprice,
+         |       round(c_acctbal, 2) AS c_acctbal
+         |FROM o JOIN customer ON o_custkey = c_custkey
+         |ORDER BY o_orderkey""".stripMargin,
     // windowed maintained aggregate: from-scratch per-day GROUP BY over the
     // MODIFIED events table (the %37 +1 h shift moves events across day
     // boundaries — a slice that failed to retract or receive them mismatches)
@@ -4219,52 +3925,34 @@ object MapIndexQueries {
     // the streamed twin converges to the same state — same oracle
     "mapindex_windowed_agg_streamed" -> windowedAggOracle,
     "mapindex_windowed_agg_window" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS value
-        |  FROM events WHERE event_id % 41 <> 0),
-        |s AS (SELECT CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS sl,
-        |             event_type, value FROM e),
-        |m AS (SELECT max(sl) AS mx FROM s)
-        |SELECT event_type AS emit_key, count(*) AS cnt,
-        |       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-        |       round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
-        |FROM s, m WHERE sl >= mx - 6*86400 AND sl < mx + 86400
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      s"""WITH ${eventsSql("event_type", "value")},
+         |s AS (SELECT CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS sl,
+         |             event_type, value FROM e),
+         |m AS (SELECT max(sl) AS mx FROM s)
+         |SELECT event_type AS emit_key, count(*) AS cnt,
+         |       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
+         |       round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
+         |FROM s, m WHERE sl >= mx - 6*86400 AND sl < mx + 86400
+         |GROUP BY 1 ORDER BY 1""".stripMargin,
     "mapindex_windowed_agg_evict" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS value
-        |  FROM events WHERE event_id % 41 <> 0),
-        |s AS (SELECT CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS sl,
-        |             event_type, value FROM e),
-        |b AS (SELECT min(sl) + 3*86400 AS bd FROM s)
-        |SELECT sl AS slice_start, event_type AS emit_key, count(*) AS cnt,
-        |       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-        |       round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
-        |FROM s, b WHERE sl >= bd
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+      s"""WITH ${eventsSql("event_type", "value")},
+         |s AS (SELECT CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS sl,
+         |             event_type, value FROM e),
+         |b AS (SELECT min(sl) + 3*86400 AS bd FROM s)
+         |SELECT sl AS slice_start, event_type AS emit_key, count(*) AS cnt,
+         |       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
+         |       round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
+         |FROM s, b WHERE sl >= bd
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     // one group's per-day series off the modified table
     "mapindex_windowed_history" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS value
-        |  FROM events WHERE event_id % 41 <> 0)
-        |SELECT CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS slice_start,
-        |       count(*) AS cnt,
-        |       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-        |       round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
-        |FROM e WHERE event_type = 'purchase'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      s"""WITH ${eventsSql("event_type", "value")}
+         |SELECT CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS slice_start,
+         |       count(*) AS cnt,
+         |       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
+         |       round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
+         |FROM e WHERE event_type = 'purchase'
+         |GROUP BY 1 ORDER BY 1""".stripMargin,
     // slice time travel: the oldest modified-table day recomputed from
     // the ORIGINAL table (no CASE, no delete filter) — what v0 held
     "mapindex_windowed_agg_sliceasof" ->
@@ -4310,60 +3998,37 @@ object MapIndexQueries {
     // windowed-over-join: from-scratch join of both modified tables,
     // grouped per 90-day slice and segment
     "mapindex_windowed_joinfeed" ->
-      """WITH o AS (
-        |  SELECT o_custkey, o_orderdate,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |c AS (
-        |  SELECT c_custkey, c_mktsegment
-        |  FROM customer WHERE c_custkey % 17 <> 0),
-        |j AS (
-        |  SELECT (CAST(epoch(o_orderdate) AS BIGINT) // 7776000) * 7776000 AS slice_start,
-        |         c_mktsegment AS emit_key, o_totalprice
-        |  FROM o JOIN c ON o_custkey = c_custkey)
-        |SELECT slice_start, emit_key, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value
-        |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+      s"""WITH ${ordersSql("o_custkey, o_orderdate")},
+         |${customerSql("c_custkey, c_mktsegment", rebalance = false)},
+         |j AS (
+         |  SELECT (CAST(epoch(o_orderdate) AS BIGINT) // 7776000) * 7776000 AS slice_start,
+         |         c_mktsegment AS emit_key, o_totalprice
+         |  FROM o JOIN c ON o_custkey = c_custkey)
+         |SELECT slice_start, emit_key, count(*) AS cnt,
+         |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value
+         |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     // windowed distinct: DuckDB's exact COUNT(DISTINCT) over the trailing
     // window of the modified table; the KMV serve is in its exact regime
     // at k=1024, so the estimate and the estimated=false flag both hash
-    "mapindex_windowed_distinct" ->
-      """WITH e AS (
-        |  SELECT event_type AS emit_key,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS ts,
-        |         user_id
-        |  FROM events WHERE event_id % 41 <> 0),
-        |s AS (SELECT emit_key, user_id,
-        |             CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS sl FROM e),
-        |m AS (SELECT max(sl) AS mx FROM s)
-        |SELECT emit_key, count(DISTINCT user_id) AS distinct_users,
-        |       false AS estimated
-        |FROM s, m WHERE sl >= mx - 6*86400
-        |GROUP BY emit_key ORDER BY emit_key""".stripMargin,
+    "mapindex_windowed_distinct" -> windowedDistinctSql("distinct_users", "false AS estimated"),
     // orders windowed rollup: two-tier recompute on the 90d/360d grids
     "mapindex_windowed_orders" ->
-      """WITH o AS (
-        |  SELECT o_orderpriority, o_orderdate,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |f AS (SELECT o_orderpriority, o_totalprice,
-        |             (CAST(floor(epoch(o_orderdate)/86400) AS BIGINT)*86400
-        |               // 7776000) * 7776000 AS fsl FROM o),
-        |b AS (SELECT ((min(fsl) + 1600*86400) // 31104000) * 31104000 AS bd FROM f),
-        |s AS (SELECT CASE WHEN fsl >= bd THEN fsl
-        |                  ELSE (fsl // 31104000) * 31104000 END AS slice_start,
-        |             CAST(CASE WHEN fsl >= bd THEN 7776000
-        |                       ELSE 31104000 END AS BIGINT) AS slice_w,
-        |             o_orderpriority, o_totalprice
-        |      FROM f, b)
-        |SELECT slice_start, slice_w, o_orderpriority AS emit_key, count(*) AS cnt,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-        |       round(min(o_totalprice), 2) AS min_value,
-        |       round(max(o_totalprice), 2) AS max_value
-        |FROM s GROUP BY 1, 2, 3 ORDER BY slice_start, emit_key""".stripMargin,
+      s"""WITH ${ordersSql("o_orderpriority, o_orderdate")},
+         |f AS (SELECT o_orderpriority, o_totalprice,
+         |             (CAST(floor(epoch(o_orderdate)/86400) AS BIGINT)*86400
+         |               // 7776000) * 7776000 AS fsl FROM o),
+         |b AS (SELECT ((min(fsl) + 1600*86400) // 31104000) * 31104000 AS bd FROM f),
+         |s AS (SELECT CASE WHEN fsl >= bd THEN fsl
+         |                  ELSE (fsl // 31104000) * 31104000 END AS slice_start,
+         |             CAST(CASE WHEN fsl >= bd THEN 7776000
+         |                       ELSE 31104000 END AS BIGINT) AS slice_w,
+         |             o_orderpriority, o_totalprice
+         |      FROM f, b)
+         |SELECT slice_start, slice_w, o_orderpriority AS emit_key, count(*) AS cnt,
+         |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
+         |       round(min(o_totalprice), 2) AS min_value,
+         |       round(max(o_totalprice), 2) AS max_value
+         |FROM s GROUP BY 1, 2, 3 ORDER BY slice_start, emit_key""".stripMargin,
     // windowed frequent buckets: the exact frequent set over the
     // trailing window of the modified table, threshold total/8
     "mapindex_windowed_topfreq" ->
@@ -4384,66 +4049,33 @@ object MapIndexQueries {
         |FROM c JOIN t USING (emit_key)
         |WHERE c.cnt > t.total/8.0
         |ORDER BY c.emit_key, c.bucket""".stripMargin,
-    "mapindex_windowed_distinct_est" ->
-      """WITH e AS (
-        |  SELECT event_type AS emit_key,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS ts,
-        |         user_id
-        |  FROM events WHERE event_id % 41 <> 0),
-        |s AS (SELECT emit_key, user_id,
-        |             CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS sl FROM e),
-        |m AS (SELECT max(sl) AS mx FROM s)
-        |SELECT emit_key, count(DISTINCT user_id) AS exact_distinct,
-        |       true AS within_bound
-        |FROM s, m WHERE sl >= mx - 6*86400
-        |GROUP BY emit_key ORDER BY emit_key""".stripMargin,
+    "mapindex_windowed_distinct_est" -> windowedDistinctSql("exact_distinct", "true AS within_bound"),
     // rollup aging: the two-tier recompute — fine slices at/above the
     // snapped boundary, 7-day coarse slices below it, width in the hash
     "mapindex_windowed_agg_coarse" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         CASE WHEN event_id % 37 = 0 THEN ts + INTERVAL 1 HOUR
-        |              ELSE ts END AS ts,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS value
-        |  FROM events WHERE event_id % 41 <> 0),
-        |f AS (SELECT event_type, value,
-        |             CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS fsl FROM e),
-        |b AS (SELECT ((min(fsl) + 21*86400) // 604800) * 604800 AS bd FROM f),
-        |s AS (SELECT CASE WHEN fsl >= bd THEN fsl
-        |                  ELSE (fsl // 604800) * 604800 END AS slice_start,
-        |             CAST(CASE WHEN fsl >= bd THEN 86400
-        |                       ELSE 604800 END AS BIGINT) AS slice_w,
-        |             event_type, value
-        |      FROM f, b)
-        |SELECT slice_start, slice_w, event_type AS emit_key, count(*) AS cnt,
-        |       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-        |       round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
-        |FROM s GROUP BY 1, 2, 3 ORDER BY slice_start, emit_key""".stripMargin,
+      s"""WITH ${eventsSql("event_type", "value")},
+         |f AS (SELECT event_type, value,
+         |             CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS fsl FROM e),
+         |b AS (SELECT ((min(fsl) + 21*86400) // 604800) * 604800 AS bd FROM f),
+         |s AS (SELECT CASE WHEN fsl >= bd THEN fsl
+         |                  ELSE (fsl // 604800) * 604800 END AS slice_start,
+         |             CAST(CASE WHEN fsl >= bd THEN 86400
+         |                       ELSE 604800 END AS BIGINT) AS slice_w,
+         |             event_type, value
+         |      FROM f, b)
+         |SELECT slice_start, slice_w, event_type AS emit_key, count(*) AS cnt,
+         |       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
+         |       round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
+         |FROM s GROUP BY 1, 2, 3 ORDER BY slice_start, emit_key""".stripMargin,
     // coarse sketch serve: anchors over the WHOLE modified corpus per
     // type (both tiers merged into one sketch per group)
     "mapindex_windowed_sketch_coarse" ->
-      """WITH src AS (
-        |  SELECT event_type AS flag,
-        |         CASE WHEN event_id % 37 = 0 THEN value + 1000
-        |              ELSE value END AS v
-        |  FROM events WHERE event_id % 41 <> 0),
-        |vcounts AS (
-        |  SELECT flag, v, count(*) AS cnt FROM src GROUP BY flag, v),
-        |vcum AS (
-        |  SELECT flag, v,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY v) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n2
-        |  FROM vcounts),
-        |exact AS (
-        |  SELECT flag, max(n2) AS n,
-        |         min(CASE WHEN cum >= ceil(n2 / 2.0) THEN v END) AS x50,
-        |         min(CASE WHEN cum >= ceil(n2 * 19 / 20.0) THEN v END) AS x95
-        |  FROM vcum GROUP BY flag)
-        |SELECT flag, n, round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
-        |       true AS p50_within_rank, true AS p95_within_rank
-        |FROM exact ORDER BY flag""".stripMargin,
+      s"""WITH src AS (
+         |  SELECT event_type AS flag,
+         |         CASE WHEN event_id % 37 = 0 THEN value + 1000
+         |              ELSE value END AS v
+         |  FROM events WHERE event_id % 41 <> 0),
+         |$exactAnchorsSql""".stripMargin,
     // windowed sketch: exact anchors over the trailing-7-day window of
     // the modified events, per type; rank-bound booleans literal true —
     // shared by the batch-built and streamed twins
@@ -4480,13 +4112,13 @@ object MapIndexQueries {
     // the refreshed range-layout view: the same modified-source recompute
     // the flat aggview and hash-bucketed reads are graded against
     "mapindex_rangebucketed_group" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS emit_key,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0)
-        |SELECT emit_key, round(sum(v), 2) AS sum_value, count(*) AS cnt
-        |FROM src GROUP BY 1 ORDER BY emit_key""".stripMargin,
-    // the feed across the compaction epoch equals the refresh delta alone
+      s"""WITH ${lineitemSql("emit_key", "l_extendedprice AS v")}
+         |SELECT emit_key, round(sum(v), 2) AS sum_value, count(*) AS cnt
+         |FROM src GROUP BY 1 ORDER BY emit_key""".stripMargin,
+    // the feed across the compaction epoch equals the refresh delta
+    // alone, recomputed from scratch: deletes = every old emission of a
+    // changed source key (re-flagged or tombstoned), inserts = the
+    // re-flagged keys' new emissions
     "mapindex_compacted_changefeed" ->
       """WITH del AS (
         |  SELECT l_returnflag AS emit_key, l_extendedprice AS v FROM lineitem
@@ -4503,12 +4135,9 @@ object MapIndexQueries {
         |FROM ins GROUP BY 2
         |ORDER BY change_type, emit_key""".stripMargin,
     "mapindex_split_get" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS emit_key,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0)
-        |SELECT v AS emit_value FROM src WHERE emit_key = 'R'
-        |ORDER BY emit_value""".stripMargin,
+      s"""WITH ${lineitemSql("emit_key", "l_extendedprice AS v")}
+         |SELECT v AS emit_value FROM src WHERE emit_key = 'R'
+         |ORDER BY emit_value""".stripMargin,
     // pre-refresh aggregate state recomputed from the unmodified source
     "mapindex_bucketed_agg_asof" ->
       """SELECT l_returnflag AS emit_key, count(*) AS cnt,
@@ -4524,195 +4153,112 @@ object MapIndexQueries {
     // same re-flag/%97 upsert and %89 tombstone batch applied as plain SQL
     // the bucketed layout must land the identical distinct counts
     "mapindex_bucketed_distinct_view" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0)
-        |SELECT flag, count(DISTINCT v) AS n_distinct
-        |FROM src GROUP BY flag ORDER BY flag""".stripMargin,
+      s"""WITH ${lineitemSql("flag", "l_extendedprice AS v")}
+         |SELECT flag, count(DISTINCT v) AS n_distinct
+         |FROM src GROUP BY flag ORDER BY flag""".stripMargin,
     // maintained p50/p95: the identical discrete-quantile definition
     // (smallest value whose cumulative count reaches ceil(p·n)),
     // recomputed from the modified corpus from scratch — window sums
     // cast to BIGINT (DuckDB sums BIGINT into HUGEINT)
     "mapindex_percentile_view" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
-        |         CAST(l_quantity AS INTEGER) AS qty
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0),
-        |counts AS (
-        |  SELECT flag, qty, count(*) AS cnt FROM src GROUP BY flag, qty),
-        |cum AS (
-        |  SELECT flag, qty,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY qty) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n
-        |  FROM counts)
-        |SELECT flag,
-        |       min(CASE WHEN cum >= ceil(n / 2.0) THEN qty END) AS p50,
-        |       min(CASE WHEN cum >= ceil(n * 19 / 20.0) THEN qty END) AS p95,
-        |       max(n) AS n
-        |FROM cum GROUP BY flag ORDER BY flag""".stripMargin,
+      s"""WITH ${lineitemSql("flag", "CAST(l_quantity AS INTEGER) AS qty")},
+         |counts AS (
+         |  SELECT flag, qty, count(*) AS cnt FROM src GROUP BY flag, qty),
+         |cum AS (
+         |  SELECT flag, qty,
+         |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY qty) AS BIGINT) AS cum,
+         |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n
+         |  FROM counts)
+         |SELECT flag,
+         |       min(CASE WHEN cum >= ceil(n / 2.0) THEN qty END) AS p50,
+         |       min(CASE WHEN cum >= ceil(n * 19 / 20.0) THEN qty END) AS p95,
+         |       max(n) AS n
+         |FROM cum GROUP BY flag ORDER BY flag""".stripMargin,
     // grid estimates, exact anchors and the grid bound all recomputed
     // from the modified corpus; window sums cast BIGINT (DuckDB HUGEINT)
     "mapindex_percentile_cont" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0),
-        |bcounts AS (
-        |  SELECT flag, CAST(floor(v / 100) AS BIGINT) AS b, count(*) AS cnt
-        |  FROM src GROUP BY flag, b),
-        |bcum AS (
-        |  SELECT flag, b,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY b) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n
-        |  FROM bcounts),
-        |est AS (
-        |  SELECT flag, max(n) AS n,
-        |         CAST(min(CASE WHEN cum >= ceil(n / 2.0) THEN b END) * 100 AS DOUBLE) AS p50_lo,
-        |         CAST(min(CASE WHEN cum >= ceil(n * 19 / 20.0) THEN b END) * 100 AS DOUBLE) AS p95_lo
-        |  FROM bcum GROUP BY flag),
-        |vcounts AS (
-        |  SELECT flag, v, count(*) AS cnt FROM src GROUP BY flag, v),
-        |vcum AS (
-        |  SELECT flag, v,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY v) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n2
-        |  FROM vcounts),
-        |exact AS (
-        |  SELECT flag,
-        |         min(CASE WHEN cum >= ceil(n2 / 2.0) THEN v END) AS x50,
-        |         min(CASE WHEN cum >= ceil(n2 * 19 / 20.0) THEN v END) AS x95
-        |  FROM vcum GROUP BY flag)
-        |SELECT est.flag, n, p50_lo, p95_lo,
-        |       round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
-        |       (p50_lo <= x50 AND x50 < p50_lo + 100.0) AS p50_within_grid,
-        |       (p95_lo <= x95 AND x95 < p95_lo + 100.0) AS p95_within_grid
-        |FROM est JOIN exact ON est.flag = exact.flag
-        |ORDER BY est.flag""".stripMargin,
-    // sketch quantiles: exact anchors + exact n recomputed; the rank
-    // bound booleans are literal TRUE — Spark's arm computing them from
-    // the sketch state must agree or the hash mismatches
+      s"""WITH ${lineitemSql("flag", "l_extendedprice AS v")},
+         |bcounts AS (
+         |  SELECT flag, CAST(floor(v / 100) AS BIGINT) AS b, count(*) AS cnt
+         |  FROM src GROUP BY flag, b),
+         |bcum AS (
+         |  SELECT flag, b,
+         |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY b) AS BIGINT) AS cum,
+         |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n
+         |  FROM bcounts),
+         |est AS (
+         |  SELECT flag, max(n) AS n,
+         |         CAST(min(CASE WHEN cum >= ceil(n / 2.0) THEN b END) * 100 AS DOUBLE) AS p50_lo,
+         |         CAST(min(CASE WHEN cum >= ceil(n * 19 / 20.0) THEN b END) * 100 AS DOUBLE) AS p95_lo
+         |  FROM bcum GROUP BY flag),
+         |vcounts AS (
+         |  SELECT flag, v, count(*) AS cnt FROM src GROUP BY flag, v),
+         |vcum AS (
+         |  SELECT flag, v,
+         |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY v) AS BIGINT) AS cum,
+         |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n2
+         |  FROM vcounts),
+         |exact AS (
+         |  SELECT flag,
+         |         min(CASE WHEN cum >= ceil(n2 / 2.0) THEN v END) AS x50,
+         |         min(CASE WHEN cum >= ceil(n2 * 19 / 20.0) THEN v END) AS x95
+         |  FROM vcum GROUP BY flag)
+         |SELECT est.flag, n, p50_lo, p95_lo,
+         |       round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
+         |       (p50_lo <= x50 AND x50 < p50_lo + 100.0) AS p50_within_grid,
+         |       (p95_lo <= x95 AND x95 < p95_lo + 100.0) AS p95_within_grid
+         |FROM est JOIN exact ON est.flag = exact.flag
+         |ORDER BY est.flag""".stripMargin,
+    // sketch quantiles: exact anchors + exact n recomputed over the
+    // modified corpus
     "mapindex_percentile_sketch" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0),
-        |vcounts AS (
-        |  SELECT flag, v, count(*) AS cnt FROM src GROUP BY flag, v),
-        |vcum AS (
-        |  SELECT flag, v,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY v) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n2
-        |  FROM vcounts),
-        |exact AS (
-        |  SELECT flag, max(n2) AS n,
-        |         min(CASE WHEN cum >= ceil(n2 / 2.0) THEN v END) AS x50,
-        |         min(CASE WHEN cum >= ceil(n2 * 19 / 20.0) THEN v END) AS x95
-        |  FROM vcum GROUP BY flag)
-        |SELECT flag, n, round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
-        |       true AS p50_within_rank, true AS p95_within_rank
-        |FROM exact ORDER BY flag""".stripMargin,
+      s"""WITH ${lineitemSql("flag", "l_extendedprice AS v")},
+         |$exactAnchorsSql""".stripMargin,
     // sketch-over-join: anchors per surviving priority over the
     // modified orders, plus the same rows re-labeled 'ALL'
     "mapindex_joinview_sketch" ->
-      """WITH o AS (
-        |  SELECT o_orderpriority,
-        |         CASE WHEN o_orderkey % 37 = 0 THEN o_totalprice + 1000
-        |              ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 41 <> 0),
-        |base AS (
-        |  SELECT o_orderpriority AS flag, o_totalprice AS v FROM o
-        |  WHERE CAST(substr(o_orderpriority, 1, 1) AS INT) % 5 <> 0),
-        |src AS (
-        |  SELECT flag, v FROM base
-        |  UNION ALL SELECT 'ALL' AS flag, v FROM base),
-        |vcounts AS (
-        |  SELECT flag, v, count(*) AS cnt FROM src GROUP BY flag, v),
-        |vcum AS (
-        |  SELECT flag, v,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY v) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n2
-        |  FROM vcounts),
-        |exact AS (
-        |  SELECT flag, max(n2) AS n,
-        |         min(CASE WHEN cum >= ceil(n2 / 2.0) THEN v END) AS x50,
-        |         min(CASE WHEN cum >= ceil(n2 * 19 / 20.0) THEN v END) AS x95
-        |  FROM vcum GROUP BY flag)
-        |SELECT flag, n, round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
-        |       true AS p50_within_rank, true AS p95_within_rank
-        |FROM exact ORDER BY flag""".stripMargin,
+      s"""WITH ${ordersSql("o_orderpriority")},
+         |base AS (
+         |  SELECT o_orderpriority AS flag, o_totalprice AS v FROM o
+         |  WHERE CAST(substr(o_orderpriority, 1, 1) AS INT) % 5 <> 0),
+         |src AS (
+         |  SELECT flag, v FROM base
+         |  UNION ALL SELECT 'ALL' AS flag, v FROM base),
+         |$exactAnchorsSql""".stripMargin,
     // sketch rollup: per-flag anchors plus the same corpus re-labeled
-    // 'ALL' — both lattice levels' anchors recomputed exactly, the
-    // rank-bound booleans emitted as literal true
+    // 'ALL' — both lattice levels' anchors recomputed exactly
     "mapindex_percentile_sketch_rollup" ->
-      """WITH base AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0),
-        |src AS (
-        |  SELECT flag, v FROM base
-        |  UNION ALL SELECT 'ALL' AS flag, v FROM base),
-        |vcounts AS (
-        |  SELECT flag, v, count(*) AS cnt FROM src GROUP BY flag, v),
-        |vcum AS (
-        |  SELECT flag, v,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY v) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n2
-        |  FROM vcounts),
-        |exact AS (
-        |  SELECT flag, max(n2) AS n,
-        |         min(CASE WHEN cum >= ceil(n2 / 2.0) THEN v END) AS x50,
-        |         min(CASE WHEN cum >= ceil(n2 * 19 / 20.0) THEN v END) AS x95
-        |  FROM vcum GROUP BY flag)
-        |SELECT flag, n, round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
-        |       true AS p50_within_rank, true AS p95_within_rank
-        |FROM exact ORDER BY flag""".stripMargin,
+      s"""WITH ${lineitemSql("flag", "l_extendedprice AS v", name = "base")},
+         |src AS (
+         |  SELECT flag, v FROM base
+         |  UNION ALL SELECT 'ALL' AS flag, v FROM base),
+         |$exactAnchorsSql""".stripMargin,
     // sketch time travel: anchors + n from the ORIGINAL corpus
     "mapindex_percentile_sketch_asof" ->
-      """WITH src AS (
-        |  SELECT l_returnflag AS flag, l_extendedprice AS v FROM lineitem),
-        |vcounts AS (
-        |  SELECT flag, v, count(*) AS cnt FROM src GROUP BY flag, v),
-        |vcum AS (
-        |  SELECT flag, v,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY v) AS BIGINT) AS cum,
-        |         CAST(sum(cnt) OVER (PARTITION BY flag) AS BIGINT) AS n2
-        |  FROM vcounts),
-        |exact AS (
-        |  SELECT flag, max(n2) AS n,
-        |         min(CASE WHEN cum >= ceil(n2 / 2.0) THEN v END) AS x50,
-        |         min(CASE WHEN cum >= ceil(n2 * 19 / 20.0) THEN v END) AS x95
-        |  FROM vcum GROUP BY flag)
-        |SELECT flag, n, round(x50, 2) AS exact_p50, round(x95, 2) AS exact_p95,
-        |       true AS p50_within_rank, true AS p95_within_rank
-        |FROM exact ORDER BY flag""".stripMargin,
+      s"""WITH src AS (
+         |  SELECT l_returnflag AS flag, l_extendedprice AS v FROM lineitem),
+         |$exactAnchorsSql""".stripMargin,
     // top-3 most frequent quantities per (possibly re-flagged) group on
     // the modified corpus, ties to the smaller quantity — row_number
     // mirrored; ranks cast BIGINT both sides
     "mapindex_topfreq_view" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS flag,
-        |         CAST(l_quantity AS INTEGER) AS qty
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0),
-        |counts AS (
-        |  SELECT flag, qty, count(*) AS cnt FROM src GROUP BY flag, qty),
-        |ranked AS (
-        |  SELECT flag, qty, cnt,
-        |         CAST(row_number() OVER (PARTITION BY flag
-        |           ORDER BY cnt DESC, qty) AS BIGINT) AS rank
-        |  FROM counts)
-        |SELECT flag, rank, qty, cnt FROM ranked WHERE rank <= 3
-        |ORDER BY flag, rank""".stripMargin,
+      s"""WITH ${lineitemSql("flag", "CAST(l_quantity AS INTEGER) AS qty")},
+         |counts AS (
+         |  SELECT flag, qty, count(*) AS cnt FROM src GROUP BY flag, qty),
+         |ranked AS (
+         |  SELECT flag, qty, cnt,
+         |         CAST(row_number() OVER (PARTITION BY flag
+         |           ORDER BY cnt DESC, qty) AS BIGINT) AS rank
+         |  FROM counts)
+         |SELECT flag, rank, qty, cnt FROM ranked WHERE rank <= 3
+         |ORDER BY flag, rank""".stripMargin,
     "mapindex_aggview" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN l_orderkey % 97 = 0 THEN 'X' ELSE l_returnflag END AS k,
-        |         l_extendedprice AS v
-        |  FROM lineitem WHERE l_orderkey % 89 <> 0)
-        |SELECT k AS emit_key, count(*) AS cnt,
-        |       round(CAST(sum(CAST(v AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-        |       min(v) AS min_value, max(v) AS max_value,
-        |       round(CAST(sum(CAST(v AS DECIMAL(18,4))) AS DOUBLE) / count(*), 4) AS avg_value
-        |FROM src GROUP BY k ORDER BY emit_key""".stripMargin,
+      s"""WITH ${lineitemSql("k", "l_extendedprice AS v")}
+         |SELECT k AS emit_key, count(*) AS cnt,
+         |       round(CAST(sum(CAST(v AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
+         |       min(v) AS min_value, max(v) AS max_value,
+         |       round(CAST(sum(CAST(v AS DECIMAL(18,4))) AS DOUBLE) / count(*), 4) AS avg_value
+         |FROM src GROUP BY k ORDER BY emit_key""".stripMargin,
     // aggregate-state CDC, recomputed from scratch: touched groups = groups
     // with at least one emission from a changed source key; deletes = their
     // pre-refresh aggregates, inserts = their post-refresh aggregates
@@ -4870,9 +4416,6 @@ object MapIndexQueries {
     "mapindex_percentile_sketch_streamed" -> "mapindex_percentile_sketch",
     // bucketed quantile state: identical oracle to the flat twin
     "mapindex_bucketed_percentile_view" -> "mapindex_percentile_view",
-    // the same delta recomputed from scratch: deletes = every old emission
-    // of a changed source key (re-flagged or tombstoned), inserts = the
-    // re-flagged keys' new emissions
     // bucketed state after the same change batch = the same from-scratch
     // recompute the flat aggview is graded against
     "mapindex_bucketed_aggview" -> "mapindex_aggview",

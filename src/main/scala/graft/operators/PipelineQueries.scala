@@ -128,6 +128,22 @@ object PipelineQueries {
      d.filter(col("doc_id") % 41 === 0)
        .select(col("doc_id").cast("string").as("src_key")).distinct())
 
+  /** [[docChangeBatch]]'s result in DuckDB, as the CTE `name`: `cols`,
+    * then the rewritten `text` (`lower`: lower-cased, as the tokenizing
+    * gates read it). */
+  private def modifiedCorpusSql(name: String, cols: String, lower: Boolean): String =
+    s"""$name AS (
+       |  SELECT $cols,
+       |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
+       |              ELSE ${if (lower) "lower(text)" else "text"} END AS text
+       |  FROM documents WHERE doc_id % 41 <> 0)""".stripMargin
+  /** The same corpus as a SQL relation. */
+  private val modifiedDocsSql: String =
+    """(SELECT doc_id,
+      |        CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
+      |             ELSE text END AS text
+      | FROM documents WHERE doc_id % 41 <> 0)""".stripMargin
+
   /** The shared batch as ONE streaming micro-batch: `(doc_id, text)`
     * upserts and tombstones together, split by the streaming contract's
     * `deleted` column. A tombstone names its document both as `key` (the
@@ -393,6 +409,21 @@ object PipelineQueries {
   private def bm25Search(post0: DataFrame, stats0: DataFrame): DataFrame =
     bm25Scores(post0, stats0).orderBy(col("score").desc, col("doc_id")).limit(20)
 
+  /** TF-IDF top-20 over [[SearchTerms]] from a stored postings view:
+    * integer scores Σ tf · (1e6 div df). */
+  private def tfidfSearch(postings: DataFrame): DataFrame = {
+    val post = postings
+      .filter(col("emit_key").isInCollection(SearchTerms))
+      .select(col("emit_key").as("w"),
+        col("emit_value.doc_id").as("doc_id"),
+        col("emit_value.tf").as("tf"))
+    val dfreq = post.groupBy("w").agg(count(lit(1)).as("df"))
+    post.join(broadcast(dfreq), "w")
+      .withColumn("contrib", col("tf") * expr("1000000 div df"))
+      .groupBy(col("doc_id")).agg(sum("contrib").as("score"))
+      .orderBy(col("score").desc, col("doc_id")).limit(20)
+  }
+
   /** Materialize the stored postings + pair graph eagerly (write-time
     * cost) so bench timings measure the indexed read path. */
   private[operators] def prewarmSteps(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq[(String, () => Unit)](
@@ -550,39 +581,33 @@ object PipelineQueries {
     }
   }
 
-  /** Span detection recomputed from the MODIFIED corpus — the shared
-    * ground truth for both maintained-window-view spellings (batch
-    * incremental and streaming-built). */
-  private val substringModifiedSql =
-    """WITH corpus AS (
-      |  SELECT doc_id,
-      |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-      |              ELSE lower(text) END AS text
-      |  FROM documents WHERE doc_id % 41 <> 0),
-      |tok AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-      |win AS (
-      |  SELECT doc_id, pos, array_to_string(toks[pos:pos+7], ' ') AS win
-      |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS pos FROM tok)),
-      |dup AS (
-      |  SELECT win FROM win GROUP BY win HAVING count(DISTINCT doc_id) >= 2),
-      |hit AS (SELECT doc_id, pos FROM win JOIN dup USING (win)),
-      |isl AS (
-      |  SELECT doc_id, pos,
-      |         max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-      |  FROM hit),
-      |num AS (
-      |  SELECT doc_id, pos,
-      |         CASE WHEN prev_end IS NULL OR pos > prev_end + 1 THEN 1 ELSE 0 END AS ni
-      |  FROM isl),
-      |sp AS (
-      |  SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-      |  FROM num),
-      |spans AS (
-      |  SELECT doc_id, g, min(pos) AS st, max(pos + 7) AS en FROM sp GROUP BY 1, 2)
-      |SELECT doc_id, count(*) AS n_spans, CAST(sum(en - st + 1) AS BIGINT) AS dup_tokens
-      |FROM spans GROUP BY 1 ORDER BY doc_id""".stripMargin
+  /** Spans per document of the windows shared by >= 2 documents.
+    * `occs` holds window occurrences `(h, doc_id, pos)` keyed by the
+    * 64-bit window hash: the hash gate prunes them to candidates, the
+    * verify tier re-extracts their exact text from `corpus` and gates
+    * again on it (a hash collision can only add candidates), and the
+    * surviving positions merge into spans. */
+  private def dupWindowSpans(occs: DataFrame, corpus: DataFrame): DataFrame = {
+    // `>= 2 distinct docs` as min ≠ max: count_distinct plans as a
+    // two-level distinct aggregate (an extra exchange on (h, doc_id) +
+    // a second on h); min/max are plain O(1)-state aggregates — one
+    // exchange, same predicate (nulls: both spellings reject a group
+    // without two distinct non-null doc_ids).
+    val dupH = occs.groupBy("h")
+      .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
+      .filter(col("d0") =!= col("d1"))
+    val cand = occs.join(dupH.select("h"), Seq("h"), "left_semi")
+    val withWin = verifySpanWindows(cand, corpus)
+    val dup = withWin.groupBy("win")
+      .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
+      .filter(col("d0") =!= col("d1"))
+    val hits = withWin.join(dup.select("win"), Seq("win"), "left_semi")
+      .select("doc_id", "pos")
+    mergeWindowSpans(hits)
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_spans"), sum(col("en") - col("st") + 1).as("dup_tokens"))
+      .orderBy("doc_id")
+  }
 
   /** Merge marked window-start positions `(doc_id, pos)` into maximal
     * token spans `[st, en]` (each window covers SpanW tokens):
@@ -1086,25 +1111,7 @@ object PipelineQueries {
             s"transform(sequence(1, size(toks) - ${SpanW - 1}), p -> xxhash64(slice(toks, p, $SpanW)))"))
             .as(Seq("p0", "h")))
         .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
-      // `>= 2 distinct docs` as min ≠ max: count_distinct plans as a
-      // two-level distinct aggregate (an extra exchange on (h, doc_id) +
-      // a second on h); min/max are plain O(1)-state aggregates — one
-      // exchange, same predicate (nulls: both spellings reject a group
-      // without two distinct non-null doc_ids).
-      val dupH = wins.groupBy("h")
-        .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-        .filter(col("d0") =!= col("d1"))
-      val cand = wins.join(dupH.select("h"), Seq("h"), "left_semi")
-      val withWin = verifySpanWindows(cand, docs(s, dir))
-      val dup = withWin.groupBy("win")
-        .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-        .filter(col("d0") =!= col("d1"))
-      val hits = withWin.join(dup.select("win"), Seq("win"), "left_semi")
-        .select("doc_id", "pos")
-      mergeWindowSpans(hits)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_spans"), sum(col("en") - col("st") + 1).as("dup_tokens"))
-        .orderBy("doc_id")
+      dupWindowSpans(wins, docs(s, dir))
     }),
 
     // span detection served from the MAINTAINED window-posting view
@@ -1118,25 +1125,9 @@ object PipelineQueries {
       val occs = incSpanWinView(s, dir).df
         .select(col("emit_key").as("h"),
           col("emit_value.doc_id").as("doc_id"), col("emit_value.pos").as("pos"))
-      // min ≠ max gates (not count_distinct): one plain aggregate
-      // exchange instead of the two-level distinct plan — see
-      // dedup_substring_spans. The stored postings are cheap to re-read
-      // for the semi-join side, so no repartition here.
-      val dupH = occs.groupBy("h")
-        .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-        .filter(col("d0") =!= col("d1"))
-      val cand = occs.join(dupH.select("h"), Seq("h"), "left_semi")
-      val mod = modifiedDocs(s, dir)
-      val withWin = verifySpanWindows(cand, mod)
-      val dup = withWin.groupBy("win")
-        .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-        .filter(col("d0") =!= col("d1"))
-      val hits = withWin.join(dup.select("win"), Seq("win"), "left_semi")
-        .select("doc_id", "pos")
-      mergeWindowSpans(hits)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_spans"), sum(col("en") - col("st") + 1).as("dup_tokens"))
-        .orderBy("doc_id")
+      // the stored postings are cheap to re-read for the semi-join side,
+      // so no repartition here
+      dupWindowSpans(occs, modifiedDocs(s, dir))
     }),
 
     // the same detection from the view built ONLY through streaming
@@ -1146,22 +1137,7 @@ object PipelineQueries {
       val occs = streamedSpanWinView(s, dir).df
         .select(col("emit_key").as("h"),
           col("emit_value.doc_id").as("doc_id"), col("emit_value.pos").as("pos"))
-      // min ≠ max gates — see dedup_substring_spans
-      val dupH = occs.groupBy("h")
-        .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-        .filter(col("d0") =!= col("d1"))
-      val cand = occs.join(dupH.select("h"), Seq("h"), "left_semi")
-      val mod = modifiedDocs(s, dir)
-      val withWin = verifySpanWindows(cand, mod)
-      val dup = withWin.groupBy("win")
-        .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-        .filter(col("d0") =!= col("d1"))
-      val hits = withWin.join(dup.select("win"), Seq("win"), "left_semi")
-        .select("doc_id", "pos")
-      mergeWindowSpans(hits)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_spans"), sum(col("en") - col("st") + 1).as("dup_tokens"))
-        .orderBy("doc_id")
+      dupWindowSpans(occs, modifiedDocs(s, dir))
     }),
 
     // removal decisions served from the MAINTAINED window aggregate
@@ -1635,35 +1611,13 @@ object PipelineQueries {
     // (doc, term), so per-term df is a plain count; df is a tiny
     // broadcast; the final top-k is TakeOrderedAndProject (no global
     // sort materialization)
-    "search_tfidf" -> ((s, dir) => {
-      val post = postingsView(s, dir).df
-        .filter(col("emit_key").isInCollection(SearchTerms))
-        .select(col("emit_key").as("w"),
-          col("emit_value.doc_id").as("doc_id"),
-          col("emit_value.tf").as("tf"))
-      val dfreq = post.groupBy("w").agg(count(lit(1)).as("df"))
-      post.join(broadcast(dfreq), "w")
-        .withColumn("contrib", col("tf") * expr("1000000 div df"))
-        .groupBy(col("doc_id")).agg(sum("contrib").as("score"))
-        .orderBy(col("score").desc, col("doc_id")).limit(20)
-    }),
+    "search_tfidf" -> ((s, dir) => tfidfSearch(postingsView(s, dir).df)),
 
     // the SAME search served from an index that was incrementally
     // refreshed (doc rewrites + tombstones through the map-view
     // maintenance path) — the oracle recomputes from the modified corpus,
     // so search results prove the index state is current, not stale
-    "search_tfidf_incremental" -> ((s, dir) => {
-      val post = incPostingsView(s, dir).df
-        .filter(col("emit_key").isInCollection(SearchTerms))
-        .select(col("emit_key").as("w"),
-          col("emit_value.doc_id").as("doc_id"),
-          col("emit_value.tf").as("tf"))
-      val dfreq = post.groupBy("w").agg(count(lit(1)).as("df"))
-      post.join(broadcast(dfreq), "w")
-        .withColumn("contrib", col("tf") * expr("1000000 div df"))
-        .groupBy(col("doc_id")).agg(sum("contrib").as("score"))
-        .orderBy(col("score").desc, col("doc_id")).limit(20)
-    }),
+    "search_tfidf_incremental" -> ((s, dir) => tfidfSearch(incPostingsView(s, dir).df)),
 
     // BM25 ranked retrieval from the stored postings + the single-row
     // corpus-stats aggregate state: no corpus scan at query time at all —
@@ -2105,37 +2059,201 @@ object PipelineQueries {
        |SELECT a AS doc_id, least(a, min(b)) AS component
        |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin
 
-  /** The incremental fixture's post-batch corpus, as a SQL relation. */
-  private val modifiedDocsSql: String =
-    """(SELECT doc_id,
-      |        CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-      |             ELSE text END AS text
-      | FROM documents WHERE doc_id % 41 <> 0)""".stripMargin
+  /** The `tok` CTE of the tokenizing gates: each document's lower-cased
+    * tokens, over the base corpus or (`modified`) over the preceding
+    * `corpus` CTE of [[modifiedCorpusSql]]. */
+  private def docTokensSql(modified: Boolean): String =
+    if (modified)
+      s"""${modifiedCorpusSql("corpus", "doc_id", lower = true)},
+         |tok AS (
+         |  SELECT doc_id, string_split(text, ' ') AS toks FROM corpus)""".stripMargin
+    else
+      """tok AS (
+        |  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  /** Substring dedup over [[docTokensSql]]: every 7-token window, the
+    * duplicate windows `dupHit` picks (its `dup` and `hit` CTEs), their
+    * gaps-and-islands merge over window start positions into maximal
+    * `spans`, then `select`. */
+  private def spanChainSql(modified: Boolean, dupHit: String, select: String): String =
+    s"""WITH ${docTokensSql(modified)},
+       |win AS (
+       |  SELECT doc_id, pos, array_to_string(toks[pos:pos+7], ' ') AS win
+       |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS pos FROM tok)),
+       |$dupHit,
+       |isl AS (
+       |  SELECT doc_id, pos,
+       |         max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
+       |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+       |  FROM hit),
+       |num AS (
+       |  SELECT doc_id, pos,
+       |         CASE WHEN prev_end IS NULL OR pos > prev_end + 1 THEN 1 ELSE 0 END AS ni
+       |  FROM isl),
+       |sp AS (
+       |  SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos) AS g
+       |  FROM num),
+       |spans AS (
+       |  SELECT doc_id, g, min(pos) AS st, max(pos + 7) AS en FROM sp GROUP BY 1, 2)
+       |$select""".stripMargin
+  /** Spans per document of the windows shared by >= 2 documents. */
+  private def spanCountSql(modified: Boolean): String =
+    spanChainSql(modified,
+      """dup AS (
+        |  SELECT win FROM win GROUP BY win HAVING count(DISTINCT doc_id) >= 2),
+        |hit AS (SELECT doc_id, pos FROM win JOIN dup USING (win))""".stripMargin,
+      """SELECT doc_id, count(*) AS n_spans, CAST(sum(en - st + 1) AS BIGINT) AS dup_tokens
+        |FROM spans GROUP BY 1 ORDER BY doc_id""".stripMargin)
+  /** Keep-first removal accounting: per window whose `repeats` count is
+    * >= 2, the occurrence with the smallest (doc_id, pos) — packed as
+    * doc_id·1e6 + pos — survives; the rest are removed. */
+  private def spanRemovalSql(modified: Boolean, repeats: String): String =
+    spanChainSql(modified,
+      s"""dup AS (
+         |  SELECT win, min(doc_id * 1000000 + pos) AS firstk
+         |  FROM win GROUP BY win HAVING $repeats >= 2),
+         |hit AS (
+         |  SELECT doc_id, pos FROM win JOIN dup USING (win)
+         |  WHERE doc_id * 1000000 + pos <> firstk)""".stripMargin,
+      """SELECT s.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
+        |       CAST(sum(s.en - s.st + 1) AS BIGINT) AS removed_tokens
+        |FROM spans s JOIN tok t ON s.doc_id = t.doc_id
+        |GROUP BY 1, 2 ORDER BY s.doc_id""".stripMargin)
+
+  /** The BM25 inputs over [[docTokensSql]] for the four query terms: the
+    * CTEs `stats` (N, avgdl = double(Σdl)/N), `tf` and `dfq`. */
+  private def bm25TermsSql(modified: Boolean): String =
+    s"""${docTokensSql(modified)},
+       |stats AS (
+       |  SELECT count(*) AS n, CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl
+       |  FROM tok),
+       |tf AS (
+       |  SELECT doc_id, len(toks) AS dl, w, count(*) AS tf
+       |  FROM (SELECT doc_id, toks, unnest(toks) AS w FROM tok) u
+       |  WHERE w IN ('spark', 'vector', 'join', 'stream')
+       |  GROUP BY 1, 2, 3),
+       |dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1)""".stripMargin
+  /** BM25 top 20, k1=1.2 / b=0.75, the arithmetic written op-for-op like
+    * the engine's scorer (idf = ln(1 + (N-df+0.5)/(df+0.5))) so
+    * round(…,4) hashes agree. */
+  private def bm25Sql(modified: Boolean): String =
+    s"""WITH ${bm25TermsSql(modified)}
+       |SELECT tf.doc_id,
+       |       round(sum( ln(1 + (n - df + 0.5) / (df + 0.5))
+       |                * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) ), 4) AS score
+       |FROM tf JOIN dfq USING (w) CROSS JOIN stats
+       |GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
+
+  /** Per-document unigram counts over [[docTokensSql]], as the CTE `tf`. */
+  private def unigramTfSql(modified: Boolean): String =
+    s"""${docTokensSql(modified)},
+       |tf AS (
+       |  SELECT doc_id, len(toks) AS dl, w, count(*) AS tf
+       |  FROM (SELECT doc_id, toks, unnest(toks) AS w FROM tok) u
+       |  GROUP BY 1, 2, 3)""".stripMargin
+  /** Unigram model + scores: ctf/total as doubles, ln(ctf/total) in the
+    * same operation order as the engine. */
+  private def lmScoreSql(modified: Boolean): String =
+    s"""WITH ${unigramTfSql(modified)},
+       |ctf AS (SELECT w, CAST(sum(tf) AS DOUBLE) AS ctf FROM tf GROUP BY 1),
+       |tot AS (SELECT CAST(sum(tf) AS DOUBLE) AS total FROM tf)
+       |SELECT doc_id, dl AS n_tokens,
+       |       round(sum(tf * ln(ctf / total)) / dl, 4) AS avg_logprob
+       |FROM tf JOIN ctf USING (w) CROSS JOIN tot
+       |GROUP BY doc_id, dl ORDER BY doc_id""".stripMargin
+
+  /** TF-IDF top 20 of the four query terms, over the base corpus or the
+    * modified one. */
+  private def tfidfSql(modified: Boolean): String = {
+    val tok =
+      if (modified)
+        s"""${modifiedCorpusSql("corpus", "doc_id", lower = true)},
+           |tok AS (
+           |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus)""".stripMargin
+      else
+        """tok AS (
+          |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents)""".stripMargin
+    s"""WITH $tok,
+       |tf AS (
+       |  SELECT doc_id, w, count(*) AS tf FROM tok
+       |  WHERE w IN ('spark', 'vector', 'join', 'stream') GROUP BY 1, 2),
+       |df AS (SELECT w, count(*) AS df FROM tf GROUP BY 1)
+       |SELECT tf.doc_id, CAST(sum(tf.tf * (1000000 // df.df)) AS BIGINT) AS score
+       |FROM tf JOIN df USING (w) GROUP BY tf.doc_id
+       |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
+  }
+
+  /** Temperature-mixture rates (sqrt-count weights) and sampling
+    * accounting per source, over the base corpus or the modified one. */
+  private def temperatureMixtureSql(modified: Boolean): String = {
+    val (corpus, docs) =
+      if (modified) (modifiedCorpusSql("m", "doc_id, source", lower = false) + ",\n", "m")
+      else ("", "documents")
+    s"""WITH ${corpus}s AS (
+       |  SELECT source, count(*) AS n,
+       |         CAST(floor(sqrt(count(*))) AS BIGINT) AS w
+       |  FROM $docs GROUP BY source),
+       |t AS (SELECT sum(n) AS total, sum(w) AS wsum FROM s),
+       |r AS (
+       |  SELECT source,
+       |         CAST(least(65536, (65536 * w * total) // (wsum * n))
+       |              AS BIGINT) AS thr
+       |  FROM s, t)
+       |SELECT d.source, count(*) AS n_docs, max(r.thr) AS thr,
+       |  CAST(sum(CASE WHEN r.thr >= 65536
+       |                  OR substr(md5(d.text), 1, 4) < printf('%04x', r.thr)
+       |           THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
+       |  CAST(sum(CASE WHEN r.thr >= 65536
+       |                  OR substr(md5(d.text), 1, 4) < printf('%04x', r.thr)
+       |           THEN len(string_split(d.text, ' ')) ELSE 0 END) AS BIGINT)
+       |    AS sampled_tokens
+       |FROM $docs d JOIN r ON d.source = r.source
+       |GROUP BY d.source ORDER BY d.source""".stripMargin
+  }
+
+  /** Near-duplicate removal accounting per language: the n-gram Jaccard
+    * pair graph's components keep their least doc id, singletons stay;
+    * over the base corpus or the modified one. */
+  private def dedupRemovalSql(modified: Boolean): String = {
+    val (corpus, docs, pairs) =
+      if (modified) (modifiedCorpusSql("docs_m", "doc_id, lang", lower = false) + ",\n", "docs_m",
+        ngramJaccardSqlFrom(modifiedDocsSql))
+      else ("", "documents", ngramJaccardSql)
+    s"""WITH RECURSIVE ${corpus}pairs AS (SELECT i, j FROM ($pairs)),
+       |edges AS (SELECT i AS a, j AS b FROM pairs UNION SELECT j, i FROM pairs),
+       |reach(a, b) AS (
+       |  SELECT a, b FROM edges
+       |  UNION
+       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+       |comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
+       |         FROM reach GROUP BY a),
+       |keepers AS (
+       |  SELECT DISTINCT component AS doc_id FROM comp
+       |  UNION
+       |  SELECT doc_id FROM $docs
+       |  WHERE doc_id NOT IN (SELECT doc_id FROM comp))
+       |SELECT lang, count(*) AS n_docs,
+       |       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
+       |FROM $docs JOIN keepers USING (doc_id)
+       |GROUP BY lang ORDER BY lang""".stripMargin
+  }
+
+  /** Every containment pair of relation `docs` (one text a substring of
+    * the other, both >= the winnow guarantee floor). */
+  private def containmentSql(docs: String): String =
+    s"""SELECT a.doc_id AS i, b.doc_id AS j, CAST(1.0 AS DOUBLE) AS overlap
+       |FROM $docs a JOIN $docs b ON a.doc_id < b.doc_id
+       |WHERE least(length(a.text), length(b.text)) >= $ContainMinLen
+       |  AND (contains(a.text, b.text) OR contains(b.text, a.text))
+       |ORDER BY i, j""".stripMargin
+
+  private val oracleBase: Map[String, String] = Map(
     // the incrementally-maintained pair graph must equal the from-scratch
     // derivation over the MODIFIED corpus
     "dedup_pairs_incremental" -> ngramJaccardSqlFrom(modifiedDocsSql),
-    // post-compaction serving: identical ground truth as the
-    // uncompacted maintained graph
-    "dedup_pairs_compacted" -> ngramJaccardSqlFrom(modifiedDocsSql),
-    "dedup_pairs_compacted_changefeed" ->
-      s"""WITH before AS (SELECT * FROM ($ngramJaccardSql)),
-         |after AS (SELECT * FROM (${ngramJaccardSqlFrom(modifiedDocsSql)}))
-         |SELECT i, j, jaccard, 'delete' AS change_type
-         |FROM (SELECT * FROM before EXCEPT SELECT * FROM after)
-         |UNION ALL
-         |SELECT i, j, jaccard, 'insert' AS change_type
-         |FROM (SELECT * FROM after EXCEPT SELECT * FROM before)
-         |ORDER BY change_type, i, j""".stripMargin,
     // the incrementally-maintained winnow graph must reproduce the
     // exhaustive containment pair set of the MODIFIED corpus
-    "dedup_winnow_incremental" ->
-      s"""SELECT a.doc_id AS i, b.doc_id AS j, CAST(1.0 AS DOUBLE) AS overlap
-         |FROM $modifiedDocsSql a JOIN $modifiedDocsSql b ON a.doc_id < b.doc_id
-         |WHERE least(length(a.text), length(b.text)) >= $ContainMinLen
-         |  AND (contains(a.text, b.text) OR contains(b.text, a.text))
-         |ORDER BY i, j""".stripMargin,
+    "dedup_winnow_incremental" -> containmentSql(modifiedDocsSql),
     // n_exact_pairs is recomputed from scratch by DuckDB; recall_ok is the
     // engine's asserted invariant (see the query's Scaladoc for measured
     // values behind the bound)
@@ -2145,49 +2263,17 @@ object PipelineQueries {
     "dedup_simhash" ->
       """SELECT count(*) AS n_docs, true AS sample_recall_ok, true AS pairs_valid
         |FROM documents""".stripMargin,
-    // exhaustive ground truth: every containment pair (one text a substring
-    // of the other, both ≥ the winnow guarantee floor) — the engine must
+    // exhaustive ground truth: every containment pair — the engine must
     // reproduce this exactly from winnow candidates + verify
-    "dedup_winnow" ->
-      s"""SELECT a.doc_id AS i, b.doc_id AS j, CAST(1.0 AS DOUBLE) AS overlap
-         |FROM documents a JOIN documents b ON a.doc_id < b.doc_id
-         |WHERE least(length(a.text), length(b.text)) >= $ContainMinLen
-         |  AND (contains(a.text, b.text) OR contains(b.text, a.text))
-         |ORDER BY i, j""".stripMargin,
+    "dedup_winnow" -> containmentSql("documents"),
     "dedup_components" -> componentsSqlFrom(ngramJaccardSql),
     // the incrementally-maintained labeling must equal the from-scratch
     // resolution over the MODIFIED corpus's pair graph
     "dedup_components_incremental" ->
       componentsSqlFrom(ngramJaccardSqlFrom(modifiedDocsSql)),
-    // the streaming-built labeling is graded against the identical
-    // from-scratch ground truth as the batch-incremental path
-    "dedup_components_streamed" ->
-      componentsSqlFrom(ngramJaccardSqlFrom(modifiedDocsSql)),
     // keepers recomputed from scratch over the MODIFIED corpus — what the
     // CDC-maintained keeper map must serve
-    "pipeline_dedup_removal_incremental" ->
-      s"""WITH RECURSIVE docs_m AS (
-         |  SELECT doc_id, lang,
-         |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-         |              ELSE text END AS text
-         |  FROM documents WHERE doc_id % 41 <> 0),
-         |pairs AS (SELECT i, j FROM (${ngramJaccardSqlFrom(modifiedDocsSql)})),
-         |edges AS (SELECT i AS a, j AS b FROM pairs UNION SELECT j, i FROM pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         |comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-         |         FROM reach GROUP BY a),
-         |keepers AS (
-         |  SELECT DISTINCT component AS doc_id FROM comp
-         |  UNION
-         |  SELECT doc_id FROM docs_m
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM comp))
-         |SELECT lang, count(*) AS n_docs,
-         |       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
-         |FROM docs_m JOIN keepers USING (doc_id)
-         |GROUP BY lang ORDER BY lang""".stripMargin,
+    "pipeline_dedup_removal_incremental" -> dedupRemovalSql(modified = true),
     // the netted pair CDC must equal the symmetric difference of the
     // from-scratch derivations over the original and modified corpora
     "dedup_pairs_changefeed" ->
@@ -2199,24 +2285,7 @@ object PipelineQueries {
          |SELECT i, j, jaccard, 'insert' AS change_type
          |FROM (SELECT * FROM after EXCEPT SELECT * FROM before)
          |ORDER BY change_type, i, j""".stripMargin,
-    "pipeline_dedup_removal" ->
-      s"""WITH RECURSIVE pairs AS (SELECT i, j FROM ($ngramJaccardSql)),
-         |edges AS (SELECT i AS a, j AS b FROM pairs UNION SELECT j, i FROM pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         |comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-         |         FROM reach GROUP BY a),
-         |keepers AS (
-         |  SELECT DISTINCT component AS doc_id FROM comp
-         |  UNION
-         |  SELECT doc_id FROM documents
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM comp))
-         |SELECT lang, count(*) AS n_docs,
-         |       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
-         |FROM documents JOIN keepers USING (doc_id)
-         |GROUP BY lang ORDER BY lang""".stripMargin,
+    "pipeline_dedup_removal" -> dedupRemovalSql(modified = false),
     "text_top_tokens" ->
       """WITH tok AS (SELECT unnest(string_split(lower(text), ' ')) AS token
         |             FROM documents),
@@ -2238,111 +2307,17 @@ object PipelineQueries {
         |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin,
     // spans recomputed from scratch: same window width, same
     // gaps-and-islands merge over window start positions
-    "dedup_substring_spans" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |win AS (
-        |  SELECT doc_id, pos, array_to_string(toks[pos:pos+7], ' ') AS win
-        |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS pos FROM tok)),
-        |dup AS (
-        |  SELECT win FROM win GROUP BY win HAVING count(DISTINCT doc_id) >= 2),
-        |hit AS (SELECT doc_id, pos FROM win JOIN dup USING (win)),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |         max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |  FROM hit),
-        |num AS (
-        |  SELECT doc_id, pos,
-        |         CASE WHEN prev_end IS NULL OR pos > prev_end + 1 THEN 1 ELSE 0 END AS ni
-        |  FROM isl),
-        |sp AS (
-        |  SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-        |  FROM num),
-        |spans AS (
-        |  SELECT doc_id, g, min(pos) AS st, max(pos + 7) AS en FROM sp GROUP BY 1, 2)
-        |SELECT doc_id, count(*) AS n_spans, CAST(sum(en - st + 1) AS BIGINT) AS dup_tokens
-        |FROM spans GROUP BY 1 ORDER BY doc_id""".stripMargin,
+    "dedup_substring_spans" -> spanCountSql(modified = false),
     // spans recomputed from the MODIFIED corpus (the %37 rewrite is
     // 4 tokens — below the window width, so those docs contribute none)
-    "dedup_substring_incremental" -> substringModifiedSql,
-    // the streaming-built window view serves the same modified-corpus
-    // ground truth as the batch-refreshed one
-    "dedup_substring_streamed" -> substringModifiedSql,
-    // keep-first removal accounting: the occurrence with the smallest
-    // (doc_id, pos) — packed as doc_id·1e6 + pos — survives per window
-    "dedup_substring_removal" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |win AS (
-        |  SELECT doc_id, pos, array_to_string(toks[pos:pos+7], ' ') AS win
-        |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS pos FROM tok)),
-        |dup AS (
-        |  SELECT win, min(doc_id * 1000000 + pos) AS firstk
-        |  FROM win GROUP BY win HAVING count(DISTINCT doc_id) >= 2),
-        |hit AS (
-        |  SELECT doc_id, pos FROM win JOIN dup USING (win)
-        |  WHERE doc_id * 1000000 + pos <> firstk),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |         max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |  FROM hit),
-        |num AS (
-        |  SELECT doc_id, pos,
-        |         CASE WHEN prev_end IS NULL OR pos > prev_end + 1 THEN 1 ELSE 0 END AS ni
-        |  FROM isl),
-        |sp AS (
-        |  SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-        |  FROM num),
-        |spans AS (
-        |  SELECT doc_id, g, min(pos) AS st, max(pos + 7) AS en FROM sp GROUP BY 1, 2)
-        |SELECT s.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
-        |       CAST(sum(s.en - s.st + 1) AS BIGINT) AS removed_tokens
-        |FROM spans s JOIN tok t ON s.doc_id = t.doc_id
-        |GROUP BY 1, 2 ORDER BY s.doc_id""".stripMargin,
+    "dedup_substring_incremental" -> spanCountSql(modified = true),
+    // keep-first removal accounting over windows shared by >= 2 docs
+    "dedup_substring_removal" -> spanRemovalSql(modified = false, "count(DISTINCT doc_id)"),
     // the maintained-decision variant: OCCURRENCE-based rule (a window
     // repeated anywhere ≥2 times, within-doc included), recomputed from
     // the MODIFIED corpus from scratch
-    "dedup_substring_removal_incremental" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-        |              ELSE lower(text) END AS text
-        |  FROM documents WHERE doc_id % 41 <> 0),
-        |tok AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-        |win AS (
-        |  SELECT doc_id, pos, array_to_string(toks[pos:pos+7], ' ') AS win
-        |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS pos FROM tok)),
-        |dup AS (
-        |  SELECT win, min(doc_id * 1000000 + pos) AS firstk
-        |  FROM win GROUP BY win HAVING count(*) >= 2),
-        |hit AS (
-        |  SELECT doc_id, pos FROM win JOIN dup USING (win)
-        |  WHERE doc_id * 1000000 + pos <> firstk),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |         max(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |  FROM hit),
-        |num AS (
-        |  SELECT doc_id, pos,
-        |         CASE WHEN prev_end IS NULL OR pos > prev_end + 1 THEN 1 ELSE 0 END AS ni
-        |  FROM isl),
-        |sp AS (
-        |  SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-        |  FROM num),
-        |spans AS (
-        |  SELECT doc_id, g, min(pos) AS st, max(pos + 7) AS en FROM sp GROUP BY 1, 2)
-        |SELECT s.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
-        |       CAST(sum(s.en - s.st + 1) AS BIGINT) AS removed_tokens
-        |FROM spans s JOIN tok t ON s.doc_id = t.doc_id
-        |GROUP BY 1, 2 ORDER BY s.doc_id""".stripMargin,
+    "dedup_substring_removal_incremental" -> spanRemovalSql(modified = true, "count(*)"),
     "dedup_ngram_jaccard" -> ngramJaccardSql,
-    // the stored pair view must serve byte-identical pairs to the
-    // from-scratch derivation the oracle recomputes
-    "dedup_pairs_view" -> ngramJaccardSql,
     "text_quality" ->
       s"""SELECT doc_id,
          |       len(string_split(text, ' ')) AS n_tokens,
@@ -2417,55 +2392,10 @@ object PipelineQueries {
         |    THEN len(string_split(text, ' ')) ELSE 0 END) AS BIGINT) AS sampled_tokens,
         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "pipeline_mixture_temperature" ->
-      """WITH s AS (
-        |  SELECT source, count(*) AS n,
-        |         CAST(floor(sqrt(count(*))) AS BIGINT) AS w
-        |  FROM documents GROUP BY source),
-        |t AS (SELECT sum(n) AS total, sum(w) AS wsum FROM s),
-        |r AS (
-        |  SELECT source,
-        |         CAST(least(65536, (65536 * w * total) // (wsum * n))
-        |              AS BIGINT) AS thr
-        |  FROM s, t)
-        |SELECT d.source, count(*) AS n_docs, max(r.thr) AS thr,
-        |  CAST(sum(CASE WHEN r.thr >= 65536
-        |                  OR substr(md5(d.text), 1, 4) < printf('%04x', r.thr)
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
-        |  CAST(sum(CASE WHEN r.thr >= 65536
-        |                  OR substr(md5(d.text), 1, 4) < printf('%04x', r.thr)
-        |           THEN len(string_split(d.text, ' ')) ELSE 0 END) AS BIGINT)
-        |    AS sampled_tokens
-        |FROM documents d JOIN r ON d.source = r.source
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
+    "pipeline_mixture_temperature" -> temperatureMixtureSql(modified = false),
     // rates AND accounting re-derived from the MODIFIED corpus — the
     // incremental path must land on exactly this
-    "pipeline_mixture_temperature_incremental" ->
-      """WITH m AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-        |              ELSE text END AS text
-        |  FROM documents WHERE doc_id % 41 <> 0),
-        |s AS (
-        |  SELECT source, count(*) AS n,
-        |         CAST(floor(sqrt(count(*))) AS BIGINT) AS w
-        |  FROM m GROUP BY source),
-        |t AS (SELECT sum(n) AS total, sum(w) AS wsum FROM s),
-        |r AS (
-        |  SELECT source,
-        |         CAST(least(65536, (65536 * w * total) // (wsum * n))
-        |              AS BIGINT) AS thr
-        |  FROM s, t)
-        |SELECT d.source, count(*) AS n_docs, max(r.thr) AS thr,
-        |  CAST(sum(CASE WHEN r.thr >= 65536
-        |                  OR substr(md5(d.text), 1, 4) < printf('%04x', r.thr)
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
-        |  CAST(sum(CASE WHEN r.thr >= 65536
-        |                  OR substr(md5(d.text), 1, 4) < printf('%04x', r.thr)
-        |           THEN len(string_split(d.text, ' ')) ELSE 0 END) AS BIGINT)
-        |    AS sampled_tokens
-        |FROM m d JOIN r ON d.source = r.source
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
+    "pipeline_mixture_temperature_incremental" -> temperatureMixtureSql(modified = true),
     "pipeline_domain_cap" ->
       """WITH t AS (
         |  SELECT source, doc_id, n_chars,
@@ -2494,241 +2424,87 @@ object PipelineQueries {
         |SELECT source, CAST(floor(strt / 256.0) AS BIGINT) AS pack_id,
         |       count(*) AS n_docs, CAST(sum(toks) AS BIGINT) AS pack_tokens
         |FROM c GROUP BY 1, 2 ORDER BY source, pack_id""".stripMargin,
-    "search_tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents),
-        |tf AS (
-        |  SELECT doc_id, w, count(*) AS tf FROM tok
-        |  WHERE w IN ('spark', 'vector', 'join', 'stream') GROUP BY 1, 2),
-        |df AS (SELECT w, count(*) AS df FROM tf GROUP BY 1)
-        |SELECT tf.doc_id, CAST(sum(tf.tf * (1000000 // df.df)) AS BIGINT) AS score
-        |FROM tf JOIN df USING (w) GROUP BY tf.doc_id
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
+    "search_tfidf" -> tfidfSql(modified = false),
     // the search recomputed over the MODIFIED corpus — what the
     // incrementally-refreshed index must serve
-    "search_tfidf_incremental" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-        |              ELSE lower(text) END AS text
-        |  FROM documents WHERE doc_id % 41 <> 0),
-        |tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus),
-        |tf AS (
-        |  SELECT doc_id, w, count(*) AS tf FROM tok
-        |  WHERE w IN ('spark', 'vector', 'join', 'stream') GROUP BY 1, 2),
-        |df AS (SELECT w, count(*) AS df FROM tf GROUP BY 1)
-        |SELECT tf.doc_id, CAST(sum(tf.tf * (1000000 // df.df)) AS BIGINT) AS score
-        |FROM tf JOIN df USING (w) GROUP BY tf.doc_id
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    // BM25 recomputed from scratch: same k1=1.2 / b=0.75, the arithmetic
-    // written op-for-op like the engine's scorer (idf = ln(1 + (N-df+0.5)
-    // /(df+0.5)), avgdl = double(Σdl)/N) so round(…,4) hashes agree
-    "search_bm25" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |stats AS (
-        |  SELECT count(*) AS n, CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl
-        |  FROM tok),
-        |tf AS (
-        |  SELECT doc_id, len(toks) AS dl, w, count(*) AS tf
-        |  FROM (SELECT doc_id, toks, unnest(toks) AS w FROM tok) u
-        |  WHERE w IN ('spark', 'vector', 'join', 'stream')
-        |  GROUP BY 1, 2, 3),
-        |dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1)
-        |SELECT tf.doc_id,
-        |       round(sum( ln(1 + (n - df + 0.5) / (df + 0.5))
-        |                * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) ), 4) AS score
-        |FROM tf JOIN dfq USING (w) CROSS JOIN stats
-        |GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    "search_bm25_incremental" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-        |              ELSE lower(text) END AS text
-        |  FROM documents WHERE doc_id % 41 <> 0),
-        |tok AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-        |stats AS (
-        |  SELECT count(*) AS n, CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl
-        |  FROM tok),
-        |tf AS (
-        |  SELECT doc_id, len(toks) AS dl, w, count(*) AS tf
-        |  FROM (SELECT doc_id, toks, unnest(toks) AS w FROM tok) u
-        |  WHERE w IN ('spark', 'vector', 'join', 'stream')
-        |  GROUP BY 1, 2, 3),
-        |dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1)
-        |SELECT tf.doc_id,
-        |       round(sum( ln(1 + (n - df + 0.5) / (df + 0.5))
-        |                * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) ), 4) AS score
-        |FROM tf JOIN dfq USING (w) CROSS JOIN stats
-        |GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    // the streaming-built postings + stats must serve the identical
-    // modified-corpus recompute as the batch-incremental pair
-    "search_bm25_streamed" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-        |              ELSE lower(text) END AS text
-        |  FROM documents WHERE doc_id % 41 <> 0),
-        |tok AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-        |stats AS (
-        |  SELECT count(*) AS n, CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl
-        |  FROM tok),
-        |tf AS (
-        |  SELECT doc_id, len(toks) AS dl, w, count(*) AS tf
-        |  FROM (SELECT doc_id, toks, unnest(toks) AS w FROM tok) u
-        |  WHERE w IN ('spark', 'vector', 'join', 'stream')
-        |  GROUP BY 1, 2, 3),
-        |dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1)
-        |SELECT tf.doc_id,
-        |       round(sum( ln(1 + (n - df + 0.5) / (df + 0.5))
-        |                * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) ), 4) AS score
-        |FROM tf JOIN dfq USING (w) CROSS JOIN stats
-        |GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    // unigram model + scores recomputed from scratch: ctf/total as
-    // doubles, ln(ctf/total) in the same operation order as the engine
-    "text_lm_score" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |tf AS (
-        |  SELECT doc_id, len(toks) AS dl, w, count(*) AS tf
-        |  FROM (SELECT doc_id, toks, unnest(toks) AS w FROM tok) u
-        |  GROUP BY 1, 2, 3),
-        |ctf AS (SELECT w, CAST(sum(tf) AS DOUBLE) AS ctf FROM tf GROUP BY 1),
-        |tot AS (SELECT CAST(sum(tf) AS DOUBLE) AS total FROM tf)
-        |SELECT doc_id, dl AS n_tokens,
-        |       round(sum(tf * ln(ctf / total)) / dl, 4) AS avg_logprob
-        |FROM tf JOIN ctf USING (w) CROSS JOIN tot
-        |GROUP BY doc_id, dl ORDER BY doc_id""".stripMargin,
-    "text_lm_score_incremental" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-        |              ELSE lower(text) END AS text
-        |  FROM documents WHERE doc_id % 41 <> 0),
-        |tok AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-        |tf AS (
-        |  SELECT doc_id, len(toks) AS dl, w, count(*) AS tf
-        |  FROM (SELECT doc_id, toks, unnest(toks) AS w FROM tok) u
-        |  GROUP BY 1, 2, 3),
-        |ctf AS (SELECT w, CAST(sum(tf) AS DOUBLE) AS ctf FROM tf GROUP BY 1),
-        |tot AS (SELECT CAST(sum(tf) AS DOUBLE) AS total FROM tf)
-        |SELECT doc_id, dl AS n_tokens,
-        |       round(sum(tf * ln(ctf / total)) / dl, 4) AS avg_logprob
-        |FROM tf JOIN ctf USING (w) CROSS JOIN tot
-        |GROUP BY doc_id, dl ORDER BY doc_id""".stripMargin,
+    "search_tfidf_incremental" -> tfidfSql(modified = true),
+    // BM25 recomputed from scratch: same k1 / b, op-for-op arithmetic
+    "search_bm25" -> bm25Sql(modified = false),
+    "search_bm25_incremental" -> bm25Sql(modified = true),
+    // unigram model + scores recomputed from scratch
+    "text_lm_score" -> lmScoreSql(modified = false),
+    "text_lm_score_incremental" -> lmScoreSql(modified = true),
     // both smoothed unigram models recomputed from scratch; the ratio
     // arithmetic mirrors the engine op-for-op (add-1 numerators,
     // total+V denominators as doubles, ln of the quotient)
     "pipeline_importance_weights" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |tf AS (
-        |  SELECT doc_id, len(toks) AS dl, w, count(*) AS tf
-        |  FROM (SELECT doc_id, toks, unnest(toks) AS w FROM tok) u
-        |  GROUP BY 1, 2, 3),
-        |raw AS (SELECT w, CAST(sum(tf) AS DOUBLE) AS cr FROM tf GROUP BY 1),
-        |tgt AS (
-        |  SELECT w, CAST(sum(tf) AS DOUBLE) AS ct
-        |  FROM tf JOIN documents USING (doc_id) WHERE lang = 'en' GROUP BY 1),
-        |tots AS (SELECT CAST(sum(tf) AS DOUBLE) AS total_r,
-        |                (SELECT count(*) FROM raw) AS v FROM tf),
-        |tott AS (
-        |  SELECT CAST(coalesce(sum(tf), 0) AS DOUBLE) AS total_t
-        |  FROM tf JOIN documents USING (doc_id) WHERE lang = 'en')
-        |SELECT tf.doc_id, dl AS n_tokens,
-        |       round(sum(tf * (ln((coalesce(ct, 0) + 1) / (total_t + v))
-        |                     - ln((cr + 1) / (total_r + v)))) / dl, 4) + 0 AS avg_logratio
-        |FROM tf JOIN raw USING (w) LEFT JOIN tgt USING (w)
-        |     CROSS JOIN tots CROSS JOIN tott
-        |GROUP BY tf.doc_id, dl ORDER BY tf.doc_id""".stripMargin,
+      s"""WITH ${unigramTfSql(modified = false)},
+         |raw AS (SELECT w, CAST(sum(tf) AS DOUBLE) AS cr FROM tf GROUP BY 1),
+         |tgt AS (
+         |  SELECT w, CAST(sum(tf) AS DOUBLE) AS ct
+         |  FROM tf JOIN documents USING (doc_id) WHERE lang = 'en' GROUP BY 1),
+         |tots AS (SELECT CAST(sum(tf) AS DOUBLE) AS total_r,
+         |                (SELECT count(*) FROM raw) AS v FROM tf),
+         |tott AS (
+         |  SELECT CAST(coalesce(sum(tf), 0) AS DOUBLE) AS total_t
+         |  FROM tf JOIN documents USING (doc_id) WHERE lang = 'en')
+         |SELECT tf.doc_id, dl AS n_tokens,
+         |       round(sum(tf * (ln((coalesce(ct, 0) + 1) / (total_t + v))
+         |                     - ln((cr + 1) / (total_r + v)))) / dl, 4) + 0 AS avg_logratio
+         |FROM tf JOIN raw USING (w) LEFT JOIN tgt USING (w)
+         |     CROSS JOIN tots CROSS JOIN tott
+         |GROUP BY tf.doc_id, dl ORDER BY tf.doc_id""".stripMargin,
     // both smoothed models recomputed over the MODIFIED corpus (lang
     // rides along from documents — rewrites don't change it)
     "pipeline_importance_weights_incremental" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, lang,
-        |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-        |              ELSE lower(text) END AS text
-        |  FROM documents WHERE doc_id % 41 <> 0),
-        |tok AS (
-        |  SELECT doc_id, lang, string_split(text, ' ') AS toks FROM corpus),
-        |tf AS (
-        |  SELECT doc_id, lang, len(toks) AS dl, w, count(*) AS tf
-        |  FROM (SELECT doc_id, lang, toks, unnest(toks) AS w FROM tok) u
-        |  GROUP BY 1, 2, 3, 4),
-        |raw AS (SELECT w, CAST(sum(tf) AS DOUBLE) AS cr FROM tf GROUP BY 1),
-        |tgt AS (
-        |  SELECT w, CAST(sum(tf) AS DOUBLE) AS ct
-        |  FROM tf WHERE lang = 'en' GROUP BY 1),
-        |tots AS (SELECT CAST(sum(tf) AS DOUBLE) AS total_r,
-        |                (SELECT count(*) FROM raw) AS v FROM tf),
-        |tott AS (
-        |  SELECT CAST(coalesce(sum(tf), 0) AS DOUBLE) AS total_t
-        |  FROM tf WHERE lang = 'en')
-        |SELECT tf.doc_id, dl AS n_tokens,
-        |       round(sum(tf * (ln((coalesce(ct, 0) + 1) / (total_t + v))
-        |                     - ln((cr + 1) / (total_r + v)))) / dl, 4) + 0 AS avg_logratio
-        |FROM tf JOIN raw USING (w) LEFT JOIN tgt USING (w)
-        |     CROSS JOIN tots CROSS JOIN tott
-        |GROUP BY tf.doc_id, dl ORDER BY tf.doc_id""".stripMargin,
-    // the streamed model must land the identical modified-corpus scores
-    "text_lm_score_streamed" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 37 = 0 THEN 'spark join spark stream'
-        |              ELSE lower(text) END AS text
-        |  FROM documents WHERE doc_id % 41 <> 0),
-        |tok AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-        |tf AS (
-        |  SELECT doc_id, len(toks) AS dl, w, count(*) AS tf
-        |  FROM (SELECT doc_id, toks, unnest(toks) AS w FROM tok) u
-        |  GROUP BY 1, 2, 3),
-        |ctf AS (SELECT w, CAST(sum(tf) AS DOUBLE) AS ctf FROM tf GROUP BY 1),
-        |tot AS (SELECT CAST(sum(tf) AS DOUBLE) AS total FROM tf)
-        |SELECT doc_id, dl AS n_tokens,
-        |       round(sum(tf * ln(ctf / total)) / dl, 4) AS avg_logprob
-        |FROM tf JOIN ctf USING (w) CROSS JOIN tot
-        |GROUP BY doc_id, dl ORDER BY doc_id""".stripMargin,
+      s"""WITH ${modifiedCorpusSql("corpus", "doc_id, lang", lower = true)},
+         |tok AS (
+         |  SELECT doc_id, lang, string_split(text, ' ') AS toks FROM corpus),
+         |tf AS (
+         |  SELECT doc_id, lang, len(toks) AS dl, w, count(*) AS tf
+         |  FROM (SELECT doc_id, lang, toks, unnest(toks) AS w FROM tok) u
+         |  GROUP BY 1, 2, 3, 4),
+         |raw AS (SELECT w, CAST(sum(tf) AS DOUBLE) AS cr FROM tf GROUP BY 1),
+         |tgt AS (
+         |  SELECT w, CAST(sum(tf) AS DOUBLE) AS ct
+         |  FROM tf WHERE lang = 'en' GROUP BY 1),
+         |tots AS (SELECT CAST(sum(tf) AS DOUBLE) AS total_r,
+         |                (SELECT count(*) FROM raw) AS v FROM tf),
+         |tott AS (
+         |  SELECT CAST(coalesce(sum(tf), 0) AS DOUBLE) AS total_t
+         |  FROM tf WHERE lang = 'en')
+         |SELECT tf.doc_id, dl AS n_tokens,
+         |       round(sum(tf * (ln((coalesce(ct, 0) + 1) / (total_t + v))
+         |                     - ln((cr + 1) / (total_r + v)))) / dl, 4) + 0 AS avg_logratio
+         |FROM tf JOIN raw USING (w) LEFT JOIN tgt USING (w)
+         |     CROSS JOIN tots CROSS JOIN tott
+         |GROUP BY tf.doc_id, dl ORDER BY tf.doc_id""".stripMargin,
     // both arms recomputed from scratch: BM25 exactly as search_bm25,
     // dense cosine exactly as the similarity oracles (double math
     // spelled out), fused by rank only — so the engine's maintained-view
     // arms must land the identical ordering
     "search_hybrid_rrf" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |stats AS (
-        |  SELECT count(*) AS n, CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl
-        |  FROM tok),
-        |tf AS (
-        |  SELECT doc_id, len(toks) AS dl, w, count(*) AS tf
-        |  FROM (SELECT doc_id, toks, unnest(toks) AS w FROM tok) u
-        |  WHERE w IN ('spark', 'vector', 'join', 'stream')
-        |  GROUP BY 1, 2, 3),
-        |dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
-        |bm AS (
-        |  SELECT tf.doc_id,
-        |         round(sum( ln(1 + (n - df + 0.5) / (df + 0.5))
-        |                  * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) ), 4) AS score
-        |  FROM tf JOIN dfq USING (w) CROSS JOIN stats GROUP BY 1),
-        |bmr AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r FROM bm),
-        |bm50 AS (SELECT doc_id, CAST(1.0 AS DOUBLE) / (r + 60) AS s_bm FROM bmr WHERE r <= 50),
-        |cosc AS (
-        |  SELECT e.vec_id AS doc_id,
-        |         round((list_sum([CAST(p.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE) for i in range(64)])
-        |          / (sqrt(list_sum([CAST(p.embedding[i+1] AS DOUBLE) * CAST(p.embedding[i+1] AS DOUBLE) for i in range(64)]))
-        |             * sqrt(list_sum([CAST(e.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE) for i in range(64)])))), 6) AS c
-        |  FROM embeddings e, embeddings p
-        |  WHERE p.vec_id = 0 AND e.vec_id <> 0),
-        |vr AS (SELECT doc_id, row_number() OVER (ORDER BY c DESC, doc_id) AS r FROM cosc),
-        |v50 AS (SELECT doc_id, CAST(1.0 AS DOUBLE) / (r + 60) AS s_v FROM vr WHERE r <= 50)
-        |SELECT COALESCE(b.doc_id, v.doc_id) AS doc_id,
-        |       round(COALESCE(s_bm, 0) + COALESCE(s_v, 0), 6) AS rrf
-        |FROM bm50 b FULL OUTER JOIN v50 v ON b.doc_id = v.doc_id
-        |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
+      s"""WITH ${bm25TermsSql(modified = false)},
+         |bm AS (
+         |  SELECT tf.doc_id,
+         |         round(sum( ln(1 + (n - df + 0.5) / (df + 0.5))
+         |                  * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) ), 4) AS score
+         |  FROM tf JOIN dfq USING (w) CROSS JOIN stats GROUP BY 1),
+         |bmr AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r FROM bm),
+         |bm50 AS (SELECT doc_id, CAST(1.0 AS DOUBLE) / (r + 60) AS s_bm FROM bmr WHERE r <= 50),
+         |cosc AS (
+         |  SELECT e.vec_id AS doc_id,
+         |         round((list_sum([CAST(p.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE) for i in range(64)])
+         |          / (sqrt(list_sum([CAST(p.embedding[i+1] AS DOUBLE) * CAST(p.embedding[i+1] AS DOUBLE) for i in range(64)]))
+         |             * sqrt(list_sum([CAST(e.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE) for i in range(64)])))), 6) AS c
+         |  FROM embeddings e, embeddings p
+         |  WHERE p.vec_id = 0 AND e.vec_id <> 0),
+         |vr AS (SELECT doc_id, row_number() OVER (ORDER BY c DESC, doc_id) AS r FROM cosc),
+         |v50 AS (SELECT doc_id, CAST(1.0 AS DOUBLE) / (r + 60) AS s_v FROM vr WHERE r <= 50)
+         |SELECT COALESCE(b.doc_id, v.doc_id) AS doc_id,
+         |       round(COALESCE(s_bm, 0) + COALESCE(s_v, 0), 6) AS rrf
+         |FROM bm50 b FULL OUTER JOIN v50 v ON b.doc_id = v.doc_id
+         |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
     "pipeline_curate" ->
       s"""WITH k AS (
          |  SELECT min(doc_id) AS doc_id FROM documents
@@ -2816,4 +2592,29 @@ object PipelineQueries {
          |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
     },
   )
+
+  /** Twin gates graded by another gate's oracle: compaction, a streamed
+    * build or a stored view must be invisible to serving, so the twin's
+    * expected answer is its base's. */
+  val oracle: Map[String, String] = oracleBase ++ Seq(
+    // post-compaction serving: identical ground truth as the
+    // uncompacted maintained graph
+    "dedup_pairs_compacted" -> "dedup_pairs_incremental",
+    // the feed across the compaction epoch nets to the same pair CDC
+    "dedup_pairs_compacted_changefeed" -> "dedup_pairs_changefeed",
+    // the streaming-built labeling is graded against the identical
+    // from-scratch ground truth as the batch-incremental path
+    "dedup_components_streamed" -> "dedup_components_incremental",
+    // the streaming-built window view serves the same modified-corpus
+    // ground truth as the batch-refreshed one
+    "dedup_substring_streamed" -> "dedup_substring_incremental",
+    // the stored pair view must serve byte-identical pairs to the
+    // from-scratch derivation the oracle recomputes
+    "dedup_pairs_view" -> "dedup_ngram_jaccard",
+    // the streaming-built postings + stats must serve the identical
+    // modified-corpus recompute as the batch-incremental pair
+    "search_bm25_streamed" -> "search_bm25_incremental",
+    // the streamed model must land the identical modified-corpus scores
+    "text_lm_score_streamed" -> "text_lm_score_incremental",
+  ).map { case (twin, base) => twin -> oracleBase(base) }
 }

@@ -1411,7 +1411,20 @@ object RelationalQueries {
       (tbl, t1)
     }
 
-  val oracle: Map[String, String] = Map(
+  /** The CTE `x`: `cols` and the session-start flag `is_start` of each
+    * event — 1 for its user's first event (ts, then event_id order) and
+    * for one whose gap to the previous event is `cmp` (`>` or `>=`)
+    * 30 min, in epoch_us, the engine's read granularity. */
+  private def sessionStartsSql(cols: String, cmp: String): String =
+    s"""x AS (
+       |  SELECT $cols,
+       |         CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+       |               OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+       |                  $cmp 1800000000
+       |              THEN 1 ELSE 0 END AS is_start
+       |  FROM events)""".stripMargin
+
+  private val oracleBase: Map[String, String] = Map(
     "events_gapfill" ->
       """WITH h AS (SELECT user_id, date_trunc('hour', ts) AS hr, count(*) AS cnt
         |           FROM events WHERE user_id < 50 GROUP BY 1, 2),
@@ -1700,9 +1713,6 @@ object RelationalQueries {
     "agg_hll" ->
       """SELECT o_orderstatus, count(DISTINCT o_custkey) AS exact_custs, true AS est_ok
         |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "agg_kmv" ->
-      """SELECT o_orderstatus, count(DISTINCT o_custkey) AS exact_custs, true AS est_ok
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
     "agg_heavy_hitters" ->
       """SELECT CAST(l_quantity AS BIGINT) AS qty, count(*) AS cnt
         |FROM lineitem GROUP BY 1
@@ -1797,15 +1807,6 @@ object RelationalQueries {
         |   ORDER BY b.ts DESC, b.event_id DESC LIMIT 1) AS last_click_value
         |FROM events a WHERE a.event_type = 'purchase'
         |ORDER BY a.event_id""".stripMargin,
-    // intentionally identical to join_asof's oracle: the native merge
-    // operator and the union+window spelling must agree exactly
-    "join_asof_native" ->
-      """SELECT a.event_id, a.user_id,
-        |  (SELECT b.value FROM events b
-        |   WHERE b.user_id = a.user_id AND b.event_type = 'click' AND b.ts <= a.ts
-        |   ORDER BY b.ts DESC, b.event_id DESC LIMIT 1) AS last_click_value
-        |FROM events a WHERE a.event_type = 'purchase'
-        |ORDER BY a.event_id""".stripMargin,
     // epoch_us() in these two: the engine reads ts at microsecond
     // precision (Tables.events truncates the parquet nanos), so the
     // oracle must compare and tie-break at the same granularity —
@@ -1848,26 +1849,6 @@ object RelationalQueries {
         |   LIMIT 1) AS nearest_click_value
         |FROM events a WHERE a.event_type = 'purchase'
         |ORDER BY a.event_id""".stripMargin,
-    // intentionally identical to join_asof_nearest's oracle: the native
-    // merge and the two-window spelling must agree exactly
-    "join_asof_nearest_native" ->
-      """SELECT a.event_id, a.user_id,
-        |  (SELECT b.event_id FROM events b
-        |   WHERE b.user_id = a.user_id AND b.event_type = 'click'
-        |   ORDER BY abs(epoch_us(b.ts) - epoch_us(a.ts)) ASC,
-        |            (epoch_us(b.ts) <= epoch_us(a.ts)) DESC,
-        |            CASE WHEN epoch_us(b.ts) <= epoch_us(a.ts)
-        |                 THEN -b.event_id ELSE b.event_id END ASC
-        |   LIMIT 1) AS nearest_click_id,
-        |  (SELECT round(b.value, 2) FROM events b
-        |   WHERE b.user_id = a.user_id AND b.event_type = 'click'
-        |   ORDER BY abs(epoch_us(b.ts) - epoch_us(a.ts)) ASC,
-        |            (epoch_us(b.ts) <= epoch_us(a.ts)) DESC,
-        |            CASE WHEN epoch_us(b.ts) <= epoch_us(a.ts)
-        |                 THEN -b.event_id ELSE b.event_id END ASC
-        |   LIMIT 1) AS nearest_click_value
-        |FROM events a WHERE a.event_type = 'purchase'
-        |ORDER BY a.event_id""".stripMargin,
     "join_interval_binned" ->
       """SELECT a.event_id AS a_id, b.event_id AS b_id,
         |       epoch_us(a.ts) - epoch_us(b.ts) AS delta_us
@@ -1876,15 +1857,6 @@ object RelationalQueries {
         |AND a.event_type = 'click' AND b.event_type = 'purchase'
         |AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 3600000000
         |ORDER BY a_id, b_id""".stripMargin,
-    // intentionally identical to window_topk's oracle: the UDAF and the
-    // window spelling must produce byte-identical answers
-    "topk_grouped" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |         row_number() OVER (PARTITION BY o_custkey
-        |                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
     "window_topk" ->
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
@@ -2010,71 +1982,29 @@ object RelationalQueries {
         |       count(DISTINCT CASE WHEN s2 = 1 THEN user_id END) AS n_click_after_view,
         |       count(DISTINCT CASE WHEN s3 = 1 THEN user_id END) AS n_purchase_after_click
         |FROM d""".stripMargin,
-    // the streaming state machine must land the batch windows' answer
-    "events_funnel_streamed" ->
-      """WITH a AS (
-        |  SELECT user_id, event_type, ts, event_id,
-        |         max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS seen_view
-        |  FROM events),
-        |b AS (
-        |  SELECT *, CASE WHEN event_type = 'click' AND seen_view = 1
-        |                 THEN 1 ELSE 0 END AS s2
-        |  FROM a),
-        |c AS (
-        |  SELECT *, max(s2) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS seen_s2
-        |  FROM b),
-        |d AS (
-        |  SELECT *, CASE WHEN event_type = 'purchase' AND seen_s2 = 1
-        |                 THEN 1 ELSE 0 END AS s3
-        |  FROM c)
-        |SELECT count(DISTINCT CASE WHEN event_type = 'view' THEN user_id END) AS n_view,
-        |       count(DISTINCT CASE WHEN s2 = 1 THEN user_id END) AS n_click_after_view,
-        |       count(DISTINCT CASE WHEN s3 = 1 THEN user_id END) AS n_purchase_after_click
-        |FROM d""".stripMargin,
     "events_sessionize" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |               OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |                  > 1800000000
-        |              THEN 1 ELSE 0 END AS is_start
-        |  FROM events),
-        |y AS (
-        |  SELECT user_id,
-        |         sum(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-        |  FROM x)
-        |SELECT user_id, CAST(max(sess) AS BIGINT) AS n_sessions, count(*) AS n_events
-        |FROM y GROUP BY user_id ORDER BY user_id""".stripMargin,
+      s"""WITH ${sessionStartsSql("user_id, ts, event_id", ">")},
+         |y AS (
+         |  SELECT user_id,
+         |         sum(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id
+         |                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
+         |  FROM x)
+         |SELECT user_id, CAST(max(sess) AS BIGINT) AS n_sessions, count(*) AS n_events
+         |FROM y GROUP BY user_id ORDER BY user_id""".stripMargin,
     // the stateful streaming sessionizer must land the SAME session set
     // as the batch lag spelling (sessions break on gap > 30 min)
     "events_sessionize_streamed" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |               OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |                  > 1800000000
-        |              THEN 1 ELSE 0 END AS is_start
-        |  FROM events)
-        |SELECT user_id, CAST(sum(is_start) AS BIGINT) AS n_sessions,
-        |       count(*) AS n_events
-        |FROM x GROUP BY user_id ORDER BY user_id""".stripMargin,
+      s"""WITH ${sessionStartsSql("user_id, ts, event_id", ">")}
+         |SELECT user_id, CAST(sum(is_start) AS BIGINT) AS n_sessions,
+         |       count(*) AS n_events
+         |FROM x GROUP BY user_id ORDER BY user_id""".stripMargin,
     // session_window semantics: new session when the gap is >= 30 min
     // (touching [ts, ts+gap) windows do not merge)
     "events_session_window" ->
-      """WITH x AS (
-        |  SELECT user_id,
-        |         CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |               OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |                  >= 1800000000
-        |              THEN 1 ELSE 0 END AS is_start
-        |  FROM events)
-        |SELECT user_id, CAST(sum(is_start) AS BIGINT) AS n_sessions,
-        |       count(*) AS n_events
-        |FROM x GROUP BY user_id ORDER BY user_id""".stripMargin,
+      s"""WITH ${sessionStartsSql("user_id", ">=")}
+         |SELECT user_id, CAST(sum(is_start) AS BIGINT) AS n_sessions,
+         |       count(*) AS n_events
+         |FROM x GROUP BY user_id ORDER BY user_id""".stripMargin,
     "events_hourly" ->
       """SELECT date_trunc('hour', ts) AS hour, event_type,
         |       count(*) AS cnt, round(sum(value), 2) AS sum_value
@@ -2094,4 +2024,23 @@ object RelationalQueries {
         |WHERE date_diff('day', cohort, d) <= 7
         |GROUP BY 1, 2 ORDER BY cohort, day_offset""".stripMargin,
   )
+
+  /** Twin gates graded by another gate's oracle: two spellings of one
+    * operator must agree exactly, so the twin's expected answer is its
+    * base's. */
+  val oracle: Map[String, String] = oracleBase ++ Seq(
+    // the KMV and HLL distinct estimators are graded by the same exact
+    // counts
+    "agg_kmv" -> "agg_hll",
+    // the native merge operator and the union+window spelling must
+    // agree exactly
+    "join_asof_native" -> "join_asof",
+    // the native merge and the two-window spelling must agree exactly
+    "join_asof_nearest_native" -> "join_asof_nearest",
+    // the UDAF and the window spelling must produce byte-identical
+    // answers
+    "topk_grouped" -> "window_topk",
+    // the streaming state machine must land the batch windows' answer
+    "events_funnel_streamed" -> "events_funnel",
+  ).map { case (twin, base) => twin -> oracleBase(base) }
 }
