@@ -58,7 +58,7 @@ object MapIndexQueries {
     * range scan prunes to covering buckets — the partition-level pruning
     * the hash layout cannot give a range. Boundaries N,R,S put each live
     * flag (A/N/R) in its own bucket, so the [A,N) scan below provably
-    * skips R's bucket (PlanAuditSpec asserts the path count). */
+    * skips R's bucket (PlanAuditMapIndexSpec asserts the path count). */
   private def rangeBucketedFlag(s: SparkSession, dir: String): graft.engine.BucketedViewStore =
     Views.cached(dir, "rangeBucketedFlag") {
       val st = graft.engine.BucketedViewStore.tempRange(s, Seq("N", "R", "S"))

@@ -250,7 +250,7 @@ class BucketedStoreSpec extends AnyFunSuite with SparkSpec {
     assert(scanned.select("emit_key").as[String].collect().toSeq === Seq("b", "d"))
     // inputFiles, NOT executedPlan.toString: Spark truncates the scan's
     // Location at ~100 chars, so parsing the plan string can yield an
-    // EMPTY set and pass vacuously (PlanAuditSpec switched for the same
+    // EMPTY set and pass vacuously (PlanAuditMapIndexSpec switched for the same
     // reason) — assert nonEmpty so the prune is genuinely verified
     val kb = scanned.inputFiles.toSeq
       .flatMap(f => "kb=\\d+".r.findAllIn(f).map(_.drop(3).toInt)).toSet
